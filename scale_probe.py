@@ -34,8 +34,9 @@ Six probe families (select with argv, default all):
 
 * ``bpe`` — vocab-rich corpus (words salted by doc_id -> ~1.5M distinct
   words >> TOMIX_BPE_LOCAL_WORDS) so the fully distributed BPE merge
-  iteration engages NATURALLY (asserted via bpe.LAST_TIER), hash-checked
-  against the recursive DuckDB oracle at the same vocabulary size.
+  iteration engages NATURALLY (asserted via the gate decision log),
+  hash-checked against the recursive DuckDB oracle at the same vocabulary
+  size.
 
 * ``media`` — the multimodal family on the same 10x corpus (the media
   queries synthesize their PNG payloads FROM documents, so 50k docs =
@@ -105,6 +106,13 @@ PROBE_MEDIA_NAMES = [
     # round 14: perceptual dedup keep-best over the same 10x media corpus
     "media_dedup_keep_list",
 ]
+
+
+def last_decision(env: str):
+    """Newest gate decision-log entry for one gate variable, or None."""
+    from tomixpanel_spark.operators.base import DECISIONS
+
+    return next((d for d in reversed(DECISIONS) if d.gate == env), None)
 
 
 def build_dataset(src_sf: str, dst: str, replicas: int = 10) -> None:
@@ -270,7 +278,6 @@ def probe_asof(spark, src_sf: str, probe_root: str) -> None:
     """
     import duckdb
 
-    from tomixpanel_spark.operators import asof as A
     from tomixpanel_spark.operators import registry
     from tomixpanel_spark.operators.base import table
 
@@ -286,15 +293,19 @@ def probe_asof(spark, src_sf: str, probe_root: str) -> None:
         "documents embeddings"
     ).split():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{dst}/{t}.parquet'")
+    def asof_tier() -> str | None:
+        d = last_decision("TOMIX_ASOF_BCAST_ROWS")
+        return d and d.tier
+
     def check_flip(name: str) -> None:
-        # only the asof_join-calling rows set LAST_STRATEGY;
+        # only the asof_join-calling rows log an as-of decision;
         # range_join_active_windows never does (round-12 advice: the old
         # post-loop assert silently reflected whichever query ran last)
         if name in ("asof_latest_order", "asof_next_order",
                     "attribution_last_touch"):
-            assert A.LAST_STRATEGY == "window", (
+            assert asof_tier() == "distributed", (
                 f"{name}: gate did not flip naturally "
-                f"(LAST_STRATEGY={A.LAST_STRATEGY}) — probe is mis-sized"
+                f"(tier={asof_tier()}) — probe is mis-sized"
             )
 
     run_queries(spark, con, reg, dst, PROBE_ASOF_NAMES,
@@ -306,7 +317,7 @@ def probe_asof(spark, src_sf: str, probe_root: str) -> None:
         t0 = time.perf_counter()
         nat = _spark_checksum(reg[name].fn(spark, dst))
         t_nat = time.perf_counter() - t0
-        assert A.LAST_STRATEGY == "window"
+        assert asof_tier() == "distributed"
         prev = os.environ.get("TOMIX_ASOF_BCAST_ROWS")
         os.environ["TOMIX_ASOF_BCAST_ROWS"] = "100000000"
         try:
@@ -318,7 +329,7 @@ def probe_asof(spark, src_sf: str, probe_root: str) -> None:
                 os.environ.pop("TOMIX_ASOF_BCAST_ROWS", None)
             else:
                 os.environ["TOMIX_ASOF_BCAST_ROWS"] = prev
-        assert A.LAST_STRATEGY == "broadcast"
+        assert asof_tier() == "driver"
         ok = "HASH_OK" if nat == forced else "MISMATCH"
         print(
             f"{name}_paths,{t_nat:.2f},broadcast={t_brd:.2f}s,,{nat[0]},{ok}",
@@ -398,12 +409,12 @@ def build_bpe_vocab_dataset(src_sf: str, dst: str) -> None:
 def probe_bpe_vocab(spark, src_sf: str, probe_root: str) -> None:
     """Natural above-gate leg for TOMIX_BPE_LOCAL_WORDS: the salted
     corpus trains through the fully distributed iteration (asserted via
-    bpe.LAST_TIER) and is hash-compared against the DuckDB recursive
-    oracle over the same 1.5M-word vocabulary."""
+    the gate decision log) and is hash-compared against the DuckDB
+    recursive oracle over the same 1.5M-word vocabulary."""
     import duckdb
 
-    from tomixpanel_spark.operators import bpe as B
     from tomixpanel_spark.operators import registry
+    from tomixpanel_spark.operators.base import DECISIONS
 
     reg = registry()
     dst = probe_root + "_bpevocab"
@@ -423,10 +434,11 @@ def probe_bpe_vocab(spark, src_sf: str, probe_root: str) -> None:
         "documents embeddings"
     ).split():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{dst}/{t}.parquet'")
+    DECISIONS.clear()  # the check below must not see another family's entry
     run_queries(spark, con, reg, dst, ["bpe_merges", "bpe_token_count"])
-    assert B.LAST_TIER == "distributed", (
-        f"word gate did not flip naturally (LAST_TIER={B.LAST_TIER}) — "
-        "probe is mis-sized"
+    tier = last_decision("TOMIX_BPE_LOCAL_WORDS")
+    assert tier is not None and tier.tier == "distributed", (
+        f"word gate did not flip naturally ({tier}) — probe is mis-sized"
     )
 
 
@@ -476,7 +488,7 @@ def run_queries(spark, con, reg, dst, names, after_query=None) -> None:
             fn = reg[n].fn
             spdf = fn(spark, dst).toPandas()  # warm plan + codegen
             if after_query is not None:
-                # per-query observable checks (e.g. asof.LAST_STRATEGY)
+                # per-query observable checks (e.g. the as-of gate decision)
                 # must fire HERE, while the observable still reflects
                 # THIS query — a post-loop assert reads whichever query
                 # happened to run last (round-12 advice)
@@ -602,7 +614,7 @@ def probe_emb_extras(spark, src_sf: str, probe_root: str) -> None:
     emb = S.ensure_parallel(table(spark, dst, "embeddings"), "vec_id")
     held = emb.filter(F.col("label") == 0)
     train = emb.filter(F.col("label") != 0)
-    assert held.count() > S._emb_bcast_cap(), "held-out side must exceed gate"
+    assert held.count() > S.EMB_BCAST_VECS.cap(), "held-out side must exceed gate"
     t0 = time.perf_counter()
     natural = _spark_checksum(S.embedding_decontam_pairs(train, held))
     t_nat = time.perf_counter() - t0
@@ -636,7 +648,7 @@ def probe_cc(spark, src_sf: str, probe_root: str) -> None:
     t0 = time.perf_counter()
     nat = _spark_checksum(I.identity_components(spark, dst))
     t_nat = time.perf_counter() - t0
-    rounds = I.LAST_DISTRIBUTED_ROUNDS
+    rounds = last_decision("TOMIX_CC_LOCAL_MAX").rounds
     assert rounds is not None, "gate did not flip — probe is mis-sized"
     # verification leg: driver union-find with the gate raised
     os.environ["TOMIX_CC_LOCAL_MAX"] = "10000000"

@@ -142,6 +142,13 @@ def test_derived_artifact_gated_on_own_flag(spark, monkeypatch):
     base.clear_table_cache()
 
 
+def _last_decision(env: str):
+    """Newest gate decision-log entry for one gate variable."""
+    from tomixpanel_spark.operators.base import DECISIONS
+
+    return [d for d in DECISIONS if d.gate == env][-1]
+
+
 @pytest.mark.slow
 def test_connected_components_local_matches_distributed(spark, monkeypatch):
     """The size-adaptive local union-find path and the distributed
@@ -155,19 +162,21 @@ def test_connected_components_local_matches_distributed(spark, monkeypatch):
         (f"n{rng.randrange(120)}", f"n{rng.randrange(120)}") for _ in range(200)
     ] + [("iso1", "iso2")]
     edges = spark.createDataFrame(rows, "id_a string, id_b string")
-    monkeypatch.setattr(idmod, "LOCAL_EDGE_THRESHOLD", 10**9)
+    monkeypatch.setenv("TOMIX_CC_LOCAL_MAX", str(10**9))
     local = {(r["node"], r["component"]) for r in idmod.connected_components(edges).collect()}
-    monkeypatch.setattr(idmod, "LOCAL_EDGE_THRESHOLD", 0)
+    monkeypatch.setenv("TOMIX_CC_LOCAL_MAX", "0")
     dist = {(r["node"], r["component"]) for r in idmod.connected_components(edges).collect()}
     assert local == dist
     assert ("iso1", "iso1") in local and ("iso2", "iso1") in local
-    # ops introspection (scale_probe reads it): the distributed run
-    # records its label-propagation round count; the local run clears it
-    assert idmod.LAST_DISTRIBUTED_ROUNDS is not None
-    assert 1 <= idmod.LAST_DISTRIBUTED_ROUNDS <= idmod.MAX_ITERATIONS
-    monkeypatch.setattr(idmod, "LOCAL_EDGE_THRESHOLD", 10**9)
+    # ops introspection (scale_probe reads it): the distributed run's
+    # decision-log entry carries its label-propagation round count; the
+    # local run's entry has none
+    rounds = _last_decision("TOMIX_CC_LOCAL_MAX").rounds
+    assert rounds is not None
+    assert 1 <= rounds <= idmod.MAX_ITERATIONS
+    monkeypatch.setenv("TOMIX_CC_LOCAL_MAX", str(10**9))
     idmod.connected_components(edges).collect()
-    assert idmod.LAST_DISTRIBUTED_ROUNDS is None
+    assert _last_decision("TOMIX_CC_LOCAL_MAX").rounds is None
 
 
 @pytest.mark.slow
@@ -182,7 +191,7 @@ def test_connected_components_deep_chain_converges(spark, monkeypatch):
         [(f"n{i:04d}", f"n{i + 1:04d}") for i in range(200)],
         "id_a string, id_b string",
     )
-    monkeypatch.setattr(idmod, "LOCAL_EDGE_THRESHOLD", 0)
+    monkeypatch.setenv("TOMIX_CC_LOCAL_MAX", "0")
     out = {tuple(r) for r in idmod.connected_components(edges).collect()}
     assert out == {(f"n{i:04d}", "n0000") for i in range(201)}
 
@@ -197,10 +206,10 @@ def test_cc_probe_is_single_bounded_collect(spark, monkeypatch):
     edges = spark.createDataFrame(
         [(f"a{i}", f"b{i}") for i in range(5)], "id_a string, id_b string"
     )
-    monkeypatch.setattr(idmod, "LOCAL_EDGE_THRESHOLD", 5)  # == distinct count
+    monkeypatch.setenv("TOMIX_CC_LOCAL_MAX", "5")  # == distinct count
     _, rows = idmod.connected_components_with_rows(edges)
     assert rows is not None and len(rows) == 10  # 5 edges -> 10 nodes
-    monkeypatch.setattr(idmod, "LOCAL_EDGE_THRESHOLD", 4)  # one under
+    monkeypatch.setenv("TOMIX_CC_LOCAL_MAX", "4")  # one under
     _, rows = idmod.connected_components_with_rows(edges)
     assert rows is None  # distributed path
 
@@ -231,6 +240,18 @@ def test_carry_ntoks_rides_the_pair_edges(spark):
     }
     for r in carried:
         assert r["nt_a"] == ntok[r["doc_a"]] and r["nt_b"] == ntok[r["doc_b"]]
+
+
+def test_carry_ntoks_rejects_df_cap(spark):
+    """The token-count carry exists only on the uncapped kernel: asking
+    for both is a caller error, raised as ValueError (not an assert,
+    which ``python -O`` strips)."""
+    from tomixpanel_spark.operators.base import table
+    from tomixpanel_spark.operators.dedup import near_dup_pairs
+
+    docs = table(spark, SF_ORACLE, "documents")
+    with pytest.raises(ValueError, match="carry_ntoks"):
+        near_dup_pairs(docs, df_cap=100, carry_ntoks=True)
 
 
 def test_edge_node_attrs_dedups_to_one_signal_per_node(spark):
@@ -1075,20 +1096,44 @@ def test_substring_clean_paths_agree_and_broadcast(spark, monkeypatch):
 
 
 def test_gates_doc_matches_code():
-    """GATES.md is the single ops reference for every TOMIX_* variable;
-    this grep-check makes it impossible for a new gate to ship
-    undocumented (or for the doc to advertise a gate the code dropped)."""
+    """GATES.md is the single ops reference for every TOMIX_* variable.
+    Size gates are checked against the GATES registry: each declared
+    gate has exactly one size-table row, with the code's default and the
+    name that declares it. Every TOMIX_* variable is grep-checked, so
+    none can ship undocumented (or stay advertised after the code
+    dropped it)."""
+    import importlib
     import re
     from pathlib import Path
 
+    import tomixpanel_spark.streaming.cagg  # noqa: F401 (declares a gate)
+    import tomixpanel_spark.streaming.dedup_index  # noqa: F401 (declares a gate)
+    from tomixpanel_spark.operators.base import GATES
+
     root = Path(__file__).resolve().parents[1]
+    doc = (root / "GATES.md").read_text()
+    size_table = doc.split("## Size-adaptive plan gates")[1].split("\n## ")[0]
+    rows = {}
+    for line in size_table.splitlines():
+        cells = [c.strip().strip("`") for c in line.strip().strip("|").split("|")]
+        if cells[0].startswith("TOMIX_"):
+            assert cells[0] not in rows, f"duplicate GATES.md row: {cells[0]}"
+            rows[cells[0]] = cells
+    assert sorted(rows) == sorted(GATES)
+    for env, gate in GATES.items():
+        _, default, _, _, defined, _ = rows[env]
+        assert int(default) == gate.default, f"{env}: doc {default} != code {gate.default}"
+        mod, name = defined.rsplit(".", 1)
+        declared = getattr(importlib.import_module(f"tomixpanel_spark.{mod}"), name, None)
+        assert declared is gate, f"{env}: GATES.md names {defined}"
+
     pat = re.compile(r"TOMIX_[A-Z0-9_]+")
     in_code: set[str] = set()
     for src in [root / "bench.py", root / "scale_probe.py",
                 root / "__spark_entry__.py",
                 *sorted((root / "tomixpanel_spark").rglob("*.py"))]:
         in_code |= set(pat.findall(src.read_text()))
-    in_doc = set(pat.findall((root / "GATES.md").read_text()))
+    in_doc = set(pat.findall(doc))
     missing_from_doc = sorted(in_code - in_doc)
     stale_in_doc = sorted(in_doc - in_code)
     assert not missing_from_doc, f"undocumented gates: {missing_from_doc}"

@@ -28,13 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from tomixpanel_spark.operators.base import QuerySpec, table
-
-# probe/test observable: the strategy the last asof_join call took.
-# Initialized at module scope (the bpe.LAST_TIER precedent) so reading
-# it before any call returns None instead of raising AttributeError
-# (round-12 advice).
-LAST_STRATEGY: str | None = None
+from tomixpanel_spark.operators.base import Gate, QuerySpec, table
 
 
 def asof_join(
@@ -105,29 +99,33 @@ def asof_join(
     if not value_cols:
         raise ValueError("right side has no value columns to carry")
     if strategy == "auto":
-        cap = broadcast_cap if broadcast_cap is not None else _bcast_cap()
+        cap = broadcast_cap if broadcast_cap is not None else ASOF_BCAST_ROWS.cap()
         # gate probe is BOUNDED (limit cap+1 proves overflow without a
         # full count) and memoized per (application, right plan, cap) —
         # repeated auto calls on the same dimension table cost one job,
-        # not one per invocation (the _corpus_count precedent)
-        key = (
-            right.sparkSession.sparkContext.applicationId,
-            right.semanticHash(),
-            cap,
-        )
-        cache_max = _asof_gate_cache_max()
-        hit = _ASOF_GATE_CACHE.get(key) if cache_max > 0 else None
-        if hit is None:
-            hit = right.limit(cap + 1).count() <= cap
-            if cache_max > 0:
-                _ASOF_GATE_CACHE[key] = hit
-                while len(_ASOF_GATE_CACHE) > cache_max:
-                    _ASOF_GATE_CACHE.popitem(last=False)
-        else:
-            _ASOF_GATE_CACHE.move_to_end(key)
+        # not one per invocation (the _corpus_count precedent). A count
+        # rather than Gate.collect_or_none: the collect adds a
+        # single-partition stage, and a memo hit runs no job at all.
+        n = None
+        if cap > 0:
+            key = (
+                right.sparkSession.sparkContext.applicationId,
+                right.semanticHash(),
+                cap,
+            )
+            cache_max = _asof_gate_cache_max()
+            n = _ASOF_GATE_CACHE.get(key) if cache_max > 0 else None
+            if n is None:
+                n = right.limit(cap + 1).count()
+                if cache_max > 0:
+                    _ASOF_GATE_CACHE[key] = n
+                    while len(_ASOF_GATE_CACHE) > cache_max:
+                        _ASOF_GATE_CACHE.popitem(last=False)
+            else:
+                _ASOF_GATE_CACHE.move_to_end(key)
+        hit = n is not None and n <= cap
+        ASOF_BCAST_ROWS.record(cap, n, hit)
         strategy = "broadcast" if hit else "window"
-    global LAST_STRATEGY
-    LAST_STRATEGY = strategy  # probe/test observable (identity.LAST_DISTRIBUTED_ROUNDS precedent)
     if strategy == "cogroup":
         return _asof_cogroup(
             left, right, on, left_time, right_time, right_tiebreak, direction,
@@ -302,7 +300,7 @@ def _asof_cogroup(
 # deployments where the same plan reads growing data).
 from collections import OrderedDict as _OrderedDict
 
-_ASOF_GATE_CACHE: "_OrderedDict[tuple, bool]" = _OrderedDict()
+_ASOF_GATE_CACHE: "_OrderedDict[tuple, int]" = _OrderedDict()
 
 
 def _asof_gate_cache_max() -> int:
@@ -311,16 +309,13 @@ def _asof_gate_cache_max() -> int:
     return int(os.environ.get("TOMIX_ASOF_GATE_CACHE", "64"))
 
 
-def _bcast_cap() -> int:
-    import os
-
-    return int(os.environ.get("TOMIX_ASOF_BCAST_ROWS", "1000000"))
-
-
-def _merge_chunk_rows() -> int:
-    import os
-
-    return int(os.environ.get("TOMIX_ASOF_MERGE_ROWS", "262144"))
+# "auto" broadcasts a right side of up to 1M rows: dimension-like
+# (latest order state, quotes, config history), tens of MB sorted.
+ASOF_BCAST_ROWS = Gate("TOMIX_ASOF_BCAST_ROWS", 1_000_000)
+# Broadcast-tier left-chunk bound (a budget, not a tier choice): each
+# merge_asof call pays an O(right) factorize/scan, so Arrow batches
+# accumulate to this many rows first; task memory stays O(chunk + right).
+ASOF_MERGE_ROWS = Gate("TOMIX_ASOF_MERGE_ROWS", 262_144)
 
 
 def _asof_broadcast(
@@ -362,7 +357,7 @@ def _asof_broadcast(
     )
     bc = spark.sparkContext.broadcast(r_pdf)
 
-    chunk_rows = _merge_chunk_rows()
+    chunk_rows = ASOF_MERGE_ROWS.cap()
 
     def run(batches):
         r = bc.value

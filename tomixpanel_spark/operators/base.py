@@ -12,7 +12,8 @@ hashing values.
 
 from __future__ import annotations
 
-from collections import OrderedDict
+import os
+from collections import OrderedDict, deque
 from dataclasses import dataclass
 from typing import Callable, Optional
 
@@ -37,8 +38,6 @@ _TABLE_CACHE: "OrderedDict[tuple, DataFrame]" = OrderedDict()
 
 
 def _cache_cap() -> int:
-    import os
-
     return int(os.environ.get("TOMIX_CACHE_MAX", "48"))
 
 
@@ -108,8 +107,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     parquet scan+decode. Off by default so single-query correctness runs
     see the plain scan plans.
     """
-    import os
-
     use_cache = bool(os.environ.get("TOMIX_CACHE_TABLES"))
     key = (spark.sparkContext.applicationId, sf_dir, name)
     if use_cache:
@@ -215,8 +212,6 @@ def derived(spark: SparkSession, key: tuple, builder, kind: str = "artifact") ->
     Both are off by default so single-query correctness runs see plain
     lineage; entries share the LRU bound with the table cache.
     """
-    import os
-
     # READ side is unconditional (round-11 verdict #8): an artifact some
     # earlier query already materialized under the flag keeps serving
     # consumers (bm25 reading tfidf's tokenize_tf) even after the flag
@@ -282,8 +277,6 @@ def stage_checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
     matching subtrees — a cross-query side effect a single query must not
     have (observed flipping a plan-locked test in round 6).
     """
-    import os
-
     ck_dir = os.environ.get("TOMIX_CHECKPOINT_DIR")
     if not ck_dir:
         return df.localCheckpoint(eager=eager)
@@ -294,6 +287,77 @@ def stage_checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
     if sc.getCheckpointDir() is None:
         sc.setCheckpointDir(ck_dir)
     return df.checkpoint(eager=eager)
+
+
+# -- size-adaptive gates ------------------------------------------------------
+#
+# Every operator that keeps both a driver tier (driver fold, driver merge,
+# broadcast of a driver-collected side) and a distributed tier picks
+# between them through one ``Gate``, declared once next to the comment
+# that justifies its default. GATES.md documents every declared gate;
+# tests/test_plans.py checks the two agree.
+
+GATES: "dict[str, Gate]" = {}
+
+# Per-process record of every gate decision, newest last. Bounded so a
+# long-lived process cannot grow it; tests and scale_probe.py read it to
+# see which tier ran.
+DECISIONS: "deque[Decision]" = deque(maxlen=256)
+
+
+@dataclass
+class Decision:
+    gate: str  # the gate's env variable
+    cap: int
+    rows: Optional[int]  # rows counted or probed; None when no job ran
+    tier: str  # "driver" (at or under the cap) or "distributed"
+    rounds: Optional[int] = None  # iterations of an iterative tier (CC)
+
+
+@dataclass(frozen=True)
+class Gate:
+    """A size gate: ``TOMIX_*`` env variable ``env`` (read at CALL time, so
+    an ops process can flip a tier per run) capping the driver tier at
+    ``default`` rows unless set. A cap <= 0 always picks the distributed
+    tier and, for the probe, runs no Spark job."""
+
+    env: str
+    default: int
+
+    def __post_init__(self) -> None:
+        GATES[self.env] = self
+
+    def cap(self) -> int:
+        return int(os.environ.get(self.env, self.default))
+
+    def record(self, cap: int, rows: Optional[int], under: bool) -> Decision:
+        """Append one decision (driver tier iff ``under``) to DECISIONS."""
+        d = Decision(self.env, cap, rows, "driver" if under else "distributed")
+        DECISIONS.append(d)
+        return d
+
+    def admits(self, n: int) -> bool:
+        """Count-based decision: True (driver tier) when the cap is
+        positive and ``n`` is at or under it."""
+        cap = self.cap()
+        ok = 0 < cap and n <= cap
+        self.record(cap, n, ok)
+        return ok
+
+    def probe(self, df: DataFrame):
+        """``(frame, decision)``: ONE bounded job decides the tier and,
+        under the cap, IS the collect — ``limit(cap+1)`` returns at most
+        one row over the cap, so a short result proves all of ``df`` is
+        on the driver. ``frame`` is None on the distributed tier."""
+        cap = self.cap()
+        pdf = df.limit(cap + 1).toPandas() if cap > 0 else None
+        ok = pdf is not None and len(pdf) <= cap
+        d = self.record(cap, None if pdf is None else len(pdf), ok)
+        return (pdf if ok else None), d
+
+    def collect_or_none(self, df: DataFrame):
+        """``df`` as a pandas frame when it has at most cap rows, else None."""
+        return self.probe(df)[0]
 
 
 @dataclass(frozen=True)

@@ -66,13 +66,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tomixpanel_spark.operators.base import QuerySpec, stage_checkpoint, table
+from tomixpanel_spark.operators.base import Gate, QuerySpec, stage_checkpoint, table
+from tomixpanel_spark.operators.textops import (
+    TFIDF_BCAST_VOCAB,
+    _under_fold_cap,
+    _vocab_count,
+)
 
 N_MERGES = 6
 
-# probe/test observable: which adaptive tier the last training run took
-# (the asof.LAST_STRATEGY / identity.LAST_DISTRIBUTED_ROUNDS precedent)
-LAST_TIER: str | None = None
+# Distinct-word cap under which the Sennrich iteration runs on the driver
+# over the distributed word-count's (word, freq) rows. 200k words x ~8
+# syms is a few MB and a sub-second loop; web-scale corpora with 10M+
+# distinct words take the distributed iteration.
+BPE_LOCAL_WORDS = Gate("TOMIX_BPE_LOCAL_WORDS", 200_000)
 
 _OUT_SCHEMA = (
     "step long, left string, right string, merged string, pair_count long"
@@ -288,22 +295,17 @@ def _train_distributed(
     # cap (true web-scale vocabularies), the distributed iteration below
     # runs unchanged. m>1 batching stays distributed — it exists to
     # measure the batched fold, not to win the toy sizes.
-    global LAST_TIER
-    cap = _bpe_local_words_cap()
     if merges_per_round == 1:
         # ONE bounded probe job decides the tier AND (under the cap) IS
-        # the collect — limit(cap+1) can return at most one extra row
-        # over the gate, so a short result proves the whole vocab is on
-        # the driver (the CC-probe idiom). The word-fold path never
+        # the collect (Gate.collect_or_none). The word-fold path never
         # re-reads `cur` after this, so the old count job existed only
         # to size the gate there. The DISTRIBUTED path still pays the
         # full count below: it doubles as the EAGER materialization of
         # the lazy localCheckpoint, without which every merge step
         # re-derives the corpus lineage (measured 26 s vs 6 s at the
         # 50k probe).
-        probe = cur.select("word", "freq").limit(cap + 1).toPandas()
-        if len(probe) <= cap:
-            LAST_TIER = "word-fold"
+        probe = BPE_LOCAL_WORDS.collect_or_none(cur.select("word", "freq"))
+        if probe is not None:
             wc = dict(zip(probe["word"].tolist(), probe["freq"].tolist()))
             rows, vocab = _sennrich_loop(wc, n_merges)
             final = None
@@ -313,7 +315,6 @@ def _train_distributed(
                     schema="word string, freq long, syms array<string>",
                 )
             return rows, final
-    LAST_TIER = "distributed"
     cur.count()  # materialize the checkpoint before the merge loop re-reads
     rows: list[tuple] = []
     while len(rows) < n_merges:
@@ -330,32 +331,11 @@ def _train_distributed(
     return rows, (cur if need_final else None)
 
 
-def _bpe_local_words_cap() -> int:
-    """Distinct-word cap under which the Sennrich iteration runs on the
-    driver over the distributed word-count's (word, freq) rows. 200k
-    words x ~8 syms is a few MB and a sub-second loop; web-scale corpora
-    with 10M+ distinct words take the distributed iteration."""
-    import os
-
-    return int(os.environ.get("TOMIX_BPE_LOCAL_WORDS", "200000"))
-
-
-def _under_fold_cap(spark: SparkSession, sf_dir: str, docs: DataFrame) -> bool:
-    from tomixpanel_spark.operators.textops import (
-        _corpus_count,
-        _tfidf_driver_fold_cap,
-    )
-
-    return _corpus_count(spark, sf_dir, docs) <= _tfidf_driver_fold_cap()
-
-
 def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tomixpanel_spark.operators.base import ensure_parallel
 
-    global LAST_TIER
     docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
     if _under_fold_cap(spark, sf_dir, docs):
-        LAST_TIER = "corpus-fold"
         rows, _vocab = _fold_train(docs, N_MERGES)
         return spark.createDataFrame(rows, schema=_OUT_SCHEMA)
     rows, _final = _train_distributed(spark, docs, N_MERGES, need_final=False)
@@ -374,11 +354,9 @@ def _distributed_vocab(
     DIFFERENT sf_dir's docs in the same app (scale_probe runs several
     probe dirs per session), mis-gating the broadcast decision
     (round-12 advice, medium)."""
-    from tomixpanel_spark.operators.textops import _tfidf_vocab_cap, _vocab_count
-
     _rows, final = _train_distributed(spark, docs, N_MERGES, need_final=True)
     key = (spark.sparkContext.applicationId, sf_dir, "bpe_vocab")
-    if _vocab_count(spark, key, final) <= _tfidf_vocab_cap():
+    if TFIDF_BCAST_VOCAB.admits(_vocab_count(spark, key, final)):
         return F.broadcast(final)
     return final
 

@@ -32,12 +32,17 @@ from pyspark.sql import functions as F
 
 from tomixpanel_spark.functions.text import fingerprint, tokens
 from tomixpanel_spark.operators.base import (
+    Gate,
     QuerySpec,
     derived,
     ensure_parallel,
     local_rows_df,
     stage_checkpoint,
     table,
+)
+from tomixpanel_spark.operators.textops import (
+    TFIDF_DRIVER_FOLD_DOCS,
+    _under_fold_cap,
 )
 
 N_MINHASH = 8
@@ -181,7 +186,8 @@ def _jaccard_pairs_from_shingles(
     recall trade), never misscore a generated candidate.
     """
     if df_cap is not None:
-        assert not carry_ntoks, "carry_ntoks is an uncapped-path feature"
+        if carry_ntoks:
+            raise ValueError("carry_ntoks is incompatible with df_cap")
         rows = sa.select(
             "doc_id", F.size("sh_arr").alias("n"), F.explode("sh_arr").alias("sh")
         )
@@ -793,14 +799,10 @@ def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream never materializes. Weighted lane values still fit: bit*tf <
     2^15 per lane, same packed bound as before.
     """
-    from tomixpanel_spark.operators.textops import (
-        _corpus_count,
-        _tfidf_driver_fold_cap,
-        tokenize_tf,
-    )
+    from tomixpanel_spark.operators.textops import tokenize_tf
 
     docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
-    if _corpus_count(spark, sf_dir, docs) <= _tfidf_driver_fold_cap():
+    if _under_fold_cap(spark, sf_dir, docs):
         # size-adaptive driver fold (the tfidf/bm25 gate): one Arrow
         # pass + numpy votes, zero exchanges
         return spark.createDataFrame(
@@ -896,10 +898,8 @@ def simhash_pairs(spark: SparkSession, sf_dir: str, band_cap: int | None = None)
     exactly once; intra-cluster (hamming-0) pairs expand directly.
     ``band_cap`` bounds distinct-signature postings, the residual
     hot-bucket guard."""
-    from tomixpanel_spark.operators.textops import _corpus_count, _tfidf_driver_fold_cap
-
     docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
-    if band_cap is None and _corpus_count(spark, sf_dir, docs) <= _tfidf_driver_fold_cap():
+    if band_cap is None and _under_fold_cap(spark, sf_dir, docs):
         # full driver fold under the tfidf gate: signatures AND the
         # banded pairing run in numpy, pairs ship back as ONE Arrow
         # local relation. (An earlier fold lost to the JVM join because
@@ -952,23 +952,17 @@ def banded_hamming_pairs(
     band-dropping), the whole pairing folds through
     ``_banded_pairs_fold`` — the signature producer (decode/hash
     pipeline) still runs distributed; only the output-bounded signature
-    rows transfer. The bounded ``limit(cap+1)`` probe proves overflow
-    without shipping the full table."""
+    rows transfer. The bounded probe proves overflow without shipping
+    the full table."""
     if band_cap is None:
-        from tomixpanel_spark.operators.textops import _tfidf_driver_fold_cap
-
-        cap = _tfidf_driver_fold_cap()
-        if cap > 0:
-            probe = sig.select(
-                F.col(id_col).alias("doc_id"), F.col(sig_col).alias("simhash")
-            ).limit(cap + 1).toPandas()
-            if len(probe) <= cap:
-                import pandas as pd  # noqa: F401 (fold returns pandas)
-
-                pdf = _banded_pairs_fold(probe, n_bands, band_bits, ham_max)
-                return sig.sparkSession.createDataFrame(
-                    pdf, schema="doc_a long, doc_b long, hamming long"
-                )
+        probe = TFIDF_DRIVER_FOLD_DOCS.collect_or_none(
+            sig.select(F.col(id_col).alias("doc_id"), F.col(sig_col).alias("simhash"))
+        )
+        if probe is not None:
+            pdf = _banded_pairs_fold(probe, n_bands, band_bits, ham_max)
+            return sig.sparkSession.createDataFrame(
+                pdf, schema="doc_a long, doc_b long, hamming long"
+            )
     # The cluster table (one row per DISTINCT signature) is the compact
     # dedup artifact everything else reads: materialize it once — four
     # consumers (intra pairs, band postings, two id join-backs) would
@@ -1397,13 +1391,7 @@ EVAL_SET_MOD = 97  # synthetic held-out set: every 97th doc
 # corpus paired with a huge eval set must fall back to a shuffle join.
 # Gate is in eval DOCS (counted with a cheap single-column scan — counting
 # eval SHINGLE rows would force the whole shingle computation twice).
-EVAL_BROADCAST_MAX_DOCS = 100_000
-
-
-def _eval_broadcast_cap() -> int:
-    import os
-
-    return int(os.environ.get("TOMIX_DECONTAM_BCAST_DOCS", str(EVAL_BROADCAST_MAX_DOCS)))
+DECONTAM_BCAST_DOCS = Gate("TOMIX_DECONTAM_BCAST_DOCS", 100_000)
 
 
 _EVAL_COUNT_CACHE: dict[tuple, int] = {}
@@ -1442,7 +1430,7 @@ def decontam_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = rows.filter(~is_eval)
     n_eval_docs = _eval_doc_count(spark, sf_dir)
-    if n_eval_docs <= _eval_broadcast_cap():
+    if DECONTAM_BCAST_DOCS.admits(n_eval_docs):
         eval_side = F.broadcast(eval_sh)
     else:
         # Above the gate we KNOW the eval side is big even when Catalyst's
@@ -1619,10 +1607,8 @@ def substring_dup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     back in the same keyed space. Production suffix-array dedup replaces
     the window explode with an index build — the decision signal is the
     same."""
-    from tomixpanel_spark.operators.textops import _corpus_count, _tfidf_driver_fold_cap
-
     docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
-    if _corpus_count(spark, sf_dir, docs) <= _tfidf_driver_fold_cap():
+    if _under_fold_cap(spark, sf_dir, docs):
         # size-adaptive driver fold (the tfidf/bm25/simhash gate): the
         # distributed plan below is ~5 stages of scheduler floor at small
         # window counts; paths-agree test pins identity
@@ -1759,10 +1745,8 @@ def substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, position), state bounded per doc. Size-adaptive: driver
     fold under the tfidf gate (vectorized lexsort + reduceat), same
     shape distributed."""
-    from tomixpanel_spark.operators.textops import _corpus_count, _tfidf_driver_fold_cap
-
     docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
-    if _corpus_count(spark, sf_dir, docs) <= _tfidf_driver_fold_cap():
+    if _under_fold_cap(spark, sf_dir, docs):
         return spark.createDataFrame(
             _substring_spans_fold(docs),
             schema="doc_id long, span_start long, span_end long, span_tokens long",
@@ -1889,10 +1873,8 @@ def substring_dedup_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc span masking runs as one higher-order filter over the token
     array — no token-level explode or shuffle on the cleaning side.
     Size-adaptive via the family's driver-fold gate."""
-    from tomixpanel_spark.operators.textops import _corpus_count, _tfidf_driver_fold_cap
-
     docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
-    if _corpus_count(spark, sf_dir, docs) <= _tfidf_driver_fold_cap():
+    if _under_fold_cap(spark, sf_dir, docs):
         return spark.createDataFrame(
             _substring_clean_fold(docs),
             schema="doc_id long, kept_tokens long, removed_tokens long, cleaned_fp string",

@@ -20,13 +20,12 @@ feasible at test scale, while the Spark loop is the 100 TB path.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from tomixpanel_spark.operators.base import (
+    Gate,
     QuerySpec,
     local_rows_df,
     stage_checkpoint,
@@ -34,26 +33,14 @@ from tomixpanel_spark.operators.base import (
 )
 
 MAX_ITERATIONS = 20
-# ops introspection (scale_probe reads it): number of label-propagation
-# rounds the DISTRIBUTED path took on the last connected_components call;
-# None when the driver union-find path ran instead
-LAST_DISTRIBUTED_ROUNDS: "int | None" = None
 # Below this many DISTINCT edges the component computation runs as driver-
 # side union-find on the collected edge list — the same size-adaptive
 # strategy as a broadcast join (the edge set after dedup is the identity
 # graph, tiny relative to the event volume that produced it). Above it,
-# the distributed label-propagation loop runs. ~2M edges of short string
-# ids is low hundreds of MB on the driver — comfortably collectable.
-LOCAL_EDGE_THRESHOLD = 2_000_000
-
-
-def _local_edge_threshold() -> int:
-    # env read at CALL time (not import) so a bench/ops process can flip
-    # the strategy per pass — TOMIX_CC_LOCAL_MAX=0 forces the distributed
-    # label-propagation loop; unset uses the module default (tests
-    # monkeypatch the attribute)
-    v = os.environ.get("TOMIX_CC_LOCAL_MAX")
-    return int(v) if v is not None else LOCAL_EDGE_THRESHOLD
+# the distributed label-propagation loop runs and its decision-log entry
+# records the round count. ~2M edges of short string ids is low hundreds
+# of MB on the driver — comfortably collectable.
+CC_LOCAL_MAX = Gate("TOMIX_CC_LOCAL_MAX", 2_000_000)
 
 
 def _local_components(pdf) -> list[tuple]:
@@ -179,7 +166,6 @@ def connected_components_with_rows(
 def _cc_impl(
     edges: DataFrame, a: str, b: str, attrs: tuple
 ) -> "tuple[DataFrame, list[tuple] | None, object]":
-    global LAST_DISTRIBUTED_ROUNDS
     id_type = edges.schema[a].dataType
     ded = (
         edges.select(
@@ -190,19 +176,16 @@ def _cc_impl(
         .distinct()
     )
     # ONE bounded probe job decides the tier AND (under the gate) IS the
-    # collect: limit(thr+1) can return at most one row over the gate, so
-    # len(probe) <= thr proves the whole distinct edge set was collected.
-    # This replaces the r14 shape's three serial actions (eager
-    # localCheckpoint + count + toPandas — each a scheduling floor on the
-    # small graphs the gate exists for; guide §1.2 step 1). The lazy
-    # checkpoint still truncates lineage: partitions the probe computes
-    # persist as a side effect, and the distributed branch below forces
-    # full materialization before its iterative consumers re-read.
-    thr = _local_edge_threshold()
+    # collect (Gate.probe). This replaces the r14 shape's three serial
+    # actions (eager localCheckpoint + count + toPandas — each a
+    # scheduling floor on the small graphs the gate exists for; guide
+    # §1.2 step 1). The lazy checkpoint still truncates lineage:
+    # partitions the probe computes persist as a side effect, and the
+    # distributed branch below forces full materialization before its
+    # iterative consumers re-read.
     ded = stage_checkpoint(ded, eager=False)
-    probe = ded.limit(thr + 1).toPandas()
-    if len(probe) <= thr:
-        LAST_DISTRIBUTED_ROUNDS = None  # the local path ran
+    probe, decision = CC_LOCAL_MAX.probe(ded)
+    if probe is not None:
         rows = _local_components(probe)
         schema = StructType(
             [StructField("node", id_type), StructField("component", id_type)]
@@ -218,7 +201,7 @@ def _cc_impl(
     # big-graph path: materialize the checkpoint ONCE (same cost the old
     # eager checkpoint paid) so the per-round re-reads below never
     # recompute the upstream pair machinery. The probe above cost one
-    # bounded CollectLimit over the first partitions — O(thr) rows.
+    # bounded CollectLimit over the first partitions — O(cap) rows.
     ded.count()
     e2 = ded.select("src", "dst")
     sym = e2.unionByName(
@@ -240,7 +223,7 @@ def _cc_impl(
         eager=True,
     )
     if labels.filter(F.col("component") != F.col("node")).limit(1).count() == 0:
-        LAST_DISTRIBUTED_ROUNDS = 1
+        decision.rounds = 1
         return labels, None, ded
     for _round in range(MAX_ITERATIONS - 1):
         nm = (
@@ -280,7 +263,7 @@ def _cc_impl(
         changed = updated.filter(F.col("component") != F.col("prev")).limit(1).count()
         labels = updated.select("node", "component")
         if changed == 0:
-            LAST_DISTRIBUTED_ROUNDS = _round + 2
+            decision.rounds = _round + 2
             return labels, None, ded
     raise RuntimeError(
         f"connected_components did not converge in {MAX_ITERATIONS} "

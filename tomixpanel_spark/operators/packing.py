@@ -255,13 +255,10 @@ def seeded_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor row': 0.45 s vs a 7 ms oracle). The 50k-doc probe still runs
     the distributed plan NATURALLY, and the bench distributed tier
     hash-checks it with the gate forced off."""
-    from tomixpanel_spark.operators.textops import (
-        _corpus_count,
-        _tfidf_driver_fold_cap,
-    )
+    from tomixpanel_spark.operators.textops import _under_fold_cap
 
     docs = table(spark, sf_dir, "documents")
-    if _corpus_count(spark, sf_dir, docs) <= _tfidf_driver_fold_cap():
+    if _under_fold_cap(spark, sf_dir, docs):
         import hashlib
 
         ranked = sorted(

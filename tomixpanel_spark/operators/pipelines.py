@@ -323,17 +323,22 @@ def semdedup_clusters(
     near-dup pairs — its plan must exchange on the cluster id only
     (tests/test_pipelines.py asserts hashpartitioning(cell) and no
     cartesian), because connected_components' driver-local tier would
-    otherwise hide the pairing plan from the final query's explain."""
+    otherwise hide the pairing plan from the final query's explain.
+
+    ``assigned`` is NOT materialized: every action on it, or on
+    ``pairs`` built from it, re-runs the Arrow cluster-assignment pass
+    over the embeddings. Checkpoint it before consuming it more than
+    once."""
     import numpy as np
 
     from tomixpanel_spark.operators.similarity import (
         IVFQ_CELLS,
         IVFQ_ITER,
         NEARDUP_E6,
+        SCORE_CELLS_CAP,
         _finite_vecs,
         _mat,
         _quant,
-        _score_cells_cap,
     )
 
     emb = ensure_parallel(table(spark, sf_dir, "embeddings"), "vec_id")
@@ -379,7 +384,7 @@ def semdedup_clusters(
         schema="vec_id long, cell int, cdot long, embedding array<float>",
     )
 
-    cells_cap = _score_cells_cap()
+    cells_cap = SCORE_CELLS_CAP.cap()
     empty = pd.DataFrame(
         {"vec_a": [], "vec_b": [], "sim_e6": [], "cdot_a": [], "cdot_b": []}
     )

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tomixpanel_spark.operators.base import (
+    Gate,
     QuerySpec,
     ensure_parallel,
     fresh_attrs,
@@ -61,13 +62,7 @@ NEARDUP_BLOCKS = 8  # all-pairs block count; at 100 TB size so N/B fits a task
 # before chunking. Kernels now score the left side in row chunks of
 # cap // nR, so task memory is O(block_rows * d + cap) and only hits
 # accumulate. Env-tunable for executor-memory sizing.
-SCORE_CELLS_CAP = 4_000_000
-
-
-def _score_cells_cap() -> int:
-    import os
-
-    return int(os.environ.get("TOMIX_SCORE_CELLS_CAP", str(SCORE_CELLS_CAP)))
+SCORE_CELLS_CAP = Gate("TOMIX_SCORE_CELLS_CAP", 4_000_000)
 
 _SQL_SIM = (
     "CAST(round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), "
@@ -163,7 +158,7 @@ def _scored_pairs(
     silently suppress a real cross-set pair."""
     import numpy as np
 
-    cells_cap = _score_cells_cap()
+    cells_cap = SCORE_CELLS_CAP.cap()
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         if not len(q_ids):
@@ -337,7 +332,7 @@ def embedding_neardup_pairs(
 
     empty = pd.DataFrame({"vec_a": [], "vec_b": [], "sim_e6": []})
 
-    cells_cap = _score_cells_cap()
+    cells_cap = SCORE_CELLS_CAP.cap()
 
     def block_pairs(key, lg: pd.DataFrame, rg: pd.DataFrame) -> pd.DataFrame:
         pi, pj = int(key[0]), int(key[1])
@@ -384,13 +379,8 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return embedding_neardup_pairs(table(spark, sf_dir, "embeddings"))
 
 
-EMB_BCAST_MAX_VECS = 100_000  # ~25 MB closure at 64 float32 dims
-
-
-def _emb_bcast_cap() -> int:
-    import os
-
-    return int(os.environ.get("TOMIX_EMB_BCAST_VECS", str(EMB_BCAST_MAX_VECS)))
+# ~25 MB closure at 64 float32 dims
+EMB_BCAST_VECS = Gate("TOMIX_EMB_BCAST_VECS", 100_000)
 
 
 def _cross_blocked_pairs(
@@ -428,7 +418,7 @@ def _cross_blocked_pairs(
     right = blocked(right_df, "pj", "pi")
     empty = pd.DataFrame({"train_id": [], "eval_id": [], "sim_e6": []})
 
-    cells_cap = _score_cells_cap()
+    cells_cap = SCORE_CELLS_CAP.cap()
 
     def block_pairs(key, lg: pd.DataFrame, rg: pd.DataFrame) -> pd.DataFrame:
         if not len(lg) or not len(rg):
@@ -492,15 +482,12 @@ def embedding_decontam_pairs(
     train = _finite_vecs(train, vec_col)
     held_out = _finite_vecs(held_out, vec_col)
     # ONE bounded probe job decides the tier AND (under the gate) IS the
-    # collect (the CC-probe idiom): limit(cap+1) can return at most one
-    # row over the gate, so a short result proves the whole held-out set
-    # is already on the driver — the old shape paid a separate count job
-    # before an identical toPandas. Over the gate the wasted transfer is
-    # bounded by the cap (~25 MB at the default) and the blocked cogroup
-    # runs unchanged.
-    cap = _emb_bcast_cap()
-    pdf = held_out.select(id_col, vec_col).limit(cap + 1).toPandas()
-    if len(pdf) > cap:
+    # collect (Gate.collect_or_none) — the old shape paid a separate
+    # count job before an identical toPandas. Over the gate the wasted
+    # transfer is bounded by the cap (~25 MB at the default) and the
+    # blocked cogroup runs unchanged.
+    pdf = EMB_BCAST_VECS.collect_or_none(held_out.select(id_col, vec_col))
+    if pdf is None:
         return _cross_blocked_pairs(
             train, held_out, threshold_e6, id_col=id_col, vec_col=vec_col
         )

@@ -744,17 +744,13 @@ def dedup_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     long-keyed hash join; the oracle recomputes the decision from raw
     text, so the hash check proves index-serving correctness while the
     ratio compares probe vs recompute."""
-    from tomixpanel_spark.operators.textops import (
-        _corpus_count,
-        _tfidf_driver_fold_cap,
-        docs_pdf,
-    )
+    from tomixpanel_spark.operators.textops import _under_fold_cap, docs_pdf
     from tomixpanel_spark.streaming.dedup_index import DedupIndex
 
     store = _built_dedup_index(spark, sf_dir)
     docs = table(spark, sf_dir, "documents")
     probe = docs.filter(F.pmod("doc_id", F.lit(2)) == 1).select("doc_id", "text")
-    if _corpus_count(spark, sf_dir, docs) <= _tfidf_driver_fold_cap():
+    if _under_fold_cap(spark, sf_dir, docs):
         # serving-latency path: driver probe (same hash spec, pyarrow
         # bucket reads, one merge) — the distributed probe's three job
         # floors dominate at interactive batch sizes; paths-agree test

@@ -30,6 +30,7 @@ from tomixpanel_spark.functions.text import (
     tokens,
 )
 from tomixpanel_spark.operators.base import (
+    Gate,
     QuerySpec,
     ensure_parallel,
     local_rows_df,
@@ -224,7 +225,7 @@ def mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_buckets = _vocab_count(
         spark, (spark.sparkContext.applicationId, sf_dir, "mix_buckets"), counts
     )
-    if n_buckets <= _mixture_bucket_cap():
+    if MIXTURE_BCAST_BUCKETS.admits(n_buckets):
         build = F.broadcast(build)
     else:
         build = build.hint("shuffle_hash")
@@ -238,15 +239,7 @@ def mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # A bucketing function that explodes past this many distinct buckets is
 # degenerate (buckets are languages/sources — intrinsically small), but
 # the gate makes the broadcast-bound RUNTIME-checked like decontam's.
-MIXTURE_BROADCAST_MAX_BUCKETS = 100_000
-
-
-def _mixture_bucket_cap() -> int:
-    import os
-
-    return int(
-        os.environ.get("TOMIX_MIXTURE_BCAST_BUCKETS", str(MIXTURE_BROADCAST_MAX_BUCKETS))
-    )
+MIXTURE_BCAST_BUCKETS = Gate("TOMIX_MIXTURE_BCAST_BUCKETS", 100_000)
 
 
 _MIXTURE_REBALANCE_SQL = f"""
@@ -1120,7 +1113,7 @@ def docs_pdf(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"):
     analog of the engine buffer pool, so it caches under the SAME flag
     as the table cache (``TOMIX_CACHE_TABLES``): it holds raw input
     pages, never a query's work product. Gate-bounded by every caller
-    (``_tfidf_driver_fold_cap``)."""
+    (``TFIDF_DRIVER_FOLD_DOCS``)."""
     import os
 
     key = (
@@ -1153,7 +1146,7 @@ def tokenize_tf_pdf(docs: DataFrame, id_col: str = "doc_id", text_col: str = "te
     mapInPandas pass and shipped the tf table back; collecting the raw
     text instead removes a scheduler round per query (the raw documents
     are SMALLER than their tf table at typical English token/byte
-    ratios). Callers gate on ``_tfidf_driver_fold_cap`` before calling.
+    ratios). Callers gate on ``TFIDF_DRIVER_FOLD_DOCS`` before calling.
     Returns pandas (doc_id, token, tf)."""
     pdf = docs_pdf(docs, id_col, text_col)
     return _pa_tokenize_tf(pdf[id_col], pdf[text_col]).to_pandas()
@@ -1162,13 +1155,7 @@ def tokenize_tf_pdf(docs: DataFrame, id_col: str = "doc_id", text_col: str = "te
 # Vocabulary gate for the df broadcast (same pattern as decontam's
 # held-out gate, round-7 advice): broadcast only while the distinct-token
 # side fits executor memory; above the cap, fall back to a shuffle join.
-TFIDF_BROADCAST_MAX_VOCAB = 2_000_000
-
-
-def _tfidf_vocab_cap() -> int:
-    import os
-
-    return int(os.environ.get("TOMIX_TFIDF_BCAST_VOCAB", str(TFIDF_BROADCAST_MAX_VOCAB)))
+TFIDF_BCAST_VOCAB = Gate("TOMIX_TFIDF_BCAST_VOCAB", 2_000_000)
 
 
 _VOCAB_COUNT_CACHE: dict[tuple, int] = {}
@@ -1193,15 +1180,7 @@ def _vocab_count(spark: SparkSession, key: tuple, df_counts: DataFrame) -> int:
 # tf table is docs x distinct-tokens-per-doc rows (~25k docs with a
 # typical ~250-token distinct profile is ~6M small rows, a few hundred
 # MB of pandas — the same order as the CC edge cap).
-TFIDF_DRIVER_FOLD_MAX_DOCS = 25_000
-
-
-def _tfidf_driver_fold_cap() -> int:
-    import os
-
-    return int(
-        os.environ.get("TOMIX_TFIDF_DRIVER_FOLD_DOCS", str(TFIDF_DRIVER_FOLD_MAX_DOCS))
-    )
+TFIDF_DRIVER_FOLD_DOCS = Gate("TOMIX_TFIDF_DRIVER_FOLD_DOCS", 25_000)
 
 
 _CORPUS_COUNT_CACHE: dict[tuple, int] = {}
@@ -1216,13 +1195,19 @@ def _corpus_count(spark: SparkSession, sf_dir: str, docs: DataFrame) -> int:
     return _CORPUS_COUNT_CACHE[key]
 
 
+def _under_fold_cap(spark: SparkSession, sf_dir: str, docs: DataFrame) -> bool:
+    """The text family's driver-fold decision: the memoized corpus count
+    against ``TFIDF_DRIVER_FOLD_DOCS``."""
+    return TFIDF_DRIVER_FOLD_DOCS.admits(_corpus_count(spark, sf_dir, docs))
+
+
 def _tfidf_driver_fold(docs: DataFrame, n_docs: int) -> DataFrame:
     """Small-corpus tf-idf: ONE narrow Arrow pass + a vectorized driver
     fold — no shuffle, no broadcast-exchange job, no checkpoint, no
     second scan. The pass is the same fused tokenize+count as the
     distributed plan (``tokenize_tf``'s batch body), emitting the sparse
     (doc_id, token, tf) table — the ONLY corpus-sized transfer; the
-    collect is gate-bounded (``TFIDF_DRIVER_FOLD_MAX_DOCS``). On the
+    collect is gate-bounded (``TFIDF_DRIVER_FOLD_DOCS``). On the
     driver, df is one pandas value_counts over the unique-per-(doc,
     token) rows, scores are exact vectorized int64 arithmetic
     (tf * 1e6 * N // df — all positive, pandas ``//`` floors like
@@ -1319,7 +1304,7 @@ def tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plans.py::test_tfidf_paths_agree)."""
     docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
     n_docs = _corpus_count(spark, sf_dir, docs)
-    if n_docs <= _tfidf_driver_fold_cap():
+    if TFIDF_DRIVER_FOLD_DOCS.admits(n_docs):
         return _tfidf_driver_fold(docs, n_docs)
     tf = _tf_view(docs)
     df_counts = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
@@ -1334,7 +1319,7 @@ def tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = _vocab_count(
         spark, (spark.sparkContext.applicationId, sf_dir, "vocab"), df_counts
     )
-    if vocab <= _tfidf_vocab_cap():
+    if TFIDF_BCAST_VOCAB.admits(vocab):
         build = F.broadcast(build)
     else:
         # vocabulary too big for executor memory: shuffle join, with
@@ -1510,7 +1495,7 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     only over-count (collisions add), and both engines hash identically,
     so over-counts match exactly too."""
     docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
-    if _corpus_count(spark, sf_dir, docs) <= _tfidf_driver_fold_cap():
+    if _under_fold_cap(spark, sf_dir, docs):
         # size-adaptive driver fold (the tfidf/bm25/simhash/substring
         # gate): tokenize driver-side, build the DEPTHxWIDTH cells with
         # one scatter-add per row, estimate = min over rows — identical
@@ -1649,7 +1634,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
     n_docs = _corpus_count(spark, sf_dir, docs)
-    if n_docs <= _tfidf_driver_fold_cap():
+    if TFIDF_DRIVER_FOLD_DOCS.admits(n_docs):
         return _bm25_driver_fold(docs, n_docs)
     tf = _tf_view(docs)
     tfd = tf  # dl is fused into the tokenize pass (no window exchange)
@@ -1731,13 +1716,7 @@ SELECT q_id, doc_id, rank, score_e6 FROM (
 # NOT occurrences) stays under this cap; above it the scoring join falls
 # back to a shuffle join on (prev, cur). Counted once per (application,
 # sf_dir) and memoized — the tfidf vocab-gate precedent.
-LM_BROADCAST_MAX_BIGRAMS = 2_000_000
-
-
-def _lm_bcast_cap() -> int:
-    import os
-
-    return int(os.environ.get("TOMIX_LM_BCAST_BIGRAMS", str(LM_BROADCAST_MAX_BIGRAMS)))
+LM_BCAST_BIGRAMS = Gate("TOMIX_LM_BCAST_BIGRAMS", 2_000_000)
 
 
 _LM_MODEL_COUNT_CACHE: dict[tuple, int] = {}
@@ -1850,7 +1829,7 @@ def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tomixpanel_spark.functions.text import adjacent_pairs
 
     docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
-    if _corpus_count(spark, sf_dir, docs) <= _tfidf_driver_fold_cap():
+    if _under_fold_cap(spark, sf_dir, docs):
         return _lm_driver_fold(spark, docs)
     toks = docs.select("doc_id", tokens("text").alias("words"))
     pairs = adjacent_pairs(F.col("words"), "prev", "cur")
@@ -1869,7 +1848,7 @@ def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (spark.sparkContext.applicationId, sf_dir, "lm_bigram_types")
     if key not in _LM_MODEL_COUNT_CACHE:
         _LM_MODEL_COUNT_CACHE[key] = model.count()
-    if _LM_MODEL_COUNT_CACHE[key] <= _lm_bcast_cap():
+    if LM_BCAST_BIGRAMS.admits(_LM_MODEL_COUNT_CACHE[key]):
         model, ctx = F.broadcast(model), F.broadcast(ctx)
     scored = (
         big.join(model, ["prev", "cur"])

@@ -57,12 +57,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from tomixpanel_spark.operators.base import Gate
 from tomixpanel_spark.streaming.genstore import (
     cas_check,
     mint_store_id,
     store_nonce,
     writer_lock,
 )
+
+# A micro-batch whose partial cells fit under this cap merges on the
+# driver (see update_batch): 64k cells is a few MB of pandas, while the
+# distributed merge costs two extra Spark jobs per batch.
+CAGG_DRIVER_MERGE_CAP = Gate("TOMIX_CAGG_DRIVER_MERGE_CAP", 65_536)
 
 # hourly() read-plan cache (LRU): key includes the manifest's day->gen
 # map AND the store-instance nonce, so any committed write — or a store
@@ -296,7 +302,6 @@ class ContinuousAggregate:
             if batch_id <= man["batch_id"]:
                 return  # replayed batch: already committed in the manifest
             spark = batch_df.sparkSession
-            cap = int(os.environ.get("TOMIX_CAGG_DRIVER_MERGE_CAP", "65536"))
             # persist ONCE across the gate probe and whichever merge path
             # runs — without the pin an over-cap batch would re-aggregate
             # the raw stream for the distributed merge after the probe
@@ -307,12 +312,9 @@ class ContinuousAggregate:
                 # driver writer emits a string key column; exotic key_type
                 # stores take the distributed path rather than guessing an
                 # arrow type
-                if cap > 0 and self.key_type == "string":
-                    # LIMIT cap+1 bounds the driver transfer: exactly-cap-
-                    # or-less means we hold ALL cells; cap+1 rows proves
-                    # overflow without shipping the full aggregate
-                    pdf = partials.limit(cap + 1).toPandas()
-                if pdf is not None and len(pdf) <= cap:
+                if self.key_type == "string":
+                    pdf = CAGG_DRIVER_MERGE_CAP.collect_or_none(partials)
+                if pdf is not None:
                     days = self._merge_driver_write(pdf, man, batch_id)
                 else:
                     days = self._merge_spark_write(spark, partials, man, batch_id)

@@ -56,6 +56,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from tomixpanel_spark.operators.base import Gate
 from tomixpanel_spark.streaming.genstore import (
     atomic_json_swap,
     cas_check,
@@ -66,6 +67,11 @@ from tomixpanel_spark.streaming.genstore import (
     store_nonce,
     writer_lock,
 )
+
+# A batch (register) or store (rebucket) with at most this many distinct
+# hashes merges on the driver: 64k hashes is a few MB of pandas, while the
+# distributed merge pays several Spark job floors per batch.
+DEDUP_INDEX_DRIVER_CAP = Gate("TOMIX_DEDUP_INDEX_DRIVER_CAP", 65_536)
 
 # probe_driver per-bucket frame cache (LRU): keyed (store path, bucket,
 # owning generation) — generation dirs are immutable, so a hit can never
@@ -217,19 +223,13 @@ class DedupIndex:
             nb = self._effective_buckets(man)
             seq = man["gen_seq"] + 1
             spark = batch_df.sparkSession
-            cap = int(os.environ.get("TOMIX_DEDUP_INDEX_DRIVER_CAP", "65536"))
             # persist ONCE across the gate probe and whichever merge path
             # runs — without the pin the overflow path re-aggregates the
             # raw batch a second time
             hashes = self._batch_hashes(batch_df, nb).persist()
             try:
-                pdf = None
-                if cap > 0:
-                    # LIMIT cap+1 bounds the driver transfer: exactly-cap-
-                    # or-less means we hold ALL hashes; cap+1 rows proves
-                    # overflow without shipping the full table
-                    pdf = hashes.limit(cap + 1).toPandas()
-                if pdf is not None and len(pdf) <= cap:
+                pdf = DEDUP_INDEX_DRIVER_CAP.collect_or_none(hashes)
+                if pdf is not None:
                     buckets = self._merge_driver_write(pdf, man, batch_id, seq)
                 else:
                     buckets = self._merge_spark_write(
@@ -394,10 +394,9 @@ class DedupIndex:
                 self.n_buckets = n_buckets
                 return
             seq = man["gen_seq"] + 1
-            cap = int(os.environ.get("TOMIX_DEDUP_INDEX_DRIVER_CAP", "65536"))
             df = self.entries(spark)
-            pdf = df.limit(cap + 1).toPandas() if cap > 0 else None
-            if pdf is not None and len(pdf) <= cap:
+            pdf = DEDUP_INDEX_DRIVER_CAP.collect_or_none(df)
+            if pdf is not None:
                 buckets = self._rebucket_driver_write(pdf, n_buckets, seq)
             else:
                 gen = self._gen_dir(seq)
