@@ -23,7 +23,6 @@ class TestReverseEtl:
         return valid_records(read_json_auto(spark, str(p), MP_EXPORT_SCHEMA))
 
     def test_amplitude_reverse_send(self, spark, tmp_path):
-        from tomixpanel_spark.sinks.reverse import send_reverse_amplitude
         from tomixpanel_spark.transforms.mixpanel import (
             mp_to_amplitude_events,
             mp_to_amplitude_users,

@@ -8,6 +8,7 @@ from __future__ import annotations
 import gzip
 import json
 import threading
+import time
 
 import pytest
 
@@ -60,6 +61,7 @@ class StubServer:
                             "bytes": n,
                             "records": records,
                             "envelope": envelope,
+                            "t": time.monotonic(),
                         }
                     )
                     if stub.status_seq:
@@ -254,6 +256,45 @@ class TestHttpSink:
             s.stop()
 
 
+    def test_transport_type_error_is_a_failed_receipt(self, spark):
+        """A transport that raises TypeError is a network-level failure
+        like any other: retried, then a failed receipt, never a failed
+        Spark task (which would re-send the whole partition)."""
+        from tomixpanel_spark.sinks.http import HttpSink, HttpSinkConfig, mp_event_record
+
+        def transport(url, body, headers, method):
+            raise TypeError("transport bug")
+
+        cfg = HttpSinkConfig(url="http://sink.invalid/import", backoff_s=0.01)
+        rows = HttpSink(cfg, mp_event_record, transport).send(
+            _events_df(spark, 10), concurrency=1
+        ).collect()
+        assert len(rows) == 1
+        r = rows[0]
+        assert (r["status"], r["attempts"], r["ok"]) == (-1, 4, False)
+        assert "TypeError" in r["error"]
+
+    def test_min_interval_is_a_global_rate(self, spark, stub):
+        """min_interval_s spaces batches across ALL partitions: two
+        partitions each pace at 2 x 0.4 s, so three batches per partition
+        span at least 2 x 0.8 s."""
+        from tomixpanel_spark.sinks.http import (
+            HttpSink,
+            HttpSinkConfig,
+            mp_event_record,
+            summarize_receipts,
+        )
+
+        cfg = HttpSinkConfig(url=stub.url, max_records=10, min_interval_s=0.4)
+        receipts = HttpSink(cfg, mp_event_record).send(
+            _events_df(spark, 60), concurrency=2
+        )
+        assert summarize_receipts(receipts)["imported"] == 60
+        arrivals = sorted(r["t"] for r in stub.requests)
+        assert len(arrivals) >= 6
+        assert arrivals[-1] - arrivals[0] >= 1.6
+
+
 class TestSources:
     def test_amplitude_hour_slices_and_fetch(self, spark, tmp_path):
         import io
@@ -359,15 +400,16 @@ class TestSources:
         import io
         import zipfile as zf
 
-        from tomixpanel_spark.sources.staging import expand_zip, gunzip_file, is_gzip
+        from tomixpanel_spark.sources.staging import expand_zip
 
         z = tmp_path / "data.zip"
         with zf.ZipFile(z, "w") as f:
             f.writestr("x/inner.json.gz", gzip.compress(b'{"a":1}\n'))
         paths = expand_zip(str(z), str(tmp_path / "out"))
-        assert len(paths) == 1 and is_gzip(paths[0])
-        plain = gunzip_file(paths[0])
-        assert open(plain, "rb").read() == b'{"a":1}\n'
+        # the member stays gzipped (Spark reads .gz natively)
+        data = open(paths[0], "rb").read()
+        assert len(paths) == 1 and data[:2] == b"\x1f\x8b"
+        assert gzip.decompress(data) == b'{"a":1}\n'
 
 
 class TestIncremental:

@@ -6,9 +6,12 @@ A job config is the same shape a reference user writes:
     {
       "source": {"name": "csv" | "amplitude" | "ga" | "mixpanel",
                   "options": {...}},
-      "destination": {"name": "mixpanel", "token": "...",
-                       "service_account": "...", "options": {...}}
+      "destination": {"name": "mixpanel", "token": "...", "options": {...}}
     }
+
+``/import`` auth rides ``destination.options.headers`` (e.g. an
+``Authorization`` header from ``sinks.http.basic_auth``); library callers
+can build the service-account sink with ``sinks.http.mixpanel_import_sink``.
 
 ``build(spark, config)`` returns the PipelinePlan — the lazy canonical
 DataFrames (events / profiles / merges) — which is the engine's IR: no
@@ -27,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from tomixpanel_spark.session import ensure_semantics
 from tomixpanel_spark.sinks.http import (
+    RECEIPT_SCHEMA,
     HttpSink,
     HttpSinkConfig,
     mp_event_record,
@@ -218,51 +222,41 @@ def run(
     path instead (index.js:85-91 -> load/sendOther.js:7-18), matching the
     reference: only the mixpanel source reverses out.
     """
-    dest_name = str(config.get("destination", {}).get("name", "mixpanel")).lower()
-    if dest_name in ("amplitude", "woopra"):
-        return _run_reverse(spark, config, dest_name, transport, concurrency)
-    plan = build(spark, config)
     dest = config.get("destination", {})
     dopts = dest.get("options", {})
-    base = HttpSinkConfig(
-        url=dopts.get("import_url", MIXPANEL_IMPORT_URL),
-        headers=dopts.get("headers", {}),
-        max_records=dopts.get("recordsPerBatch", 2000),
-        gzip=dopts.get("gzip", True),
-        strict=dopts.get("strict", True),
-        min_interval_s=dopts.get("min_interval_s", 0.0),
-    )
-    save_copy = bool(dopts.get("save_local_copy"))
-    save_dir = dopts.get("save_dir")
-    if save_copy and not save_dir:
+    save_dir = dopts.get("save_dir") if dopts.get("save_local_copy") else None
+    if dopts.get("save_local_copy") and not save_dir:
         raise ValueError("destination.options.save_local_copy requires save_dir")
-
-    def _load(name: str, df, sink: HttpSink) -> dict:
-        return _checkpointed_send(
-            name, df, sink, save_copy, save_dir, concurrency,
-            partition_events=(name == "events"),
-        )
-
+    dest_name = str(dest.get("name", "mixpanel")).lower()
+    if dest_name in ("amplitude", "woopra"):
+        return _run_reverse(spark, config, dest_name, transport, concurrency, save_dir)
+    plan = build(spark, config)
+    import_url = dopts.get("import_url", MIXPANEL_IMPORT_URL)
+    import_batch = dopts.get("recordsPerBatch", 2000)
+    import_strict = dopts.get("strict", True)
+    destinations = (
+        # (name, df, url, max_records, strict, to_record); /engage has no
+        # strict param (K5)
+        ("events", plan.events, import_url, import_batch, import_strict, mp_event_record),
+        ("profiles", plan.profiles, dopts.get("engage_url", MIXPANEL_ENGAGE_URL),
+         dopts.get("profilesPerBatch", 2000), False, mp_profile_record),
+        ("merges", plan.merges, import_url, import_batch, import_strict, mp_merge_record),
+    )
     summary = {}
-    if plan.events is not None:
-        summary["events"] = _load(
-            "events", plan.events, HttpSink(base, mp_event_record, transport)
-        )
-    if plan.profiles is not None:
-        pcfg = HttpSinkConfig(
-            url=dopts.get("engage_url", MIXPANEL_ENGAGE_URL),
+    for name, df, url, max_records, strict, to_record in destinations:
+        if df is None:
+            continue
+        cfg = HttpSinkConfig(
+            url=url,
             headers=dopts.get("headers", {}),
-            max_records=dopts.get("profilesPerBatch", 2000),
-            gzip=base.gzip,
-            strict=False,  # /engage has no strict param (K5)
-            min_interval_s=base.min_interval_s,
+            max_records=max_records,
+            gzip=dopts.get("gzip", True),
+            strict=strict,
+            min_interval_s=dopts.get("min_interval_s", 0.0),
         )
-        summary["profiles"] = _load(
-            "profiles", plan.profiles, HttpSink(pcfg, mp_profile_record, transport)
-        )
-    if plan.merges is not None:
-        summary["merges"] = _load(
-            "merges", plan.merges, HttpSink(base, mp_merge_record, transport)
+        summary[name] = _checkpointed_send(
+            name, df, HttpSink(cfg, to_record, transport), save_dir, concurrency,
+            partition_events=(name == "events"),
         )
     return summary
 
@@ -271,38 +265,33 @@ def _checkpointed_send(
     name: str,
     df: DataFrame,
     sink: HttpSink,
-    save_copy: bool,
     save_dir: Optional[str],
     concurrency: Optional[int],
     partition_events: bool = False,
 ) -> dict:
-    """K9 send wrapper shared by the forward and reverse load paths:
-    optionally checkpoint the outgoing stream as parquet and persist the
-    batch receipts as the response log / dead-letter store.
+    """K9 send wrapper shared by the forward and reverse load paths: with
+    a ``save_dir`` (None means no copy), checkpoint the outgoing stream as
+    parquet and persist the batch receipts as the response log /
+    dead-letter store.
 
     Checkpoint first, then SEND FROM THE CHECKPOINT: one computation of
     the transform lineage, and the saved copy is byte-identical to what
     was sent. ``partition_events`` gives the stream the date-partitioned
     lake layout so replays prune."""
-    if save_copy:
-        from tomixpanel_spark.sinks.lake import (
-            write_events_partitioned,
-            write_local_copy,
-        )
+    if save_dir:
+        from tomixpanel_spark.sinks.lake import write_events_partitioned
 
         if partition_events:
             write_events_partitioned(df, f"{save_dir}/{name}")
         else:
-            write_local_copy(df, f"{save_dir}/{name}")
+            df.write.mode("overwrite").parquet(f"{save_dir}/{name}")
         df = df.sparkSession.read.parquet(f"{save_dir}/{name}")
     receipts = sink.send(df, concurrency)
-    if save_copy:
+    if save_dir:
         # drive the send EXACTLY ONCE: persist receipts to disk, then
         # summarize from the re-read — a second action on the live
         # receipt stream could re-POST batches on cache eviction
         receipts.write.mode("overwrite").json(f"{save_dir}/{name}_receipts")
-        from tomixpanel_spark.sinks.http import RECEIPT_SCHEMA
-
         # explicit schema: empty receipt dirs can't infer, and the JSON
         # writer omits null columns on all-success runs
         receipts = df.sparkSession.read.schema(RECEIPT_SCHEMA).json(
@@ -315,8 +304,9 @@ def _run_reverse(
     spark: SparkSession,
     config: dict,
     dest_name: str,
-    transport=None,
-    concurrency: Optional[int] = None,
+    transport,
+    concurrency: Optional[int],
+    save_dir: Optional[str],
 ) -> dict:
     """Reverse-ETL: mixpanel /export (+ optional /engage people) to
     Amplitude or Woopra, mirroring load/sendOther.js.
@@ -352,10 +342,8 @@ def _run_reverse(
 
     # K9 applies to the reverse path too (the reference stages the export
     # file and keeps it under save_local_copy)
-    save_copy = bool(dopts.get("save_local_copy"))
-    save_dir = dopts.get("save_dir")
-    if save_copy and not save_dir:
-        raise ValueError("destination.options.save_local_copy requires save_dir")
+    def send(name: str, df: DataFrame, sink: HttpSink) -> dict:
+        return _checkpointed_send(name, df, sink, save_dir, concurrency)
 
     raw = _mixpanel_export_raw(spark, opts)
     do_people = bool(opts.get("doPeople") or opts.get("people"))
@@ -364,21 +352,20 @@ def _run_reverse(
         from tomixpanel_spark.sinks.reverse import (
             AMPLITUDE_HTTP_API,
             AMPLITUDE_IDENTIFY_API,
+            VENDOR_PACING_S,
             amplitude_events_sink,
             amplitude_users_sink,
         )
 
         api_key = dest.get("api_key") or dest.get("token") or ""
+        pacing_s = dopts.get("pacing_s", VENDOR_PACING_S)
         ev_sink = amplitude_events_sink(
             api_key,
             url=dopts.get("httpapi_url", AMPLITUDE_HTTP_API),
             transport=transport,
-            pacing_s=dopts.get("pacing_s", 2.0),
+            pacing_s=pacing_s,
         )
-        summary["events"] = _checkpointed_send(
-            "events", mp_to_amplitude_events(raw), ev_sink,
-            save_copy, save_dir, concurrency,
-        )
+        summary["events"] = send("events", mp_to_amplitude_events(raw), ev_sink)
         if do_people:
             profiles = mp_engage_profiles(
                 _mixpanel_engage_pages(spark, opts), dest.get("token")
@@ -387,12 +374,9 @@ def _run_reverse(
                 api_key,
                 url=dopts.get("identify_url", AMPLITUDE_IDENTIFY_API),
                 transport=transport,
-                pacing_s=dopts.get("pacing_s", 2.0),
+                pacing_s=pacing_s,
             )
-            summary["users"] = _checkpointed_send(
-                "users", mp_to_amplitude_users(profiles), us_sink,
-                save_copy, save_dir, concurrency,
-            )
+            summary["users"] = send("users", mp_to_amplitude_users(profiles), us_sink)
         return summary
 
     from tomixpanel_spark.sinks.reverse import WOOPRA_IMPORT_URL, woopra_sink
@@ -405,10 +389,7 @@ def _run_reverse(
         username=dest.get("username", dest.get("service_account_user", "")),
         password=dest.get("password", dest.get("service_account_pass", "")),
     )
-    summary["events"] = _checkpointed_send(
-        "events", mp_to_woopra_events(raw, project), sink,
-        save_copy, save_dir, concurrency,
-    )
+    summary["events"] = send("events", mp_to_woopra_events(raw, project), sink)
     if do_people:
         summary["users"] = {"skipped": "woopra users unsupported upstream"}
     return summary

@@ -67,8 +67,13 @@ def iter_batches(
         yield batch
 
 
+def json_array(batch: list[bytes]) -> bytes:
+    """The default request body: the batch's records as one JSON array."""
+    return b"[" + b",".join(batch) + b"]"
+
+
 def batch_payload(batch: list[bytes], gzip: bool = True) -> bytes:
     """JSON-array body, optionally gzipped (reference gzips every /import
     batch, load/sendEventsToMixpanel.js:157-162)."""
-    body = b"[" + b",".join(batch) + b"]"
+    body = json_array(batch)
     return _gzip.compress(body) if gzip else body

@@ -13,7 +13,8 @@ Design (the 100 TB stance):
     task retries re-sending a batch cannot double-import.
   * Concurrency = partition count: ``df.repartition(n)`` is the
     reference's 5-process fan-out (ampReplicator.js:27) done properly.
-  * Rate limiting: fixed-interval pacing per partition (the reference
+  * Rate limiting: ``min_interval_s`` is a global interval between
+    batches; each of N partitions paces at N times it (the reference
     sleeps 2 s between vendor batches, load/sendOther.js:110,223).
   * Transport is injectable — tests run against a local stub server or an
     in-process fake; production uses urllib. No external deps.
@@ -21,6 +22,8 @@ Design (the 100 TB stance):
 
 from __future__ import annotations
 
+import base64
+import gzip
 import time
 from collections.abc import Iterator
 from dataclasses import dataclass, field
@@ -34,17 +37,27 @@ from pyspark.sql import functions as F
 from tomixpanel_spark.sinks.batching import (
     BYTES_PER_BATCH,
     EVENTS_PER_BATCH,
-    batch_payload,
     iter_batches,
+    json_array,
 )
 
 # transport(url, body, headers, method) -> (status_code, response_text)
-Transport = Callable[..., tuple[int, str]]
+Transport = Callable[[str, bytes, dict, str], tuple[int, str]]
 
 RECEIPT_SCHEMA = (
     "partition_id int, batch_index int, n_records int, n_bytes int, "
     "status int, ok boolean, attempts int, error string, payload string"
 )
+RECEIPT_COLUMNS = [c.split()[0] for c in RECEIPT_SCHEMA.split(", ")]
+MAX_ATTEMPTS = 4
+RETRY_STATUSES = (429, 500, 502, 503, 504)  # and -1, a network-level failure
+
+
+def basic_auth(user: str, secret: str) -> dict:
+    """HTTP Basic ``Authorization`` header, as every vendor API here takes
+    it (reference: ``'Basic ' + btoa(user:secret)``)."""
+    tok = base64.b64encode(f"{user}:{secret}".encode()).decode()
+    return {"Authorization": f"Basic {tok}"}
 
 
 def urllib_transport(
@@ -65,20 +78,18 @@ def urllib_transport(
 class HttpSinkConfig:
     url: str
     method: str = "POST"
-    # envelope(batch: list[bytes]) -> request body; default JSON array.
-    # Vendor APIs wrap batches differently (Amplitude {api_key, events},
-    # identify form-encoding, Woopra NDJSON) — see sinks/reverse.py.
-    envelope: Optional[Callable[[list], bytes]] = None
+    # envelope(batch: list[bytes]) -> request body. Vendor APIs wrap
+    # batches differently (Amplitude {api_key, events}, identify
+    # form-encoding, Woopra NDJSON) — see sinks/reverse.py.
+    envelope: Callable[[list], bytes] = json_array
     headers: dict = field(default_factory=dict)
     max_records: int = EVENTS_PER_BATCH
-    max_bytes: int = BYTES_PER_BATCH
     gzip: bool = True
     strict: bool = True  # Mixpanel /import strict=1 (K4, :166)
-    max_attempts: int = 4
     backoff_s: float = 0.5  # exponential: 0.5, 1, 2, ...
-    min_interval_s: float = 0.0  # rate limit between batches per partition
-    retry_statuses: tuple = (429, 500, 502, 503, 504)
-    keep_failed_payload: bool = True
+    # minimum interval between batches across ALL partitions: each of N
+    # partitions paces at N * min_interval_s
+    min_interval_s: float = 0.0
 
 
 class HttpSink:
@@ -126,16 +137,21 @@ class HttpSink:
             if want < df.rdd.getNumPartitions():
                 df = df.coalesce(want)
         cfg, to_record, transport = self.cfg, self.to_record, self.transport
+        url = cfg.url
+        if cfg.strict:
+            url += ("&" if "?" in url else "?") + "strict=1"
+        headers = dict(cfg.headers)
+        headers.setdefault("Content-Type", "application/json")
+        if cfg.gzip:
+            headers["Content-Encoding"] = "gzip"
+        interval = 0.0
+        if cfg.min_interval_s > 0:
+            interval = cfg.min_interval_s * (concurrency or df.rdd.getNumPartitions())
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             from pyspark import TaskContext
 
             pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-            url = cfg.url + ("&strict=1" if cfg.strict and "?" in cfg.url else ("?strict=1" if cfg.strict else ""))
-            headers = dict(cfg.headers)
-            headers.setdefault("Content-Type", "application/json")
-            if cfg.gzip:
-                headers["Content-Encoding"] = "gzip"
 
             def records() -> Iterator[dict]:
                 for pdf in batches:
@@ -145,33 +161,23 @@ class HttpSink:
             out = []
             last_send = 0.0
             for bi, batch in enumerate(
-                iter_batches(records(), cfg.max_records, cfg.max_bytes)
+                iter_batches(records(), cfg.max_records, BYTES_PER_BATCH)
             ):
-                if cfg.envelope is not None:
-                    import gzip as _g
-
-                    raw = cfg.envelope(batch)
-                    body = _g.compress(raw) if cfg.gzip else raw
-                else:
-                    body = batch_payload(batch, gzip=cfg.gzip)
-                wait = cfg.min_interval_s - (time.monotonic() - last_send)
+                body = cfg.envelope(batch)
+                if cfg.gzip:
+                    body = gzip.compress(body)
+                wait = interval - (time.monotonic() - last_send)
                 if wait > 0:
                     time.sleep(wait)
-                status, text, attempts = 0, "", 0
-                for attempt in range(cfg.max_attempts):
-                    attempts = attempt + 1
+                for attempts in range(1, MAX_ATTEMPTS + 1):
                     try:
                         status, text = transport(url, body, headers, cfg.method)
-                    except TypeError:
-                        status, text = transport(url, body, headers)  # legacy 3-arg
                     except Exception as e:  # network-level failure
                         status, text = -1, repr(e)
-                    if status == 200:
+                    if status == 200 or (status != -1 and status not in RETRY_STATUSES):
                         break
-                    if status not in cfg.retry_statuses and status != -1:
-                        break
-                    if attempt < cfg.max_attempts - 1:  # no sleep after last try
-                        time.sleep(cfg.backoff_s * (2**attempt))
+                    if attempts < MAX_ATTEMPTS:  # no sleep after last try
+                        time.sleep(cfg.backoff_s * 2 ** (attempts - 1))
                 last_send = time.monotonic()
                 ok = status == 200
                 out.append(
@@ -184,25 +190,10 @@ class HttpSink:
                         "ok": ok,
                         "attempts": attempts,
                         "error": None if ok else text[:2000],
-                        "payload": None
-                        if ok or not cfg.keep_failed_payload
-                        else (b"[" + b",".join(batch) + b"]").decode("utf-8"),
+                        "payload": None if ok else json_array(batch).decode("utf-8"),
                     }
                 )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "partition_id",
-                    "batch_index",
-                    "n_records",
-                    "n_bytes",
-                    "status",
-                    "ok",
-                    "attempts",
-                    "error",
-                    "payload",
-                ],
-            )
+            yield pd.DataFrame(out, columns=RECEIPT_COLUMNS)
 
         return df.mapInPandas(run, schema=RECEIPT_SCHEMA)
 
@@ -248,15 +239,12 @@ def mixpanel_import_sink(
     endpoint (sendEventsToMixpanel.js:13-14) is used. Extra keyword args
     pass through to :class:`HttpSinkConfig` (batching, pacing, retries).
     """
-    import base64
     from urllib.parse import urlencode
 
     base = url or (MIXPANEL_IMPORT_URL_EU if eu else MIXPANEL_IMPORT_URL_US)
     sep = "&" if "?" in base else "?"
     full_url = f"{base}{sep}{urlencode({'project_id': project_id})}"
-    tok = base64.b64encode(f"{username}:{secret}".encode()).decode()
-    headers = dict(cfg_overrides.pop("headers", {}))
-    headers["Authorization"] = f"Basic {tok}"
+    headers = {**cfg_overrides.pop("headers", {}), **basic_auth(username, secret)}
     cfg = HttpSinkConfig(url=full_url, headers=headers, **cfg_overrides)
     return HttpSink(cfg, mp_event_record, transport=transport)
 

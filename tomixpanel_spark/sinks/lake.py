@@ -2,9 +2,9 @@
 JSON dirs (SURVEY.md §2.2 K9 local copies + the 100 TB layout story).
 
 Layout choices (ARCHITECTURE.md deployment notes):
-  * events partition by event DATE (and optionally hour) — the reference's
-    ampReplicator date-hour granularity becomes physical partition pruning
-    for every downstream date-ranged query.
+  * events partition by event DATE — the reference's ampReplicator
+    date-hour slices become physical partition pruning for every
+    downstream date-ranged query.
   * profiles/merges bucket by distinct_id/id_a so identity-keyed joins and
     merges co-locate without a shuffle (bucketed tables need
     ``saveAsTable``; plain partitioned parquet otherwise).
@@ -12,38 +12,19 @@ Layout choices (ARCHITECTURE.md deployment notes):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, DataFrameWriter
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def write_events_partitioned(
-    events: DataFrame,
-    path: str,
-    with_hour: bool = False,
-    mode: str = "overwrite",
-) -> None:
-    """Canonical events -> parquet partitioned by event date (and hour).
+def write_events_partitioned(events: DataFrame, path: str) -> None:
+    """Canonical events -> parquet partitioned by event date, overwriting.
 
     At 100 TB this is the lake layout every date-ranged query prunes on;
     locally it doubles as the ``save_local_copy`` staging artifact
     (reference transform writes JSON stage dirs at
     transform/amplitudeToMixpanel.js:229-290)."""
-    ts = F.timestamp_millis(F.col("time_ms"))
-    out = events.withColumn("event_date", F.to_date(ts))
-    parts = ["event_date"]
-    if with_hour:
-        out = out.withColumn("event_hour", F.hour(ts))
-        parts.append("event_hour")
-    out.write.mode(mode).partitionBy(*parts).parquet(path)
-
-
-def write_local_copy(df: DataFrame, path: str, fmt: str = "parquet", mode: str = "overwrite") -> None:
-    """K9 save_local_copy: checkpoint any canonical stream to disk."""
-    w: DataFrameWriter = df.write.mode(mode)
-    if fmt == "json":
-        w.json(path)
-    else:
-        w.parquet(path)
+    out = events.withColumn("event_date", F.to_date(F.timestamp_millis(F.col("time_ms"))))
+    out.write.mode("overwrite").partitionBy("event_date").parquet(path)
 
 
 def bucketed_identity_table(

@@ -3,10 +3,10 @@
 Reference behaviors (load/sendOther.js):
   * Amplitude HTTP API v2: 2,000-event / 1,000-user chunks (:209,237),
     2 s sleep between batches as the vendor rate-limit workaround
-    (:110,223,261-264 — "HACK!"). The engine replaces the sleep with
-    per-partition fixed-interval pacing (min_interval_s), which holds the
-    same global rate with N partitions at interval N*2s, and keeps retries
-    + receipts.
+    (:110,223,261-264 — "HACK!"). The engine keeps that 2 s as a GLOBAL
+    interval (``min_interval_s``): with N partitions each one paces at
+    N * 2 s, so the vendor sees the reference's rate at any concurrency,
+    and keeps retries + receipts.
   * Woopra: NDJSON body, 10,000-record chunks (:97).
 
 These are thin profiles over sinks.http.HttpSink — same receipts, retries,
@@ -15,12 +15,9 @@ dead-letters; only the wire shape, chunk sizes, and pacing differ.
 
 from __future__ import annotations
 
-import json
 from typing import Optional
 
-from pyspark.sql import DataFrame
-
-from tomixpanel_spark.sinks.http import HttpSink, HttpSinkConfig, Transport
+from tomixpanel_spark.sinks.http import HttpSink, HttpSinkConfig, Transport, basic_auth
 
 AMPLITUDE_HTTP_API = "https://api2.amplitude.com/2/httpapi"
 AMPLITUDE_IDENTIFY_API = "https://api2.amplitude.com/identify"
@@ -86,7 +83,6 @@ def amplitude_events_sink(
     cfg = HttpSinkConfig(
         url=url,
         envelope=envelope,
-        headers={"Content-Type": "application/json"},
         max_records=AMP_EVENTS_PER_BATCH,
         gzip=False,  # Amplitude HTTP API v2 takes plain JSON
         strict=False,
@@ -134,22 +130,17 @@ def woopra_sink(
     """Woopra bulk import: NDJSON body over authenticated PUT with the
     project in the query string (reference load/sendOther.js woopraFlush:
     chunk.map(JSON.stringify).join('\n'), method PUT, basic auth)."""
-    import base64
     import urllib.parse
-
-    def envelope(batch: list) -> bytes:
-        return b"\n".join(batch)
 
     q = urllib.parse.urlencode({"project": project})
     full_url = f"{url}{'&' if '?' in url else '?'}{q}"
     headers = {"Content-Type": "application/x-ndjson"}
     if username or password:
-        tok = base64.b64encode(f"{username}:{password}".encode()).decode()
-        headers["Authorization"] = f"Basic {tok}"
+        headers.update(basic_auth(username, password))
     cfg = HttpSinkConfig(
         url=full_url,
         method="PUT",
-        envelope=envelope,
+        envelope=b"\n".join,
         headers=headers,
         max_records=WOOPRA_PER_BATCH,
         gzip=False,
@@ -157,21 +148,3 @@ def woopra_sink(
     )
     return HttpSink(cfg, woopra_record, transport)
 
-
-def send_reverse_amplitude(
-    events: DataFrame,
-    users: DataFrame,
-    api_key: str,
-    transport: Optional[Transport] = None,
-    concurrency: Optional[int] = None,
-) -> dict:
-    """Events then users, mirroring the reference's send order
-    (load/sendOther.js:144-258). Returns receipt summaries."""
-    from tomixpanel_spark.sinks.http import summarize_receipts
-
-    ev_sink = amplitude_events_sink(api_key, transport=transport)
-    us_sink = amplitude_users_sink(api_key, transport=transport)
-    return {
-        "events": summarize_receipts(ev_sink.send(events, concurrency)),
-        "users": summarize_receipts(us_sink.send(users, concurrency)),
-    }

@@ -24,9 +24,11 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, SparkSession
 
 from tomixpanel_spark.schemas import AMP_EVENT_SCHEMA
+from tomixpanel_spark.sinks.http import basic_auth
 from tomixpanel_spark.sources.staging import expand_zip, read_json_auto
 
 EXPORT_URL = "https://amplitude.com/api/2/export"
+FETCH_PARALLELISM = 5  # reference ampReplicator.js:27
 
 # http(url, headers) -> bytes (zip archive)
 HttpGet = Callable[[str, dict], bytes]
@@ -40,13 +42,6 @@ class AmplitudeSource:
     end: str
     staging_dir: str
     http: Optional[HttpGet] = None
-    fetch_parallelism: int = 5  # reference ampReplicator.js:27
-
-    def _auth_header(self) -> dict:
-        import base64
-
-        tok = base64.b64encode(f"{self.api_key}:{self.api_secret}".encode()).decode()
-        return {"Authorization": f"Basic {tok}"}
 
     def hour_slices(self) -> list[tuple[str, str]]:
         """Date-hour partitions in Amplitude's YYYYMMDDTHH format
@@ -78,7 +73,7 @@ class AmplitudeSource:
                 "(network access is injected, never implicit)"
             )
         os.makedirs(self.staging_dir, exist_ok=True)
-        headers = self._auth_header()
+        headers = basic_auth(self.api_key, self.api_secret)
 
         def fetch_one(slice_: tuple[str, str]) -> list[str]:
             start, end = slice_
@@ -94,7 +89,7 @@ class AmplitudeSource:
         from concurrent.futures import ThreadPoolExecutor
 
         paths: list[str] = []
-        with ThreadPoolExecutor(max_workers=self.fetch_parallelism) as pool:
+        with ThreadPoolExecutor(max_workers=FETCH_PARALLELISM) as pool:
             for got in pool.map(fetch_one, self.hour_slices()):
                 paths.extend(got)
         return paths

@@ -53,11 +53,3 @@ class GcsGaSource:
         StructType + corrupt-record column."""
         return read_json_auto(spark, paths or self.staging_dir, GA_SESSION_SCHEMA)
 
-
-def read_gcs_direct(spark: SparkSession, uri: str) -> DataFrame:
-    """Cluster path: direct gs:// glob read through the GCS connector."""
-    return (
-        spark.read.schema(GA_SESSION_SCHEMA)
-        .option("mode", "PERMISSIVE")
-        .json(uri)
-    )

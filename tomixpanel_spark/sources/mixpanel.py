@@ -23,6 +23,7 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, SparkSession
 
 from tomixpanel_spark.schemas import MP_ENGAGE_PAGE_SCHEMA, MP_EXPORT_SCHEMA
+from tomixpanel_spark.sinks.http import basic_auth
 from tomixpanel_spark.sources.staging import read_json_auto
 
 EXPORT_URL = "https://data.mixpanel.com/api/2.0/export"
@@ -63,12 +64,9 @@ class MixpanelExportSource:
     def fetch(self) -> str:
         if self.http is None:
             raise RuntimeError("MixpanelExportSource.fetch needs an http callable")
-        import base64
-
         os.makedirs(self.staging_dir, exist_ok=True)
         url = f"{EXPORT_URL}?{export_query_string(self.from_date, self.to_date, self.where, self.events)}"
-        tok = base64.b64encode(f"{self.api_secret}:".encode()).decode()
-        text = self.http(url, {"Authorization": f"Basic {tok}"})
+        text = self.http(url, basic_auth(self.api_secret, ""))
         path = os.path.join(self.staging_dir, "export.ndjson")
         with open(path, "w", encoding="utf-8") as f:
             f.write(text)
@@ -89,11 +87,8 @@ class MixpanelEngageSource:
         back full (connectors/mixpanelETL.js:140-182)."""
         if self.http_post is None:
             raise RuntimeError("MixpanelEngageSource.fetch_pages needs http_post")
-        import base64
-
         os.makedirs(self.staging_dir, exist_ok=True)
-        tok = base64.b64encode(f"{self.api_secret}:".encode()).decode()
-        headers = {"Authorization": f"Basic {tok}"}
+        headers = basic_auth(self.api_secret, "")
         paths: list[str] = []
         page = 0
         session_id = None

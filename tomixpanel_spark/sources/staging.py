@@ -2,8 +2,9 @@
 scans (SURVEY.md §2.1 S2/S3/S4/S9 + §2.5 V2).
 
 The reference sniffs NDJSON-vs-JSON by try/parse (extract/
-googleAnalytics.js:87-110) and walks directories by hand. Spark reads
-NDJSON natively and JSON arrays with multiLine; the engine reads PERMISSIVE
+googleAnalytics.js:87-110) and walks directories by hand. Spark reads a
+directory path as every file under it (S4), NDJSON natively and JSON
+arrays with multiLine; the engine reads PERMISSIVE
 with a corrupt-record column instead of skip-on-error loops, so bad lines
 are *queryable*, not silently dropped.
 
@@ -16,7 +17,6 @@ extracted tree in parallel.
 
 from __future__ import annotations
 
-import gzip
 import os
 import shutil
 import zipfile
@@ -43,19 +43,6 @@ def expand_zip(zip_path: str, out_dir: str) -> list[str]:
                 shutil.copyfileobj(src, dst)
             out.append(dest)
     return out
-
-
-def is_gzip(path: str) -> bool:
-    """Magic-byte sniff (reference extract/googleAnalytics.js:121-126)."""
-    with open(path, "rb") as f:
-        return f.read(2) == b"\x1f\x8b"
-
-
-def gunzip_file(path: str, out_path: str | None = None) -> str:
-    out_path = out_path or path.removesuffix(".gz")
-    with gzip.open(path, "rb") as src, open(out_path, "wb") as dst:
-        shutil.copyfileobj(src, dst)
-    return out_path
 
 
 def read_json_auto(
@@ -138,13 +125,3 @@ def corrupt_records(df: DataFrame) -> DataFrame:
     cols = [CORRUPT_COL] + ([SRC_FILE_COL] if SRC_FILE_COL in df.columns else [])
     return df.filter(F.col(CORRUPT_COL).isNotNull()).select(*cols)
 
-
-def expand_path(path: str) -> list[str]:
-    """File-or-directory expansion (S4, connectors/csvETL.js:20-31)."""
-    if os.path.isdir(path):
-        return sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if not f.startswith(".")
-        )
-    return [path]

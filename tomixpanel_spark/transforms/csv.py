@@ -91,7 +91,7 @@ def csv_profiles(df: DataFrame, m: CsvMapping) -> DataFrame:
     Ordering key is (input_file_name, monotonically_increasing_id):
     Spark packs splits by SIZE, so a bare monotonic id would order a large
     later file before a small earlier one — the filename component pins the
-    reference's sorted-listing file order (sources.staging.expand_path),
+    reference's sorted-listing file order over a Spark directory read,
     and the monotonic id orders rows within a file's split. (Rows inside a
     single multi-split file keep split order — exact line order within one
     huge CSV would need a line-number source; documented limitation.)"""
