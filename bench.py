@@ -70,18 +70,6 @@ def main() -> None:
     # queries would flatter the numbers — derived-cached timings are
     # reported separately below.
     os.environ.setdefault("TOMIX_CACHE_TABLES", "1")
-    # The test parquet files are single-row-group, so an uncached or
-    # naturally-cached scan is ONE partition — every fact-table stage
-    # would run on one core. Repartition tables >0.4 MB to 8 slices at
-    # cache-fill: one shuffle per session, 8-way scan parallelism for
-    # every query (A/B: q1 1.19->0.54s, suite -2s at the 5 MB gate;
-    # widening to 0.4 MB pulls in documents/embeddings/events — the
-    # CPU-heavy inputs of the dedup/similarity/transform families, where
-    # operators then skip their own ensure_parallel repartition because
-    # the cached source is already split. Tiny dims stay 1-partition:
-    # repartitioning those regressed from task overhead).
-    os.environ.setdefault("TOMIX_CACHE_PARTS", "8")
-    os.environ.setdefault("TOMIX_CACHE_PARTS_MIN_MB", "0.4")
     os.environ.pop("TOMIX_CACHE_DERIVED", None)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))

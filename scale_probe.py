@@ -673,8 +673,6 @@ def main() -> None:
     from tomixpanel_spark.session import ensure_semantics, session_builder
 
     os.environ.setdefault("TOMIX_CACHE_TABLES", "1")
-    os.environ.setdefault("TOMIX_CACHE_PARTS", "8")
-    os.environ.setdefault("TOMIX_CACHE_PARTS_MIN_MB", "0.4")
     families = set(sys.argv[1:]) or {"text", "emb", "cc", "asof", "bpe",
                                      "media"}
     src = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -86,7 +86,7 @@ def test_table_cache_lru_evicts_and_unpersists(spark, monkeypatch):
     from tomixpanel_spark.operators import base
 
     monkeypatch.setenv("TOMIX_CACHE_TABLES", "1")
-    monkeypatch.setenv("TOMIX_CACHE_MAX", "2")
+    monkeypatch.setattr(base._TABLE_CACHE, "maxsize", 2)
     base.clear_table_cache()
     try:
         a = base.table(spark, "/root/testdata/sf0.001", "region")
@@ -140,6 +140,108 @@ def test_derived_artifact_gated_on_own_flag(spark, monkeypatch):
     base.derived(spark, ("t_fix",), build, kind="fixture").count()
     assert calls["n"] == 5  # fixture survived the derived-cache clear
     base.clear_table_cache()
+
+
+def test_evicted_artifacts_leave_artifact_keys(spark, monkeypatch):
+    """An artifact the LRU bound evicts must leave _ARTIFACT_KEYS too;
+    otherwise the set grows for the life of the session."""
+    from tomixpanel_spark.operators import base
+
+    monkeypatch.setenv("TOMIX_CACHE_DERIVED", "1")
+    monkeypatch.setattr(base._TABLE_CACHE, "maxsize", 2)
+    base.clear_table_cache()
+    try:
+        for i in range(10):
+            base.derived(spark, ("t_sweep", i), lambda: spark.range(1), kind="artifact")
+        assert len(base._TABLE_CACHE) == 2
+        assert base._ARTIFACT_KEYS <= set(base._TABLE_CACHE)
+        assert len(base._ARTIFACT_KEYS) == 2
+    finally:
+        base.clear_table_cache()
+    assert not base._ARTIFACT_KEYS
+
+
+def test_lru_order_eviction_and_memo():
+    """base.Lru: least recently USED goes first, on_evict sees every
+    entry that leaves (bound, drop, clear), maxsize <= 0 neither stores
+    nor serves, and memo builds once per key."""
+    from tomixpanel_spark.operators.base import Lru
+
+    gone = []
+    lru = Lru(2, on_evict=lambda k, v: gone.append((k, v)))
+    lru.put("a", 1)
+    lru.put("b", 2)
+    assert lru.get("a") == 1  # a is now the most recent
+    lru.put("c", 3)
+    assert list(lru) == ["a", "c"] and gone == [("b", 2)]
+    lru.drop("a")
+    lru.drop("missing")
+    assert gone[-1] == ("a", 1) and list(lru) == ["c"]
+    lru.clear()
+    assert gone[-1] == ("c", 3) and len(lru) == 0
+
+    builds = []
+    memo = Lru(4)
+    for _ in range(3):
+        assert memo.memo("k", lambda: builds.append(1) or 0) == 0
+    assert builds == [1]  # a falsy value is still a hit
+
+    memo.maxsize = 0
+    assert memo.get("k") is None  # held, but not served
+    assert memo.memo("k", lambda: 7) == 7 and memo.memo("k", lambda: 8) == 8
+    assert memo.put("z", 9) == 9 and "z" not in memo
+    off = Lru(0, on_evict=lambda k, v: gone.append((k, v)))
+    off.put("x", 1)
+    assert len(off) == 0 and gone[-1] == ("x", 1)
+
+
+def test_landing_reuse_follows_cache_flag(spark, monkeypatch, tmp_path):
+    """streaming_parity._landing: under TOMIX_CACHE_TABLES a second call
+    serves the staged dir without staging again; without the flag every
+    call re-stages and the previous tree is reclaimed."""
+    import os
+
+    from tomixpanel_spark.operators import streaming_parity as SP
+
+    staged = []
+
+    def stage(land):
+        staged.append(land)
+        open(os.path.join(land, "b0.parquet"), "w").close()
+
+    monkeypatch.setenv("TOMIX_STREAM_SCRATCH", str(tmp_path))
+    monkeypatch.setenv("TOMIX_CACHE_TABLES", "1")
+    key = ("t_landing", str(tmp_path))
+    first = SP._landing(spark, key, "t_land_", stage)
+    assert SP._landing(spark, key, "t_land_", stage) == first
+    assert staged == [first] and first.startswith(str(tmp_path))
+
+    monkeypatch.delenv("TOMIX_CACHE_TABLES")
+    second = SP._landing(spark, key, "t_land_", stage)
+    assert second != first and staged == [first, second]
+    assert not os.path.exists(os.path.dirname(first))
+    assert os.listdir(second) == ["b0.parquet"]
+    SP._LANDINGS.drop((spark.sparkContext.applicationId,) + key)
+    assert not os.path.exists(second)
+
+
+def test_cached_tables_split_only_above_size_floor(spark, monkeypatch):
+    """TOMIX_CACHE_TABLES alone repartitions a cached table over
+    CACHE_PARTS_MIN_BYTES into CACHE_PARTS slices; smaller tables keep
+    their single scan partition."""
+    import os
+
+    from tests.conftest import SF_SMALL
+    from tomixpanel_spark.operators import base
+
+    monkeypatch.setenv("TOMIX_CACHE_TABLES", "1")
+    base.clear_table_cache()
+    try:
+        sf = os.path.join(os.path.dirname(SF_SMALL), "sf0.01")
+        assert base.table(spark, sf, "lineitem").rdd.getNumPartitions() == 8
+        assert base.table(spark, sf, "events").rdd.getNumPartitions() == 1
+    finally:
+        base.clear_table_cache()
 
 
 def _last_decision(env: str):
@@ -1138,6 +1240,21 @@ def test_gates_doc_matches_code():
     stale_in_doc = sorted(in_doc - in_code)
     assert not missing_from_doc, f"undocumented gates: {missing_from_doc}"
     assert not stale_in_doc, f"GATES.md rows with no code: {stale_in_doc}"
+
+
+def test_lru_is_the_only_hand_rolled_cache():
+    """Cross-call caches go through base.Lru: no other module under
+    tomixpanel_spark/ may build its own OrderedDict LRU."""
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "tomixpanel_spark"
+    offenders = sorted(
+        str(src.relative_to(pkg))
+        for src in pkg.rglob("*.py")
+        if src.relative_to(pkg).as_posix() != "operators/base.py"
+        and any(m in src.read_text() for m in ("OrderedDict", "popitem(last=False)"))
+    )
+    assert not offenders, f"hand-rolled LRU outside operators/base.py: {offenders}"
 
 
 def test_bigram_lm_paths_agree(spark, monkeypatch):

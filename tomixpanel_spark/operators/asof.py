@@ -25,10 +25,12 @@ composition against a reference engine, not against our own SQL.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from tomixpanel_spark.operators.base import Gate, QuerySpec, table
+from tomixpanel_spark.operators.base import Gate, Lru, QuerySpec, table
 
 
 def asof_join(
@@ -113,16 +115,10 @@ def asof_join(
                 right.semanticHash(),
                 cap,
             )
-            cache_max = _asof_gate_cache_max()
-            n = _ASOF_GATE_CACHE.get(key) if cache_max > 0 else None
-            if n is None:
-                n = right.limit(cap + 1).count()
-                if cache_max > 0:
-                    _ASOF_GATE_CACHE[key] = n
-                    while len(_ASOF_GATE_CACHE) > cache_max:
-                        _ASOF_GATE_CACHE.popitem(last=False)
-            else:
-                _ASOF_GATE_CACHE.move_to_end(key)
+            _ASOF_GATE_CACHE.maxsize = int(
+                os.environ.get("TOMIX_ASOF_GATE_CACHE", "64")
+            )
+            n = _ASOF_GATE_CACHE.memo(key, lambda: right.limit(cap + 1).count())
         hit = n is not None and n <= cap
         ASOF_BCAST_ROWS.record(cap, n, hit)
         strategy = "broadcast" if hit else "window"
@@ -297,16 +293,9 @@ def _asof_cogroup(
 # application — bounding it means a long-lived app re-probes eventually
 # rather than broadcasting an over-cap table into executor OOM. Set
 # TOMIX_ASOF_GATE_CACHE=0 to re-probe every call (mutable-source
-# deployments where the same plan reads growing data).
-from collections import OrderedDict as _OrderedDict
-
-_ASOF_GATE_CACHE: "_OrderedDict[tuple, int]" = _OrderedDict()
-
-
-def _asof_gate_cache_max() -> int:
-    import os
-
-    return int(os.environ.get("TOMIX_ASOF_GATE_CACHE", "64"))
+# deployments where the same plan reads growing data); asof_join reads it
+# into the bound on each call.
+_ASOF_GATE_CACHE = Lru(64)
 
 
 # "auto" broadcasts a right side of up to 1M rows: dimension-like

@@ -34,45 +34,93 @@ TABLES = (
 )
 
 
-_TABLE_CACHE: "OrderedDict[tuple, DataFrame]" = OrderedDict()
+class Lru(OrderedDict):
+    """The one cross-call cache: an LRU bounded to ``maxsize`` entries.
+
+    ``maxsize <= 0`` caches nothing and serves nothing, not even entries
+    it already holds. ``on_evict(key, value)`` runs for every entry that
+    leaves through the bound, ``drop`` or ``clear``, and for a value
+    ``put`` is given while ``maxsize <= 0``. Values are never None (a
+    None ``get`` is a miss)."""
+
+    def __init__(self, maxsize: int, on_evict=None) -> None:
+        super().__init__()
+        self.maxsize = maxsize
+        self.on_evict = on_evict
+
+    def get(self, key):
+        if self.maxsize <= 0 or key not in self:
+            return None
+        self.move_to_end(key)
+        return self[key]
+
+    def put(self, key, value):
+        """Insert ``value`` as the newest entry and return it."""
+        if self.maxsize <= 0:
+            self._evicted(key, value)
+            return value
+        self[key] = value
+        self.move_to_end(key)
+        while len(self) > self.maxsize:
+            self._evicted(*self.popitem(last=False))
+        return value
+
+    def memo(self, key, build):
+        """The cached value for ``key``, else ``build()`` stored under it."""
+        hit = self.get(key)
+        return hit if hit is not None else self.put(key, build())
+
+    def drop(self, key) -> None:
+        if key in self:
+            self._evicted(key, self.pop(key))
+
+    def clear(self) -> None:
+        for key in list(self):
+            self.drop(key)
+
+    def _evicted(self, key, value) -> None:
+        if self.on_evict is not None:
+            self.on_evict(key, value)
 
 
-def _cache_cap() -> int:
-    return int(os.environ.get("TOMIX_CACHE_MAX", "48"))
+# Keys of artifact-kind derived views (see ``derived``) in _TABLE_CACHE.
+_ARTIFACT_KEYS: set = set()
 
 
-def _cache_get(key: tuple) -> Optional[DataFrame]:
-    df = _TABLE_CACHE.get(key)
-    if df is not None:
-        _TABLE_CACHE.move_to_end(key)
-    return df
+def _release(key: tuple, df: DataFrame) -> None:
+    """Evicted entries are unpersisted so a long session sweeping many sf
+    dirs doesn't accumulate executor storage."""
+    _ARTIFACT_KEYS.discard(key)
+    try:
+        df.unpersist()
+    except Exception:
+        pass  # session may already be stopped
 
 
-def _cache_put(key: tuple, df: DataFrame) -> None:
-    """LRU insert; evicted entries are unpersisted so a long session
-    sweeping many sf dirs doesn't accumulate executor storage."""
-    _TABLE_CACHE[key] = df
-    _TABLE_CACHE.move_to_end(key)
-    while len(_TABLE_CACHE) > _cache_cap():
-        _, old = _TABLE_CACHE.popitem(last=False)
-        try:
-            old.unpersist()
-        except Exception:
-            pass  # session may already be stopped
+_TABLE_CACHE = Lru(48, on_evict=_release)
+
+# Partitioning of a cached table: the test parquet files are ONE row
+# group, so an uncached or naturally-cached scan is a single partition and
+# every fact-table stage would run on one core. Tables over
+# CACHE_PARTS_MIN_BYTES are round-robin-repartitioned to CACHE_PARTS
+# slices at cache-fill: one shuffle per session, 8-way scan parallelism
+# for every query (A/B: q1 1.19->0.54s, suite -2s at a 5 MB gate;
+# widening to 0.4 MB pulls in documents/embeddings/events, the CPU-heavy
+# inputs of the dedup/similarity/transform families, where operators then
+# skip their own ensure_parallel repartition because the cached source is
+# already split). Tiny dims stay 1-partition: repartitioning those
+# regressed from task overhead, and full defaultParallelism was a wash at
+# sf0.1 (tiny-task overhead on 100k-row joins). Row order is not part of
+# any query contract (keep-first ops order by explicit keys). At cluster
+# scale files are many-row-group and AQE handles both directions, so this
+# matters only for single-row-group toy files.
+CACHE_PARTS = 8
+CACHE_PARTS_MIN_BYTES = 400_000
 
 
 def clear_table_cache() -> None:
     """Unpersist and drop every cached table/derived view."""
-    _ARTIFACT_KEYS.clear()
-    while _TABLE_CACHE:
-        _, df = _TABLE_CACHE.popitem()
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-
-
-_ARTIFACT_KEYS: set = set()
+    _TABLE_CACHE.clear()
 
 
 def clear_derived_cache() -> None:
@@ -83,13 +131,7 @@ def clear_derived_cache() -> None:
     those legs would silently serve from the artifact instead of
     exercising their own plans."""
     for k in list(_ARTIFACT_KEYS):
-        _ARTIFACT_KEYS.discard(k)
-        df = _TABLE_CACHE.pop(k, None)
-        if df is not None:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
+        _TABLE_CACHE.drop(k)
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -110,7 +152,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     use_cache = bool(os.environ.get("TOMIX_CACHE_TABLES"))
     key = (spark.sparkContext.applicationId, sf_dir, name)
     if use_cache:
-        hit = _cache_get(key)
+        hit = _TABLE_CACHE.get(key)
         if hit is not None:
             return hit
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -134,30 +176,13 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # naive value via the session tz (UTC in all harnesses).
             df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
     if use_cache:
-        # Partitioning of the cached view: the test parquet files are ONE
-        # row group, so the scan (and therefore the cache) is a single
-        # partition — every first stage over a fact table runs on one
-        # core. ``TOMIX_CACHE_PARTS=N`` round-robin-repartitions tables
-        # bigger than ``TOMIX_CACHE_PARTS_MIN_MB`` (default 1 MB) at
-        # cache-fill time — one shuffle paid once per session, N-way
-        # parallelism for every downstream stage. Row order is not part of
-        # any query contract (keep-first ops order by explicit keys).
-        # Repartitioning to full defaultParallelism was a wash at sf0.1
-        # (tiny-task overhead on 100k-row joins); a moderate N is the
-        # useful range. At cluster scale files are many-row-group and AQE
-        # handles both directions, so this knob matters only for
-        # single-row-group toy files.
-        parts = int(os.environ.get("TOMIX_CACHE_PARTS", "0"))
-        min_mb = float(os.environ.get("TOMIX_CACHE_PARTS_MIN_MB", "1"))
-        if parts > 0:
-            try:
-                big = os.path.getsize(path) > min_mb * 1e6
-            except OSError:
-                big = False
-            if big:
-                df = df.repartition(parts)
-        df = df.cache()
-        _cache_put(key, df)
+        try:
+            big = os.path.getsize(path) > CACHE_PARTS_MIN_BYTES
+        except OSError:
+            big = False
+        if big:
+            df = df.repartition(CACHE_PARTS)
+        df = _TABLE_CACHE.put(key, df.cache())
     return df
 
 
@@ -219,17 +244,17 @@ def derived(spark: SparkSession, key: tuple, builder, kind: str = "artifact") ->
     # The WRITE side stays flag-gated so benchmarks' timed passes never
     # materialize work products they weren't asked to.
     k = (spark.sparkContext.applicationId,) + tuple(key)
-    hit = _cache_get(k)
+    hit = _TABLE_CACHE.get(k)
     if hit is not None:
         return hit
     flag = "TOMIX_CACHE_TABLES" if kind == "fixture" else "TOMIX_CACHE_DERIVED"
     if not os.environ.get(flag):
         return builder()
     hit = builder().persist()
-    _cache_put(k, hit)
     if kind == "artifact":
+        # before put: an entry evicted on insert must leave the set too
         _ARTIFACT_KEYS.add(k)
-    return hit
+    return _TABLE_CACHE.put(k, hit)
 
 
 def local_rows_df(spark: SparkSession, rows, schema) -> DataFrame:

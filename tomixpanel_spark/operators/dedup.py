@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from tomixpanel_spark.functions.text import fingerprint, tokens
 from tomixpanel_spark.operators.base import (
     Gate,
+    Lru,
     QuerySpec,
     derived,
     ensure_parallel,
@@ -1394,7 +1395,7 @@ EVAL_SET_MOD = 97  # synthetic held-out set: every 97th doc
 DECONTAM_BCAST_DOCS = Gate("TOMIX_DECONTAM_BCAST_DOCS", 100_000)
 
 
-_EVAL_COUNT_CACHE: dict[tuple, int] = {}
+_EVAL_COUNT_CACHE = Lru(256)
 
 
 def _eval_doc_count(spark: SparkSession, sf_dir: str) -> int:
@@ -1402,13 +1403,12 @@ def _eval_doc_count(spark: SparkSession, sf_dir: str) -> int:
     count job, memoized per (application, sf_dir): the eval set is fixed
     for a run, so repeated decontam calls shouldn't re-count it."""
     key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EVAL_COUNT_CACHE:
-        _EVAL_COUNT_CACHE[key] = (
-            table(spark, sf_dir, "documents")
-            .filter(F.pmod(F.col("doc_id"), F.lit(EVAL_SET_MOD)) == 0)
-            .count()
-        )
-    return _EVAL_COUNT_CACHE[key]
+    return _EVAL_COUNT_CACHE.memo(
+        key,
+        lambda: table(spark, sf_dir, "documents")
+        .filter(F.pmod(F.col("doc_id"), F.lit(EVAL_SET_MOD)) == 0)
+        .count(),
+    )
 
 
 def decontam_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:

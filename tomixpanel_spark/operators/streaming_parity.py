@@ -29,7 +29,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tomixpanel_spark.operators.base import QuerySpec, table
+from tomixpanel_spark.operators.base import Lru, QuerySpec, table
 
 # TWO data micro-batches per parity stream (+ availableNow's one no-data
 # finalization trigger): the minimum that still proves CROSS-BATCH
@@ -112,57 +112,78 @@ class _stream_shuffle_parts:
         self.spark.conf.set("spark.sql.files.maxPartitionBytes", self.prev_mpb)
 
 
-def _stage_batches(ev: DataFrame, land: str) -> None:
-    """Write the slice as N_STREAM_BATCHES single parquet files into one
-    landing dir (the file-source's unit of micro-batching). Each split is
-    written distributed, then its part file moved up as b<i>.parquet."""
+def _move_part(part_dir: str, dst: str) -> None:
+    """Move the one part file a ``coalesce(1)`` write left in ``part_dir``
+    to ``dst`` and drop ``part_dir``."""
+    [part] = [p for p in os.listdir(part_dir) if p.startswith("part-")]
+    os.replace(os.path.join(part_dir, part), dst)
+    shutil.rmtree(part_dir, ignore_errors=True)
+
+
+def _stage_split(
+    df: DataFrame, land: str, split_col: str, cols=None, fmt: str = "parquet"
+) -> None:
+    """Write ``df`` (``cols`` of it, default all) as N_STREAM_BATCHES single
+    ``b<i>.<fmt>`` files into one landing dir (the file source's unit of
+    micro-batching), split by a deterministic modular rule on
+    ``split_col``. Each split is written distributed, then its part file
+    moved up."""
     for b in range(N_STREAM_BATCHES):
+        split = df.filter(F.pmod(F.col(split_col), F.lit(N_STREAM_BATCHES)) == b)
+        if cols:
+            split = split.select(*cols)
         part_dir = os.path.join(land, f"_stage_b{b}")
-        (
-            ev.filter(F.pmod(F.col("event_id"), F.lit(N_STREAM_BATCHES)) == b)
-            .select("ts", "event_type", "value")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(part_dir)
-        )
-        [part] = [p for p in os.listdir(part_dir) if p.endswith(".parquet")]
-        os.replace(
-            os.path.join(part_dir, part), os.path.join(land, f"b{b}.parquet")
-        )
-        shutil.rmtree(part_dir, ignore_errors=True)
+        split.coalesce(1).write.mode("overwrite").format(fmt).save(part_dir)
+        _move_part(part_dir, os.path.join(land, f"b{b}.{fmt}"))
 
 
-_LANDING_CACHE: dict[tuple, str] = {}
+def _drop_landing(key: tuple, land: str) -> None:
+    shutil.rmtree(os.path.dirname(land), ignore_errors=True)
+
+
+# Staged landing dirs by (application, sf_dir, tag); a landing leaving the
+# cache takes its scratch tree with it.
+_LANDINGS = Lru(64, on_evict=_drop_landing)
+
+
+def _landing(spark: SparkSession, key: tuple, prefix: str, stage) -> str:
+    """Build (or reuse) one staged landing dir: ``stage(land)`` writes the
+    micro-batch files into a fresh ``land``. Staging is FIXTURE synthesis
+    — the harness stand-in for files landing from an upstream producer —
+    so under TOMIX_CACHE_TABLES (the fixture-cache flag, same policy as
+    the synthesized amp/GA inputs) it builds once per session; the
+    STREAM + incremental merge, the product under test, re-runs fully on
+    every call either way. Uncached mode re-stages every call and
+    reclaims the previous landing tree instead of leaking one mkdtemp per
+    invocation."""
+    key = (spark.sparkContext.applicationId, *key)
+    land = _LANDINGS.get(key)
+    if land and os.environ.get("TOMIX_CACHE_TABLES") and os.path.isdir(land):
+        return land
+    _LANDINGS.drop(key)
+    land = os.path.join(_scratch_dir(prefix=prefix), "landing")
+    os.makedirs(land)
+    stage(land)
+    return _LANDINGS.put(key, land)
 
 
 def _staged_landing(spark: SparkSession, sf_dir: str) -> str:
-    """Build (or reuse) the staged landing dir for one sf_dir. Staging is
-    FIXTURE synthesis — the harness stand-in for files landing from an
-    upstream producer — so under TOMIX_CACHE_TABLES (the fixture-cache
-    flag, same policy as the synthesized amp/GA inputs) it builds once
-    per session; the STREAM + incremental merge, the product under test,
-    re-runs fully on every call either way."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _LANDING_CACHE.get(key)
-    if cached and os.environ.get("TOMIX_CACHE_TABLES") and os.path.isdir(cached):
-        return cached
-    if cached:
-        # uncached mode re-stages every call: reclaim the previous
-        # landing tree instead of leaking one mkdtemp per invocation
-        shutil.rmtree(os.path.dirname(cached), ignore_errors=True)
-    ev = table(spark, sf_dir, "events")
-    # slice bound computed from the data (deterministic; oracle mirrors
-    # it with a scalar subquery)
-    [row] = ev.agg(F.min("ts").alias("mn")).collect()
-    bound = ev.filter(
-        F.col("ts")
-        < F.lit(row["mn"]).cast("timestamp") + F.expr(f"INTERVAL {SLICE_DAYS} DAYS")
-    )
-    land = os.path.join(_scratch_dir(prefix="tomix_cagg_land_"), "landing")
-    os.makedirs(land)
-    _stage_batches(bound, land)
-    _LANDING_CACHE[key] = land
-    return land
+    """The cagg parity's landing: the event slice as N_STREAM_BATCHES
+    parquet files."""
+
+    def stage(land: str) -> None:
+        ev = table(spark, sf_dir, "events")
+        # slice bound computed from the data (deterministic; oracle
+        # mirrors it with a scalar subquery)
+        [row] = ev.agg(F.min("ts").alias("mn")).collect()
+        bound = ev.filter(
+            F.col("ts")
+            < F.lit(row["mn"]).cast("timestamp")
+            + F.expr(f"INTERVAL {SLICE_DAYS} DAYS")
+        )
+        _stage_split(bound, land, "event_id", ("ts", "event_type", "value"))
+
+    return _landing(spark, (sf_dir, "cagg"), "tomix_cagg_land_", stage)
 
 
 def streaming_cagg_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -215,47 +236,22 @@ GROUP BY 1, 2
 """
 
 
-def _stage_json_batches(df: DataFrame, land: str, split_col: str, n: int) -> None:
-    """Write ``df`` as ``n`` single NDJSON files (the json file-source's
-    micro-batch unit), split by a deterministic modular rule."""
-    for b in range(n):
-        part_dir = os.path.join(land, f"_stage_b{b}")
-        (
-            df.filter(F.pmod(F.col(split_col), F.lit(n)) == b)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .json(part_dir)
-        )
-        [part] = [p for p in os.listdir(part_dir) if p.startswith("part-")]
-        os.replace(os.path.join(part_dir, part), os.path.join(land, f"b{b}.json"))
-        shutil.rmtree(part_dir, ignore_errors=True)
-
-
-_AMP_LANDING_CACHE: dict[tuple, str] = {}
-
-
 def _staged_amp_landing(spark: SparkSession, sf_dir: str) -> str:
     """Stage the synthesized Amplitude export (transform_parity's F1
     fixture) as NDJSON micro-batch files — the reference's on-disk shape
-    for the fused line-by-line path. Fixture synthesis caches under
-    TOMIX_CACHE_TABLES (same policy as _staged_landing)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "amp")
-    cached = _AMP_LANDING_CACHE.get(key)
-    if cached and os.environ.get("TOMIX_CACHE_TABLES") and os.path.isdir(cached):
-        return cached
-    if cached:
-        shutil.rmtree(os.path.dirname(cached), ignore_errors=True)
+    for the fused line-by-line path."""
     from tomixpanel_spark.operators.transform_parity import _synth_amp
 
-    land = os.path.join(_scratch_dir(prefix="tomix_incr_land_"), "landing")
-    os.makedirs(land)
     # amplitude_id carries event_id through the export shape — the only
     # integer column, so it is the split key
-    _stage_json_batches(
-        _synth_amp(spark, sf_dir), land, "amplitude_id", N_STREAM_BATCHES
+    return _landing(
+        spark,
+        (sf_dir, "amp"),
+        "tomix_incr_land_",
+        lambda land: _stage_split(
+            _synth_amp(spark, sf_dir), land, "amplitude_id", fmt="json"
+        ),
     )
-    _AMP_LANDING_CACHE[key] = land
-    return land
 
 
 def streaming_incremental_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -303,9 +299,6 @@ def streaming_incremental_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(out_dir)
 
 
-_DAY_LANDING_CACHE: dict[tuple, str] = {}
-
-
 def _staged_day_landing(
     spark: SparkSession,
     sf_dir: str,
@@ -325,43 +318,32 @@ def _staged_day_landing(
     consumer's projection."""
     import time as _time
 
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    cached = _DAY_LANDING_CACHE.get(key)
-    if cached and os.environ.get("TOMIX_CACHE_TABLES") and os.path.isdir(cached):
-        return cached
-    if cached:
-        shutil.rmtree(os.path.dirname(cached), ignore_errors=True)
-    ev = table(spark, sf_dir, "events")
-    [row] = ev.agg(F.min("ts").alias("mn")).collect()
-    land = os.path.join(_scratch_dir(prefix=f"tomix_{tag}_land_"), "landing")
-    os.makedirs(land)
-    now = _time.time()
+    def stage(land: str) -> None:
+        ev = table(spark, sf_dir, "events")
+        [row] = ev.agg(F.min("ts").alias("mn")).collect()
+        now = _time.time()
+        for d in range(SLICE_DAYS):
+            lo = F.lit(row["mn"]).cast("timestamp") + F.expr(f"INTERVAL {d} DAYS")
+            hi = F.lit(row["mn"]).cast("timestamp") + F.expr(
+                f"INTERVAL {d + 1} DAYS"
+            )
+            part_dir = os.path.join(land, f"_stage_d{d}")
+            day = day_cols(ev.filter((F.col("ts") >= lo) & (F.col("ts") < hi)))
+            if sentinel_cols is not None and d == SLICE_DAYS - 1:
+                # sentinel rides IN the final day file, not as its own
+                # micro-batch: the watermark advances when the batch
+                # holding it commits, and availableNow already appends
+                # one no-data finalization batch after a watermark change
+                # — so the final windows flush without paying a whole
+                # extra trigger for a one-row file (measured ~0.5
+                # s/trigger floor)
+                day = day.unionByName(sentinel_cols(ev))
+            day.coalesce(1).write.mode("overwrite").parquet(part_dir)
+            dst = os.path.join(land, f"d{d}.parquet")
+            _move_part(part_dir, dst)
+            os.utime(dst, (now - 300 + d * 60,) * 2)
 
-    def _move_single(part_dir: str, dst: str, mtime: float) -> None:
-        [part] = [p for p in os.listdir(part_dir) if p.endswith(".parquet")]
-        os.replace(os.path.join(part_dir, part), dst)
-        shutil.rmtree(part_dir, ignore_errors=True)
-        os.utime(dst, (mtime,) * 2)
-
-    for d in range(SLICE_DAYS):
-        lo = F.lit(row["mn"]).cast("timestamp") + F.expr(f"INTERVAL {d} DAYS")
-        hi = F.lit(row["mn"]).cast("timestamp") + F.expr(f"INTERVAL {d + 1} DAYS")
-        part_dir = os.path.join(land, f"_stage_d{d}")
-        day = day_cols(ev.filter((F.col("ts") >= lo) & (F.col("ts") < hi)))
-        if sentinel_cols is not None and d == SLICE_DAYS - 1:
-            # sentinel rides IN the final day file, not as its own
-            # micro-batch: the watermark advances when the batch holding
-            # it commits, and availableNow already appends one no-data
-            # finalization batch after a watermark change — so the final
-            # windows flush without paying a whole extra trigger for a
-            # one-row file (measured ~0.5 s/trigger floor)
-            day = day.unionByName(sentinel_cols(ev))
-        day.coalesce(1).write.mode("overwrite").parquet(part_dir)
-        _move_single(
-            part_dir, os.path.join(land, f"d{d}.parquet"), now - 300 + d * 60
-        )
-    _DAY_LANDING_CACHE[key] = land
-    return land
+    return _landing(spark, (sf_dir, tag), f"tomix_{tag}_land_", stage)
 
 
 def _staged_windowed_landing(spark: SparkSession, sf_dir: str) -> str:
@@ -536,35 +518,18 @@ GROUP BY 1, 2
 """
 
 
-_DOC_LANDING_CACHE: dict[tuple, str] = {}
-
-
 def _staged_doc_landing(spark: SparkSession, sf_dir: str) -> str:
     """Stage documents as N_STREAM_BATCHES parquet files split by doc_id
     (order-free: sketch merge is commutative — that is the property
     under test)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "docs")
-    cached = _DOC_LANDING_CACHE.get(key)
-    if cached and os.environ.get("TOMIX_CACHE_TABLES") and os.path.isdir(cached):
-        return cached
-    if cached:
-        shutil.rmtree(os.path.dirname(cached), ignore_errors=True)
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    land = os.path.join(_scratch_dir(prefix="tomix_cms_land_"), "landing")
-    os.makedirs(land)
-    for b in range(N_STREAM_BATCHES):
-        part_dir = os.path.join(land, f"_stage_b{b}")
-        (
-            docs.filter(F.pmod(F.col("doc_id"), F.lit(N_STREAM_BATCHES)) == b)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(part_dir)
-        )
-        [part] = [p for p in os.listdir(part_dir) if p.endswith(".parquet")]
-        os.replace(os.path.join(part_dir, part), os.path.join(land, f"b{b}.parquet"))
-        shutil.rmtree(part_dir, ignore_errors=True)
-    _DOC_LANDING_CACHE[key] = land
-    return land
+    return _landing(
+        spark,
+        (sf_dir, "docs"),
+        "tomix_cms_land_",
+        lambda land: _stage_split(
+            table(spark, sf_dir, "documents"), land, "doc_id", ("doc_id", "text")
+        ),
+    )
 
 
 def streaming_sketch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -9,7 +9,6 @@ per partition)."""
 
 from __future__ import annotations
 
-from collections import OrderedDict
 from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
@@ -31,6 +30,7 @@ from tomixpanel_spark.functions.text import (
 )
 from tomixpanel_spark.operators.base import (
     Gate,
+    Lru,
     QuerySpec,
     ensure_parallel,
     local_rows_df,
@@ -1104,8 +1104,7 @@ def _pa_tokenize_tf(ids, texts):
     )
 
 
-_DOCS_PDF_CACHE: OrderedDict = OrderedDict()
-_DOCS_PDF_CACHE_MAX = 8
+_DOCS_PDF_CACHE = Lru(8)
 
 
 def docs_pdf(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"):
@@ -1116,25 +1115,20 @@ def docs_pdf(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"):
     (``TFIDF_DRIVER_FOLD_DOCS``)."""
     import os
 
+    def build():
+        return docs.select(
+            F.col(id_col).alias(id_col), F.col(text_col).alias(text_col)
+        ).toPandas()
+
+    if not os.environ.get("TOMIX_CACHE_TABLES"):
+        return build()
     key = (
         docs.sparkSession.sparkContext.applicationId,
         docs.semanticHash(),
         id_col,
         text_col,
     )
-    if os.environ.get("TOMIX_CACHE_TABLES"):
-        hit = _DOCS_PDF_CACHE.get(key)
-        if hit is not None:
-            _DOCS_PDF_CACHE.move_to_end(key)
-            return hit
-    pdf = docs.select(
-        F.col(id_col).alias(id_col), F.col(text_col).alias(text_col)
-    ).toPandas()
-    if os.environ.get("TOMIX_CACHE_TABLES"):
-        _DOCS_PDF_CACHE[key] = pdf
-        while len(_DOCS_PDF_CACHE) > _DOCS_PDF_CACHE_MAX:
-            _DOCS_PDF_CACHE.popitem(last=False)
-    return pdf
+    return _DOCS_PDF_CACHE.memo(key, build)
 
 
 def tokenize_tf_pdf(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"):
@@ -1158,7 +1152,7 @@ def tokenize_tf_pdf(docs: DataFrame, id_col: str = "doc_id", text_col: str = "te
 TFIDF_BCAST_VOCAB = Gate("TOMIX_TFIDF_BCAST_VOCAB", 2_000_000)
 
 
-_VOCAB_COUNT_CACHE: dict[tuple, int] = {}
+_VOCAB_COUNT_CACHE = Lru(256)
 
 
 def _vocab_count(spark: SparkSession, key: tuple, df_counts: DataFrame) -> int:
@@ -1166,9 +1160,7 @@ def _vocab_count(spark: SparkSession, key: tuple, df_counts: DataFrame) -> int:
     over the (already checkpointed) tf table, memoized per (application,
     sf_dir): the vocabulary is fixed for a corpus, so repeated keyword
     extractions don't re-count it."""
-    if key not in _VOCAB_COUNT_CACHE:
-        _VOCAB_COUNT_CACHE[key] = df_counts.count()
-    return _VOCAB_COUNT_CACHE[key]
+    return _VOCAB_COUNT_CACHE.memo(key, df_counts.count)
 
 
 # Size-adaptive execution gate (the identity.py CC pattern — driver
@@ -1183,16 +1175,14 @@ def _vocab_count(spark: SparkSession, key: tuple, df_counts: DataFrame) -> int:
 TFIDF_DRIVER_FOLD_DOCS = Gate("TOMIX_TFIDF_DRIVER_FOLD_DOCS", 25_000)
 
 
-_CORPUS_COUNT_CACHE: dict[tuple, int] = {}
+_CORPUS_COUNT_CACHE = Lru(256)
 
 
 def _corpus_count(spark: SparkSession, sf_dir: str, docs: DataFrame) -> int:
     """documents cardinality for the size gate — memoized per
     (application, sf_dir), same precedent as decontam's eval-count."""
     key = (spark.sparkContext.applicationId, sf_dir, "n_docs")
-    if key not in _CORPUS_COUNT_CACHE:
-        _CORPUS_COUNT_CACHE[key] = docs.count()
-    return _CORPUS_COUNT_CACHE[key]
+    return _CORPUS_COUNT_CACHE.memo(key, docs.count)
 
 
 def _under_fold_cap(spark: SparkSession, sf_dir: str, docs: DataFrame) -> bool:
@@ -1719,7 +1709,7 @@ SELECT q_id, doc_id, rank, score_e6 FROM (
 LM_BCAST_BIGRAMS = Gate("TOMIX_LM_BCAST_BIGRAMS", 2_000_000)
 
 
-_LM_MODEL_COUNT_CACHE: dict[tuple, int] = {}
+_LM_MODEL_COUNT_CACHE = Lru(256)
 
 
 def _lm_driver_fold(spark: SparkSession, docs: DataFrame) -> DataFrame:
@@ -1846,9 +1836,7 @@ def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count_distinct("t").alias("v")
     )
     key = (spark.sparkContext.applicationId, sf_dir, "lm_bigram_types")
-    if key not in _LM_MODEL_COUNT_CACHE:
-        _LM_MODEL_COUNT_CACHE[key] = model.count()
-    if LM_BCAST_BIGRAMS.admits(_LM_MODEL_COUNT_CACHE[key]):
+    if LM_BCAST_BIGRAMS.admits(_LM_MODEL_COUNT_CACHE.memo(key, model.count)):
         model, ctx = F.broadcast(model), F.broadcast(ctx)
     scored = (
         big.join(model, ["prev", "cur"])

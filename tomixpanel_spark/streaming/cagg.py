@@ -57,7 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from tomixpanel_spark.operators.base import Gate
+from tomixpanel_spark.operators.base import Gate, Lru
 from tomixpanel_spark.streaming.genstore import (
     cas_check,
     mint_store_id,
@@ -74,10 +74,7 @@ CAGG_DRIVER_MERGE_CAP = Gate("TOMIX_CAGG_DRIVER_MERGE_CAP", 65_536)
 # map AND the store-instance nonce, so any committed write — or a store
 # deleted and recreated at the same path — changes the key; see hourly()
 # for why a hit can never be stale.
-from collections import OrderedDict
-
-_HOURLY_PLAN_CACHE: OrderedDict = OrderedDict()
-_HOURLY_PLAN_CACHE_MAX = 8
+_HOURLY_PLAN_CACHE = Lru(8)
 
 
 def _sum_dec_skipna(s):
@@ -472,7 +469,6 @@ class ContinuousAggregate:
         )
         hit = _HOURLY_PLAN_CACHE.get(key)
         if hit is not None:
-            _HOURLY_PLAN_CACHE.move_to_end(key)
             return hit
         df = self._read_day_partitions(spark, man, sorted(man["days"]))
         if df is None:
@@ -480,10 +476,7 @@ class ContinuousAggregate:
         out = df.select(
             "bucket", "key", F.col("n").cast("bigint").alias("n"), "sum_dec"
         )
-        _HOURLY_PLAN_CACHE[key] = out
-        while len(_HOURLY_PLAN_CACHE) > _HOURLY_PLAN_CACHE_MAX:
-            _HOURLY_PLAN_CACHE.popitem(last=False)
-        return out
+        return _HOURLY_PLAN_CACHE.put(key, out)
 
     def daily(self, spark: SparkSession) -> DataFrame:
         """Daily grain from the stored hourly partials — never re-reads

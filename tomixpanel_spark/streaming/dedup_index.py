@@ -56,7 +56,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from tomixpanel_spark.operators.base import Gate
+from tomixpanel_spark.operators.base import Gate, Lru
 from tomixpanel_spark.streaming.genstore import (
     atomic_json_swap,
     cas_check,
@@ -80,18 +80,11 @@ DEDUP_INDEX_DRIVER_CAP = Gate("TOMIX_DEDUP_INDEX_DRIVER_CAP", 65_536)
 # manifest every call (the freshness check) but skip re-opening unchanged
 # bucket parquet files, which dominates interactive probe latency
 # (~2-3 ms/file open x touched buckets).
-from collections import OrderedDict as _OrderedDict
-
-_BUCKET_FRAME_CACHE: "_OrderedDict[tuple, object]" = _OrderedDict()
-_BUCKET_FRAME_CACHE_MAX = 512
+_BUCKET_FRAME_CACHE = Lru(512)
 # per-frame row cap: a production-sized index bucket (manifest sizing
 # targets hundreds of MB) must NOT pin driver memory through the cache —
-# oversized frames are served but never cached (TOMIX_DIDX_CACHE_ROWS,
-# 0 disables caching entirely)
-
-
-def _bucket_cache_row_cap() -> int:
-    return int(os.environ.get("TOMIX_DIDX_CACHE_ROWS", "2000000"))
+# oversized frames are served but never cached
+_BUCKET_CACHE_MAX_ROWS = 2_000_000
 
 
 class DedupIndex:
@@ -535,13 +528,8 @@ class DedupIndex:
                     else pd.DataFrame({"h": pd.array([], dtype="int64"),
                                        "first_doc_id": pd.array([], dtype="int64")})
                 )
-                cap = _bucket_cache_row_cap()
-                if cap > 0 and len(cached) <= cap:
-                    _BUCKET_FRAME_CACHE[ck] = cached
-                    while len(_BUCKET_FRAME_CACHE) > _BUCKET_FRAME_CACHE_MAX:
-                        _BUCKET_FRAME_CACHE.popitem(last=False)
-            else:
-                _BUCKET_FRAME_CACHE.move_to_end(ck)
+                if len(cached) <= _BUCKET_CACHE_MAX_ROWS:
+                    _BUCKET_FRAME_CACHE.put(ck, cached)
             frames.append(cached)
         if frames:
             # internal column names for the index side: an input frame

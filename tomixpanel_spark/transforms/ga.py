@@ -346,17 +346,6 @@ def _exploded_event_columns() -> tuple:
 
 
 @lru_cache(maxsize=1)
-def _event_output_columns() -> tuple:
-    ev = F.col("ev")
-    return (
-        ev["event"].alias("event"),
-        F.col("distinct_id"),
-        ev["time_ms"].alias("time_ms"),
-        ev["props"].alias("props"),
-    )
-
-
-@lru_cache(maxsize=1)
 def _event_final_columns() -> tuple:
     """Final event projection built directly off the exploded ``ev``
     attribute in ONE select. The previous rename-select -> withColumn ->
@@ -387,27 +376,10 @@ def ga_events(
     df: DataFrame,
     move_to_present: bool = False,
     anchor_now_ms: int | None = None,
-    materialize_base: bool = False,
 ) -> DataFrame:
     """Sessions -> full event stream (begins + hits + ends), $insert_id on
-    every row; optional move-to-present shift.
-
-    ``materialize_base``: the session prep (identity, default-prop
-    entries, summary) feeds THREE consumers (begins / hits / ends), and
-    Spark has no cross-branch common-subexpression reuse — each branch
-    re-evaluates the prep against the source. Materializing it once
-    (localCheckpoint) trades one write of the prepped sessions (including
-    the full nested hits array) for two re-computations. Default OFF:
-    after the single-pass entry-array rewrite the prep is cheap enough
-    that re-evaluation beats serializing the nested sessions (A/B at
-    sf0.1: 1.43 s unmaterialized vs 1.62 s checkpointed); turn on when
-    the upstream source is expensive to rescan (e.g. remote JSON).
-    """
+    every row; optional move-to-present shift."""
     base = _session_base(df)
-    if materialize_base:
-        from tomixpanel_spark.operators.base import stage_checkpoint
-
-        base = stage_checkpoint(base, eager=True)
     events = base.select(*_exploded_event_columns()).select(*_event_final_columns())
     if move_to_present:
         if anchor_now_ms is None:

@@ -30,8 +30,6 @@ from tomixpanel_spark.session import ensure_semantics, session_builder  # noqa: 
 def main() -> None:
     names = sys.argv[1:]
     os.environ.setdefault("TOMIX_CACHE_TABLES", "1")
-    os.environ.setdefault("TOMIX_CACHE_PARTS", "8")
-    os.environ.setdefault("TOMIX_CACHE_PARTS_MIN_MB", "0.4")
     sf_dir = os.environ.get("OPT_SF", "/root/testdata/sf0.1")
     runs = int(os.environ.get("OPT_RUNS", "3"))
     plan_dir = os.environ.get("OPT_PLAN_DIR")
