@@ -396,3 +396,37 @@ def test_media_px_sum_py_matches_spark(spark):
     )
     got = {r["doc_id"]: r["s"] for r in df.select("doc_id", px_sum.alias("s")).collect()}
     assert got == {i: px_sum_py(i) for i in ids}
+
+
+def test_thumb_pixel_keys_on_its_argument(spark):
+    """_thumb_pixel's group key derives from the id column it is GIVEN,
+    not from a column that happens to be named doc_id: on a frame whose
+    doc_id disagrees with node, pixels over node must equal the pixels
+    over a doc_id holding the same ids (and a frame with no doc_id at
+    all must still resolve)."""
+    from tomixpanel_spark.operators.multimodal import (
+        DHASH_COLS,
+        DHASH_ROWS,
+        _thumb_pixel,
+    )
+
+    ids = [0, 19, 20, 25, 64, 1279, 1280]
+    px = F.transform(
+        F.sequence(F.lit(0), F.lit(DHASH_ROWS * DHASH_COLS - 1)),
+        lambda i: _thumb_pixel(i, F.col("node")),
+    )
+    conflicting = spark.createDataFrame(
+        [(i, 3) for i in ids], "node bigint, doc_id bigint"
+    )
+    only_node = spark.createDataFrame([(i,) for i in ids], "node bigint")
+    truth = spark.createDataFrame([(i,) for i in ids], "doc_id bigint").select(
+        F.col("doc_id").alias("node"),
+        F.transform(
+            F.sequence(F.lit(0), F.lit(DHASH_ROWS * DHASH_COLS - 1)),
+            lambda i: _thumb_pixel(i, F.col("doc_id")),
+        ).alias("px"),
+    )
+    want = {r["node"]: r["px"] for r in truth.collect()}
+    for df in (conflicting, only_node):
+        got = df.select("node", px.alias("px")).collect()
+        assert {r["node"]: r["px"] for r in got} == want

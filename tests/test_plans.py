@@ -309,11 +309,12 @@ def test_cc_probe_is_single_bounded_collect(spark, monkeypatch):
         [(f"a{i}", f"b{i}") for i in range(5)], "id_a string, id_b string"
     )
     monkeypatch.setenv("TOMIX_CC_LOCAL_MAX", "5")  # == distinct count
-    _, rows = idmod.connected_components_with_rows(edges)
-    assert rows is not None and len(rows) == 10  # 5 edges -> 10 nodes
+    assert idmod.connected_components(edges).count() == 10  # 5 edges -> 10 nodes
+    decision = _last_decision("TOMIX_CC_LOCAL_MAX")
+    assert (decision.tier, decision.rows) == ("driver", 5)
     monkeypatch.setenv("TOMIX_CC_LOCAL_MAX", "4")  # one under
-    _, rows = idmod.connected_components_with_rows(edges)
-    assert rows is None  # distributed path
+    idmod.connected_components(edges)
+    assert _last_decision("TOMIX_CC_LOCAL_MAX").tier == "distributed"
 
 
 def test_carry_ntoks_rides_the_pair_edges(spark):
@@ -356,19 +357,87 @@ def test_carry_ntoks_rejects_df_cap(spark):
         near_dup_pairs(docs, df_cap=100, carry_ntoks=True)
 
 
-def test_edge_node_attrs_dedups_to_one_signal_per_node(spark):
-    """The distributed-tier member-signal derivation: a node appearing in
-    many edges must come out once, with its own signal from either
-    endpoint position."""
-    from tomixpanel_spark.operators.identity import edge_node_attrs
+# keep_per_cluster fixture: four components, one per policy corner.
+#   1-2-3 (triangle): each node sits in two edges and must come out once,
+#       with its own signal from either endpoint position;
+#   10-11-12: node 10's signal is NULL, smallest as in Spark's struct
+#       ordering: it loses to -5 and -7 under largest=True and wins
+#       under largest=False (a NULL read as 0 fails both ways);
+#   20..24 (chain): two nodes tie on the top and two on the bottom
+#       signal, so the tie goes to the lower id, not the component label;
+#   29..33 (star on 30): node 30's edge attr is NOT functional (5, 4, 8
+#       and 3 on its four edges), so its signal is the max, 8, on both
+#       tiers; any other value changes the winner either way.
+_KPC_SIGNAL = {
+    1: 10, 2: 20, 3: 30,
+    10: None, 11: -5, 12: -7,
+    20: 5, 21: 9, 22: 1, 23: 9, 24: 1,
+    29: 7, 30: 8, 31: 6, 32: 7, 33: 6,
+}
+_KPC_EDGES = [
+    (1, 2, 10, 20), (1, 3, 10, 30), (2, 3, 20, 30), (1, 2, 10, 20),
+    (10, 11, None, -5), (11, 12, -5, -7),
+    (20, 21, 5, 9), (21, 22, 9, 1), (22, 23, 1, 9), (23, 24, 9, 1),
+    (29, 30, 7, 5), (30, 31, 4, 6), (30, 32, 8, 7), (30, 33, 3, 6),
+]
+_KPC_COMPONENTS = [[1, 2, 3], [10, 11, 12], [20, 21, 22, 23, 24], [29, 30, 31, 32, 33]]
+
+
+@pytest.mark.parametrize("largest", [True, False])
+@pytest.mark.parametrize("signal", ["none", "attrs", "node_signal"])
+def test_keep_per_cluster_tiers_agree(spark, monkeypatch, largest, signal):
+    """identity.keep_per_cluster gives identical (winners, drops) on the
+    driver and distributed CC tiers, at TOMIX_CC_LOCAL_MAX = 0, n-1, n
+    and n+1 distinct edges, and both equal the policy computed by hand:
+    largest (or smallest) signal per component, NULL smallest, ties to
+    the lowest id, the lowest id when there is no signal."""
+    from pyspark.sql import functions as F
+
+    from tomixpanel_spark.operators.identity import keep_per_cluster
 
     edges = spark.createDataFrame(
-        [(1, 2, 10, 20), (1, 3, 10, 30), (2, 3, 20, 30)],
-        "src long, dst long, nt_a long, nt_b long",
+        _KPC_EDGES, "id_a long, id_b long, nt_a long, nt_b long"
     )
-    out = {(r["node"], r["n_tokens"]) for r in
-           edge_node_attrs(edges, "nt_a", "nt_b", "n_tokens").collect()}
-    assert out == {(1, 10), (2, 20), (3, 30)}
+    n = len(set(_KPC_EDGES))
+    kwargs = {}
+    if signal == "attrs":
+        kwargs["attrs"] = ("nt_a", "nt_b")
+    elif signal == "node_signal":
+        by_node = F.create_map(
+            *[x for k, v in _KPC_SIGNAL.items()
+              for x in (F.lit(k), F.lit(v).cast("long"))]
+        )
+        kwargs["node_signal"] = (_KPC_SIGNAL.get, by_node[F.col("node")])
+
+    def policy(members):
+        if signal == "none":
+            return min(members)
+        present = [m for m in members if _KPC_SIGNAL[m] is not None]
+        if largest or not present:
+            top = max((_KPC_SIGNAL[m] for m in present), default=None)
+        else:
+            top = None if len(present) < len(members) else min(
+                _KPC_SIGNAL[m] for m in present
+            )
+        return min(m for m in members if _KPC_SIGNAL[m] == top)
+
+    keep = [policy(c) for c in _KPC_COMPONENTS]
+    want_winners = {
+        (k, None if signal == "none" else _KPC_SIGNAL[k], len(c))
+        for c, k in zip(_KPC_COMPONENTS, keep)
+    }
+    want_drops = {m for c in _KPC_COMPONENTS for m in c} - set(keep)
+
+    for cap, tier in [(0, "distributed"), (n - 1, "distributed"),
+                      (n, "driver"), (n + 1, "driver")]:
+        monkeypatch.setenv("TOMIX_CC_LOCAL_MAX", str(cap))
+        winners, drops = keep_per_cluster(edges, largest=largest, **kwargs)
+        decision = _last_decision("TOMIX_CC_LOCAL_MAX")
+        assert (decision.tier, decision.rows) == (tier, None if cap == 0 else n)
+        assert set(winners.columns) == {"keep", "signal", "size"}
+        got = {(r["keep"], r["signal"], r["size"]) for r in winners.collect()}
+        assert got == want_winners, (cap, tier)
+        assert sorted(r["node"] for r in drops.collect()) == sorted(want_drops), cap
 
 
 def test_decontam_broadcasts_eval_side(spark):
@@ -1240,6 +1309,32 @@ def test_gates_doc_matches_code():
     stale_in_doc = sorted(in_doc - in_code)
     assert not missing_from_doc, f"undocumented gates: {missing_from_doc}"
     assert not stale_in_doc, f"GATES.md rows with no code: {stale_in_doc}"
+
+
+def test_gates_doc_test_references_resolve():
+    """Every ``test_*.py::name`` GATES.md cites (a gate's paths-agree
+    signal, a tier's enforcement test) names a def or class that exists
+    in tests/, so a renamed or deleted test cannot stay cited."""
+    import re
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    doc = (root / "GATES.md").read_text()
+    defined: dict[str, set[str]] = {}
+    for src in (root / "tests").glob("test_*.py"):
+        defined[src.name] = set(
+            re.findall(r"^\s*(?:def|class)\s+(\w+)", src.read_text(), re.M)
+        )
+    refs, mod = [], None
+    # `::name` right after a `test_x.py::...` cite is shorthand for test_x.py
+    for m in re.finditer(r"(?:(test_\w+\.py)|`)::\s*(\w+)", doc):
+        mod = m.group(1) or mod
+        refs.append((mod, m.group(2)))
+    assert refs, "GATES.md cites no tests"
+    missing = sorted(
+        f"{mod}::{name}" for mod, name in refs if name not in defined.get(mod, set())
+    )
+    assert not missing, f"GATES.md cites tests that do not exist: {missing}"
 
 
 def test_lru_is_the_only_hand_rolled_cache():

@@ -37,7 +37,6 @@ from tomixpanel_spark.operators.base import (
     QuerySpec,
     derived,
     ensure_parallel,
-    local_rows_df,
     stage_checkpoint,
     table,
 )
@@ -1136,7 +1135,7 @@ def dedup_pipeline(
 
     Caller owns the persisted pairs' lifetime: ``result["pairs"].
     unpersist()`` when done (or write it to the lake as the artifact)."""
-    from tomixpanel_spark.operators.identity import connected_components
+    from tomixpanel_spark.operators.identity import keep_per_cluster
 
     if candidate_source == "lsh":
         sa = shingle_arrays_for(df, id_col, text_col)
@@ -1149,14 +1148,9 @@ def dedup_pipeline(
         raise ValueError(f"unknown candidate_source: {candidate_source!r}")
     drops = pairs.select(F.col("doc_b").alias(id_col)).distinct()
     keep = df.select(id_col).join(drops, id_col, "left_anti").select(id_col)
-    comp = connected_components(pairs.select("doc_a", "doc_b"), a="doc_a", b="doc_b")
-    components = (
-        comp.groupBy("component")
-        .agg(
-            F.min("node").alias("keep_doc_id"),
-            F.count(F.lit(1)).alias("cluster_size"),
-        )
-        .select("keep_doc_id", "cluster_size")
+    winners, _ = keep_per_cluster(pairs, a="doc_a", b="doc_b")
+    components = winners.select(
+        F.col("keep").alias("keep_doc_id"), F.col("size").alias("cluster_size")
     )
     return {"pairs": pairs, "keep_list": keep, "components": components}
 
@@ -1233,35 +1227,13 @@ def neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     small and the pair set is sparse, so at corpus scale the edge list is
     orders of magnitude smaller than the corpus — the driver union-find
     path almost always applies; the distributed loop is the fallback."""
-    from tomixpanel_spark.operators.identity import connected_components_with_rows
+    from tomixpanel_spark.operators.identity import keep_per_cluster
 
     pairs = ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    comp, rows = connected_components_with_rows(pairs, a="doc_a", b="doc_b")
-    if rows is not None:
-        # small-graph tier: the (node, component) labels are already on
-        # the driver (CC's own collect gate) — fold the per-component
-        # min/count there instead of re-planning a groupBy over a
-        # 1-partition parallelized frame (which only buys AQE
-        # stage-scheduling floors). Exact integer min/count, same fixed
-        # point as the aggregate below; paths-agree is hash-checked by
-        # the bench distributed tier (TOMIX_CC_LOCAL_MAX=0).
-        agg: dict = {}
-        for node, c in rows:
-            cur = agg.get(c)
-            if cur is None:
-                agg[c] = [node, 1]
-            else:
-                cur[0] = min(cur[0], node)
-                cur[1] += 1
-        return local_rows_df(
-            spark,
-            [(v[0], v[1]) for v in agg.values()],
-            "keep_doc_id bigint, cluster_size bigint",
-        )
-    return comp.groupBy("component").agg(
-        F.min("node").alias("keep_doc_id"),
-        F.count(F.lit(1)).alias("cluster_size"),
-    ).select("keep_doc_id", "cluster_size")
+    winners, _ = keep_per_cluster(pairs, a="doc_a", b="doc_b")
+    return winners.select(
+        F.col("keep").alias("keep_doc_id"), F.col("size").alias("cluster_size")
+    )
 
 
 _NEARDUP_COMPONENTS_SQL = f"""
@@ -1291,76 +1263,17 @@ def neardup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     side's token count onto the edge in the shingle projection, where
     the tokens array already exists), so no second corpus scan ever
     fetches it — member signals derive from edge-sized data (guide §8).
-    One ``max_by`` hash aggregate picks each cluster's winner: MAX over
-    a named (n_tokens, -doc_id) struct — fieldwise lexicographic in
-    both engines, overflow-free for any token count or 64-bit doc id —
-    a single map-side-partial aggregate, no window sort."""
-    import pandas as pd
-
-    from tomixpanel_spark.operators.identity import (
-        connected_components_with_edges,
-        edge_node_attrs,
-    )
+    ``identity.keep_per_cluster`` picks each cluster's winner."""
+    from tomixpanel_spark.operators.identity import keep_per_cluster
 
     pairs = near_dup_pairs(
         table(spark, sf_dir, "documents"), carry_ntoks=True
     ).select("doc_a", "doc_b", "nt_a", "nt_b")
-    comp, rows, edges = connected_components_with_edges(
-        pairs, a="doc_a", b="doc_b", attrs=("nt_a", "nt_b")
-    )
-    if rows is not None:
-        # small-graph tier: labels AND the token counts are already on
-        # the driver (the CC probe collected the edges, which carry
-        # them) — the old member-tokenize job is gone entirely; Python
-        # only argmaxes exact integers.
-        ntok: dict = {}
-        for s, d, na, nb in edges[["src", "dst", "nt_a", "nt_b"]].itertuples(
-            index=False
-        ):
-            ntok[s] = None if pd.isna(na) else int(na)
-            ntok[d] = None if pd.isna(nb) else int(nb)
-        best: dict = {}
-        size: dict = {}
-        for node, c in rows:
-            # max (n_tokens, -node) == the struct max. A NULL quality
-            # signal (null text -> size(tokens) null) sorts SMALLEST in
-            # Spark's struct ordering; -inf reproduces that instead of
-            # raising TypeError on a None tuple compare (round-14 advice)
-            t = ntok[node]
-            key = ((t if t is not None else float("-inf")), -node)
-            if c not in best or key > best[c][0]:
-                best[c] = (key, t)
-            size[c] = size.get(c, 0) + 1
-        return local_rows_df(
-            spark,
-            [(-k[1], t, size[c]) for c, (k, t) in best.items()],
-            "keep_doc_id bigint, keep_n_tokens bigint, cluster_size bigint",
-        )
-    # distributed tier: member token counts come off the CHECKPOINTED
-    # edge set (explode both endpoints + distinct) — edge-sized data
-    # instead of the old corpus re-scan + semi-join + tokenize (at
-    # 100 TB that second full pass dwarfed everything downstream of the
-    # pair stage).
-    sized = edge_node_attrs(edges, "nt_a", "nt_b", "n_tokens")
-    labeled = comp.join(sized, "node")
-    return (
-        labeled.groupBy("component")
-        .agg(
-            # winner via MAX over a named struct (lexicographic field
-            # comparison: n_tokens major, -node minor) — both engines
-            # order structs fieldwise, and unlike a packed-bigint key
-            # (n_tokens * C - node) this cannot overflow for huge
-            # documents or bleed across terms for 64-bit hash doc_ids
-            F.max(
-                F.struct(F.col("n_tokens").alias("t"), (-F.col("node")).alias("nid"))
-            ).alias("w"),
-            F.count(F.lit(1)).alias("cluster_size"),
-        )
-        .select(
-            (-F.col("w.nid")).alias("keep_doc_id"),
-            F.col("w.t").alias("keep_n_tokens"),
-            "cluster_size",
-        )
+    winners, _ = keep_per_cluster(pairs, a="doc_a", b="doc_b", attrs=("nt_a", "nt_b"))
+    return winners.select(
+        F.col("keep").alias("keep_doc_id"),
+        F.col("signal").alias("keep_n_tokens"),
+        F.col("size").alias("cluster_size"),
     )
 
 

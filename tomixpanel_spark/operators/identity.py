@@ -20,9 +20,13 @@ feasible at test scale, while the Spark loop is the 100 TB path.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections import Counter
+from typing import Callable
+
+import pandas as pd
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import IntegralType, NullType, StructField, StructType
 
 from tomixpanel_spark.operators.base import (
     Gate,
@@ -71,73 +75,7 @@ def _local_components(pdf) -> list[tuple]:
 
 
 def connected_components(edges: DataFrame, a: str = "id_a", b: str = "id_b") -> DataFrame:
-    """edges(a,b) -> (node, component); see connected_components_with_rows."""
-    return connected_components_with_rows(edges, a, b)[0]
-
-
-def connected_components_with_edges(
-    edges: DataFrame, a: str = "id_a", b: str = "id_b", attrs: tuple = ()
-) -> "tuple[DataFrame, list[tuple] | None, object]":
-    """``connected_components_with_rows`` plus the deduplicated edge set
-    itself, for consumers whose per-component policy needs a per-NODE
-    signal that already rides on the edges (keep-best token counts,
-    centroid dots). ``attrs`` are extra edge columns carried through —
-    they MUST be functional on the (a, b) endpoints (a pure per-node
-    signal stamped onto each edge), or the distinct edge count changes.
-
-    Returns (labels_df, local_rows, edge_set):
-      * local tier — ``edge_set`` is the collected pandas frame
-        (src, dst, *attrs): the policy signal is already on the driver,
-        so no extra corpus-scan job is needed to fetch it.
-      * distributed tier — ``local_rows`` is None and ``edge_set`` is
-        the CHECKPOINTED distinct-edge DataFrame: deriving member
-        signals from it (explode endpoints + distinct) touches
-        edge-sized data instead of re-scanning the corpus (guide §8:
-        decide with small rows)."""
-    return _cc_impl(edges, a, b, attrs)
-
-
-def edge_node_attrs(
-    edges: DataFrame, attr_a: str, attr_b: str, out: str
-) -> DataFrame:
-    """(node, out) from a distinct edge set whose rows carry a per-node
-    signal for BOTH endpoints (``connected_components_with_edges``
-    attrs): explode the two (endpoint, signal) pairs and dedup. Data
-    touched is edge-sized — orders of magnitude under the corpus the
-    signal would otherwise be re-scanned from."""
-    return (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("src").alias("node"), F.col(attr_a).alias(out)
-                    ),
-                    F.struct(
-                        F.col("dst").alias("node"), F.col(attr_b).alias(out)
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.*")
-        .distinct()
-    )
-
-
-def connected_components_with_rows(
-    edges: DataFrame, a: str = "id_a", b: str = "id_b"
-) -> "tuple[DataFrame, list[tuple] | None]":
-    """edges(a,b) -> ((node, component) DataFrame, local_rows).
-
-    ``local_rows`` is the [(node, component), ...] list when the DRIVER
-    union-find tier ran (the edge set counted under the size gate) and
-    ``None`` on the distributed label-propagation path. Consumers that
-    apply a per-component policy (winner argmax, drop lists) use the
-    rows to run the policy driver-side in the small-graph tier — the
-    labels are already collected here, so re-planning joins/aggregates
-    over a 1-partition parallelized frame only buys a chain of
-    stage-scheduling floors (measured ~0.1 s per AQE query stage on an
-    idle local[32]) — while the distributed tier keeps the full
-    DataFrame plan. Same size discipline as the collect gate itself.
+    """edges(a,b) -> (node, component) DataFrame.
 
     Component = min node id in the cluster (string ids; min is
     lexicographic, deterministic).
@@ -159,8 +97,134 @@ def connected_components_with_rows(
         row) — so "did anything change" is a trivial filter-count on the
         round's checkpointed output, not a join of two label generations.
     """
-    labels, rows, _ = _cc_impl(edges, a, b, ())
-    return labels, rows
+    return _cc_impl(edges, a, b, ())[0]
+
+
+def keep_per_cluster(
+    edges: DataFrame,
+    a: str = "id_a",
+    b: str = "id_b",
+    *,
+    attrs: tuple = (),
+    node_signal: "tuple[Callable, Column] | None" = None,
+    largest: bool = True,
+) -> "tuple[DataFrame, DataFrame]":
+    """Keep one node per connected component of edges(a, b): the
+    "keep one per duplicate group" policy every CC consumer applies.
+
+    Per component the kept node has the largest signal (``largest=False``:
+    the smallest), ties to the lowest node id; with no signal it is the
+    lowest id, i.e. the component label. A NULL signal sorts smallest,
+    as in Spark's struct ordering. A signalled policy negates node ids,
+    so it needs numeric ids.
+
+    Signal sources (at most one):
+      * ``attrs=(attr_a, attr_b)`` — edge columns carrying each
+        endpoint's signal (token counts, centroid dots stamped where the
+        pair stage already had them, so no corpus re-scan). A node's
+        signal is the MAX over every edge it appears in, on both tiers,
+        so an attr that is not functional on its endpoint still yields
+        one signal per node.
+      * ``node_signal=(py, col)`` — a pure function of the node id, as a
+        Python callable (driver tier) and a Column over ``node``
+        (distributed tier) that must agree.
+
+    Returns ``(winners, drops)``: winners is (keep, signal, size) per
+    component, drops is (node) for every clustered node not kept.
+    Consumers never see which CC tier ran:
+      * driver tier (the CC probe collected the edges): one exact-integer
+        Python fold over the union-find rows; both frames are local rows
+        and ``drops`` carries a broadcast hint, so no Spark job runs
+        after the probe;
+      * distributed tier: one ``groupBy(component)`` max/min over a
+        (signal, ±node) struct — fieldwise lexicographic in every engine
+        and overflow-free — and a join back for the drops (a filter of
+        the labels when there is no signal).
+    """
+    labels, members, ded = _cc_impl(edges, a, b, attrs)
+    if members is not None:  # driver tier: (node, component) pairs
+        node_type = edges.schema[a].dataType
+        sig: dict = {}
+        sig_type = NullType()
+        if attrs:
+            sig_type = edges.schema[attrs[0]].dataType
+            conv = int if isinstance(sig_type, IntegralType) else float
+            for s, d, va, vb in ded[["src", "dst", *attrs]].itertuples(index=False):
+                for n, v in ((s, va), (d, vb)):
+                    v = None if pd.isna(v) else conv(v)
+                    old = sig.get(n)
+                    sig[n] = v if old is None or (v is not None and v > old) else old
+        elif node_signal is not None:
+            sig_type = labels.select(node_signal[1].alias("s")).schema["s"].dataType
+            sig = {n: node_signal[0](n) for n, _ in members}
+        sign = 1 if largest else -1
+
+        def rank(n):  # higher ranks first; NULL smallest, ties to the lowest id
+            v = sig[n]
+            return (sign * (float("-inf") if v is None else v), -n)
+
+        size = Counter(c for _, c in members)
+        keep = {c: c for c in size}
+        if attrs or node_signal is not None:
+            for n, c in members:
+                if rank(n) > rank(keep[c]):
+                    keep[c] = n
+        schema = StructType().add("keep", node_type).add("signal", sig_type)
+        spark = edges.sparkSession
+        winners = local_rows_df(
+            spark,
+            [(k, sig.get(k), size[c]) for c, k in keep.items()],
+            schema.add("size", "long"),
+        )
+        drops = local_rows_df(
+            spark,
+            [(n,) for n, c in members if keep[c] != n],
+            StructType().add("node", node_type),
+        )
+        return winners, F.broadcast(drops)
+
+    size = F.count(F.lit(1)).alias("size")
+    if not attrs and node_signal is None:
+        winners = labels.groupBy("component").agg(size).select(
+            F.col("component").alias("keep"), F.lit(None).alias("signal"), "size"
+        )
+        drops = labels.filter(F.col("node") != F.col("component")).select("node")
+        return winners, drops
+    if attrs:
+        ends = F.array(
+            F.struct(F.col("src").alias("node"), F.col(attrs[0]).alias("signal")),
+            F.struct(F.col("dst").alias("node"), F.col(attrs[1]).alias("signal")),
+        )
+        signals = (
+            ded.select(F.explode(ends).alias("e"))
+            .select("e.*")
+            .groupBy("node")
+            .agg(F.max("signal").alias("signal"))
+        )
+        labeled = labels.join(signals, "node")
+    else:
+        labeled = labels.withColumn("signal", node_signal[1])
+    best = F.max if largest else F.min
+    nid = -F.col("node") if largest else F.col("node")
+    w = best(F.struct(F.col("signal").alias("s"), nid.alias("nid"))).alias("w")
+    winners = (
+        labeled.groupBy("component")
+        .agg(w, size)
+        .select(
+            "component",
+            (-F.col("w.nid") if largest else F.col("w.nid")).alias("keep"),
+            F.col("w.s").alias("signal"),
+            "size",
+        )
+    )
+    # every labeled node has a signal row, so the drops need only the
+    # labels: the signal plan runs once, for the winners
+    drops = (
+        labels.join(winners.select("component", "keep"), "component")
+        .filter(F.col("node") != F.col("keep"))
+        .select("node")
+    )
+    return winners.drop("component"), drops
 
 
 def _cc_impl(

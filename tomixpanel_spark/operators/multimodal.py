@@ -1641,7 +1641,7 @@ def _thumb_pixel(i_expr, doc_id):
     """Engine-portable pixel formula: first 2 md5 hex chars (0..255) of a
     namespaced key — group-keyed normally, doc-keyed at the doc's single
     noise position."""
-    group = F.expr(f"doc_id div {MEDIA_GROUP}")
+    group = F.call_function("div", doc_id, F.lit(MEDIA_GROUP))
     g_key = F.concat(
         F.lit("g:"), group.cast("string"), F.lit(":"), i_expr.cast("string")
     )

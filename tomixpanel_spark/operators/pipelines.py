@@ -39,7 +39,6 @@ from tomixpanel_spark.functions.text import fingerprint, lang_guess, tokens
 from tomixpanel_spark.operators.base import (
     QuerySpec,
     ensure_parallel,
-    local_rows_df,
     stage_checkpoint,
     table,
 )
@@ -454,64 +453,20 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     TOMIX_SCORE_CELLS_CAP per task, components reuse the size-adaptive
     CC engine, and the keep-best argmin is one map-side-partial
     aggregate. Everything after the pair stage carries ids only."""
-    from tomixpanel_spark.operators.identity import (
-        connected_components_with_edges,
-        edge_node_attrs,
-    )
+    from tomixpanel_spark.operators.identity import keep_per_cluster
 
-    assigned, pairs = semdedup_clusters(spark, sf_dir)
+    _, pairs = semdedup_clusters(spark, sf_dir)
     emb = ensure_parallel(table(spark, sf_dir, "embeddings"), "vec_id")
-    comp, rows, edges = connected_components_with_edges(
+    _, drops = keep_per_cluster(
         pairs.select("vec_a", "vec_b", "cdot_a", "cdot_b"),
         a="vec_a",
         b="vec_b",
         attrs=("cdot_a", "cdot_b"),
+        largest=False,
     )
-    if rows is not None:
-        # small-graph tier: labels AND the edge-carried centroid-dots are
-        # already on the driver (the CC probe collected the edges) — the
-        # old member-scored collect job is gone; the keep-the-outlier
-        # argmin folds over exact int64s driver-side and the drop list
-        # rejoins as a broadcast-sized local relation.
-        cdot: dict = {}
-        for s, d, ca, cb in edges[
-            ["src", "dst", "cdot_a", "cdot_b"]
-        ].itertuples(index=False):
-            cdot[s] = None if pd.isna(ca) else int(ca)
-            cdot[d] = None if pd.isna(cb) else int(cb)
-        best: dict = {}
-        for node, c in rows:
-            # min (cdot, node) == struct min. NULL sorts smallest in
-            # Spark struct ordering, so a None signal folds as -inf
-            # (wins the min) instead of raising TypeError (r14 advice)
-            d = cdot[node]
-            key = ((d if d is not None else float("-inf")), node)
-            if c not in best or key < best[c]:
-                best[c] = key
-        keep_ids = {k[1] for k in best.values()}
-        drops = F.broadcast(
-            local_rows_df(
-                spark,
-                [(n,) for n, _ in rows if n not in keep_ids],
-                "vec_id bigint",
-            )
-        )
-        return emb.select("vec_id").join(drops, "vec_id", "left_anti")
-    # distributed tier: member centroid-dots off the CHECKPOINTED edge
-    # set (edge-sized explode+distinct) instead of joining the
-    # corpus-sized assignment table
-    scored = comp.join(edge_node_attrs(edges, "cdot_a", "cdot_b", "cdot"), "node")
-    winners = scored.groupBy("component").agg(
-        F.min(F.struct(F.col("cdot").alias("d"), F.col("node").alias("nid"))).alias(
-            "w"
-        )
+    return emb.select("vec_id").join(
+        drops.select(F.col("node").alias("vec_id")), "vec_id", "left_anti"
     )
-    drops = (
-        scored.join(winners, "component")
-        .filter(F.col("node") != F.col("w.nid"))
-        .select(F.col("node").alias("vec_id"))
-    )
-    return emb.select("vec_id").join(drops, "vec_id", "left_anti")
 
 
 def _semdedup_sql() -> str:
@@ -638,7 +593,10 @@ def media_dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality join and argmax touch component-node rows only (orders of
     magnitude fewer than items); the final keep-list is one anti-join
     on doc_id."""
-    from tomixpanel_spark.operators.identity import connected_components_with_rows
+    import hashlib
+    from functools import lru_cache
+
+    from tomixpanel_spark.operators.identity import keep_per_cluster
     from tomixpanel_spark.operators.multimodal import (
         DHASH_COLS,
         DHASH_ROWS,
@@ -647,94 +605,49 @@ def media_dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
         media_neardup,
     )
 
-    pairs = media_neardup(spark, sf_dir).select("doc_a", "doc_b")
-    comp, rows = connected_components_with_rows(pairs, a="doc_a", b="doc_b")
-    docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
-    if rows is not None:
-        # small-graph tier: the pixel spec is a pure function of doc_id
-        # (md5 first-two-hex-chars — identical bytes from hashlib), so
-        # with the labels already on the driver the ENTIRE keep-best
-        # policy folds locally with zero extra Spark stages; only the
-        # final anti-join runs as a plan, against a broadcast-sized
-        # local drop list. Spec parity with _thumb_pixel / the oracle's
-        # _media_px_sql is pinned by
-        # tests/test_pipelines.py::test_media_px_sum_py_matches_spark
-        # and the bench distributed tier's hash check.
-        import hashlib
+    n_px = DHASH_ROWS * DHASH_COLS
 
-        n_px = DHASH_ROWS * DHASH_COLS
+    # docs in one MEDIA_GROUP share every group-keyed pixel, and a doc
+    # overrides exactly ONE position with its doc-keyed noise pixel —
+    # so cache (pixels, sum) per GROUP and derive each member's sum
+    # with a single extra md5 instead of 64 (n_px*|members| ->
+    # n_px*|groups| + |members| digests). Spec parity with _thumb_pixel
+    # and the oracle's _media_px_sql is pinned by
+    # tests/test_pipelines.py::test_media_px_sum_py_matches_spark.
+    @lru_cache(maxsize=None)
+    def g_pixels(g: int) -> tuple:
+        px = [
+            int(hashlib.md5(f"g:{g}:{i}".encode()).hexdigest()[:2], 16)
+            for i in range(n_px)
+        ]
+        return px, sum(px)
 
-        # docs in one MEDIA_GROUP share every group-keyed pixel, and a doc
-        # overrides exactly ONE position with its doc-keyed noise pixel —
-        # so cache (pixels, sum) per GROUP and derive each member's sum
-        # with a single extra md5 instead of 64 (n_px*|members| ->
-        # n_px*|groups| + |members| digests; same integers, spec parity
-        # stays pinned by test_media_px_sum_py_matches_spark).
-        g_cache: dict = {}
+    def px_sum_py(doc_id: int) -> int:
+        g = doc_id // MEDIA_GROUP
+        noise = doc_id % n_px
+        px, total = g_pixels(g)
+        d = int(hashlib.md5(f"d:{doc_id}:{noise}".encode()).hexdigest()[:2], 16)
+        return total - px[noise] + d
 
-        def g_pixels(g: int) -> tuple:
-            hit = g_cache.get(g)
-            if hit is None:
-                px = [
-                    int(hashlib.md5(f"g:{g}:{i}".encode()).hexdigest()[:2], 16)
-                    for i in range(n_px)
-                ]
-                hit = g_cache[g] = (px, sum(px))
-            return hit
-
-        def px_sum_py(doc_id: int) -> int:
-            g = doc_id // MEDIA_GROUP
-            noise = doc_id % n_px
-            px, total = g_pixels(g)
-            d = int(
-                hashlib.md5(f"d:{doc_id}:{noise}".encode()).hexdigest()[:2], 16
-            )
-            return total - px[noise] + d
-
-        best: dict = {}
-        for node, c in rows:
-            key = (px_sum_py(node), -node)  # max (px_sum, -node) == struct max
-            if c not in best or key > best[c]:
-                best[c] = key
-        keep_ids = {-k[1] for k in best.values()}
-        drops = F.broadcast(
-            local_rows_df(
-                spark,
-                [(n,) for n, _ in rows if n not in keep_ids],
-                "doc_id bigint",
-            )
-        )
-        return docs.select("doc_id").join(drops, "doc_id", "left_anti")
-    # distributed tier: the quality signal derives from the pixel spec,
-    # a pure function of doc_id — compute it on the component-node rows
-    # directly (orders of magnitude fewer than items at scale) instead
-    # of projecting 64 md5 calls over the whole corpus and joining
+    # the same pixel spec in Catalyst, for the distributed tier: computed
+    # on component-node rows only (orders of magnitude fewer than items),
+    # not projected over the whole corpus and joined
     px_sum = F.aggregate(
         F.transform(
-            F.sequence(F.lit(0), F.lit(DHASH_ROWS * DHASH_COLS - 1)),
-            lambda i: _thumb_pixel(i, F.col("doc_id")),
+            F.sequence(F.lit(0), F.lit(n_px - 1)),
+            lambda i: _thumb_pixel(i, F.col("node")),
         ),
         F.lit(0).cast("long"),
         lambda a, x: a + x.cast("long"),
     )
-    # _thumb_pixel resolves the literal column name doc_id internally,
-    # so alias the node column for the projection and drop it after
-    labeled = (
-        comp.withColumn("doc_id", F.col("node"))
-        .withColumn("px_sum", px_sum)
-        .drop("doc_id")
+    pairs = media_neardup(spark, sf_dir).select("doc_a", "doc_b")
+    _, drops = keep_per_cluster(
+        pairs, a="doc_a", b="doc_b", node_signal=(px_sum_py, px_sum)
     )
-    winners = labeled.groupBy("component").agg(
-        F.max(
-            F.struct(F.col("px_sum").alias("s"), (-F.col("node")).alias("nid"))
-        ).alias("w")
+    docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
+    return docs.select("doc_id").join(
+        drops.select(F.col("node").alias("doc_id")), "doc_id", "left_anti"
     )
-    drops = (
-        labeled.join(winners, "component")
-        .filter(F.col("node") != -F.col("w.nid"))
-        .select(F.col("node").alias("doc_id"))
-    )
-    return docs.select("doc_id").join(drops, "doc_id", "left_anti")
 
 
 def _media_keep_list_sql() -> str:
@@ -796,10 +709,7 @@ def dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     every attribution join is keyed on doc_id with drop-list-sized
     sides."""
     from tomixpanel_spark.operators.dedup import near_dup_pairs
-    from tomixpanel_spark.operators.identity import (
-        connected_components_with_edges,
-        edge_node_attrs,
-    )
+    from tomixpanel_spark.operators.identity import keep_per_cluster
 
     docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
     fps = docs.select("doc_id", fingerprint("text").alias("fp"))
@@ -822,53 +732,10 @@ def dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = near_dup_pairs(surv, carry_ntoks=True).select(
         "doc_a", "doc_b", "nt_a", "nt_b"
     )
-    comp, rows, edges = connected_components_with_edges(
+    _, nd_drops = keep_per_cluster(
         pairs, a="doc_a", b="doc_b", attrs=("nt_a", "nt_b")
     )
-    if rows is not None:
-        # small-graph tier (CC's collect gate already holds the labels
-        # AND the edge-carried token counts): the keep-best fold argmaxes
-        # exact integers driver-side with zero extra Spark jobs, and the
-        # near-dup drop list rejoins the plan as a broadcast-sized local
-        # relation.
-        ntok: dict = {}
-        for s, d, na, nb in edges[["src", "dst", "nt_a", "nt_b"]].itertuples(
-            index=False
-        ):
-            ntok[s] = None if pd.isna(na) else int(na)
-            ntok[d] = None if pd.isna(nb) else int(nb)
-        best: dict = {}
-        for node, c in rows:
-            # max (n_tokens, -node) == struct max; None folds as -inf to
-            # match Spark's null-smallest struct ordering (r14 advice)
-            t = ntok[node]
-            key = ((t if t is not None else float("-inf")), -node)
-            if c not in best or key > best[c]:
-                best[c] = key
-        keep_ids = {-k[1] for k in best.values()}
-        nd_drops = local_rows_df(
-            spark,
-            [(n,) for n, _ in rows if n not in keep_ids],
-            "doc_id bigint",
-        )
-        nd_drops = F.broadcast(nd_drops)
-    else:
-        # distributed tier: member token counts come off the CHECKPOINTED
-        # edge set (explode endpoints + distinct — edge-sized data, no
-        # corpus re-scan), then the same struct-max winner aggregate as
-        # neardup_keep_best.
-        sized = edge_node_attrs(edges, "nt_a", "nt_b", "n_tokens")
-        labeled = comp.join(sized, "node")
-        winners = labeled.groupBy("component").agg(
-            F.max(
-                F.struct(F.col("n_tokens").alias("t"), (-F.col("node")).alias("nid"))
-            ).alias("w")
-        )
-        nd_drops = (
-            labeled.join(winners, "component")
-            .filter(F.col("node") != -F.col("w.nid"))
-            .select(F.col("node").alias("doc_id"))
-        )
+    nd_drops = nd_drops.select(F.col("node").alias("doc_id"))
     out = (
         docs.select("doc_id")
         .join(exact_drops.withColumn("g_exact", F.lit("exact")), "doc_id", "left")

@@ -46,7 +46,6 @@ from tomixpanel_spark.operators.base import (
     QuerySpec,
     ensure_parallel,
     fresh_attrs,
-    local_rows_df,
     table,
 )
 from tomixpanel_spark.session import ship_package
@@ -1317,30 +1316,15 @@ def embedding_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(block_rows*d + SCORE_CELLS_CAP)); CC flips to distributed label
     propagation past TOMIX_CC_LOCAL_MAX (probe-verified at 2.5M edges);
     the final anti-join keys on vec_id only."""
-    from tomixpanel_spark.operators.identity import connected_components_with_rows
+    from tomixpanel_spark.operators.identity import keep_per_cluster
 
     emb = ensure_parallel(table(spark, sf_dir, "embeddings"), "vec_id")
-    pairs = embedding_neardup_pairs(emb)
-    comps, rows = connected_components_with_rows(pairs, a="vec_a", b="vec_b")
-    if rows is not None:
-        # small-graph tier: the labels are already on the driver (CC's
-        # collect gate) — the drop list is a pure filter of them, so
-        # rejoin it as a broadcast-sized local relation instead of
-        # re-planning filter+exchange stages over a 1-partition
-        # parallelized frame. Paths-agree hash-checked by the bench
-        # distributed tier (TOMIX_CC_LOCAL_MAX=0).
-        drops = F.broadcast(
-            local_rows_df(
-                emb.sparkSession,
-                [(n,) for n, c in rows if n != c],
-                "vec_id bigint",
-            )
-        )
-        return emb.select("vec_id").join(drops, "vec_id", "left_anti")
-    drops = comps.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias("vec_id")
+    _, drops = keep_per_cluster(
+        embedding_neardup_pairs(emb), a="vec_a", b="vec_b"
     )
-    return emb.select("vec_id").join(drops, "vec_id", "left_anti")
+    return emb.select("vec_id").join(
+        drops.select(F.col("node").alias("vec_id")), "vec_id", "left_anti"
+    )
 
 
 _EMBEDDING_KEEP_LIST_SQL = f"""
