@@ -295,6 +295,18 @@ class TestHttpSink:
         assert arrivals[-1] - arrivals[0] >= 1.6
 
 
+    def test_plain_callable_has_no_send(self, spark, stub):
+        """A record callable without a Column form still constructs a
+        sink, but ``send`` refuses it: the send path is the encoded
+        column only."""
+        from tomixpanel_spark.sinks.http import HttpSink, HttpSinkConfig
+
+        sink = HttpSink(HttpSinkConfig(url=stub.url), dict)
+        with pytest.raises(TypeError, match="to_json"):
+            sink.send(_events_df(spark, 5), concurrency=1)
+        assert stub.requests == []
+
+
 class TestSources:
     def test_amplitude_hour_slices_and_fetch(self, spark, tmp_path):
         import io
@@ -517,3 +529,67 @@ class TestPipeline:
         assert summary["events"]["imported"] == 40
         assert summary["profiles"]["imported"] > 0
         assert summary["merges"]["imported"] > 0
+
+
+def _amp_config(tmp_path, stub, **dopts) -> dict:
+    from tests.fixtures import amp_event_rows
+
+    amp = tmp_path / "amp"
+    amp.mkdir()
+    (amp / "part-0.json").write_text(
+        "\n".join(json.dumps(r) for r in amp_event_rows(40)) + "\n"
+    )
+    return {
+        "source": {"name": "amplitude", "options": {"path": str(amp), "run_time_ms": 7}},
+        "destination": {
+            "name": "mixpanel",
+            "token": "tok",
+            "options": {"import_url": stub.url, "engage_url": stub.url, **dopts},
+        },
+    }
+
+
+class TestConcurrentSends:
+    """pipeline.run sends its destinations at once, one thread each."""
+
+    def test_min_interval_is_a_global_rate_across_streams(self, spark, tmp_path, stub):
+        """Three pacing streams at once each pace at 3 x min_interval_s, so
+        N batches still span at least (N - 3) x min_interval_s."""
+        from tomixpanel_spark import pipeline
+
+        config = _amp_config(
+            tmp_path, stub, min_interval_s=0.1, recordsPerBatch=8, profilesPerBatch=4
+        )
+        summary = pipeline.run(spark, config, concurrency=1)
+        assert list(summary) == ["events", "profiles", "merges"]
+        assert summary["events"]["imported"] == 40
+        arrivals = sorted(r["t"] for r in stub.requests)
+        assert len(arrivals) == sum(s["batches"] for s in summary.values()) >= 9
+        assert arrivals[-1] - arrivals[0] >= (len(arrivals) - 3) * 0.1
+
+    def test_send_jobs_keep_the_callers_job_group(self, spark, tmp_path, stub):
+        from tomixpanel_spark import pipeline
+
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        ungrouped = set(tracker.getJobIdsForGroup())
+        sc.setJobGroup("load-path-test", "pipeline.run under a caller's job group")
+        try:
+            summary = pipeline.run(spark, _amp_config(tmp_path, stub), concurrency=2)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert summary["merges"]["imported"] > 0
+        assert set(tracker.getJobIdsForGroup()) - ungrouped == set()
+        assert len(tracker.getJobIdsForGroup("load-path-test")) >= len(summary)
+
+    def test_error_in_one_send_reraises(self, spark, tmp_path, stub):
+        from tomixpanel_spark import pipeline
+
+        blocker = tmp_path / "not-a-dir"
+        blocker.write_text("x")
+        config = _amp_config(
+            tmp_path, stub, save_local_copy=True, save_dir=str(blocker / "copy")
+        )
+        with pytest.raises(Exception) as err:
+            pipeline.run(spark, config, concurrency=1)
+        assert "not-a-dir" in str(err.value)

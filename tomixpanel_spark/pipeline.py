@@ -23,7 +23,7 @@ network implicitly.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -208,7 +208,8 @@ def run(
     transport=None,
     concurrency: Optional[int] = None,
 ) -> dict:
-    """build + load: send the plan through the Mixpanel sinks in the
+    """build + load: send the plan through the Mixpanel sinks. The three
+    streams go out concurrently (``_send_all``); the summaries keep the
     reference's order (events, then profiles, then merges —
     connectors/amplitudeETL.js:63-65). Returns per-stream receipt summaries.
 
@@ -242,7 +243,7 @@ def run(
          dopts.get("profilesPerBatch", 2000), False, mp_profile_record),
         ("merges", plan.merges, import_url, import_batch, import_strict, mp_merge_record),
     )
-    summary = {}
+    sends = []
     for name, df, url, max_records, strict, to_record in destinations:
         if df is None:
             continue
@@ -254,11 +255,51 @@ def run(
             strict=strict,
             min_interval_s=dopts.get("min_interval_s", 0.0),
         )
-        summary[name] = _checkpointed_send(
-            name, df, HttpSink(cfg, to_record, transport), save_dir, concurrency,
-            partition_events=(name == "events"),
-        )
-    return summary
+        sends.append((name, df, HttpSink(cfg, to_record, transport)))
+    return _send_all(sends, save_dir, concurrency, partition_events=True)
+
+
+def _send_all(
+    sends: list,
+    save_dir: Optional[str],
+    concurrency: Optional[int],
+    partition_events: bool = False,
+) -> dict:
+    """Send every ``(name, df, sink)`` at once, one ``InheritableThread``
+    each, so a cached source is read once and one stream's retry backoff
+    and job start-up overlap the others. Threads inherit the caller's
+    local properties (job group). Once every send has finished, an error
+    from any of them re-raises here; the summary keeps the order of
+    ``sends``.
+
+    ``min_interval_s`` stays a global rate: with k pacing sinks running
+    at once, each paces at k times its interval."""
+    from pyspark import InheritableThread
+
+    pacing = sum(sink.cfg.min_interval_s > 0 for _, _, sink in sends)
+    done: dict = {}
+
+    def send(name: str, df: DataFrame, sink: HttpSink) -> None:
+        try:
+            if pacing > 1:
+                cfg = replace(sink.cfg, min_interval_s=sink.cfg.min_interval_s * pacing)
+                sink = HttpSink(cfg, sink.to_record, sink.transport)
+            done[name] = _checkpointed_send(
+                name, df, sink, save_dir, concurrency,
+                partition_events=partition_events and name == "events",
+            )
+        except BaseException as e:  # re-raised on the calling thread
+            done[name] = e
+
+    threads = [InheritableThread(target=send, args=s) for s in sends]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for name, _, _ in sends:
+        if isinstance(done[name], BaseException):
+            raise done[name]
+    return {name: done[name] for name, _, _ in sends}
 
 
 def _checkpointed_send(
@@ -342,12 +383,8 @@ def _run_reverse(
 
     # K9 applies to the reverse path too (the reference stages the export
     # file and keeps it under save_local_copy)
-    def send(name: str, df: DataFrame, sink: HttpSink) -> dict:
-        return _checkpointed_send(name, df, sink, save_dir, concurrency)
-
     raw = _mixpanel_export_raw(spark, opts)
     do_people = bool(opts.get("doPeople") or opts.get("people"))
-    summary: dict = {}
     if dest_name == "amplitude":
         from tomixpanel_spark.sinks.reverse import (
             AMPLITUDE_HTTP_API,
@@ -365,7 +402,7 @@ def _run_reverse(
             transport=transport,
             pacing_s=pacing_s,
         )
-        summary["events"] = send("events", mp_to_amplitude_events(raw), ev_sink)
+        sends = [("events", mp_to_amplitude_events(raw), ev_sink)]
         if do_people:
             profiles = mp_engage_profiles(
                 _mixpanel_engage_pages(spark, opts), dest.get("token")
@@ -376,8 +413,8 @@ def _run_reverse(
                 transport=transport,
                 pacing_s=pacing_s,
             )
-            summary["users"] = send("users", mp_to_amplitude_users(profiles), us_sink)
-        return summary
+            sends.append(("users", mp_to_amplitude_users(profiles), us_sink))
+        return _send_all(sends, save_dir, concurrency)
 
     from tomixpanel_spark.sinks.reverse import WOOPRA_IMPORT_URL, woopra_sink
 
@@ -389,7 +426,9 @@ def _run_reverse(
         username=dest.get("username", dest.get("service_account_user", "")),
         password=dest.get("password", dest.get("service_account_pass", "")),
     )
-    summary["events"] = send("events", mp_to_woopra_events(raw, project), sink)
+    summary = _send_all(
+        [("events", mp_to_woopra_events(raw, project), sink)], save_dir, concurrency
+    )
     if do_people:
         summary["users"] = {"skipped": "woopra users unsupported upstream"}
     return summary

@@ -5,6 +5,7 @@ load/sendProfilesToMixpanel.js:12): 2,000 records per batch, 2 MB payload
 cap pre-gzip. The reference's byte cap is a halve-once split (a knowingly
 rough heuristic, comment :143); the engine packs greedily instead — every
 batch satisfies BOTH caps by construction, single pass, no re-serialization.
+Bodies gzip at zlib's default level 6, as the reference's node zlib does.
 """
 
 from __future__ import annotations
@@ -16,6 +17,7 @@ from collections.abc import Iterable, Iterator
 EVENTS_PER_BATCH = 2000
 BYTES_PER_BATCH = 2 * 1024 * 1024
 PROFILES_PER_BATCH = 2000
+GZIP_LEVEL = 6
 
 
 def _clean(v):
@@ -44,18 +46,25 @@ def serialize_record(rec: dict) -> bytes:
     ).encode("utf-8")
 
 
-def iter_batches(
-    records: Iterable[dict],
+def finish_json(b: bytes) -> bytes:
+    """JVM-built record JSON -> ``serialize_record``'s exact bytes. Spark
+    writes control characters as uppercase ``\\u001F`` where Python writes
+    ``\\u001f``; only records holding a ``\\u00`` escape are re-dumped."""
+    return serialize_record(json.loads(b)) if b"\\u00" in b else b
+
+
+def pack_batches(
+    encoded: Iterable[bytes],
     max_records: int = EVENTS_PER_BATCH,
     max_bytes: int = BYTES_PER_BATCH,
 ) -> Iterator[list[bytes]]:
-    """Greedy byte-and-count packing: flush when adding the next record
-    would break either cap. A single record larger than max_bytes ships
-    alone (the API rejects it; the sink dead-letters it)."""
+    """Greedy byte-and-count packing of serialized records: flush when
+    adding the next record would break either cap. A single record larger
+    than max_bytes ships alone (the API rejects it; the sink dead-letters
+    it)."""
     batch: list[bytes] = []
     size = 2  # '[' + ']'
-    for rec in records:
-        b = serialize_record(rec)
+    for b in encoded:
         extra = len(b) + (1 if batch else 0)  # comma
         if batch and (len(batch) >= max_records or size + extra > max_bytes):
             yield batch
@@ -67,6 +76,15 @@ def iter_batches(
         yield batch
 
 
+def iter_batches(
+    records: Iterable[dict],
+    max_records: int = EVENTS_PER_BATCH,
+    max_bytes: int = BYTES_PER_BATCH,
+) -> Iterator[list[bytes]]:
+    """``pack_batches`` over wire dicts."""
+    return pack_batches(map(serialize_record, records), max_records, max_bytes)
+
+
 def json_array(batch: list[bytes]) -> bytes:
     """The default request body: the batch's records as one JSON array."""
     return b"[" + b",".join(batch) + b"]"
@@ -76,4 +94,4 @@ def batch_payload(batch: list[bytes], gzip: bool = True) -> bytes:
     """JSON-array body, optionally gzipped (reference gzips every /import
     batch, load/sendEventsToMixpanel.js:157-162)."""
     body = json_array(batch)
-    return _gzip.compress(body) if gzip else body
+    return _gzip.compress(body, GZIP_LEVEL) if gzip else body

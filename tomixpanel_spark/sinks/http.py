@@ -9,13 +9,21 @@ Design (the 100 TB stance):
     restartable. This deliberately improves on the reference, which
     swallows send errors per batch with no retry (K10,
     load/sendEventsToMixpanel.js:100-115; README.md:9 "no way to resume").
+  * Wire JSON is built on the JVM: each wire record shape is a
+    ``WireRecord`` whose ``to_json(df)`` Column renders the record, so a
+    send task only packs the encoded bytes into count/byte-capped batches,
+    gzips (zlib level 6) and POSTs. Calling the ``WireRecord`` on a row
+    dict is the Python spec of the same record; the two agree byte for
+    byte through ``serialize_record``.
   * Idempotency: payloads carry deterministic $insert_id (T8), so Spark
     task retries re-sending a batch cannot double-import.
   * Concurrency = partition count: ``df.repartition(n)`` is the
     reference's 5-process fan-out (ampReplicator.js:27) done properly.
+    ``pipeline.run`` sends its destinations concurrently, one thread each.
   * Rate limiting: ``min_interval_s`` is a global interval between
-    batches; each of N partitions paces at N times it (the reference
-    sleeps 2 s between vendor batches, load/sendOther.js:110,223).
+    batches; each of N partitions paces at N times it, and when k pacing
+    sends run at once ``pipeline.run`` scales each to k times that (the
+    reference sleeps 2 s between vendor batches, load/sendOther.js:110,223).
   * Transport is injectable — tests run against a local stub server or an
     in-process fake; production uses urllib. No external deps.
 """
@@ -23,6 +31,7 @@ Design (the 100 TB stance):
 from __future__ import annotations
 
 import base64
+import functools
 import gzip
 import time
 from collections.abc import Iterator
@@ -31,14 +40,17 @@ from typing import Callable, Optional
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tomixpanel_spark.schemas import MAP_SS
 from tomixpanel_spark.sinks.batching import (
     BYTES_PER_BATCH,
     EVENTS_PER_BATCH,
-    iter_batches,
+    GZIP_LEVEL,
+    finish_json,
     json_array,
+    pack_batches,
 )
 
 # transport(url, body, headers, method) -> (status_code, response_text)
@@ -51,6 +63,48 @@ RECEIPT_SCHEMA = (
 RECEIPT_COLUMNS = [c.split()[0] for c in RECEIPT_SCHEMA.split(", ")]
 MAX_ATTEMPTS = 4
 RETRY_STATUSES = (429, 500, 502, 503, 504)  # and -1, a network-level failure
+
+
+class WireRecord:
+    """One wire record shape in two forms. Calling it maps a row (as a
+    dict) to the wire dict: the Python spec, rendered by
+    ``serialize_record``. ``to_json(df)`` is the same record as a JSON
+    string Column built on the JVM, which ``HttpSink.send`` ships; after
+    ``finish_json`` its bytes equal ``serialize_record(spec(row))``."""
+
+    def __init__(self, spec: Callable[[dict], dict], column: Callable[[Callable], Column]):
+        functools.update_wrapper(self, spec)
+        self.spec = spec
+        self.column = column
+
+    def __call__(self, rec: dict) -> dict:
+        return self.spec(rec)
+
+    def to_json(self, df: DataFrame) -> Column:
+        def col(name: str, dtype="string") -> Column:
+            # a missing column reads as null, like ``rec.get`` in the spec
+            c = F.col(f"`{name}`") if name in df.columns else F.lit(None).cast(dtype)
+            return c.alias(name)
+
+        return self.column(col)
+
+
+def wire_record(column: Callable[[Callable], Column]):
+    """Decorator: pair a Python wire spec with its Column form. ``column``
+    takes ``col(name, dtype)`` (the named column, or a typed null when
+    the frame lacks it) and returns the record's JSON Column."""
+    return lambda spec: WireRecord(spec, column)
+
+
+def json_text(record: Column) -> Column:
+    """A struct/map Column as JSON text with nulls kept, as
+    ``json.dumps`` keeps ``None`` values."""
+    return F.to_json(record, {"ignoreNullFields": "false"})
+
+
+def json_map(m: Column) -> Column:
+    """``dict(m or {})``: a null map renders as ``{}``."""
+    return F.coalesce(m, F.create_map().cast(MAP_SS))
 
 
 def basic_auth(user: str, secret: str) -> dict:
@@ -94,12 +148,13 @@ class HttpSinkConfig:
 
 class HttpSink:
     """Batched, retrying, receipt-emitting HTTP sink over any record
-    DataFrame. ``to_record`` maps a Row (as dict) to the wire dict."""
+    DataFrame. ``to_record`` is the ``WireRecord`` that encodes each row;
+    ``send`` needs its Column form."""
 
     def __init__(
         self,
         cfg: HttpSinkConfig,
-        to_record: Callable[[dict], dict],
+        to_record: WireRecord,
         transport: Optional[Transport] = None,
     ):
         self.cfg = cfg
@@ -125,9 +180,15 @@ class HttpSink:
         Sensible target: ``cfg.max_records`` (each task sends ~one full
         batch) or a small multiple of it for fewer, longer request
         streams."""
-        from tomixpanel_spark.session import ship_package
+        from tomixpanel_spark.session import ensure_semantics
 
-        ship_package(df.sparkSession)
+        if not callable(getattr(self.to_record, "to_json", None)):
+            raise TypeError(
+                f"HttpSink.send needs a WireRecord with a to_json Column form, "
+                f"got {self.to_record!r}"
+            )
+        # LAST_WIN: the event encoder's map_concat overrides props keys
+        ensure_semantics(df.sparkSession)
         if concurrency:
             df = df.repartition(concurrency)
         elif target_rows_per_task:
@@ -136,7 +197,9 @@ class HttpSink:
             want = max(1, -(-n // target_rows_per_task))  # ceil div
             if want < df.rdd.getNumPartitions():
                 df = df.coalesce(want)
-        cfg, to_record, transport = self.cfg, self.to_record, self.transport
+        # encoded in the send tasks, after the shuffle, as bytes for Arrow
+        df = df.select(self.to_record.to_json(df).cast("binary").alias("json"))
+        cfg, transport = self.cfg, self.transport
         url = cfg.url
         if cfg.strict:
             url += ("&" if "?" in url else "?") + "strict=1"
@@ -153,19 +216,18 @@ class HttpSink:
 
             pid = TaskContext.get().partitionId() if TaskContext.get() else -1
 
-            def records() -> Iterator[dict]:
+            def records() -> Iterator[bytes]:
                 for pdf in batches:
-                    for rec in pdf.to_dict("records"):
-                        yield to_record(rec)
+                    yield from map(finish_json, pdf["json"])
 
             out = []
             last_send = 0.0
             for bi, batch in enumerate(
-                iter_batches(records(), cfg.max_records, BYTES_PER_BATCH)
+                pack_batches(records(), cfg.max_records, BYTES_PER_BATCH)
             ):
                 body = cfg.envelope(batch)
                 if cfg.gzip:
-                    body = gzip.compress(body)
+                    body = gzip.compress(body, GZIP_LEVEL)
                 wait = interval - (time.monotonic() - last_send)
                 if wait > 0:
                     time.sleep(wait)
@@ -249,6 +311,23 @@ def mixpanel_import_sink(
     return HttpSink(cfg, mp_event_record, transport=transport)
 
 
+def _mp_event_json(col) -> Column:
+    # map_concat under LAST_WIN keeps dict.update's order: a props key
+    # that collides keeps its slot and takes the new value. The map is
+    # string-valued, so ``time`` is unquoted back to an integer after.
+    props = F.map_concat(
+        json_map(col("props", MAP_SS)),
+        F.create_map(
+            F.lit("distinct_id"), col("distinct_id"),
+            F.lit("time"), col("time_ms", "bigint").cast("string"),
+            F.lit("$insert_id"), col("insert_id"),
+        ),
+    )
+    text = json_text(F.struct(col("event"), props.alias("properties")))
+    return F.regexp_replace(text, r'([{,])"time":"(-?[0-9]+)"', '$1"time":$2')
+
+
+@wire_record(_mp_event_json)
 def mp_event_record(rec: dict) -> dict:
     """Canonical typed event row -> Mixpanel /import wire shape."""
     props = dict(rec.get("props") or {})
@@ -262,6 +341,20 @@ def mp_event_record(rec: dict) -> dict:
     return {"event": rec.get("event"), "properties": props}
 
 
+def _mp_profile_json(col) -> Column:
+    fields = [
+        col("token").alias("$token"),
+        col("distinct_id").alias("$distinct_id"),
+        col("ip").alias("$ip"),
+        json_map(col("set", MAP_SS)).alias("$set"),
+    ]
+    return F.when(
+        F.coalesce(col("ignore_time", "boolean"), F.lit(False)),
+        json_text(F.struct(*fields, F.lit(True).alias("$ignore_time"))),
+    ).otherwise(json_text(F.struct(*fields)))
+
+
+@wire_record(_mp_profile_json)
 def mp_profile_record(rec: dict) -> dict:
     """Canonical profile row -> /engage $set wire shape (K5; token rides in
     each record, endpoint unauthenticated — sendProfilesToMixpanel.js:48-99)."""
@@ -276,6 +369,20 @@ def mp_profile_record(rec: dict) -> dict:
     return out
 
 
+def _mp_merge_json(col) -> Column:
+    return json_text(
+        F.struct(
+            F.lit("$merge").alias("event"),
+            F.struct(
+                F.array(col("id_a"), col("id_b")).alias("$distinct_ids"),
+                col("insert_id").alias("$insert_id"),
+                col("time_ms", "bigint").alias("time"),
+            ).alias("properties"),
+        )
+    )
+
+
+@wire_record(_mp_merge_json)
 def mp_merge_record(rec: dict) -> dict:
     """Merge edge row -> $merge event wire shape (M5)."""
     return {

@@ -17,7 +17,19 @@ from __future__ import annotations
 
 from typing import Optional
 
-from tomixpanel_spark.sinks.http import HttpSink, HttpSinkConfig, Transport, basic_auth
+from pyspark.sql import Column
+from pyspark.sql import functions as F
+
+from tomixpanel_spark.schemas import MAP_SS
+from tomixpanel_spark.sinks.http import (
+    HttpSink,
+    HttpSinkConfig,
+    Transport,
+    basic_auth,
+    json_map,
+    json_text,
+    wire_record,
+)
 
 AMPLITUDE_HTTP_API = "https://api2.amplitude.com/2/httpapi"
 AMPLITUDE_IDENTIFY_API = "https://api2.amplitude.com/identify"
@@ -28,6 +40,21 @@ WOOPRA_PER_BATCH = 10000
 VENDOR_PACING_S = 2.0
 
 
+def _amplitude_event_json(col) -> Column:
+    return json_text(
+        F.struct(
+            col("user_id"),
+            col("device_id"),
+            col("event_type"),
+            col("time", "bigint"),
+            col("insert_id"),
+            col("ip"),
+            json_map(col("event_properties", MAP_SS)).alias("event_properties"),
+        )
+    )
+
+
+@wire_record(_amplitude_event_json)
 def amplitude_event_record(rec: dict) -> dict:
     """Row from transforms.mixpanel.mp_to_amplitude_events -> wire dict."""
     return {
@@ -41,6 +68,16 @@ def amplitude_event_record(rec: dict) -> dict:
     }
 
 
+def _amplitude_user_json(col) -> Column:
+    return json_text(
+        F.struct(
+            col("user_id"),
+            json_map(col("user_properties", MAP_SS)).alias("user_properties"),
+        )
+    )
+
+
+@wire_record(_amplitude_user_json)
 def amplitude_user_record(rec: dict) -> dict:
     return {
         "user_id": rec.get("user_id"),
@@ -48,6 +85,30 @@ def amplitude_user_record(rec: dict) -> dict:
     }
 
 
+def _woopra_json(col) -> Column:
+    action = "struct<name:string,timestamp:bigint,properties:map<string,string>>"
+    actions = F.transform(
+        F.coalesce(col("actions", f"array<{action}>"), F.array()),
+        lambda a: F.struct(
+            a["name"].alias("name"),
+            a["timestamp"].alias("timestamp"),
+            json_map(a["properties"]).alias("properties"),
+        ),
+    )
+
+    def record(visitor: Column) -> Column:
+        return json_text(
+            F.struct(col("project"), visitor.alias("visitor"), actions.alias("actions"))
+        )
+
+    # the visitor is a struct, so a null one renders as {} in its own branch
+    visitor = col("visitor", "struct<id:string>")
+    return F.when(visitor.isNull(), record(json_map(F.lit(None)))).otherwise(
+        record(visitor)
+    )
+
+
+@wire_record(_woopra_json)
 def woopra_record(rec: dict) -> dict:
     return {
         "project": rec.get("project"),

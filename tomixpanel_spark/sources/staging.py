@@ -61,7 +61,7 @@ def read_json_auto(
         )
     # cache(): Spark refuses corrupt-column-only queries on raw JSON scans
     # (internal-column restriction); the staged files are small relative to
-    # the cluster, and the sniff needs two passes anyway.
+    # the cluster, and the sniff's one job fills the cache for the build.
     # source-file provenance is captured BEFORE cache(): input_file_name()
     # reads the scan node, and an InMemoryRelation has no file to name —
     # tagging after caching would yield '' for every row
@@ -73,8 +73,7 @@ def read_json_auto(
         .withColumn(SRC_FILE_COL, F.input_file_name())
         .cache()
     )
-    total = df.count()
-    corrupt = df.filter(F.col(CORRUPT_COL).isNotNull()).count()
+    total, corrupt = df.agg(F.count(F.lit(1)), F.count(CORRUPT_COL)).first()
     if total > 0 and corrupt == total:
         df.unpersist()  # drop the failed NDJSON attempt's cache
         df = (
