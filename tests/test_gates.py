@@ -1,6 +1,7 @@
 """Boundary tests for every size gate in the ``operators.base.GATES``
-registry: both decision methods at n = cap-1, cap and cap+1 rows, on an
-empty input, and at cap <= 0 (distributed tier, no Spark job)."""
+registry: the decision methods and the count-gated join at n = cap-1,
+cap and cap+1 rows, on an empty input, and at cap <= 0 (distributed
+tier, no Spark job)."""
 
 from __future__ import annotations
 
@@ -12,6 +13,7 @@ import tomixpanel_spark.operators  # noqa: F401 (declares the operator gates)
 import tomixpanel_spark.streaming.cagg  # noqa: F401 (declares a gate)
 import tomixpanel_spark.streaming.dedup_index  # noqa: F401 (declares a gate)
 from tomixpanel_spark.operators.base import DECISIONS, GATES, Decision
+from tomixpanel_spark.plans.audit import join_strategies
 
 CAP = 3
 CASES = [  # (cap, n rows)
@@ -61,3 +63,18 @@ def test_gate_boundary(spark, monkeypatch, env, cap, n):
         assert sorted(pdf["i"].tolist()) == list(range(n))  # the whole input
     else:
         assert pdf is None
+
+    # the count-gated join: every side broadcast at or under the cap and
+    # pinned shuffle_hash above it; the same key again is a memo hit
+    key = (uuid.uuid4().hex,)
+    decision = Decision(env, cap, n if cap > 0 else None, tier)
+    join = "BroadcastHashJoin" if under else "ShuffledHashJoin"
+    probe = spark.range(10)
+    sides, jobs = _in_job_group(spark, lambda: gate.join_sides(key, df, df, df))
+    assert (jobs == 0) if cap <= 0 else (jobs >= 1)
+    assert DECISIONS[-1] == decision
+    side, jobs = _in_job_group(spark, lambda: gate.join_sides(key, df, df))
+    assert jobs == 0
+    assert DECISIONS[-1] == decision
+    for s in (*sides, side):
+        assert set(join_strategies(probe.join(s, probe.id == s.i))) == {join}

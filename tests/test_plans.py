@@ -244,6 +244,18 @@ def test_cached_tables_split_only_above_size_floor(spark, monkeypatch):
         base.clear_table_cache()
 
 
+def _keyed_joins(df) -> list[tuple[str, tuple[str, ...]]]:
+    """(join strategy, left-key column names) for every equi-join in the
+    executed plan: once ``df`` has run, AQE's initial and final plans."""
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [
+        (j, tuple(re.sub(r"#\d+L?", "", k).strip() for k in keys.split(",")))
+        for j, keys in re.findall(r"(\w+Join) \[([^\]]*)\]", plan)
+    ]
+
+
 def _last_decision(env: str):
     """Newest gate decision-log entry for one gate variable."""
     from tomixpanel_spark.operators.base import DECISIONS
@@ -529,10 +541,10 @@ def test_tfidf_df_is_broadcast_join_not_token_window(spark, monkeypatch):
     groupBy(token).count() broadcast-joined back to tf — NEVER a
     COUNT(*) OVER (PARTITION BY token) window, which funnels every tf
     row of a hot token ("the") into one task's sort at corpus scale."""
-    from tomixpanel_spark.operators import textops
+    from tomixpanel_spark.operators import base
 
     monkeypatch.setenv("TOMIX_TFIDF_DRIVER_FOLD_DOCS", "0")
-    textops._VOCAB_COUNT_CACHE.clear()
+    base._COUNTS.clear()
     df = REG["tfidf_keywords"].fn(spark, SF_ORACLE)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
@@ -556,11 +568,11 @@ def test_tfidf_driver_fold_is_shuffle_free(spark):
 def test_tfidf_paths_agree(spark, monkeypatch):
     """Driver-fold and distributed plans are ONE operator: identical rows
     on the same corpus."""
-    from tomixpanel_spark.operators import textops
+    from tomixpanel_spark.operators import base
 
     fold = REG["tfidf_keywords"].fn(spark, SF_ORACLE).collect()
     monkeypatch.setenv("TOMIX_TFIDF_DRIVER_FOLD_DOCS", "0")
-    textops._VOCAB_COUNT_CACHE.clear()
+    base._COUNTS.clear()
     dist = REG["tfidf_keywords"].fn(spark, SF_ORACLE).collect()
     assert sorted(map(tuple, fold)) == sorted(map(tuple, dist))
 
@@ -1077,37 +1089,31 @@ def test_tfidf_fused_tokenize_no_token_stream_shuffle(spark):
     assert "Generate" not in plan  # no explode of the token stream
 
 
-def test_tfidf_vocab_gate_flips_to_shuffle_join(spark, monkeypatch):
-    """Above the vocabulary cap the df side must NOT broadcast — the gate
-    flips to a shuffle join (mirroring decontam's held-out gate), with
-    runtime bloom-filter injection enabled for map-side pruning."""
+@pytest.mark.parametrize(
+    "query", ["tfidf_keywords", "bpe_token_count", "bpe_encode", "chunk_by_bpe"]
+)
+def test_tfidf_vocab_gate_flips_to_shuffle_join(spark, monkeypatch, query):
+    """Above the vocabulary cap (shared by tfidf and the bpe verbs) the
+    vocab side must NOT broadcast, and neither may the probe side: the
+    gate pins a shuffle hash join on the vocab key (mirroring decontam's
+    held-out gate), with runtime bloom-filter injection enabled for
+    map-side pruning."""
     from tests.conftest import SF_ORACLE
-    from tomixpanel_spark.operators import textops
+    from tomixpanel_spark.operators import base
     from tomixpanel_spark.plans.audit import join_strategies
 
     monkeypatch.setenv("TOMIX_TFIDF_DRIVER_FOLD_DOCS", "0")
     monkeypatch.setenv("TOMIX_TFIDF_BCAST_VOCAB", "0")
-    textops._VOCAB_COUNT_CACHE.clear()
-    df = REG["tfidf_keywords"].fn(spark, SF_ORACLE)
+    base._COUNTS.clear()
+    df = REG[query].fn(spark, SF_ORACLE)
     joins = join_strategies(df)
-    assert "BroadcastHashJoin" not in joins
+    if query == "tfidf_keywords":
+        assert "BroadcastHashJoin" not in joins
     assert any(j in ("SortMergeJoin", "ShuffledHashJoin") for j in joins)
-
-
-def test_mixture_rebalance_gate_flips_to_shuffle_join(spark, monkeypatch):
-    """Past the bucket-domain cap the rates side must NOT broadcast —
-    the runtime gate (round-7 advice: gate, not convention) flips to a
-    shuffle join with bloom-filter injection, same answers."""
-    from tomixpanel_spark.operators import textops
-
-    base = REG["mixture_rebalance"].fn(spark, SF_ORACLE)
-    monkeypatch.setenv("TOMIX_MIXTURE_BCAST_BUCKETS", "0")
-    textops._VOCAB_COUNT_CACHE.clear()
-    gated = REG["mixture_rebalance"].fn(spark, SF_ORACLE)
-    joins = join_strategies(gated)
-    assert "BroadcastHashJoin" not in joins
-    assert any(j in ("SortMergeJoin", "ShuffledHashJoin") for j in joins)
-    assert sorted(map(tuple, gated.collect())) == sorted(map(tuple, base.collect()))
+    df.collect()
+    key = ("token",) if query == "tfidf_keywords" else ("word",)
+    on_key = [j for j, keys in _keyed_joins(df) if keys == key]
+    assert on_key and "BroadcastHashJoin" not in on_key, _keyed_joins(df)
 
 
 def test_tpch_q6_pushdown_and_pruning(spark):
@@ -1352,11 +1358,58 @@ def test_lru_is_the_only_hand_rolled_cache():
     assert not offenders, f"hand-rolled LRU outside operators/base.py: {offenders}"
 
 
+def test_gate_counts_and_decisions_live_in_base():
+    """Gate decisions and gate count memos go through base.Gate: no other
+    module under tomixpanel_spark/ calls ``Gate.record`` or builds its
+    own count memo (an ``Lru`` fed by ``.count``)."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "tomixpanel_spark"
+    trees = {
+        src.relative_to(pkg).as_posix(): ast.parse(src.read_text())
+        for src in sorted(pkg.rglob("*.py"))
+    }
+
+    def assigned_from(tree, ctor):
+        return {
+            t.id
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Assign)
+            and isinstance(n.value, ast.Call)
+            and getattr(n.value.func, "id", None) == ctor
+            for t in n.targets
+            if isinstance(t, ast.Name)
+        }
+
+    gates = {"GATES"}.union(*(assigned_from(t, "Gate") for t in trees.values()))
+    offenders = set()
+    for rel, tree in trees.items():
+        if rel == "operators/base.py":
+            continue
+        lrus = assigned_from(tree, "Lru")
+        for n in ast.walk(tree):
+            if not (isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)):
+                continue
+            owner = n.func.value
+            owner = owner.value if isinstance(owner, ast.Subscript) else owner
+            name = getattr(owner, "id", None)
+            if n.func.attr == "record" and name in gates:
+                offenders.add(f"{rel}: {name}.record")
+            if n.func.attr in ("memo", "put") and name in lrus and any(
+                isinstance(a, ast.Attribute) and a.attr == "count"
+                for arg in n.args
+                for a in ast.walk(arg)
+            ):
+                offenders.add(f"{rel}: {name} count memo")
+    assert not offenders, f"gate bookkeeping outside base.py: {sorted(offenders)}"
+
+
 def test_bigram_lm_paths_agree(spark, monkeypatch):
     """Driver-fold, broadcast-model, and shuffle-join scoring plans are
     ONE operator: identical rows, and each gate actually flips the
     plan."""
-    from tomixpanel_spark.operators import textops
+    from tomixpanel_spark.operators import base
 
     fold = REG["bigram_lm_score"].fn(spark, SF_ORACLE).collect()  # under fold cap
 
@@ -1366,14 +1419,19 @@ def test_bigram_lm_paths_agree(spark, monkeypatch):
     bcast = df_b.collect()
 
     monkeypatch.setenv("TOMIX_LM_BCAST_BIGRAMS", "0")
-    textops._LM_MODEL_COUNT_CACHE.clear()
+    base._COUNTS.clear()
     df_s = REG["bigram_lm_score"].fn(spark, SF_ORACLE)
     joins = join_strategies(df_s)
-    # the model/ctx scoring joins must NOT broadcast above the gate (the
-    # 1-row vocab aggregate and the small final left join may still)
     assert any(j in ("SortMergeJoin", "ShuffledHashJoin") for j in joins)
     shuf = df_s.collect()
-    textops._LM_MODEL_COUNT_CACHE.clear()
+    # the model/ctx scoring joins must NOT broadcast above the gate, in
+    # AQE's initial or final plan (the 1-row vocab aggregate and the
+    # small final left join may still)
+    keyed = _keyed_joins(df_s)
+    for key in (("prev", "cur"), ("prev",)):
+        on_key = [j for j, keys in keyed if keys == key]
+        assert on_key and "BroadcastHashJoin" not in on_key, (key, keyed)
+    base._COUNTS.clear()
     assert sorted(map(tuple, bcast)) == sorted(map(tuple, shuf))
     assert sorted(map(tuple, fold)) == sorted(map(tuple, bcast))
 

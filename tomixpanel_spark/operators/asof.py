@@ -25,12 +25,10 @@ composition against a reference engine, not against our own SQL.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from tomixpanel_spark.operators.base import Gate, Lru, QuerySpec, table
+from tomixpanel_spark.operators.base import Gate, QuerySpec, table
 
 
 def asof_join(
@@ -103,25 +101,16 @@ def asof_join(
     if strategy == "auto":
         cap = broadcast_cap if broadcast_cap is not None else ASOF_BCAST_ROWS.cap()
         # gate probe is BOUNDED (limit cap+1 proves overflow without a
-        # full count) and memoized per (application, right plan, cap) —
-        # repeated auto calls on the same dimension table cost one job,
-        # not one per invocation (the _corpus_count precedent). A count
-        # rather than Gate.collect_or_none: the collect adds a
-        # single-partition stage, and a memo hit runs no job at all.
+        # full count) and memoized per (right plan, cap) in the gates'
+        # shared count memo — repeated auto calls on the same dimension
+        # table cost one job, not one per invocation. A count rather
+        # than Gate.collect_or_none: the collect adds a single-partition
+        # stage, and a memo hit runs no job at all.
         n = None
         if cap > 0:
-            key = (
-                right.sparkSession.sparkContext.applicationId,
-                right.semanticHash(),
-                cap,
-            )
-            _ASOF_GATE_CACHE.maxsize = int(
-                os.environ.get("TOMIX_ASOF_GATE_CACHE", "64")
-            )
-            n = _ASOF_GATE_CACHE.memo(key, lambda: right.limit(cap + 1).count())
-        hit = n is not None and n <= cap
-        ASOF_BCAST_ROWS.record(cap, n, hit)
-        strategy = "broadcast" if hit else "window"
+            key = (right.semanticHash(), cap)
+            n = ASOF_BCAST_ROWS.count(key, right.limit(cap + 1))
+        strategy = "broadcast" if ASOF_BCAST_ROWS.admits(n, cap) else "window"
     if strategy == "cogroup":
         return _asof_cogroup(
             left, right, on, left_time, right_time, right_tiebreak, direction,
@@ -285,17 +274,6 @@ def _asof_cogroup(
         .cogroup(fresh_attrs(right).groupBy(on))
         .applyInPandas(lambda l, r: merge(l, r), schema=out_schema)
     )
-
-
-# LRU-bounded (the _DOCS_PDF_CACHE precedent): an unbounded memo would
-# both grow without limit across many distinct plans AND pin a stale
-# "fits" verdict forever if the right table's files grow within one
-# application — bounding it means a long-lived app re-probes eventually
-# rather than broadcasting an over-cap table into executor OOM. Set
-# TOMIX_ASOF_GATE_CACHE=0 to re-probe every call (mutable-source
-# deployments where the same plan reads growing data); asof_join reads it
-# into the bound on each call.
-_ASOF_GATE_CACHE = Lru(64)
 
 
 # "auto" broadcasts a right side of up to 1M rows: dimension-like

@@ -329,6 +329,12 @@ GATES: "dict[str, Gate]" = {}
 # see which tier ran.
 DECISIONS: "deque[Decision]" = deque(maxlen=256)
 
+# The one memo for every gate's count job (corpus, vocabulary, bigram
+# model, eval set, as-of right side), keyed by (application, gate env,
+# caller key): a counted input is fixed for its sf_dir or plan, so a
+# repeated call runs no job.
+_COUNTS = Lru(256)
+
 
 @dataclass
 class Decision:
@@ -361,13 +367,32 @@ class Gate:
         DECISIONS.append(d)
         return d
 
-    def admits(self, n: int) -> bool:
-        """Count-based decision: True (driver tier) when the cap is
-        positive and ``n`` is at or under it."""
-        cap = self.cap()
-        ok = 0 < cap and n <= cap
+    def admits(self, n: Optional[int], cap: Optional[int] = None) -> bool:
+        """Count-based decision: True (driver tier) when the cap (the
+        gate's own unless given) is positive and ``n`` is at or under
+        it. ``n`` None means nothing was counted: never under."""
+        cap = self.cap() if cap is None else cap
+        ok = n is not None and 0 < cap and n <= cap
         self.record(cap, n, ok)
         return ok
+
+    def count(self, key: tuple, df: DataFrame) -> int:
+        """``df.count()`` memoized in the shared count memo under
+        (application, env, *key). ``key`` must name what ``df`` holds
+        (sf_dir plus a label, or a plan hash), never ``id(df)``."""
+        k = (df.sparkSession.sparkContext.applicationId, self.env, *key)
+        return _COUNTS.memo(k, df.count)
+
+    def join_sides(self, key: tuple, counted: DataFrame, *sides: DataFrame):
+        """The count-then-hint join gate: ``sides`` (a frame, or a tuple
+        of frames) as ``F.broadcast`` when ``counted`` has at most cap
+        rows, else each pinned ``shuffle_hash`` so the planner cannot
+        broadcast either join side on a size estimate. The count is
+        memoized (``count``); a cap <= 0 counts nothing."""
+        cap = self.cap()
+        under = self.admits(self.count(key, counted) if cap > 0 else None, cap)
+        out = tuple(F.broadcast(s) if under else s.hint("shuffle_hash") for s in sides)
+        return out if len(out) > 1 else out[0]
 
     def probe(self, df: DataFrame):
         """``(frame, decision)``: ONE bounded job decides the tier and,

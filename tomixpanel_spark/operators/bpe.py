@@ -67,11 +67,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tomixpanel_spark.operators.base import Gate, QuerySpec, stage_checkpoint, table
-from tomixpanel_spark.operators.textops import (
-    TFIDF_BCAST_VOCAB,
-    _under_fold_cap,
-    _vocab_count,
-)
+from tomixpanel_spark.operators.textops import TFIDF_BCAST_VOCAB, _under_fold_cap
 
 N_MERGES = 6
 
@@ -346,19 +342,18 @@ def _distributed_vocab(
     spark: SparkSession, sf_dir: str, docs: DataFrame
 ) -> DataFrame:
     """Final word -> syms table after N_MERGES, broadcast when under the
-    shared vocab gate (TOMIX_TFIDF_BCAST_VOCAB; shuffle join above).
+    shared vocab gate (TOMIX_TFIDF_BCAST_VOCAB) and pinned as the
+    shuffle-hash build side above it: unhinted, Catalyst sizes the
+    checkpointed vocab like the exploded document words and broadcasts
+    the words instead.
 
-    The memo key is (applicationId, sf_dir) — NOT id(docs): object ids
-    never repeat across calls with caching off (an extra count job per
-    call), and CPython address reuse could serve a stale count for a
-    DIFFERENT sf_dir's docs in the same app (scale_probe runs several
-    probe dirs per session), mis-gating the broadcast decision
-    (round-12 advice, medium)."""
+    The memo key is sf_dir — NOT id(docs): object ids never repeat
+    across calls with caching off (an extra count job per call), and
+    CPython address reuse could serve a stale count for a DIFFERENT
+    sf_dir's docs in the same app (scale_probe runs several probe dirs
+    per session), mis-gating the broadcast decision."""
     _rows, final = _train_distributed(spark, docs, N_MERGES, need_final=True)
-    key = (spark.sparkContext.applicationId, sf_dir, "bpe_vocab")
-    if TFIDF_BCAST_VOCAB.admits(_vocab_count(spark, key, final)):
-        return F.broadcast(final)
-    return final
+    return TFIDF_BCAST_VOCAB.join_sides((sf_dir, "bpe_vocab"), final, final)
 
 
 def bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:

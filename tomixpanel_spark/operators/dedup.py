@@ -33,7 +33,6 @@ from pyspark.sql import functions as F
 from tomixpanel_spark.functions.text import fingerprint, tokens
 from tomixpanel_spark.operators.base import (
     Gate,
-    Lru,
     QuerySpec,
     derived,
     ensure_parallel,
@@ -444,7 +443,9 @@ def _pair_col(threshold: float | None) -> F.Column:
     return F.expr(pair_expr)
 
 
-def _shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _shingle_arrays(
+    spark: SparkSession, sf_dir: str, docs: DataFrame | None = None
+) -> DataFrame:
     """doc_id + distinct-3-gram array, built in STAGED projections.
 
     Two scale-critical choices:
@@ -461,11 +462,15 @@ def _shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cached as a derived view (``base.derived``) when TOMIX_CACHE_TABLES is
     on: four dedup queries consume the same shingle sets, and production
     near-dup pipelines likewise materialize shingles/signatures once.
+    ``docs`` is the caller's already-read documents table, if it has one
+    (each ``table`` read runs a parquet-footer job).
     """
     return derived(
         spark,
         ("shingles", sf_dir),
-        lambda: shingle_arrays_for(table(spark, sf_dir, "documents")),
+        lambda: shingle_arrays_for(
+            table(spark, sf_dir, "documents") if docs is None else docs
+        ),
     )
 
 
@@ -1308,22 +1313,6 @@ EVAL_SET_MOD = 97  # synthetic held-out set: every 97th doc
 DECONTAM_BCAST_DOCS = Gate("TOMIX_DECONTAM_BCAST_DOCS", 100_000)
 
 
-_EVAL_COUNT_CACHE = Lru(256)
-
-
-def _eval_doc_count(spark: SparkSession, sf_dir: str) -> int:
-    """Eval-set cardinality for the broadcast gate — one single-column
-    count job, memoized per (application, sf_dir): the eval set is fixed
-    for a run, so repeated decontam calls shouldn't re-count it."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _EVAL_COUNT_CACHE.memo(
-        key,
-        lambda: table(spark, sf_dir, "documents")
-        .filter(F.pmod(F.col("doc_id"), F.lit(EVAL_SET_MOD)) == 0)
-        .count(),
-    )
-
-
 def decontam_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark-decontamination check: which training docs share n-gram
     shingles with the held-out eval set (here: every 97th doc), and how
@@ -1335,23 +1324,20 @@ def decontam_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's runtime bloom-filter injection enabled, so non-overlapping
     corpus rows are still pruned map-side before the exchange. Docs with
     zero overlap don't appear."""
-    sh = _shingle_arrays(spark, sf_dir)
+    docs = table(spark, sf_dir, "documents")
+    sh = _shingle_arrays(spark, sf_dir, docs)
     rows = sh.select("doc_id", F.explode("sh_arr").alias("sh"))
     is_eval = F.pmod(F.col("doc_id"), F.lit(EVAL_SET_MOD)) == 0
     eval_sh = rows.filter(is_eval).select(
         F.col("sh").alias("e_sh"), F.col("doc_id").alias("eval_doc")
     )
     corpus = rows.filter(~is_eval)
-    n_eval_docs = _eval_doc_count(spark, sf_dir)
-    if DECONTAM_BCAST_DOCS.admits(n_eval_docs):
-        eval_side = F.broadcast(eval_sh)
-    else:
-        # Above the gate we KNOW the eval side is big even when Catalyst's
-        # size estimate (unreliable through explode lineage) says tiny, so
-        # pin a shuffle-hash join explicitly. AQE may still flip a
-        # runtime-small side back to broadcast — that's runtime-informed
-        # and safe; the hint only stops a planning-time OOM bet.
-        eval_side = eval_sh.hint("shuffle_hash")
+    # Above the gate we KNOW the eval side is big even when Catalyst's
+    # size estimate (unreliable through explode lineage) says tiny, so the
+    # gate pins a shuffle-hash join. The pin holds at runtime too: with
+    # the cap at 0, AQE's final plan keeps the ShuffledHashJoin even for
+    # a KB-sized eval side (sf0.001 and sf0.01).
+    eval_side = DECONTAM_BCAST_DOCS.join_sides((sf_dir,), docs.filter(is_eval), eval_sh)
     return (
         corpus.join(eval_side, corpus.sh == eval_sh.e_sh)
         .groupBy("doc_id")

@@ -209,10 +209,8 @@ def mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast build (one broadcast job, same trick as tfidf); the keep
     decision is then a narrow map-side filter over the corpus — no
     corpus shuffle anywhere, skew-free by construction. The broadcast is
-    GATED (round-7 advice: a runtime gate, not a documented convention):
-    the bucket-domain cardinality is counted once (memoized) and a
-    degenerate bucketing past ``TOMIX_MIXTURE_BCAST_BUCKETS`` falls back
-    to a shuffle join — AQE's skew split then handles any hot bucket."""
+    static, not count-gated: ``lang_guess`` yields two buckets ('en',
+    'unknown'), so the build side is two rows at any corpus size."""
     docs = table(spark, sf_dir, "documents")
     d = docs.select(
         "doc_id",
@@ -221,25 +219,12 @@ def mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     counts = d.groupBy("bucket").agg(F.count(F.lit(1)).alias("cnt"))
     mn = counts.agg(F.min("cnt").alias("mn"))
-    build = counts.crossJoin(mn)
-    n_buckets = _vocab_count(
-        spark, (spark.sparkContext.applicationId, sf_dir, "mix_buckets"), counts
-    )
-    if MIXTURE_BCAST_BUCKETS.admits(n_buckets):
-        build = F.broadcast(build)
-    else:
-        build = build.hint("shuffle_hash")
+    build = F.broadcast(counts.crossJoin(mn))
     return (
         d.join(build, "bucket")
         .filter(F.col("h") * F.col("cnt") < F.col("mn") * 10000)
         .select("doc_id", "bucket")
     )
-
-
-# A bucketing function that explodes past this many distinct buckets is
-# degenerate (buckets are languages/sources — intrinsically small), but
-# the gate makes the broadcast-bound RUNTIME-checked like decontam's.
-MIXTURE_BCAST_BUCKETS = Gate("TOMIX_MIXTURE_BCAST_BUCKETS", 100_000)
 
 
 _MIXTURE_REBALANCE_SQL = f"""
@@ -1152,17 +1137,6 @@ def tokenize_tf_pdf(docs: DataFrame, id_col: str = "doc_id", text_col: str = "te
 TFIDF_BCAST_VOCAB = Gate("TOMIX_TFIDF_BCAST_VOCAB", 2_000_000)
 
 
-_VOCAB_COUNT_CACHE = Lru(256)
-
-
-def _vocab_count(spark: SparkSession, key: tuple, df_counts: DataFrame) -> int:
-    """Distinct-token cardinality for the broadcast gate — one count job
-    over the (already checkpointed) tf table, memoized per (application,
-    sf_dir): the vocabulary is fixed for a corpus, so repeated keyword
-    extractions don't re-count it."""
-    return _VOCAB_COUNT_CACHE.memo(key, df_counts.count)
-
-
 # Size-adaptive execution gate (the identity.py CC pattern — driver
 # union-find under an edge cap, distributed label propagation above —
 # applied to corpus stats): corpora under this many documents resolve in
@@ -1175,20 +1149,10 @@ def _vocab_count(spark: SparkSession, key: tuple, df_counts: DataFrame) -> int:
 TFIDF_DRIVER_FOLD_DOCS = Gate("TOMIX_TFIDF_DRIVER_FOLD_DOCS", 25_000)
 
 
-_CORPUS_COUNT_CACHE = Lru(256)
-
-
-def _corpus_count(spark: SparkSession, sf_dir: str, docs: DataFrame) -> int:
-    """documents cardinality for the size gate — memoized per
-    (application, sf_dir), same precedent as decontam's eval-count."""
-    key = (spark.sparkContext.applicationId, sf_dir, "n_docs")
-    return _CORPUS_COUNT_CACHE.memo(key, docs.count)
-
-
 def _under_fold_cap(spark: SparkSession, sf_dir: str, docs: DataFrame) -> bool:
     """The text family's driver-fold decision: the memoized corpus count
     against ``TFIDF_DRIVER_FOLD_DOCS``."""
-    return TFIDF_DRIVER_FOLD_DOCS.admits(_corpus_count(spark, sf_dir, docs))
+    return TFIDF_DRIVER_FOLD_DOCS.admits(TFIDF_DRIVER_FOLD_DOCS.count((sf_dir,), docs))
 
 
 def _tfidf_driver_fold(docs: DataFrame, n_docs: int) -> DataFrame:
@@ -1293,7 +1257,7 @@ def tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both paths produce identical rows (asserted by
     tests/test_plans.py::test_tfidf_paths_agree)."""
     docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
-    n_docs = _corpus_count(spark, sf_dir, docs)
+    n_docs = TFIDF_DRIVER_FOLD_DOCS.count((sf_dir,), docs)
     if TFIDF_DRIVER_FOLD_DOCS.admits(n_docs):
         return _tfidf_driver_fold(docs, n_docs)
     tf = _tf_view(docs)
@@ -1306,16 +1270,9 @@ def tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     build = df_counts.select(
         "token", "df", F.lit(n_docs).cast("bigint").alias("n_docs")
     )
-    vocab = _vocab_count(
-        spark, (spark.sparkContext.applicationId, sf_dir, "vocab"), df_counts
-    )
-    if TFIDF_BCAST_VOCAB.admits(vocab):
-        build = F.broadcast(build)
-    else:
-        # vocabulary too big for executor memory: shuffle join, with
-        # runtime bloom-filter injection pruning non-matching tf rows
-        # map-side (mirrors decontam's above-gate path)
-        build = build.hint("shuffle_hash")
+    # above the vocabulary cap: shuffle join, with runtime bloom-filter
+    # injection pruning non-matching tf rows map-side
+    build = TFIDF_BCAST_VOCAB.join_sides((sf_dir, "vocab"), df_counts, build)
     scored = tf.join(build, "token").select(
         "doc_id",
         "token",
@@ -1623,7 +1580,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
-    n_docs = _corpus_count(spark, sf_dir, docs)
+    n_docs = TFIDF_DRIVER_FOLD_DOCS.count((sf_dir,), docs)
     if TFIDF_DRIVER_FOLD_DOCS.admits(n_docs):
         return _bm25_driver_fold(docs, n_docs)
     tf = _tf_view(docs)
@@ -1703,13 +1660,10 @@ SELECT q_id, doc_id, rank, score_e6 FROM (
 # -- bigram LM scoring (CCNet-style perplexity filter, integer-exact) --------
 
 # Broadcast the bigram model while its cardinality (distinct bigram types,
-# NOT occurrences) stays under this cap; above it the scoring join falls
-# back to a shuffle join on (prev, cur). Counted once per (application,
-# sf_dir) and memoized — the tfidf vocab-gate precedent.
+# NOT occurrences) stays under this cap; above it the scoring joins are
+# shuffle hash joins on (prev, cur) and prev. Counted once per
+# (application, sf_dir) through the gate's memo.
 LM_BCAST_BIGRAMS = Gate("TOMIX_LM_BCAST_BIGRAMS", 2_000_000)
-
-
-_LM_MODEL_COUNT_CACHE = Lru(256)
 
 
 def _lm_driver_fold(spark: SparkSession, docs: DataFrame) -> DataFrame:
@@ -1813,7 +1767,8 @@ def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     side never exchanges), then aggregates per doc — and bigrams of one
     doc are colocated in its input partition, so the per-doc aggregate's
     shuffle carries one partial row per document. Above the gate: shuffle
-    join on (prev, cur); hot contexts ("the ...") skew that exchange, and
+    hash joins on (prev, cur) and prev, model and ctx pinned as the build
+    sides; hot contexts ("the ...") skew that exchange, and
     AQE skew-join splitting is the designed mitigation (documented, same
     posture as tfidf above its vocab gate)."""
     from tomixpanel_spark.functions.text import adjacent_pairs
@@ -1835,9 +1790,9 @@ def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = docs.select(F.explode(tokens("text")).alias("t")).agg(
         F.count_distinct("t").alias("v")
     )
-    key = (spark.sparkContext.applicationId, sf_dir, "lm_bigram_types")
-    if LM_BCAST_BIGRAMS.admits(_LM_MODEL_COUNT_CACHE.memo(key, model.count)):
-        model, ctx = F.broadcast(model), F.broadcast(ctx)
+    model, ctx = LM_BCAST_BIGRAMS.join_sides(
+        (sf_dir, "lm_bigram_types"), model, model, ctx
+    )
     scored = (
         big.join(model, ["prev", "cur"])
         .join(ctx, ["prev"])

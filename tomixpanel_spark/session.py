@@ -82,10 +82,11 @@ def ensure_semantics(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
     # Runtime bloom-filter injection is pinned ON at the session level:
-    # the above-gate shuffle-join paths (decontam / tfidf vocab /
-    # mixture buckets) rely on it for map-side pruning, and setting it
-    # per-query from inside a builder was a cross-query side effect —
-    # plan shapes depended on which query ran first (round-8 review).
+    # the above-cap shuffle hash joins of ``Gate.join_sides`` (decontam,
+    # tfidf/bpe vocab, bigram LM) rely on it for map-side pruning, and
+    # setting it per-query from inside a builder was a cross-query side
+    # effect — plan shapes depended on which query ran first (round-8
+    # review).
     spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
     ship_package(spark)
     return spark
