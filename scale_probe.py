@@ -26,11 +26,10 @@ Six probe families (select with argv, default all):
   union-find with the gate raised, with LP round count and wall-clock.
 
 * ``asof`` — temporal-join family (round-11 verdict #2): events 60x /
-  orders 10x so BOTH as-of right sides exceed TOMIX_ASOF_BCAST_ROWS
-  (clicks 1.19M, order states 1.5M) and the union+window sort-merge
-  strategy engages NATURALLY; DuckDB native ASOF JOIN / IEJoin oracles
-  side-by-side, natural-vs-forced-broadcast paths-agree checksums, and
-  range-join bin-width invariance (1-day vs 6-hour bins).
+  orders 10x so both as-of right sides reach the millions (clicks
+  1.19M, order states 1.5M) under the union+window carry; DuckDB
+  native ASOF JOIN / IEJoin oracles side-by-side, and range-join
+  bin-width invariance (1-day vs 6-hour bins).
 
 * ``bpe`` — vocab-rich corpus (words salted by doc_id -> ~1.5M distinct
   words >> TOMIX_BPE_LOCAL_WORDS) so the fully distributed BPE merge
@@ -215,8 +214,8 @@ def build_cc_dataset(src_sf: str, dst: str) -> None:
     )
 
 
-ASOF_EVENT_REPLICAS = 60   # clicks 19.9k -> 1.19M > TOMIX_ASOF_BCAST_ROWS
-ASOF_ORDER_REPLICAS = 10   # orders 150k -> 1.5M  > TOMIX_ASOF_BCAST_ROWS
+ASOF_EVENT_REPLICAS = 60   # clicks 19.9k -> 1.19M
+ASOF_ORDER_REPLICAS = 10   # orders 150k -> 1.5M
 
 PROBE_ASOF_NAMES = ["asof_latest_order", "asof_next_order",
                     "attribution_last_touch", "range_join_active_windows"]
@@ -227,11 +226,10 @@ def build_asof_dataset(src_sf: str, dst: str) -> None:
     times stay distinct; user_id UNCHANGED so every replica's clicks and
     orders remain as-of candidates for every purchase) and orders x10
     (o_orderkey offset shifts the %720/%48 derivations, so each replica
-    contributes fresh window starts/lengths). Both right sides then
-    exceed TOMIX_ASOF_BCAST_ROWS (1M) NATURALLY: clicks 19.9k->1.19M,
-    derived order states 150k->1.5M — the union+window sort-merge
-    strategy engages without forcing the gate; the range-join interval
-    set grows 10x (1.5M windows, ~10k/user)."""
+    contributes fresh window starts/lengths). Both as-of right sides
+    then pass 1M rows: clicks 19.9k->1.19M, derived order states
+    150k->1.5M; the range-join interval set grows 10x (1.5M windows,
+    ~10k/user)."""
     import duckdb
 
     os.makedirs(dst, exist_ok=True)
@@ -266,14 +264,12 @@ def build_asof_dataset(src_sf: str, dst: str) -> None:
 
 
 def probe_asof(spark, src_sf: str, probe_root: str) -> None:
-    """Temporal-join family above its gates (round-11 verdict #2):
+    """Temporal-join family at scale (round-11 verdict #2):
 
-    1. the three registered queries vs their DuckDB oracles (native ASOF
-       JOIN / IEJoin) at 6M events / 1.5M right-side rows — the auto
-       gate must flip to the union+window strategy NATURALLY;
-    2. paths-agree: natural window plan vs forced-broadcast plan,
-       order-free checksums must match (the cc/decontam precedent);
-    3. range-join bin-width invariance: 1-day vs 6-hour bins must
+    1. the three registered as-of queries and the range join vs their
+       DuckDB oracles (native ASOF JOIN / IEJoin) at 6M events / 1.5M
+       right-side rows;
+    2. range-join bin-width invariance: 1-day vs 6-hour bins must
        checksum-identical (any bin-boundary bug drops/dups candidates).
     """
     import duckdb
@@ -293,48 +289,7 @@ def probe_asof(spark, src_sf: str, probe_root: str) -> None:
         "documents embeddings"
     ).split():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{dst}/{t}.parquet'")
-    def asof_tier() -> str | None:
-        d = last_decision("TOMIX_ASOF_BCAST_ROWS")
-        return d and d.tier
-
-    def check_flip(name: str) -> None:
-        # only the asof_join-calling rows log an as-of decision;
-        # range_join_active_windows never does (round-12 advice: the old
-        # post-loop assert silently reflected whichever query ran last)
-        if name in ("asof_latest_order", "asof_next_order",
-                    "attribution_last_touch"):
-            assert asof_tier() == "distributed", (
-                f"{name}: gate did not flip naturally "
-                f"(tier={asof_tier()}) — probe is mis-sized"
-            )
-
-    run_queries(spark, con, reg, dst, PROBE_ASOF_NAMES,
-                after_query=check_flip)
-
-    # paths-agree: the same query through the natural (window) and the
-    # forced-broadcast strategies, order-free checksum equality
-    for name in ("asof_latest_order", "attribution_last_touch"):
-        t0 = time.perf_counter()
-        nat = _spark_checksum(reg[name].fn(spark, dst))
-        t_nat = time.perf_counter() - t0
-        assert asof_tier() == "distributed"
-        prev = os.environ.get("TOMIX_ASOF_BCAST_ROWS")
-        os.environ["TOMIX_ASOF_BCAST_ROWS"] = "100000000"
-        try:
-            t0 = time.perf_counter()
-            forced = _spark_checksum(reg[name].fn(spark, dst))
-            t_brd = time.perf_counter() - t0
-        finally:
-            if prev is None:
-                os.environ.pop("TOMIX_ASOF_BCAST_ROWS", None)
-            else:
-                os.environ["TOMIX_ASOF_BCAST_ROWS"] = prev
-        assert asof_tier() == "driver"
-        ok = "HASH_OK" if nat == forced else "MISMATCH"
-        print(
-            f"{name}_paths,{t_nat:.2f},broadcast={t_brd:.2f}s,,{nat[0]},{ok}",
-            flush=True,
-        )
+    run_queries(spark, con, reg, dst, PROBE_ASOF_NAMES)
 
     # bin-width invariance for the range join at probe scale: 1-day vs
     # 6-hour bins (4x interval replication) must agree cell-for-cell
@@ -478,7 +433,7 @@ def _canon_hash(pdf) -> str:
     return h.hexdigest()
 
 
-def run_queries(spark, con, reg, dst, names, after_query=None) -> None:
+def run_queries(spark, con, reg, dst, names) -> None:
     print("name,spark_s,duckdb_s,ratio,rows,match")
     for n in names:
         if n not in reg:
@@ -487,12 +442,6 @@ def run_queries(spark, con, reg, dst, names, after_query=None) -> None:
             print(f"# running {n}", file=sys.stderr, flush=True)
             fn = reg[n].fn
             spdf = fn(spark, dst).toPandas()  # warm plan + codegen
-            if after_query is not None:
-                # per-query observable checks (e.g. the as-of gate decision)
-                # must fire HERE, while the observable still reflects
-                # THIS query — a post-loop assert reads whichever query
-                # happened to run last (round-12 advice)
-                after_query(n)
             nrows = len(spdf)
             best = float("inf")
             for _ in range(2):

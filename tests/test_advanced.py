@@ -398,15 +398,115 @@ class TestAsofJoin:
         with pytest.raises(ValueError):
             asof_join(left, right, on="k", left_time="t", right_time="rt")
 
-    def test_plan_is_single_exchange_no_join(self, spark):
-        """The composition must stay union+window: one key exchange, no
-        join operator (a range-condition join would be a per-key cross
-        product Spark can only post-filter)."""
+    def test_strategy_keyword_rejected(self, spark):
+        """The union+window carry is the only shape: there is no
+        ``strategy`` parameter to pick another one."""
+        from tomixpanel_spark.operators.asof import asof_join
+
+        left = spark.createDataFrame([(1, 1)], "k long, t long")
+        right = spark.createDataFrame([(1, 1, 2)], "k long, rt long, v long")
+        with pytest.raises(TypeError):
+            asof_join(
+                left, right, on="k", left_time="t", right_time="rt",
+                strategy="window",
+            )
+
+    def test_hand_computed_rows_both_directions(self, spark):
+        """Every row of both directions against hand-computed matches on
+        a fixture with missing matches, an exact-time tie (the max
+        tiebreak wins in both directions), a left-only key and a
+        right-only key (which emits nothing)."""
+        from tomixpanel_spark.operators.asof import asof_join
+
+        left = spark.createDataFrame(
+            [
+                (1, 10, "l1"), (1, 20, "l2"), (1, 5, "l0"),
+                (2, 7, "l3"),
+                (3, 9, "l4"),   # key with no right rows at all
+                (1, 15, "l5"),
+            ],
+            "k long, t long, tag string",
+        )
+        right = spark.createDataFrame(
+            [
+                (1, 10, 100, 7.5), (1, 10, 101, 8.5),  # exact-time tie
+                (1, 12, 102, 9.5),
+                (2, 8, 103, 1.0),   # after left's t=7 (backward miss)
+                (4, 1, 104, 2.0),   # right-only key
+            ],
+            "k long, rt long, rid long, val double",
+        )
+        want = {
+            "backward": {
+                "l0": (1, 5, None, None),
+                "l1": (1, 10, 101, 8.5),  # inclusive tie, max rid wins
+                "l5": (1, 15, 102, 9.5),
+                "l2": (1, 20, 102, 9.5),
+                "l3": (2, 7, None, None),
+                "l4": (3, 9, None, None),  # left-only key
+            },
+            "forward": {
+                "l0": (1, 5, 101, 8.5),
+                "l1": (1, 10, 101, 8.5),
+                "l5": (1, 15, None, None),
+                "l2": (1, 20, None, None),
+                "l3": (2, 7, 103, 1.0),
+                "l4": (3, 9, None, None),
+            },
+        }
+        for direction, rows in want.items():
+            out = asof_join(
+                left, right, on="k", left_time="t", right_time="rt",
+                right_tiebreak=("rid",), direction=direction,
+            ).collect()
+            assert len(out) == len(rows)
+            got = {r["tag"]: (r["k"], r["t"], r["rid"], r["val"]) for r in out}
+            assert got == rows, direction
+
+    def test_timestamp_time_columns(self, spark):
+        """Timestamp time columns: the left timestamps come back
+        unchanged and each row carries the latest earlier right value."""
+        import datetime as dt
+
+        from tomixpanel_spark.operators.asof import asof_join
+
+        left = spark.createDataFrame(
+            [(1, "2024-01-01 10:00:00", "a"), (1, "2024-01-01 12:00:00", "b")],
+            "k long, t string, tag string",
+        ).selectExpr("k", "CAST(t AS TIMESTAMP) AS t", "tag")
+        right = spark.createDataFrame(
+            [(1, "2024-01-01 09:00:00", 7), (1, "2024-01-01 11:00:00", 9)],
+            "k long, rt string, val long",
+        ).selectExpr("k", "CAST(rt AS TIMESTAMP) AS rt", "val")
+        out = asof_join(left, right, on="k", left_time="t", right_time="rt")
+        assert dict(out.dtypes)["t"] == "timestamp"
+        rows = out.collect()
+        assert {r["tag"]: r["val"] for r in rows} == {"a": 7, "b": 9}
+        assert {r["tag"]: r["t"] for r in rows} == {
+            "a": dt.datetime(2024, 1, 1, 10),
+            "b": dt.datetime(2024, 1, 1, 12),
+        }
+
+    @pytest.mark.parametrize(
+        "name", ["asof_latest_order", "asof_next_order", "attribution_last_touch"]
+    )
+    def test_plan_is_single_exchange_no_join(self, spark, name):
+        """Every registered as-of query runs the union+window carry: a
+        Window node, no Python merge stage (MapInPandas /
+        FlatMapCoGroupsInPandas) and no join operator (a range-condition
+        join would be a per-key cross product Spark can only
+        post-filter). Read from the executed plan after a collect, so
+        AQE's final plan is what is checked."""
         from tests.conftest import SF_ORACLE
         from tomixpanel_spark.operators import registry
         from tomixpanel_spark.plans.audit import join_strategies
 
-        df = registry()["asof_latest_order"].fn(spark, SF_ORACLE)
+        df = registry()[name].fn(spark, SF_ORACLE)
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Window" in plan
+        assert "MapInPandas" not in plan
+        assert "FlatMapCoGroupsInPandas" not in plan
         assert join_strategies(df) == []
 
 
@@ -979,144 +1079,6 @@ class TestAnnIvfQuantized:
         assert len(part & full) / len(full) >= 0.5
 
 
-class TestAsofStrategies:
-    def test_cogroup_strategy_equals_window_strategy(self, spark):
-        """Both physical shapes of the as-of join — the all-JVM
-        union+window carry and the Arrow cogroup pd.merge_asof — are ONE
-        operator: identical rows on a fixture exercising missing
-        matches, exact-time ties (tiebreak resolution), left-only keys,
-        right-only keys, and both directions."""
-        from tomixpanel_spark.operators.asof import asof_join
-
-        left = spark.createDataFrame(
-            [
-                (1, 10, "l1"), (1, 20, "l2"), (1, 5, "l0"),
-                (2, 7, "l3"),
-                (3, 9, "l4"),   # key with no right rows at all
-                (1, 15, "l5"),
-            ],
-            "k long, t long, tag string",
-        )
-        right = spark.createDataFrame(
-            [
-                (1, 10, 100, 7.5), (1, 10, 101, 8.5),  # exact-time tie
-                (1, 12, 102, 9.5),
-                (2, 8, 103, 1.0),   # after left's t=7 (backward miss)
-                (4, 1, 104, 2.0),   # right-only key
-            ],
-            "k long, rt long, rid long, val double",
-        )
-        canon = lambda df: sorted(  # noqa: E731
-            (tuple(str(x) for x in row) for row in map(tuple, df.select(*sorted(df.columns)).collect()))
-        )
-        for direction in ("backward", "forward"):
-            w = asof_join(
-                left, right, on="k", left_time="t", right_time="rt",
-                right_tiebreak=("rid",), direction=direction,
-            )
-            for other in ("cogroup", "broadcast"):
-                o = asof_join(
-                    left, right, on="k", left_time="t", right_time="rt",
-                    right_tiebreak=("rid",), direction=direction,
-                    strategy=other,
-                )
-                assert canon(w) == canon(o), f"{other} diverges ({direction})"
-        back = asof_join(
-            left, right, on="k", left_time="t", right_time="rt",
-            right_tiebreak=("rid",), strategy="cogroup",
-        )
-        by_tag = {r["tag"]: (r["rid"], r["val"]) for r in back.collect()}
-        assert by_tag["l1"] == (101, 8.5)
-        assert by_tag["l4"] == (None, None)
-
-    def test_registered_asof_query_matches_cogroup(self, spark):
-        """The registered asof_latest_order re-run through the cogroup
-        strategy returns the identical result set."""
-        from tomixpanel_spark.operators.asof import asof_join
-        from tomixpanel_spark.operators import registry
-
-        from pyspark.sql import functions as F
-        from tomixpanel_spark.operators.base import table
-
-        sf = "/root/testdata/sf0.001"
-        reg = registry()
-        want = sorted(map(tuple, reg["asof_latest_order"].fn(spark, sf).collect()))
-        ev = table(spark, sf, "events").select("event_id", "user_id", "ts")
-        orders = table(spark, sf, "orders")
-        r = orders.select(
-            F.pmod("o_custkey", F.lit(150)).cast("bigint").alias("user_id"),
-            F.expr(
-                "timestampadd(HOUR, cast(o_orderkey % 720 as int), "
-                "timestamp'2024-01-01 00:00:00')"
-            ).alias("ts_r"),
-            F.col("o_orderkey").alias("order_key"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("total_c"),
-        )
-        got = sorted(
-            map(
-                tuple,
-                asof_join(
-                    ev, r, on="user_id", left_time="ts", right_time="ts_r",
-                    right_tiebreak=("order_key",), strategy="cogroup",
-                )
-                .select("event_id", "user_id", "order_key", "total_c")
-                .collect(),
-            )
-        )
-        assert got == want
-
-    def test_broadcast_merge_chunking_is_result_invariant(self, spark, monkeypatch):
-        """The broadcast tier accumulates Arrow batches into bounded
-        chunks before each merge_asof (one O(right) pass per chunk, not
-        per batch). A pathological 7-row chunk bound must return the
-        identical result set as the default — chunk boundaries carry no
-        semantics because each left row's match depends only on that row
-        and the full broadcast right side."""
-        from tomixpanel_spark.operators import registry
-
-        sf = "/root/testdata/sf0.001"
-        reg = registry()
-        want = sorted(map(tuple, reg["asof_latest_order"].fn(spark, sf).collect()))
-        monkeypatch.setenv("TOMIX_ASOF_MERGE_ROWS", "7")
-        got = sorted(map(tuple, reg["asof_latest_order"].fn(spark, sf).collect()))
-        assert got == want
-
-    def test_auto_gate_falls_back_to_window_above_cap(self, spark, monkeypatch):
-        """strategy='auto' counts the right side: under the cap it takes
-        the zero-left-shuffle broadcast plan (mapInPandas, no Exchange on
-        the left), above it the window plan (Exchange + Window) — the
-        decontam-style runtime gate, both physical shapes verified by the
-        plan string."""
-        from tomixpanel_spark.operators.asof import asof_join
-
-        left = spark.createDataFrame(
-            [(1, 10, "x"), (2, 20, "y")], "k long, t long, tag string"
-        )
-        right = spark.createDataFrame(
-            [(1, 5, 100), (2, 15, 200)], "k long, rt long, rid long"
-        )
-
-        def plan(cap):
-            df = asof_join(
-                left, right, on="k", left_time="t", right_time="rt",
-                strategy="auto", broadcast_cap=cap,
-            )
-            return df, df._jdf.queryExecution().executedPlan().toString()
-
-        bc_df, bc_plan = plan(cap=10)
-        assert "MapInPandas" in bc_plan and "Window" not in bc_plan
-        win_df, win_plan = plan(cap=1)  # right has 2 rows > cap
-        assert "Window" in win_plan and "MapInPandas" not in win_plan
-        canon = lambda df: sorted(  # noqa: E731
-            map(tuple, df.select(*sorted(df.columns)).collect())
-        )
-        assert canon(bc_df) == canon(win_df)
-        # env default also honored
-        monkeypatch.setenv("TOMIX_ASOF_BCAST_ROWS", "0")
-        _, env_plan = plan(cap=None)
-        assert "Window" in env_plan
-
-
 class TestAnnPq:
     def test_pq_quality_contract(self, spark):
         """PQ is a LOSSY index — the oracle proves bit-exactness of the
@@ -1188,35 +1150,6 @@ class TestBm25Edges:
         out = _bm25_driver_fold(empty, 0)
         assert out.count() == 0
         assert out.columns == ["q_id", "doc_id", "rank", "score_e6"]
-
-
-class TestAsofBroadcastDtypes:
-    def test_timestamp_columns_through_broadcast(self, spark):
-        """The broadcast strategy's dtype-coercion branch: Arrow batches
-        deliver datetime64[us] while driver toPandas may deliver
-        datetime64[ns] — merge_asof requires equal dtypes, so the small
-        side coerces. Verify timestamps roundtrip and match the window
-        strategy exactly."""
-        from tomixpanel_spark.operators.asof import asof_join
-
-        left = spark.createDataFrame(
-            [(1, "2024-01-01 10:00:00", "a"), (1, "2024-01-01 12:00:00", "b")],
-            "k long, t string, tag string",
-        ).selectExpr("k", "CAST(t AS TIMESTAMP) AS t", "tag")
-        right = spark.createDataFrame(
-            [(1, "2024-01-01 09:00:00", 7), (1, "2024-01-01 11:00:00", 9)],
-            "k long, rt string, val long",
-        ).selectExpr("k", "CAST(rt AS TIMESTAMP) AS rt", "val")
-        canon = lambda df: sorted(  # noqa: E731
-            map(tuple, df.select(*sorted(df.columns)).collect())
-        )
-        w = asof_join(left, right, on="k", left_time="t", right_time="rt")
-        b = asof_join(
-            left, right, on="k", left_time="t", right_time="rt", strategy="broadcast"
-        )
-        assert canon(w) == canon(b)
-        vals = {r["tag"]: r["val"] for r in b.collect()}
-        assert vals == {"a": 7, "b": 9}
 
 
 class TestSubstringDupShortDocs:

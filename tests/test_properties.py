@@ -501,16 +501,16 @@ class TestTokenizeSpec:
 
     def test_tokenizer_implementations_agree(self, spark):
         """THREE implementations of the one declared tokenizer spec —
-        JVM tokens(), the Python Counter mirror, and the pyarrow batch
-        kernel — must produce identical counts, including on messy
-        whitespace."""
+        JVM tokens(), the driver folds' Python tokenizer, and the
+        pyarrow batch kernel — must produce identical counts, including
+        on messy whitespace."""
+        from collections import Counter
+
         import pandas as pd
 
         from tomixpanel_spark.functions.text import tokens
-        from tomixpanel_spark.operators.textops import (
-            _pa_tokenize_tf,
-            _py_token_counts,
-        )
+        from tomixpanel_spark.operators.dedup import _fold_tokenize
+        from tomixpanel_spark.operators.textops import _pa_tokenize_tf
 
         texts = [
             "a  b a", "  lead", "trail  ", "a b  c   d b", "", "   ",
@@ -523,16 +523,14 @@ class TestTokenizeSpec:
         arrow_counts = {
             i: dict(zip(g["token"], g["tf"])) for i, g in tbl.groupby("doc_id")
         }
-        # python mirror
-        py_counts = {i: dict(_py_token_counts(t)) for i, t in zip(ids, texts)}
+        # driver-fold tokenizer
+        py_counts = {i: dict(Counter(_fold_tokenize(t))) for i, t in zip(ids, texts)}
         py_counts = {i: c for i, c in py_counts.items() if c}
         assert arrow_counts == py_counts
         # JVM tokens()
         df = spark.createDataFrame(
             list(zip(ids, texts)), "doc_id long, text string"
         )
-        from collections import Counter
-
         jvm = {
             r["doc_id"]: dict(Counter(r["t"]))
             for r in df.select("doc_id", tokens("text").alias("t")).collect()

@@ -100,11 +100,11 @@ class TestSentinelFoldedLanding:
 class TestSessionizeStrategiesAgree:
     """The two stateful sessionization strategies (JVM ``session_window``
     serving path vs ``applyInPandasWithState`` library path) must emit
-    row-equal FINAL sessions — the asof.py two-strategy precedent. The
-    fixture pins the boundary cases: an event EXACTLY gap after the last
-    one extends the session (strictly-greater rule, the gap+1ms window
-    trick), a gap+1 event rolls it, null event times are skipped, and
-    state carries across micro-batch files."""
+    row-equal FINAL sessions. The fixture pins the boundary cases: an
+    event EXACTLY gap after the last one extends the session
+    (strictly-greater rule, the gap+1ms window trick), a gap+1 event
+    rolls it, null event times are skipped, and state carries across
+    micro-batch files."""
 
     GAP = 10_000  # ms
 

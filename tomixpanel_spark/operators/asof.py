@@ -13,10 +13,11 @@ Scale shape: ONE exchange on the key + a partition-local sort — the same
 cost as the sort-merge join Spark would need anyway, with no
 range-condition explosion (a naive ``left.ts >= right.ts`` join is a
 per-key cross product that Spark can only post-filter). Key skew behaves
-like any keyed shuffle (AQE skew handling applies). When the right side
-is dimension-sized, the gated ``broadcast`` strategy removes even that
-exchange: the fact-side stream is merged in place against a broadcast
-sorted right side (the as-of analogue of a broadcast-hash join).
+like any keyed shuffle (AQE skew handling applies). This is the only
+physical shape: the per-record work stays in the JVM's generated code
+and no row crosses into Python. The broadcast and cogroup
+``pd.merge_asof`` strategies it replaced never beat it where measured
+(ARCHITECTURE.md, "Temporal joins").
 
 Oracle: DuckDB's native ``ASOF LEFT JOIN`` — an INDEPENDENT implementation
 of the same semantics, so the hash comparison cross-checks the window
@@ -27,8 +28,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
-from tomixpanel_spark.operators.base import Gate, QuerySpec, table
+from tomixpanel_spark.operators.base import QuerySpec, table
 
 
 def asof_join(
@@ -39,8 +41,6 @@ def asof_join(
     right_time: str,
     right_tiebreak: tuple[str, ...] = (),
     direction: str = "backward",
-    strategy: str = "window",
-    broadcast_cap: int | None = None,
 ) -> DataFrame:
     """Left as-of join: all ``left`` columns plus ``right``'s value
     columns (everything but ``on``/``right_time``) taken from the
@@ -56,41 +56,9 @@ def asof_join(
     already pays, so no pre-aggregation exchange is needed. Without a
     tiebreak, pre-aggregate the right side (e.g. ``max_by``) or the
     match is not well defined.
-
-    ``strategy`` picks the physical shape (same semantics, asserted
-    equal in tests):
-      * ``"window"`` (default) — union both sides through ONE exchange
-        on the key, carry right values with a running last(ignorenulls)
-        window. All-JVM, whole-stage-codegen sort.
-      * ``"cogroup"`` — groupBy(key).cogroup + ``applyInPandas`` running
-        ``pd.merge_asof`` per key group: one exchange per side, the
-        sorted merge itself in C. The Arrow transfer makes it the slower
-        choice for narrow rows, but it wins when right VALUE payloads
-        are wide (the window form carries the whole value struct through
-        the JVM sort; the cogroup form merges on (key, time) positions).
-        Per-key state must fit a task (same bound as any cogroup).
-      * ``"broadcast"`` — collect + sort the right side ONCE on the
-        driver, broadcast it, and run ``pd.merge_asof(by=key)`` inside
-        ``mapInPandas`` over the left: the LEFT SIDE NEVER SHUFFLES.
-        This is the as-of analogue of a broadcast-hash join — the right
-        side is usually dimension-like (latest order state, quotes,
-        config history) and orders of magnitude smaller than the event
-        stream, so at 100 TB the fact table stays put and only the small
-        side moves. Caller-asserted fit (use ``"auto"`` for the gated
-        form).
-      * ``"auto"`` — count the right side (one cheap aggregate job) and
-        take ``"broadcast"`` when it is at or under ``broadcast_cap``
-        (default ``TOMIX_ASOF_BCAST_ROWS``, 1,000,000 rows), else fall
-        back to ``"window"`` — the same count-the-build-side runtime
-        gate ``decontam_overlap`` uses, so a right side that outgrows
-        executor memory degrades to the shuffle plan instead of OOMing.
     """
     if direction not in ("backward", "forward"):
         raise ValueError(f"direction must be backward|forward, got {direction!r}")
-    if strategy not in ("window", "cogroup", "broadcast", "auto"):
-        raise ValueError(
-            f"strategy must be window|cogroup|broadcast|auto, got {strategy!r}"
-        )
     left_cols = [c for c in left.columns if c != on]
     value_cols = [c for c in right.columns if c not in (on, right_time)]
     overlap = set(left_cols) & set(value_cols)
@@ -98,31 +66,6 @@ def asof_join(
         raise ValueError(f"column collision between sides: {sorted(overlap)}")
     if not value_cols:
         raise ValueError("right side has no value columns to carry")
-    if strategy == "auto":
-        cap = broadcast_cap if broadcast_cap is not None else ASOF_BCAST_ROWS.cap()
-        # gate probe is BOUNDED (limit cap+1 proves overflow without a
-        # full count) and memoized per (right plan, cap) in the gates'
-        # shared count memo — repeated auto calls on the same dimension
-        # table cost one job, not one per invocation. A count rather
-        # than Gate.collect_or_none: the collect adds a single-partition
-        # stage, and a memo hit runs no job at all.
-        n = None
-        if cap > 0:
-            key = (right.semanticHash(), cap)
-            n = ASOF_BCAST_ROWS.count(key, right.limit(cap + 1))
-        strategy = "broadcast" if ASOF_BCAST_ROWS.admits(n, cap) else "window"
-    if strategy == "cogroup":
-        return _asof_cogroup(
-            left, right, on, left_time, right_time, right_tiebreak, direction,
-            left_cols, value_cols,
-        )
-    if strategy == "broadcast":
-        return _asof_broadcast(
-            left, right, on, left_time, right_time, right_tiebreak, direction,
-            left_cols, value_cols,
-        )
-
-    from pyspark.sql.types import StructField, StructType
 
     # ALL right value columns ride in ONE struct carried by a single
     # last(ignorenulls=True): per-column carries would back-fill a NULL
@@ -181,208 +124,6 @@ def asof_join(
     )
 
 
-def _arrow_out_schema(left, right, on, left_time, left_cols, value_cols):
-    """Output schema for the Arrow strategies. Right VALUE fields are
-    rebuilt nullable: an unmatched left row emits typed nulls, and a
-    non-nullable source field (aggregate counts, spark.range ids) must
-    not smuggle its nullable=False into the output — Catalyst would
-    treat the column as never-null and prune IsNotNull filters, the
-    exact hazard the window strategy's explicit StructField(..., True)
-    guards against."""
-    from pyspark.sql.types import StructField, StructType
-
-    return StructType(
-        [left.schema[on], left.schema[left_time]]
-        + [left.schema[c] for c in left_cols if c != left_time]
-        + [
-            StructField(c, right.schema[c].dataType, True)
-            for c in value_cols
-        ]
-    )
-
-
-def _asof_cogroup(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_time: str,
-    right_time: str,
-    right_tiebreak: tuple[str, ...],
-    direction: str,
-    left_cols: list[str],
-    value_cols: list[str],
-) -> DataFrame:
-    """The Arrow strategy: per-key ``pd.merge_asof``. Tie handling
-    mirrors the window strategy exactly — among right rows at one
-    (key, time), the max-tiebreak row wins: merge_asof(backward) matches
-    the LAST qualifying position, so the right frame sorts (time ASC,
-    tiebreak ASC); merge_asof(forward) matches the FIRST, so ties sort
-    DESC. Missing matches keep typed nulls (NaN-poisoned int columns are
-    rebuilt as nullable objects before Arrow conversion)."""
-    import pandas as pd
-
-    from tomixpanel_spark.session import ship_package
-
-    ship_package(left.sparkSession)
-    out_schema = _arrow_out_schema(left, right, on, left_time, left_cols, value_cols)
-    out_cols = [f.name for f in out_schema.fields]
-    tie_asc = direction == "backward"
-    # a right time column named like the left one would collide in the
-    # merged frame — give it a reserved name inside the merge
-    rt = right_time if right_time != left_time else "__rt"
-
-    def merge(l_pdf: pd.DataFrame, r_pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(l_pdf):
-            return pd.DataFrame(columns=out_cols)
-        l_sorted = l_pdf.sort_values(left_time, kind="stable")
-        if not len(r_pdf):
-            out = l_sorted.copy()
-            for c in value_cols:
-                out[c] = None
-            return out[out_cols]
-        r_sorted = (
-            r_pdf.rename(columns={right_time: rt})
-            .sort_values(
-                [rt, *right_tiebreak],
-                ascending=[True] + [tie_asc] * len(right_tiebreak),
-                kind="stable",
-            )
-            .drop(columns=[on])
-        )
-        out = pd.merge_asof(
-            l_sorted,
-            r_sorted,
-            left_on=left_time,
-            right_on=rt,
-            direction=direction,
-            allow_exact_matches=True,
-        ).drop(columns=[rt])
-        for c in value_cols:
-            # merge misses NaN-poison integer columns to float — rebuild
-            # as nullable objects so Arrow sees typed nulls
-            if out[c].isna().any():
-                out[c] = out[c].astype(object).where(out[c].notna(), None)
-        return out[out_cols]
-
-    # fresh_attrs guards the caller passing two frames derived from ONE
-    # parent plan: shared attribute ids across a cogroup mis-prune the
-    # right child under no-output consumers (base.fresh_attrs)
-    from tomixpanel_spark.operators.base import fresh_attrs
-
-    return (
-        left.groupBy(on)
-        .cogroup(fresh_attrs(right).groupBy(on))
-        .applyInPandas(lambda l, r: merge(l, r), schema=out_schema)
-    )
-
-
-# "auto" broadcasts a right side of up to 1M rows: dimension-like
-# (latest order state, quotes, config history), tens of MB sorted.
-ASOF_BCAST_ROWS = Gate("TOMIX_ASOF_BCAST_ROWS", 1_000_000)
-# Broadcast-tier left-chunk bound (a budget, not a tier choice): each
-# merge_asof call pays an O(right) factorize/scan, so Arrow batches
-# accumulate to this many rows first; task memory stays O(chunk + right).
-ASOF_MERGE_ROWS = Gate("TOMIX_ASOF_MERGE_ROWS", 262_144)
-
-
-def _asof_broadcast(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_time: str,
-    right_time: str,
-    right_tiebreak: tuple[str, ...],
-    direction: str,
-    left_cols: list[str],
-    value_cols: list[str],
-) -> DataFrame:
-    """The zero-left-shuffle strategy: the whole (sorted) right side is a
-    Spark broadcast variable; each Arrow batch of the left runs one
-    ``pd.merge_asof(by=key)`` against it. Tie semantics match the other
-    strategies (right pre-sorted so the max-tiebreak row is the match).
-    The left keeps its source partitioning — filters/pruning stay pushed
-    down and no exchange is introduced."""
-    import pandas as pd
-
-    from tomixpanel_spark.session import ship_package
-
-    spark = left.sparkSession
-    ship_package(spark)
-    out_schema = _arrow_out_schema(left, right, on, left_time, left_cols, value_cols)
-    out_cols = [f.name for f in out_schema.fields]
-    tie_asc = direction == "backward"
-    rt = right_time if right_time != left_time else "__rt"
-    r_pdf = (
-        right.toPandas()
-        .rename(columns={right_time: rt})
-        .sort_values(
-            [rt, *right_tiebreak],
-            ascending=[True] + [tie_asc] * len(right_tiebreak),
-            kind="stable",
-        )[[on, rt, *value_cols]]
-        .reset_index(drop=True)
-    )
-    bc = spark.sparkContext.broadcast(r_pdf)
-
-    chunk_rows = ASOF_MERGE_ROWS.cap()
-
-    def run(batches):
-        r = bc.value
-
-        def merge_chunk(chunk):
-            # each left row's match depends only on that row and the full
-            # right side, so chunking the left any way preserves results
-            l_sorted = chunk.sort_values(left_time, kind="stable")
-            if not len(r):
-                out = l_sorted.copy()
-                for c in value_cols:
-                    out[c] = None
-                return out[out_cols]
-            rr = r
-            # Arrow batches and driver toPandas can disagree on exact
-            # dtypes (datetime units, int widths) — merge_asof requires
-            # equal on/by dtypes, so coerce the small side to the batch's
-            if rr[rt].dtype != l_sorted[left_time].dtype or rr[on].dtype != l_sorted[on].dtype:
-                rr = rr.copy()
-                rr[rt] = rr[rt].astype(l_sorted[left_time].dtype)
-                rr[on] = rr[on].astype(l_sorted[on].dtype)
-            out = pd.merge_asof(
-                l_sorted,
-                rr,
-                left_on=left_time,
-                right_on=rt,
-                by=on,
-                direction=direction,
-                allow_exact_matches=True,
-            ).drop(columns=[rt])
-            for c in value_cols:
-                # NaN-poisoned int columns -> typed nulls for Arrow
-                if out[c].isna().any():
-                    out[c] = out[c].astype(object).where(out[c].notna(), None)
-            return out[out_cols]
-
-        # every merge_asof(by=...) call pays a full O(len(right)) pass to
-        # factorize/scan the broadcast side, so merging per 10k-row Arrow
-        # batch multiplies the right-side work by batches-per-task (~15x
-        # overhead when the right is 150k rows). Accumulate batches into
-        # bounded chunks and pay the right-side pass once per chunk; the
-        # bound keeps task memory at O(chunk + right) instead of O(partition).
-        buf: list = []
-        nbuf = 0
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            buf.append(pdf)
-            nbuf += len(pdf)
-            if nbuf >= chunk_rows:
-                yield merge_chunk(pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0])
-                buf, nbuf = [], 0
-        if buf:
-            yield merge_chunk(pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0])
-
-    return left.mapInPandas(run, schema=out_schema)
-
-
 def asof_latest_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered query: each event joined to the user's latest order
     at-or-before the event time. Order times are synthesized into the
@@ -404,7 +145,7 @@ def asof_latest_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return asof_join(
         ev, r, on="user_id", left_time="ts", right_time="ts_r",
-        right_tiebreak=("order_key",), strategy="auto",
+        right_tiebreak=("order_key",),
     ).select("event_id", "user_id", "order_key", "total_c")
 
 
@@ -443,7 +184,7 @@ def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return asof_join(
         purchases, clicks, on="user_id", left_time="ts", right_time="ts_c",
-        right_tiebreak=("click_id",), strategy="auto",
+        right_tiebreak=("click_id",),
     ).select("event_id", "user_id", "click_id", "click_ms")
 
 
@@ -480,7 +221,7 @@ def asof_next_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return asof_join(
         ev, r, on="user_id", left_time="ts", right_time="ts_r",
-        right_tiebreak=("order_key",), direction="forward", strategy="auto",
+        right_tiebreak=("order_key",), direction="forward",
     ).select("event_id", "user_id", "order_key", "total_c")
 
 
@@ -512,7 +253,7 @@ REGISTRY = {
     "asof_latest_order": QuerySpec(
         asof_latest_order,
         _ASOF_SQL,
-        "custom operator: as-of join (gated broadcast / union+window)",
+        "custom operator: as-of join (union+window carry)",
     ),
     "attribution_last_touch": QuerySpec(
         attribution_last_touch, _ATTRIBUTION_SQL, "analytics: last-touch attribution"

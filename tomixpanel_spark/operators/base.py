@@ -330,9 +330,9 @@ GATES: "dict[str, Gate]" = {}
 DECISIONS: "deque[Decision]" = deque(maxlen=256)
 
 # The one memo for every gate's count job (corpus, vocabulary, bigram
-# model, eval set, as-of right side), keyed by (application, gate env,
-# caller key): a counted input is fixed for its sf_dir or plan, so a
-# repeated call runs no job.
+# model, eval set), keyed by (application, gate env, caller key): a
+# counted input is fixed for its sf_dir or plan, so a repeated call runs
+# no job.
 _COUNTS = Lru(256)
 
 

@@ -30,7 +30,7 @@ from functools import lru_cache
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tomixpanel_spark.functions.text import fingerprint, tokens
+from tomixpanel_spark.functions.text import WHITESPACE_CHARS, fingerprint, tokens
 from tomixpanel_spark.operators.base import (
     Gate,
     QuerySpec,
@@ -1375,15 +1375,16 @@ XOR_CHAIN = " ^ ".join(
 )
 
 
+_WS_TABLE = str.maketrans(WHITESPACE_CHARS, " " * len(WHITESPACE_CHARS))
+
+
 def _fold_tokenize(t) -> "list[str]":
     """Driver-fold tokenizer — follows the pinned cross-engine spec
-    (``functions.text.tokens`` / ``textops._py_token_counts``): fold the
+    (``functions.text.tokens`` / ``textops._pa_tokenize_tf``): fold the
     five WHITESPACE_CHARS to ' ', split on the LITERAL space, drop
     empties. Argless ``str.split()`` would additionally split on
     NBSP/\\x1c-\\x1f/\\x85 and silently diverge from the distributed
     plan (and the DuckDB oracle) on non-ASCII whitespace."""
-    from tomixpanel_spark.operators.textops import _WS_TABLE
-
     t = t or ""
     if "\t" in t or "\n" in t or "\r" in t or "\x0b" in t or "\x0c" in t:
         t = t.translate(_WS_TABLE)

@@ -975,29 +975,6 @@ CMS_WIDTH = 256
 
 from tomixpanel_spark.functions.text import WHITESPACE_CHARS as _WS_CHARS
 
-_WS_TABLE = str.maketrans(_WS_CHARS, " " * len(_WS_CHARS))
-
-
-def _py_token_counts(text: str | None) -> "dict[str, int]":
-    """Python mirror of ``functions.text.tokens`` + per-doc counting —
-    the SAME declared spec (fold WHITESPACE_CHARS to ' ', split on the
-    literal space, drop empties; pinned cross-engine by
-    tests/test_properties.py::TestTokenizeSpec and cross-PATH by
-    test_advanced tokenize-parity). The translate pass is guarded by
-    C-level membership scans: corpus text that already has no exotic
-    whitespace (the common case after upstream cleaning) skips the
-    char-map copy entirely."""
-    from collections import Counter
-
-    t = text or ""
-    if (
-        "\t" in t or "\n" in t or "\r" in t or "\x0b" in t or "\x0c" in t
-    ):
-        t = t.translate(_WS_TABLE)
-    c = Counter(t.split(" "))
-    c.pop("", None)
-    return c
-
 
 def tokenize_tf(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Fused Arrow tokenize-and-count: one ``mapInPandas`` stage emitting
@@ -1054,8 +1031,9 @@ def _pa_tokenize_tf(ids, texts):
     replace_substring per whitespace char, split_pattern, list_flatten /
     list_parent_indices, then a native group_by count on (doc, token).
     ~6x the Python Counter loop's throughput on the benchmark corpus;
-    parity with the JVM ``tokens()`` and the Python ``_py_token_counts``
-    is pinned by tests (messy-whitespace inputs included)."""
+    parity with the JVM ``tokens()`` and the driver-fold tokenizer
+    ``dedup._fold_tokenize`` is pinned by tests (messy-whitespace inputs
+    included)."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc

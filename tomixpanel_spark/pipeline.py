@@ -29,6 +29,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 
 from tomixpanel_spark.session import ensure_semantics
+from tomixpanel_spark.sinks.batching import EVENTS_PER_BATCH, PROFILES_PER_BATCH
 from tomixpanel_spark.sinks.http import (
     RECEIPT_SCHEMA,
     HttpSink,
@@ -233,14 +234,14 @@ def run(
         return _run_reverse(spark, config, dest_name, transport, concurrency, save_dir)
     plan = build(spark, config)
     import_url = dopts.get("import_url", MIXPANEL_IMPORT_URL)
-    import_batch = dopts.get("recordsPerBatch", 2000)
+    import_batch = dopts.get("recordsPerBatch", EVENTS_PER_BATCH)
     import_strict = dopts.get("strict", True)
     destinations = (
         # (name, df, url, max_records, strict, to_record); /engage has no
         # strict param (K5)
         ("events", plan.events, import_url, import_batch, import_strict, mp_event_record),
         ("profiles", plan.profiles, dopts.get("engage_url", MIXPANEL_ENGAGE_URL),
-         dopts.get("profilesPerBatch", 2000), False, mp_profile_record),
+         dopts.get("profilesPerBatch", PROFILES_PER_BATCH), False, mp_profile_record),
         ("merges", plan.merges, import_url, import_batch, import_strict, mp_merge_record),
     )
     sends = []

@@ -1,5 +1,5 @@
 """Custom stateful streaming operators: gap-based sessionization, in TWO
-strategies (the ``asof.py`` two-strategy precedent):
+strategies:
 
 * ``sessionize_session_window`` — the SERVING strategy: pure-JVM
   ``session_window`` aggregation. No python workers in the trigger loop;
