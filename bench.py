@@ -30,8 +30,7 @@ from tomixpanel_spark.session import ensure_semantics, session_builder  # noqa: 
 # Queries whose plan is size-adaptive (driver fold / local union-find
 # under a gate, distributed above it). At sf0.1 every corpus sits UNDER
 # its gate, so the headline times the fold paths; the distributed tier
-# re-times these with the gates forced off. asof_latest_order has one
-# plan at every size; it stays listed so the report's keys are stable.
+# re-times these with the gates forced off.
 DISTRIBUTED_TIER = (
     "tfidf_keywords",
     "bm25_topk",
@@ -49,7 +48,6 @@ DISTRIBUTED_TIER = (
     "neardup_keep_best",
     "dedup_keep_list",
     "lsh_keep_list",
-    "asof_latest_order",
     "bigram_lm_score",
     "bpe_merges",
     "bpe_token_count",

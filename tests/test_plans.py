@@ -1405,6 +1405,24 @@ def test_gate_counts_and_decisions_live_in_base():
     assert not offenders, f"gate bookkeeping outside base.py: {sorted(offenders)}"
 
 
+def test_tokenizer_spec_lives_in_functions_text():
+    """The tokenizer spec has one owner: no module under tomixpanel_spark/
+    other than functions/text.py spells the DuckDB fold
+    (``chr(9)||chr(10)``) or uses ``WHITESPACE_CHARS`` — consumers call
+    ``tokens()``, ``SQL_WORDS`` or ``driver_tokens()``."""
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "tomixpanel_spark"
+    offenders = [
+        f"{src.relative_to(pkg).as_posix()}: {needle}"
+        for src in sorted(pkg.rglob("*.py"))
+        if src.relative_to(pkg).as_posix() != "functions/text.py"
+        for needle in ("chr(9)||chr(10)", "WHITESPACE_CHARS")
+        if needle in src.read_text()
+    ]
+    assert not offenders, f"tokenizer spec outside functions/text.py: {offenders}"
+
+
 def test_bigram_lm_paths_agree(spark, monkeypatch):
     """Driver-fold, broadcast-model, and shuffle-join scoring plans are
     ONE operator: identical rows, and each gate actually flips the

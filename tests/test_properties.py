@@ -500,16 +500,14 @@ class TestTokenizeSpec:
         assert got[7] == ["line1", "line2", "line3"]
 
     def test_tokenizer_implementations_agree(self, spark):
-        """THREE implementations of the one declared tokenizer spec —
-        JVM tokens(), the driver folds' Python tokenizer, and the
-        pyarrow batch kernel — must produce identical counts, including
-        on messy whitespace."""
+        """The driver tokenizer ``driver_tokens`` yields, per document and
+        in order, exactly the JVM ``tokens()`` list, and the pyarrow batch
+        kernel ``_pa_tokenize_tf`` counts exactly those tokens — messy
+        whitespace and NULL text included."""
         from collections import Counter
 
         import pandas as pd
 
-        from tomixpanel_spark.functions.text import tokens
-        from tomixpanel_spark.operators.dedup import _fold_tokenize
         from tomixpanel_spark.operators.textops import _pa_tokenize_tf
 
         texts = [
@@ -518,36 +516,23 @@ class TestTokenizeSpec:
             None,
         ]
         ids = list(range(len(texts)))
-        # pyarrow kernel
+        drv = _driver_lists(texts)
+        df = spark.createDataFrame(
+            list(zip(ids, texts)), "doc_id long, text string"
+        )
+        assert drv == _jvm_lists(df, len(texts))
         tbl = _pa_tokenize_tf(pd.Series(ids), pd.Series(texts)).to_pandas()
         arrow_counts = {
             i: dict(zip(g["token"], g["tf"])) for i, g in tbl.groupby("doc_id")
         }
-        # driver-fold tokenizer
-        py_counts = {i: dict(Counter(_fold_tokenize(t))) for i, t in zip(ids, texts)}
-        py_counts = {i: c for i, c in py_counts.items() if c}
-        assert arrow_counts == py_counts
-        # JVM tokens()
-        df = spark.createDataFrame(
-            list(zip(ids, texts)), "doc_id long, text string"
-        )
-        jvm = {
-            r["doc_id"]: dict(Counter(r["t"]))
-            for r in df.select("doc_id", tokens("text").alias("t")).collect()
-            if r["t"]
-        }
-        assert jvm == py_counts
+        assert arrow_counts == {i: dict(Counter(ts)) for i, ts in enumerate(drv) if ts}
 
     def test_substring_fold_tokenizer_keeps_exotic_whitespace(self, spark):
-        """The substring-family driver fold must follow the SAME pinned
-        spec: NBSP / \\x1c-\\x1f / \\x85 / thin-space are NOT separators
-        (argless str.split() would split on them and silently diverge
-        from tokens() and the DuckDB oracle — round-9 advice)."""
-        from collections import Counter
-
-        from tomixpanel_spark.functions.text import tokens
-        from tomixpanel_spark.operators.dedup import _fold_tokenize
-
+        """The driver tokenizer behind the substring / bpe / LM folds
+        follows the SAME pinned spec: NBSP / \\x1c-\\x1f / \\x85 /
+        thin-space are NOT separators (argless str.split() would split on
+        them and silently diverge from tokens() and the DuckDB oracle —
+        round-9 advice)."""
         texts = [
             "a\xa0b c",            # NBSP inside a token
             "x\x1cy\x1dz",          # file/group separators
@@ -557,21 +542,84 @@ class TestTokenizeSpec:
             None,
             "",
         ]
-        ids = list(range(len(texts)))
         df = spark.createDataFrame(
-            list(zip(ids, texts)), "doc_id long, text string"
+            list(enumerate(texts)), "doc_id long, text string"
         )
-        jvm = {
-            r["doc_id"]: r["t"]
-            for r in df.select("doc_id", tokens("text").alias("t")).collect()
-        }
-        for i, t in zip(ids, texts):
-            # tokens() yields SQL NULL on null text; the fold's [] is the
-            # same zero-token stream downstream
-            assert _fold_tokenize(t) == (jvm[i] or []), (i, t)
+        drv = _driver_lists(texts)
+        assert drv == _jvm_lists(df, len(texts))
         # the concrete hazard: NBSP-joined text stays ONE token
-        assert _fold_tokenize("a\xa0b c") == ["a\xa0b", "c"]
-        assert Counter(_fold_tokenize("a\xa0b c")) != Counter(["a", "b", "c"])
+        assert drv[0] == ["a\xa0b", "c"]
+
+    @given(
+        st.lists(
+            st.one_of(
+                st.none(),
+                st.just(""),
+                st.text(
+                    alphabet=list(
+                        "\t\n\r\x0b\x0c \xa0\x1c\x85\u2009\u3000\U0001f600ab"
+                    ),
+                    max_size=24,
+                ),
+            ),
+            min_size=1,
+            max_size=8,
+        )
+    )
+    @settings(max_examples=25, deadline=None)
+    def test_three_engines_agree_on_any_whitespace(self, spark, texts):
+        """One spec, three engines: for any mix of the five folded
+        chars, the space, non-separator whitespace look-alikes (NBSP,
+        \\x1c, NEL, thin and ideographic space), emoji, empty and NULL
+        text, ``driver_tokens``, JVM ``tokens()`` and DuckDB
+        ``SQL_WORDS`` give the same ordered per-document token lists."""
+        import duckdb
+        import pyarrow as pa
+
+        from tomixpanel_spark.functions.text import SQL_WORDS
+
+        drv = _driver_lists(texts)
+        df = spark.createDataFrame(
+            list(enumerate(texts)), "doc_id long, text string"
+        )
+        assert drv == _jvm_lists(df, len(texts))
+        con = duckdb.connect()
+        con.register(
+            "d",
+            pa.table(
+                {
+                    "doc_id": pa.array(range(len(texts)), pa.int64()),
+                    "text": pa.array(texts, pa.string()),
+                }
+            ),
+        )
+        sql = con.execute(
+            f"SELECT {SQL_WORDS} FROM d ORDER BY doc_id"
+        ).fetchall()
+        assert drv == [r[0] or [] for r in sql]
+
+
+def _driver_lists(texts):
+    """Per-document ordered token lists from ``driver_tokens``."""
+    from tomixpanel_spark.functions.text import driver_tokens
+
+    flat, doc = driver_tokens(texts)
+    out = [[] for _ in texts]
+    for t, d in zip(flat.to_pylist(), doc.tolist()):
+        out[d].append(t)
+    return out
+
+
+def _jvm_lists(df, n):
+    """Per-document ordered token lists from JVM ``tokens()``; NULL text
+    (SQL NULL array) is the same zero-token stream as []."""
+    from tomixpanel_spark.functions.text import tokens
+
+    got = {
+        r["doc_id"]: r["t"] or []
+        for r in df.select("doc_id", tokens("text").alias("t")).collect()
+    }
+    return [got[i] for i in range(n)]
 
 
 class TestPngCodec:

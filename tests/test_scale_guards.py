@@ -150,6 +150,10 @@ class TestEmptyInputs:
         for name in (
             "cosine_topk", "cosine_topk_partitioned", "embedding_decontam",
             "ann_lsh", "cagg_store_read", "streaming_cagg_parity",
+            # driver-fold tier (default gates) on an empty corpus
+            "substring_dup_stats", "substring_dup_spans",
+            "substring_dedup_clean", "bpe_merges", "bpe_token_count",
+            "chunk_by_bpe", "bigram_lm_score",
         ):
             out = reg[name].fn(spark, d).toPandas()
             assert len(out) == 0, (name, out)
@@ -185,10 +189,13 @@ class TestEmptyInputs:
         )
         reg = registry()
         for name in ("cosine_topk", "embedding_neardup", "embedding_decontam",
-                     "ann_lsh"):
+                     "ann_lsh", "substring_dup_spans", "bpe_merges",
+                     "chunk_by_bpe"):
             assert len(reg[name].fn(spark, d).toPandas()) == 0, name
         # per-doc text ops keep one row per doc (null counts), like the oracle
-        for name in ("token_count", "substring_dup_stats"):
+        for name in ("token_count", "substring_dup_stats",
+                     "substring_dedup_clean", "bpe_token_count",
+                     "bigram_lm_score"):
             out = reg[name].fn(spark, d).toPandas()
             assert len(out) == 500, name
         for name in ("ann_ivf_q", "ann_pq_q"):

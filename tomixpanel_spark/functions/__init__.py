@@ -12,7 +12,6 @@ from tomixpanel_spark.functions.canonical import (
 )
 from tomixpanel_spark.functions.text import (
     quality_features,
-    shingles,
     tokens,
 )
 from tomixpanel_spark.functions.vectors import cosine_similarity, dot, l2_norm
@@ -22,7 +21,6 @@ __all__ = [
     "normalize_time_ms",
     "normalize_time_ts",
     "tokens",
-    "shingles",
     "quality_features",
     "dot",
     "l2_norm",

@@ -1,8 +1,17 @@
-"""Text-analysis column functions for the training-data-pipeline extensions.
+"""Text-analysis column functions for the training-data-pipeline extensions,
+and the ONE owner of the declared tokenizer spec for all three engines:
+fold ``WHITESPACE_CHARS`` to ' ', split on the literal space, drop empty
+tokens. Each engine has exactly one implementation, and every consumer
+calls it:
 
-All pure Catalyst expressions (split / transform / aggregate / higher-order
-functions) — no Python in the hot path, so these run inside whole-stage
-codegen and scale linearly with executors.
+* JVM — ``tokens()``, a Catalyst Column;
+* DuckDB — ``SQL_NORM`` / ``SQL_WORDS``, interpolated by every oracle;
+* driver — ``driver_tokens()``, vectorized pyarrow kernels shared by the
+  driver folds and the ``tokenize_tf`` batch body.
+
+The Column functions are pure Catalyst expressions (split / transform /
+aggregate / higher-order functions) — no Python in the hot path, so these
+run inside whole-stage codegen and scale linearly with executors.
 """
 
 from __future__ import annotations
@@ -18,21 +27,27 @@ from pyspark.sql import functions as F
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it")
 
 
-# ASCII whitespace the tokenizer folds to ' ' before splitting. Kept as a
-# pinned constant because the DuckDB oracles mirror it char-for-char
-# (chr(9)||chr(10)||chr(13)||chr(11)||chr(12)).
+# ASCII whitespace the tokenizer folds to ' ' before splitting.
 WHITESPACE_CHARS = "\t\n\r\x0b\x0c"
+
+# The DuckDB spelling of the spec over the column `text`; oracles interpolate it.
+SQL_NORM = (
+    "translate(text, "
+    + "||".join(f"chr({ord(c)})" for c in WHITESPACE_CHARS)
+    + f", '{' ' * len(WHITESPACE_CHARS)}')"
+)
+SQL_WORDS = f"list_filter(string_split({SQL_NORM}, ' '), t -> t <> '')"
 
 
 def tokens(text: Column | str) -> Column:
     """Whitespace tokenization; drops empty tokens from repeated separators.
 
-    One declared spec for BOTH engines: fold ASCII whitespace
+    The JVM implementation of the module's spec: fold ASCII whitespace
     (tab/LF/CR/VT/FF) to ' ' with ``translate`` — a branch-free char map,
     no regex engine in the hot path — then split on the literal single
-    space and filter empties. The DuckDB oracles declare the identical
+    space and filter empties. ``SQL_WORDS`` is the identical
     ``translate`` + ``string_split`` pipeline, so multi-line corpora
-    tokenize correctly in both engines rather than the engine being bent
+    tokenize correctly in every engine rather than the engine being bent
     to a single-space oracle (round-7 advice).
 
     The by-name form memoizes: the returned Column is a constant
@@ -56,34 +71,26 @@ def _tokens_col(c: Column) -> Column:
     )
 
 
-def bpe_ish_tokens(text: Column | str) -> Column:
-    """BPE-ish sub-word split: word pieces, numbers, and punctuation runs.
+def driver_tokens(texts):
+    """The spec on the driver, entirely in pyarrow C++ kernels:
+    ``texts`` (a pandas Series or any sequence pyarrow reads; nulls
+    tokenize to nothing) -> (flat string array of every token in document
+    order, int64 numpy array of each token's 0-based document index).
+    Consumers map per-token values through the dictionary
+    (``pc.dictionary_encode(flat)``, then ``values[enc.indices]``) and
+    per-document values through ``bincount`` of the index — never per
+    token in Python."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    A regex approximation of byte-pair tokenizer pre-splitting (word /
-    number / punctuation boundaries), good enough for token-count budgeting.
-    """
-    c = F.col(text) if isinstance(text, str) else text
-    return F.filter(
-        F.split(c, r"(?=[^A-Za-z0-9])|(?<=[^A-Za-z0-9])"),
-        lambda t: (t != "") & (t != " "),
-    )
-
-
-def shingles(text: Column | str, n: int = 3) -> Column:
-    """Distinct n-gram word shingles ('w1 w2 w3' strings) of a document.
-
-    Built with sequence+transform over the token array (no explode needed at
-    the call site; callers explode when they want shingle rows).
-    """
-    toks = tokens(text)
-    # positions 0 .. size-n (inclusive); empty array when doc shorter than n.
-    idx = F.when(
-        F.size(toks) >= n, F.sequence(F.lit(0), F.size(toks) - n)
-    ).otherwise(F.array().cast("array<int>"))
-    gram = lambda i: F.concat_ws(  # noqa: E731
-        " ", *[F.element_at(toks, i + k + 1) for k in range(n)]
-    )
-    return F.array_distinct(F.transform(idx, gram))
+    arr = pc.fill_null(pa.array(texts, type=pa.string(), from_pandas=True), "")
+    for ch in WHITESPACE_CHARS:
+        arr = pc.replace_substring(arr, ch, " ")
+    toks = pc.split_pattern(arr, " ")
+    flat = pc.list_flatten(toks)
+    mask = pc.not_equal(flat, "")
+    doc = pc.filter(pc.list_parent_indices(toks), mask)
+    return pc.filter(flat, mask), doc.to_numpy()
 
 
 def adjacent_pairs(arr: Column, left: str = "l", right: str = "r") -> Column:
@@ -106,7 +113,7 @@ def adjacent_pairs(arr: Column, left: str = "l", right: str = "r") -> Column:
 def bigrams(words: Column) -> Column:
     """All adjacent word bigrams ('w1 w2' strings) from a MATERIALIZED token
     array column, with repeats (repetition measurement needs multiplicity,
-    unlike shingles' array_distinct). Takes the array, not raw text: a
+    unlike the dedup shingles' array_distinct). Takes the array, not raw text: a
     transform(idx, element_at(tokens(text), i)) formulation re-runs the
     regex split per element — quadratic per document. zip_with over two
     slices is linear. Empty array for docs shorter than 2 tokens."""

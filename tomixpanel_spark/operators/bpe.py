@@ -66,8 +66,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tomixpanel_spark.functions.text import SQL_WORDS, driver_tokens
 from tomixpanel_spark.operators.base import Gate, QuerySpec, stage_checkpoint, table
-from tomixpanel_spark.operators.textops import TFIDF_BCAST_VOCAB, _under_fold_cap
+from tomixpanel_spark.operators.textops import (
+    TFIDF_BCAST_VOCAB,
+    _under_fold_cap,
+    docs_pdf,
+)
 
 N_MERGES = 6
 
@@ -239,19 +244,23 @@ def _sennrich_loop(wc: dict, n_merges: int):
     return rows, vocab
 
 
-def _fold_train(docs: DataFrame, n_merges: int):
-    """Corpus-fold path (corpus under TOMIX_TFIDF_DRIVER_FOLD_DOCS):
-    tokenize the driver-collected docs, then the Sennrich loop."""
-    from collections import Counter
+def _fold_train(flat, n_merges: int):
+    """Corpus-fold path (corpus under TOMIX_TFIDF_DRIVER_FOLD_DOCS): the
+    Sennrich loop over the word counts of the driver token stream
+    (``driver_tokens``' flat tokens, dictionary-encoded once). Returns
+    the merge rows, the final word -> symbol-list vocab, and every
+    token's final piece count — mapped through the dictionary, never
+    per token in Python."""
+    import numpy as np
+    import pyarrow.compute as pc
 
-    from tomixpanel_spark.operators.dedup import _fold_tokenize
-    from tomixpanel_spark.operators.textops import docs_pdf
-
-    pdf = docs_pdf(docs)
-    wc: Counter = Counter()
-    for t in pdf["text"]:
-        wc.update(_fold_tokenize(t))
-    return _sennrich_loop(wc, n_merges)
+    enc = pc.dictionary_encode(flat)
+    idx = enc.indices.to_numpy()
+    words = enc.dictionary.to_pylist()
+    freq = np.bincount(idx, minlength=len(words)).tolist()
+    rows, vocab = _sennrich_loop(dict(zip(words, freq)), n_merges)
+    k = np.array([len(vocab[w]) for w in words], dtype=np.int64)
+    return rows, vocab, k[idx]
 
 
 def _train_distributed(
@@ -332,7 +341,8 @@ def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
     if _under_fold_cap(spark, sf_dir, docs):
-        rows, _vocab = _fold_train(docs, N_MERGES)
+        flat, _doc = driver_tokens(docs_pdf(docs)["text"])
+        rows, _vocab, _k = _fold_train(flat, N_MERGES)
         return spark.createDataFrame(rows, schema=_OUT_SCHEMA)
     rows, _final = _train_distributed(spark, docs, N_MERGES, need_final=False)
     return spark.createDataFrame(rows, schema=_OUT_SCHEMA)
@@ -374,22 +384,16 @@ def bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
     schema = "doc_id long, n_words long, n_bpe_tokens long"
     if _under_fold_cap(spark, sf_dir, docs):
-        from tomixpanel_spark.operators.dedup import _fold_tokenize
-        from tomixpanel_spark.operators.textops import docs_pdf
+        import numpy as np
 
-        _rows, vocab = _fold_train(docs, N_MERGES)
         pdf = docs_pdf(docs)
-        out = [
-            (
-                int(doc_id),
-                len(ws),
-                sum(len(vocab[w]) for w in ws),
-            )
-            for doc_id, ws in (
-                (d, _fold_tokenize(t))
-                for d, t in zip(pdf["doc_id"], pdf["text"])
-            )
-        ]
+        flat, doc = driver_tokens(pdf["text"])
+        _rows, _vocab, k = _fold_train(flat, N_MERGES)
+        n = len(pdf)
+        out = pdf[["doc_id"]].assign(
+            n_words=np.bincount(doc, minlength=n),
+            n_bpe_tokens=np.bincount(doc, weights=k, minlength=n).astype(np.int64),
+        )
         return spark.createDataFrame(out, schema=schema)
     wl = _distributed_vocab(spark, sf_dir, docs).select(
         "word", F.size("syms").cast("bigint").alias("k")
@@ -451,7 +455,8 @@ def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         # sf0.1), and createDataFrame over a driver-built piece list
         # measured 3+ s of row serialization alone. Only the VOCAB
         # (Heaps-sublinear) crosses the driver boundary.
-        _rows, vocab = _fold_train(docs, N_MERGES)
+        flat, _doc = driver_tokens(docs_pdf(docs)["text"])
+        _rows, vocab, _k = _fold_train(flat, N_MERGES)
         wl = F.broadcast(
             spark.createDataFrame(
                 [(w, syms) for w, syms in vocab.items()],
@@ -530,18 +535,20 @@ def chunk_by_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
     if _under_fold_cap(spark, sf_dir, docs):
-        from tomixpanel_spark.operators.dedup import _fold_tokenize
-        from tomixpanel_spark.operators.textops import docs_pdf
+        import numpy as np
 
-        _rows, vocab = _fold_train(docs, N_MERGES)
         pdf = docs_pdf(docs)
+        flat, doc = driver_tokens(pdf["text"])
+        _rows, _vocab, k = _fold_train(flat, N_MERGES)
+        words, ks = flat.to_pylist(), k.tolist()
+        ends = np.cumsum(np.bincount(doc, minlength=len(pdf))).tolist()
         out = []
-        for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-            ws = [(w, len(vocab[w])) for w in _fold_tokenize(t)]
-            for ci, (text, nw, nb) in enumerate(
-                _pack_words(ws, CHUNK_BPE_BUDGET)
-            ):
-                out.append((int(doc_id), ci, text, nw, nb))
+        start = 0
+        for doc_id, end in zip(pdf["doc_id"].tolist(), ends):
+            ws = zip(words[start:end], ks[start:end])
+            for ci, (text, nw, nb) in enumerate(_pack_words(ws, CHUNK_BPE_BUDGET)):
+                out.append((doc_id, ci, text, nw, nb))
+            start = end
         return spark.createDataFrame(out, schema=out_schema)
     wl = _distributed_vocab(spark, sf_dir, docs).select(
         "word", F.size("syms").cast("bigint").alias("k")
@@ -627,9 +634,7 @@ def _bpe_oracle_sql(n_merges: int = N_MERGES, emit: str = "merges") -> str:
         "WITH RECURSIVE words0 AS MATERIALIZED (",
         "  SELECT word, CAST(COUNT(*) AS BIGINT) AS freq,",
         "         regexp_extract_all(word, '[\\s\\S]') AS syms",
-        "  FROM (SELECT unnest(list_filter(string_split(",
-        "          translate(text, chr(9)||chr(10)||chr(13)||chr(11)||chr(12),",
-        "          '     '), ' '), t -> t <> '')) AS word FROM documents)",
+        f"  FROM (SELECT unnest({SQL_WORDS}) AS word FROM documents)",
         "  GROUP BY word)",
     ]
     for i in range(1, n_merges + 1):
@@ -663,11 +668,9 @@ words{i} AS MATERIALIZED (
   WHERE k.pos > len(w.syms))"""
         parts.append(p)
     if emit in ("doc_counts", "pieces", "chunks"):
-        parts.append(""", docw AS MATERIALIZED (
+        parts.append(f""", docw AS MATERIALIZED (
   SELECT doc_id, j AS pos, words[j] AS word
-  FROM (SELECT doc_id, list_filter(string_split(
-          translate(text, chr(9)||chr(10)||chr(13)||chr(11)||chr(12),
-          '     '), ' '), t -> t <> '') AS words FROM documents),
+  FROM (SELECT doc_id, {SQL_WORDS} AS words FROM documents),
        UNNEST(range(1, len(words) + 1)) AS t(j))""")
     if emit == "doc_counts":
         parts.append(f""", perdoc AS MATERIALIZED (

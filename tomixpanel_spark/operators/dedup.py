@@ -30,7 +30,12 @@ from functools import lru_cache
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tomixpanel_spark.functions.text import WHITESPACE_CHARS, fingerprint, tokens
+from tomixpanel_spark.functions.text import (
+    SQL_WORDS,
+    driver_tokens,
+    fingerprint,
+    tokens,
+)
 from tomixpanel_spark.operators.base import (
     Gate,
     QuerySpec,
@@ -49,16 +54,12 @@ N_BANDS = 2  # 4 hashes per band
 JACCARD_THRESHOLD = 0.8
 SIMHASH_BITS = 32
 
-# Oracle mirror of functions.text.tokens(): whitespace folded to ' '
-# (same chars as text.WHITESPACE_CHARS), literal-space split, empties out.
-_SQL_NORM = "translate(text, chr(9)||chr(10)||chr(13)||chr(11)||chr(12), '     ')"
-_SQL_WORDS = f"list_filter(string_split({_SQL_NORM}, ' '), t -> t <> '')"
 _SQL_SHINGLES = (
     "list_distinct([array_to_string(words[i:i+2], ' ') FOR i IN range(1, len(words) - 1)])"
 )
 _SQL_SHINGLE_ROWS = f"""
   SELECT doc_id, unnest({_SQL_SHINGLES}) AS sh
-  FROM (SELECT doc_id, {_SQL_WORDS} AS words FROM documents)
+  FROM (SELECT doc_id, {SQL_WORDS} AS words FROM documents)
 """
 
 
@@ -873,7 +874,7 @@ _SIMHASH_RECON = " + ".join(
 _SIMHASH_SQL = f"""
 WITH t AS (
   SELECT doc_id, CAST('0x' || substr(md5(token), 1, 8) AS BIGINT) AS h
-  FROM (SELECT doc_id, unnest({_SQL_WORDS}) AS token FROM documents)),
+  FROM (SELECT doc_id, unnest({SQL_WORDS}) AS token FROM documents)),
 v AS (SELECT doc_id, {_SIMHASH_VOTES} FROM t GROUP BY doc_id)
 SELECT doc_id, CAST({_SIMHASH_RECON} AS BIGINT) AS simhash FROM v
 """
@@ -1059,7 +1060,7 @@ _SIMHASH_BANDS_SQL = " UNION ALL ".join(
 _SIMHASH_PAIRS_SQL = f"""
 WITH t AS (
   SELECT doc_id, CAST('0x' || substr(md5(token), 1, 8) AS BIGINT) AS h
-  FROM (SELECT doc_id, unnest({_SQL_WORDS}) AS token FROM documents)),
+  FROM (SELECT doc_id, unnest({SQL_WORDS}) AS token FROM documents)),
 v AS (SELECT doc_id, {_SIMHASH_VOTES} FROM t GROUP BY doc_id),
 sig AS (SELECT doc_id, CAST({_SIMHASH_RECON} AS BIGINT) AS simhash FROM v),
 bands AS ({_SIMHASH_BANDS_SQL})
@@ -1293,7 +1294,7 @@ walk(node, reach) AS (
   SELECT w.node, s.dst FROM walk w JOIN sym s ON s.src = w.reach),
 comp AS (SELECT node, min(reach) AS component FROM walk GROUP BY node),
 sized AS (
-  SELECT doc_id AS node, CAST(len({_SQL_WORDS}) AS BIGINT) AS n_tokens
+  SELECT doc_id AS node, CAST(len({SQL_WORDS}) AS BIGINT) AS n_tokens
   FROM documents)
 SELECT CAST(-max(struct_pack(t := s.n_tokens, nid := -c.node)).nid AS BIGINT) AS keep_doc_id,
        CAST(max(struct_pack(t := s.n_tokens, nid := -c.node)).t AS BIGINT) AS keep_n_tokens,
@@ -1375,62 +1376,40 @@ XOR_CHAIN = " ^ ".join(
 )
 
 
-_WS_TABLE = str.maketrans(WHITESPACE_CHARS, " " * len(WHITESPACE_CHARS))
-
-
-def _fold_tokenize(t) -> "list[str]":
-    """Driver-fold tokenizer — follows the pinned cross-engine spec
-    (``functions.text.tokens`` / ``textops._pa_tokenize_tf``): fold the
-    five WHITESPACE_CHARS to ' ', split on the LITERAL space, drop
-    empties. Argless ``str.split()`` would additionally split on
-    NBSP/\\x1c-\\x1f/\\x85 and silently diverge from the distributed
-    plan (and the DuckDB oracle) on non-ASCII whitespace."""
-    t = t or ""
-    if "\t" in t or "\n" in t or "\r" in t or "\x0b" in t or "\x0c" in t:
-        t = t.translate(_WS_TABLE)
-    return [x for x in t.split(" ") if x]
-
-
-def _substring_dup_window_positions(pdf):
-    """Shared fold core for the exact-substring family: tokenize the
-    collected docs, window-hash the CONCATENATED token stream with the
-    rotate-XOR combination (factorized token codes -> random 64-bit
-    values; windows crossing a doc boundary mask out), and return the
-    CROSS-DOC duplicated windows as (doc index, 0-based start position)
-    arrays plus per-doc ids/lengths. Stats counts them; spans merges
-    them into islands."""
+def _substring_dup_window_positions(flat, doc, n_docs):
+    """Shared fold core for the exact-substring family: window-hash the
+    CONCATENATED driver token stream (``driver_tokens``' flat tokens and
+    doc indices) with the rotate-XOR combination (dictionary-encoded
+    token codes -> random 64-bit values; windows crossing a doc boundary
+    mask out), and return per-doc token counts plus the CROSS-DOC
+    duplicated windows as (doc index, 0-based start position) arrays.
+    Stats counts them; spans merges them into islands; clean cuts them
+    out."""
     import numpy as np
-    import pandas as pd
+    import pyarrow.compute as pc
 
-    doc_ids = pdf["doc_id"].to_numpy(np.int64)
-
-    tok_lists = [_fold_tokenize(t) for t in pdf["text"]]
-    lens = np.array([len(ts) for ts in tok_lists], dtype=np.int64)
+    lens = np.bincount(doc, minlength=n_docs)
     empty = np.array([], dtype=np.int64)
-    all_toks = [t for ts in tok_lists for t in ts]
-    if not all_toks or int(lens.max()) < SUBSTR_WIN:
-        return doc_ids, lens, empty, empty
-    codes, uniq = pd.factorize(pd.Series(all_toks), sort=False)
+    if not len(flat) or int(lens.max()) < SUBSTR_WIN:
+        return lens, empty, empty
+    enc = pc.dictionary_encode(flat)
     # deterministic 64-bit value per distinct token (collision-free at
     # the token level by construction; window-level collisions are the
     # same ~1e-9 risk the distributed xxhash64 path carries)
     vals = np.random.default_rng(0x5EED).integers(
-        0, 2**63 - 1, size=len(uniq), dtype=np.int64
+        0, 2**63 - 1, size=len(enc.dictionary), dtype=np.int64
     )
-    h = vals[codes]
-    didx = np.repeat(np.arange(len(pdf), dtype=np.int64), lens)
+    h = vals[enc.indices.to_numpy()]
     offsets = np.concatenate(([0], np.cumsum(lens)[:-1]))
     W = len(h) - (SUBSTR_WIN - 1)
-    if W <= 0:
-        return doc_ids, lens, empty, empty
     wh = h[:W].copy()
     for k in range(1, SUBSTR_WIN):
         r = (7 * k) % 64
         x = h[k : k + W].astype(np.uint64)
         wh ^= ((x << np.uint64(r)) | (x >> np.uint64(64 - r))).astype(np.int64)
-    keep_idx = np.flatnonzero(didx[:W] == didx[SUBSTR_WIN - 1 :])
+    keep_idx = np.flatnonzero(doc[:W] == doc[SUBSTR_WIN - 1 :])
     wh = wh[keep_idx]
-    wdoc = didx[keep_idx]
+    wdoc = doc[keep_idx]
     wpos = keep_idx - offsets[wdoc]  # 0-based start within the doc
     order = np.argsort(wh, kind="stable")
     ws, ds = wh[order], wdoc[order]
@@ -1440,13 +1419,13 @@ def _substring_dup_window_positions(pdf):
     dmin = np.minimum.reduceat(ds, starts)
     dmax = np.maximum.reduceat(ds, starts)
     dup_rows = order[(dmin != dmax)[grp]]
-    return doc_ids, lens, wdoc[dup_rows], wpos[dup_rows]
+    return lens, wdoc[dup_rows], wpos[dup_rows]
 
 
 def _substring_fold(docs: DataFrame) -> "pd.DataFrame":
     """Driver-fold exact-substring stats: one Arrow transfer of the raw
     documents, then the whole window pipeline vectorized over the
-    CONCATENATED corpus token stream — factorized token codes map to
+    CONCATENATED corpus token stream — dictionary-encoded token codes map to
     random 64-bit values, window keys are the same rotate-XOR combination
     the distributed plan computes, and windows crossing a document
     boundary mask out. At bench scale the distributed plan is ~5 stages
@@ -1467,14 +1446,15 @@ def _substring_fold(docs: DataFrame) -> "pd.DataFrame":
                 "dup_frac_e6": np.array([], dtype=np.int64),
             }
         )
-    doc_ids, lens, dup_doc, dup_pos = _substring_dup_window_positions(pdf)
+    flat, doc = driver_tokens(pdf["text"])
+    lens, dup_doc, dup_pos = _substring_dup_window_positions(flat, doc, len(pdf))
     n_windows = np.maximum(lens - (SUBSTR_WIN - 1), 0)
     n_dup = np.zeros(len(pdf), dtype=np.int64)
     np.add.at(n_dup, dup_doc, 1)
     frac = np.where(n_windows > 0, n_dup * 1_000_000 // np.maximum(n_windows, 1), 0)
     return pd.DataFrame(
         {
-            "doc_id": doc_ids,
+            "doc_id": pdf["doc_id"].to_numpy(np.int64),
             "n_windows": n_windows,
             "n_dup_windows": n_dup,
             "dup_frac_e6": frac.astype(np.int64),
@@ -1521,10 +1501,9 @@ def substring_dup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("w").alias("n"),
         F.expr("transform(w, t -> xxhash64(t))").alias("th"),
     )
-    # guard short docs (the shingles() pattern, functions/text.py): a doc
-    # under SUBSTR_WIN tokens has ZERO windows — unguarded,
-    # sequence(1, 0) is the DESCENDING [1, 0] and per-window element_at
-    # reads would go out of range
+    # guard short docs: a doc under SUBSTR_WIN tokens has ZERO windows —
+    # unguarded, sequence(1, 0) is the DESCENDING [1, 0] and per-window
+    # element_at reads would go out of range
     win_hash = F.expr(
         f"CASE WHEN n >= {SUBSTR_WIN} THEN "
         f"transform(sequence(1, n - {SUBSTR_WIN - 1}), i -> {XOR_CHAIN}) "
@@ -1566,7 +1545,7 @@ def substring_dup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SUBSTR_DUP_SQL = f"""
-WITH toks AS (SELECT doc_id, {_SQL_WORDS} AS w FROM documents),
+WITH toks AS (SELECT doc_id, {SQL_WORDS} AS w FROM documents),
 wins AS (
   SELECT doc_id, hash(array_to_string(w[i:i+{SUBSTR_WIN - 1}], ' ')) AS wh
   FROM toks, unnest(generate_series(1, greatest(len(w) - {SUBSTR_WIN - 1}, 0))) AS t(i)),
@@ -1608,7 +1587,8 @@ def _substring_spans_fold(docs: DataFrame) -> "pd.DataFrame":
     )
     if not len(pdf):
         return empty
-    doc_ids, _lens, dup_doc, dup_pos = _substring_dup_window_positions(pdf)
+    flat, doc = driver_tokens(pdf["text"])
+    _lens, dup_doc, dup_pos = _substring_dup_window_positions(flat, doc, len(pdf))
     if not len(dup_doc):
         return empty
     order = np.lexsort((dup_pos, dup_doc))
@@ -1622,7 +1602,7 @@ def _substring_spans_fold(docs: DataFrame) -> "pd.DataFrame":
     span_end = np.maximum.reduceat(p, starts) + SUBSTR_WIN
     return pd.DataFrame(
         {
-            "doc_id": doc_ids[d[starts]],
+            "doc_id": pdf["doc_id"].to_numpy(np.int64)[d[starts]],
             "span_start": span_start,
             "span_end": span_end,
             "span_tokens": span_end - span_start + 1,
@@ -1695,7 +1675,7 @@ def substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SUBSTR_SPANS_SQL = f"""
-WITH toks AS (SELECT doc_id, {_SQL_WORDS} AS w FROM documents),
+WITH toks AS (SELECT doc_id, {SQL_WORDS} AS w FROM documents),
 wins AS (
   SELECT doc_id, i, array_to_string(w[i:i+{SUBSTR_WIN - 1}], ' ') AS wt
   FROM toks, unnest(generate_series(1, greatest(len(w) - {SUBSTR_WIN - 1}, 0))) AS t(i)),
@@ -1724,13 +1704,17 @@ GROUP BY doc_id, island
 
 
 def _substring_clean_fold(docs: DataFrame) -> "pd.DataFrame":
-    """Driver-fold cleaned-corpus reconstruction: spans from the shared
-    core, per-doc coverage mask via one scatter over token positions,
-    cleaned text joined from the kept tokens."""
+    """Driver-fold cleaned-corpus reconstruction over ONE tokenization:
+    duplicated windows from the shared core mark their tokens in a
+    coverage count over the flat stream (+1 at each window start, -1
+    one past its end, running sum), and the kept tokens join per doc in
+    one pyarrow ``binary_join``."""
     import hashlib
 
     import numpy as np
     import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     from tomixpanel_spark.operators.textops import docs_pdf
 
@@ -1739,23 +1723,32 @@ def _substring_clean_fold(docs: DataFrame) -> "pd.DataFrame":
         return pd.DataFrame(
             {"doc_id": [], "kept_tokens": [], "removed_tokens": [], "cleaned_fp": []}
         )
-    doc_ids, lens, dup_doc, dup_pos = _substring_dup_window_positions(pdf)
-    tok_lists = [_fold_tokenize(t) for t in pdf["text"]]
-    covered = [np.zeros(n, dtype=bool) for n in lens]
-    for di, p in zip(dup_doc, dup_pos):
-        covered[di][p : p + SUBSTR_WIN] = True
-    kept_n, removed_n, fps = [], [], []
-    for toks_i, cov in zip(tok_lists, covered):
-        kept = [t for t, c in zip(toks_i, cov) if not c]
-        kept_n.append(len(kept))
-        removed_n.append(len(toks_i) - len(kept))
-        fps.append(hashlib.md5(" ".join(kept).encode("utf-8")).hexdigest())
+    flat, doc = driver_tokens(pdf["text"])
+    lens, dup_doc, dup_pos = _substring_dup_window_positions(flat, doc, len(pdf))
+    n = len(flat)
+    starts = np.concatenate(([0], np.cumsum(lens)[:-1]))[dup_doc] + dup_pos
+    depth = np.cumsum(
+        np.bincount(starts, minlength=n + 1)
+        - np.bincount(starts + SUBSTR_WIN, minlength=n + 1)
+    )[:n]
+    keep = depth == 0
+    kept_n = np.bincount(doc[keep], minlength=len(pdf))
+    kept_text = pc.binary_join(
+        pa.LargeListArray.from_arrays(
+            pa.array(np.concatenate(([0], np.cumsum(kept_n))), type=pa.int64()),
+            pc.filter(flat, pa.array(keep)),
+        ),
+        " ",
+    )
     return pd.DataFrame(
         {
-            "doc_id": doc_ids,
-            "kept_tokens": np.array(kept_n, dtype=np.int64),
-            "removed_tokens": np.array(removed_n, dtype=np.int64),
-            "cleaned_fp": fps,
+            "doc_id": pdf["doc_id"].to_numpy(np.int64),
+            "kept_tokens": kept_n.astype(np.int64),
+            "removed_tokens": (lens - kept_n).astype(np.int64),
+            "cleaned_fp": [
+                hashlib.md5(t.encode("utf-8")).hexdigest()
+                for t in kept_text.to_pylist()
+            ],
         }
     )
 
@@ -1807,7 +1800,7 @@ def substring_dedup_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SUBSTR_CLEAN_SQL = f"""
-WITH toks AS (SELECT doc_id, {_SQL_WORDS} AS w FROM documents),
+WITH toks AS (SELECT doc_id, {SQL_WORDS} AS w FROM documents),
 wins AS (
   SELECT doc_id, i, array_to_string(w[i:i+{SUBSTR_WIN - 1}], ' ') AS wt
   FROM toks, unnest(generate_series(1, greatest(len(w) - {SUBSTR_WIN - 1}, 0))) AS t(i)),

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tomixpanel_spark.operators.base import QuerySpec, stage_checkpoint, table
-from tomixpanel_spark.functions.text import tokens
+from tomixpanel_spark.functions.text import SQL_WORDS, tokens
 
 N_SHARDS = 8
 # tokens per size class: narrow buckets bound the within-bucket size
@@ -78,9 +78,7 @@ def balanced_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _BALANCED_SHARDS_SQL = f"""
 WITH sized AS (
-  SELECT doc_id, CAST(len(list_filter(string_split(
-           translate(text, chr(9)||chr(10)||chr(13)||chr(11)||chr(12), '     '),
-           ' '), t -> t <> '')) AS BIGINT) AS n_tokens
+  SELECT doc_id, CAST(len({SQL_WORDS}) AS BIGINT) AS n_tokens
   FROM documents)
 SELECT doc_id, n_tokens,
   CAST((row_number() OVER (PARTITION BY CAST(floor(n_tokens / {SIZE_BUCKET_WIDTH}.0) AS BIGINT)

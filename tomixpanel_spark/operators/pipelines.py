@@ -35,7 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from tomixpanel_spark.functions.text import fingerprint, lang_guess, tokens
+from tomixpanel_spark.functions.text import SQL_WORDS, fingerprint, lang_guess, tokens
 from tomixpanel_spark.operators.base import (
     QuerySpec,
     ensure_parallel,
@@ -45,7 +45,6 @@ from tomixpanel_spark.operators.base import (
 from tomixpanel_spark.operators.textops import (
     _DSIR_SQL,
     _SQL_STOPSET,
-    _SQL_WORDS,
     GOPHER_MAX_DUP_WORD,
     GOPHER_MAX_TOP_BIGRAM,
     GOPHER_MIN_WORDS,
@@ -244,7 +243,7 @@ top{ng} AS (
     )
     return f"""
 WITH t AS (
-  SELECT doc_id, {_SQL_WORDS} AS words,
+  SELECT doc_id, {SQL_WORDS} AS words,
     CAST(length(text) AS BIGINT) AS n_chars,
     md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
   FROM documents),
@@ -789,7 +788,7 @@ walk(node, reach) AS (
   SELECT w.node, s.dst FROM walk w JOIN sym s ON s.src = w.reach),
 comp AS (SELECT node, MIN(reach) AS component FROM walk GROUP BY node),
 sized AS (
-  SELECT doc_id AS node, CAST(len({_SQL_WORDS}) AS BIGINT) AS n_tokens
+  SELECT doc_id AS node, CAST(len({SQL_WORDS}) AS BIGINT) AS n_tokens
   FROM surv),
 winners AS (
   SELECT c.component,

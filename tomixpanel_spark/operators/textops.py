@@ -20,7 +20,9 @@ if TYPE_CHECKING:  # typing only — pandas imports lazily inside UDF bodies
 
 from tomixpanel_spark.functions.text import (
     PII_PASSES,
+    SQL_WORDS,
     STOPWORDS,
+    driver_tokens,
     fingerprint,
     lang_guess,
     pii_counts,
@@ -38,11 +40,6 @@ from tomixpanel_spark.operators.base import (
     table,
 )
 
-# DuckDB-side mirror of functions.text.tokens(): fold ASCII whitespace to
-# ' ' (translate — same chars as text.WHITESPACE_CHARS), split on the
-# literal space, drop empties. One spec, two engines.
-_SQL_NORM = "translate(text, chr(9)||chr(10)||chr(13)||chr(11)||chr(12), '     ')"
-_SQL_WORDS = f"list_filter(string_split({_SQL_NORM}, ' '), t -> t <> '')"
 _SQL_STOPSET = "['" + "', '".join(STOPWORDS) + "']"
 
 
@@ -55,7 +52,7 @@ def explode_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _EXPLODE_HITS_SQL = f"""
-SELECT doc_id, unnest({_SQL_WORDS}) AS token FROM documents
+SELECT doc_id, unnest({SQL_WORDS}) AS token FROM documents
 """
 
 
@@ -73,7 +70,7 @@ def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _TOKEN_COUNT_SQL = f"""
 SELECT doc_id,
-  CAST(len({_SQL_WORDS}) AS BIGINT) AS n_ws_tokens,
+  CAST(len({SQL_WORDS}) AS BIGINT) AS n_ws_tokens,
   CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT) AS n_bpe_tokens
 FROM documents
 """
@@ -91,7 +88,7 @@ def word_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _WORD_FREQ_SQL = f"""
 SELECT token, COUNT(*) AS cnt
-FROM (SELECT unnest({_SQL_WORDS}) AS token FROM documents)
+FROM (SELECT unnest({SQL_WORDS}) AS token FROM documents)
 GROUP BY token
 """
 
@@ -106,7 +103,7 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LANG_ID_SQL = f"""
 SELECT doc_id,
-  CASE WHEN len(list_filter(({_SQL_WORDS})[1:40],
+  CASE WHEN len(list_filter(({SQL_WORDS})[1:40],
                             t -> list_contains({_SQL_STOPSET}, lower(t)))) >= 2
        THEN 'en' ELSE 'unknown' END AS lang_guess
 FROM documents
@@ -123,7 +120,7 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 _QUALITY_SCORE_SQL = f"""
 WITH t AS (
   SELECT doc_id, text,
-    {_SQL_WORDS} AS words,
+    {SQL_WORDS} AS words,
     CAST(length(text) AS BIGINT) AS n_chars
   FROM documents)
 SELECT doc_id,
@@ -183,7 +180,7 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 _STRATIFIED_SAMPLE_SQL = f"""
 WITH d AS (
   SELECT doc_id,
-    CASE WHEN len(list_filter(({_SQL_WORDS})[1:40],
+    CASE WHEN len(list_filter(({SQL_WORDS})[1:40],
                               t -> list_contains({_SQL_STOPSET}, lower(t)))) >= 2
          THEN 'en' ELSE 'unknown' END AS bucket,
     CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS BIGINT) % 10000 AS h
@@ -230,7 +227,7 @@ def mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MIXTURE_REBALANCE_SQL = f"""
 WITH d AS (
   SELECT doc_id,
-    CASE WHEN len(list_filter(({_SQL_WORDS})[1:40],
+    CASE WHEN len(list_filter(({SQL_WORDS})[1:40],
                               t -> list_contains({_SQL_STOPSET}, lower(t)))) >= 2
          THEN 'en' ELSE 'unknown' END AS bucket,
     CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS BIGINT) % 10000 AS h
@@ -278,7 +275,7 @@ def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _CHUNK_DOCS_SQL = f"""
 WITH w AS (
-  SELECT doc_id, {_SQL_WORDS} AS words, len({_SQL_WORDS}) AS n FROM documents),
+  SELECT doc_id, {SQL_WORDS} AS words, len({SQL_WORDS}) AS n FROM documents),
 c AS (
   SELECT doc_id, words,
          unnest(generate_series(0, CAST((n - 1) // {CHUNK_STRIDE} AS BIGINT))) AS ci
@@ -368,7 +365,7 @@ def segment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SEGMENT_DEDUP_SQL = f"""
 WITH w AS (
-  SELECT doc_id, {_SQL_WORDS} AS words, len({_SQL_WORDS}) AS n FROM documents),
+  SELECT doc_id, {SQL_WORDS} AS words, len({SQL_WORDS}) AS n FROM documents),
 s AS (
   SELECT doc_id, words,
          unnest(generate_series(0, CAST((n - 1) // {SEG_TOKENS} AS BIGINT))) AS si
@@ -416,7 +413,7 @@ def weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 _WEIGHTED_SAMPLE_SQL = f"""
 WITH d AS (
   SELECT doc_id,
-    CAST(len({_SQL_WORDS}) AS BIGINT) AS n_tokens,
+    CAST(len({SQL_WORDS}) AS BIGINT) AS n_tokens,
     CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS BIGINT) % 10000 AS h
   FROM documents)
 SELECT doc_id, n_tokens FROM d
@@ -580,7 +577,7 @@ def dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DSIR_SQL = f"""
 WITH w AS (
-  SELECT doc_id, lang, {_SQL_WORDS} AS words FROM documents),
+  SELECT doc_id, lang, {SQL_WORDS} AS words FROM documents),
 wh AS MATERIALIZED (
   SELECT word, CAST(('0x' || substr(md5(word), 1, 8)) AS BIGINT) AS h
   FROM (SELECT DISTINCT unnest(words) AS word FROM w)),
@@ -632,11 +629,11 @@ def mixture_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MIXTURE_STATS_SQL = f"""
 WITH d AS (
   SELECT
-    CASE WHEN len(list_filter(({_SQL_WORDS})[1:40],
+    CASE WHEN len(list_filter(({SQL_WORDS})[1:40],
                               t -> list_contains({_SQL_STOPSET}, lower(t)))) >= 2
          THEN 'en' ELSE 'unknown' END AS bucket,
-    CASE WHEN len({_SQL_WORDS}) >= 60 THEN 'long' ELSE 'short' END AS tier,
-    CAST(len({_SQL_WORDS}) AS BIGINT) AS n_tok
+    CASE WHEN len({SQL_WORDS}) >= 60 THEN 'long' ELSE 'short' END AS tier,
+    CAST(len({SQL_WORDS}) AS BIGINT) AS n_tok
   FROM documents)
 SELECT bucket, tier, COUNT(*) AS n_docs, CAST(SUM(n_tok) AS BIGINT) AS n_tokens
 FROM d GROUP BY bucket, tier
@@ -766,7 +763,7 @@ def gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _GOPHER_QUALITY_SQL = f"""
 WITH t AS (
-  SELECT doc_id, {_SQL_WORDS} AS words,
+  SELECT doc_id, {SQL_WORDS} AS words,
          CAST(length(text) AS BIGINT) AS n_chars
   FROM documents),
 narrow AS (
@@ -867,7 +864,7 @@ def _gopher_repetition_sql() -> str:
     }
     parts = [
         f"""WITH t AS (
-  SELECT doc_id, {_SQL_WORDS} AS words FROM documents),
+  SELECT doc_id, {SQL_WORDS} AS words FROM documents),
 base AS (
   SELECT doc_id, words, CAST(len(words) AS BIGINT) AS n_words,
     CAST(COALESCE(list_aggregate(list_transform(words, w -> len(w)), 'sum'), 0)
@@ -973,9 +970,6 @@ CMS_DEPTH = 4
 CMS_WIDTH = 256
 
 
-from tomixpanel_spark.functions.text import WHITESPACE_CHARS as _WS_CHARS
-
-
 def tokenize_tf(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Fused Arrow tokenize-and-count: one ``mapInPandas`` stage emitting
     the sparse (doc_id, token, tf) table directly from each document.
@@ -994,9 +988,9 @@ def tokenize_tf(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     (~10x smaller than the token stream). Each input row is one whole
     document, so per-batch (doc, token) counts are EXACT per-doc tf — no
     partial-merge step needed. The batch body runs entirely in pyarrow
-    C++ kernels (``_pa_tokenize_tf``); the spec matches
-    ``functions.text.tokens`` exactly: fold WHITESPACE_CHARS to ' ',
-    split on the literal space, drop empties (pinned by
+    C++ kernels (``_pa_tokenize_tf`` over ``functions.text.driver_tokens``,
+    the driver implementation of the one tokenizer spec; pinned against
+    ``tokens()`` and ``SQL_WORDS`` by
     tests/test_properties.py::TestTokenizeSpec)."""
     from tomixpanel_spark.session import ship_package
 
@@ -1025,38 +1019,22 @@ def tokenize_tf(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
 
 
 def _pa_tokenize_tf(ids, texts):
-    """Arrow-native tokenize+count for one batch: the exact declared
-    tokenizer spec (WHITESPACE_CHARS folded to ' ', literal-space split,
-    empties dropped) executed entirely in pyarrow C++ kernels —
-    replace_substring per whitespace char, split_pattern, list_flatten /
-    list_parent_indices, then a native group_by count on (doc, token).
-    ~6x the Python Counter loop's throughput on the benchmark corpus;
-    parity with the JVM ``tokens()`` and the driver-fold tokenizer
-    ``dedup._fold_tokenize`` is pinned by tests (messy-whitespace inputs
-    included)."""
+    """Arrow-native tokenize+count for one batch: the flat token stream
+    from ``driver_tokens`` (the one driver tokenizer), then a native
+    group_by count on (doc, token). ~6x the Python Counter loop's
+    throughput on the benchmark corpus."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    arr = pa.array(texts, type=pa.string(), from_pandas=True)
-    arr = pc.fill_null(arr, "")
-    for ch in _WS_CHARS:
-        arr = pc.replace_substring(arr, ch, " ")
-    toks = pc.split_pattern(arr, " ")
-    flat = pc.list_flatten(toks)
-    parent = pc.list_parent_indices(toks)
-    mask = pc.not_equal(flat, "")
-    fparent = pc.filter(parent, mask)
-    pairs = pa.table({"i": fparent, "token": pc.filter(flat, mask)})
+    flat, doc = driver_tokens(texts)
+    pairs = pa.table({"i": doc, "token": flat})
     agg = pairs.group_by(["i", "token"]).aggregate([("token", "count")])
     doc_ids = pa.array(ids, type=pa.int64(), from_pandas=True).take(agg["i"])
     # per-doc total token count (dl) rides along for free: each input row
     # is a whole document, so the batch-local count IS the document
     # length — emitting it here saves BM25 a corpus-wide window exchange
-    dl_dense = np.zeros(len(ids), dtype=np.int64)
-    vc = fparent.value_counts()
-    dl_dense[vc.field("values").to_numpy()] = vc.field("counts").to_numpy()
-    dl = pa.array(dl_dense).take(agg["i"])
+    dl = pa.array(np.bincount(doc, minlength=len(ids))).take(agg["i"])
     return pa.table(
         {
             "doc_id": doc_ids,
@@ -1278,7 +1256,7 @@ def tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _TFIDF_SQL = f"""
-WITH toks AS (SELECT doc_id, unnest({_SQL_WORDS}) AS token FROM documents),
+WITH toks AS (SELECT doc_id, unnest({SQL_WORDS}) AS token FROM documents),
 tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM toks GROUP BY 1, 2),
 n AS (SELECT COUNT(*) AS n_docs FROM documents),
 idf AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY 1),
@@ -1459,7 +1437,7 @@ _CMS_PROBES = " UNION ALL ".join(
     for r in range(CMS_DEPTH)
 )
 _CMS_SQL = f"""
-WITH occ AS (SELECT unnest({_SQL_WORDS}) AS token FROM documents),
+WITH occ AS (SELECT unnest({SQL_WORDS}) AS token FROM documents),
 cells AS ({_CMS_CELLS}),
 sketch AS (SELECT row, bucket, COUNT(*) AS c FROM cells GROUP BY 1, 2),
 vocab AS (SELECT DISTINCT token FROM occ),
@@ -1604,7 +1582,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BM25_SQL = f"""
 WITH tf AS (
   SELECT doc_id, token, CAST(COUNT(*) AS BIGINT) AS tf
-  FROM (SELECT doc_id, unnest({_SQL_WORDS}) AS token FROM documents)
+  FROM (SELECT doc_id, unnest({SQL_WORDS}) AS token FROM documents)
   GROUP BY 1, 2),
 dl AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
 dfc AS (SELECT token, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY 1),
@@ -1648,10 +1626,10 @@ def _lm_driver_fold(spark: SparkSession, docs: DataFrame) -> DataFrame:
     """Small-corpus bigram-LM scoring: one Arrow transfer of the raw
     documents (buffer-pool cached ``docs_pdf``) + an exact VECTORIZED
     fold — no shuffle, no checkpoint, no broadcast-exchange job, no
-    gate-count job. Tokenization is the same pyarrow kernel chain as
-    ``_pa_tokenize_tf`` but ORDER-PRESERVING (no group_by): the flat
-    token stream + parent indices give adjacency directly, tokens
-    factorize via ``dictionary_encode``, and model/context/score are
+    gate-count job. Tokenization is ``driver_tokens``, the one driver
+    tokenizer, ORDER-PRESERVING (no group_by): the flat token stream +
+    doc indices give adjacency directly, tokens factorize via
+    ``dictionary_encode``, and model/context/score are
     numpy int64 ops (``//`` floors like the engines'; bincount/add.at
     keep the sums integer-exact). A dict-Counter formulation measured
     SLOWER than the distributed plan at 5k docs — the per-token Python
@@ -1659,7 +1637,6 @@ def _lm_driver_fold(spark: SparkSession, docs: DataFrame) -> DataFrame:
     and the oracle (tests/test_plans.py::test_bigram_lm_paths_agree)."""
     import numpy as np
     import pandas as pd
-    import pyarrow as pa
     import pyarrow.compute as pc
 
     pdf = docs_pdf(docs)
@@ -1673,15 +1650,7 @@ def _lm_driver_fold(spark: SparkSession, docs: DataFrame) -> DataFrame:
     schema = "doc_id long, n_bigrams long, lm_score_e6 long"
     if not len(pdf):
         return spark.createDataFrame(empty, schema=schema)
-    arr = pc.fill_null(pa.array(pdf["text"], type=pa.string(), from_pandas=True), "")
-    for ch in _WS_CHARS:
-        arr = pc.replace_substring(arr, ch, " ")
-    toks = pc.split_pattern(arr, " ")
-    flat = pc.list_flatten(toks)
-    parent = pc.list_parent_indices(toks)
-    mask = pc.not_equal(flat, "")
-    flat = pc.filter(flat, mask)
-    parent = pc.filter(parent, mask).to_numpy()
+    flat, parent = driver_tokens(pdf["text"])
     n_docs = len(pdf)
     nb = np.zeros(n_docs, dtype=np.int64)
     sc = np.zeros(n_docs, dtype=np.int64)
@@ -1793,7 +1762,7 @@ def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _BIGRAM_LM_SQL = f"""
 WITH toks AS (
-  SELECT doc_id, {_SQL_WORDS} AS words FROM documents),
+  SELECT doc_id, {SQL_WORDS} AS words FROM documents),
 big AS (
   SELECT doc_id, words[i] AS prev, words[i + 1] AS cur
   FROM toks, UNNEST(range(1, len(words))) AS t(i)),
