@@ -700,6 +700,26 @@ class TestSimilarityEdgeIds:
         assert {r["q_id"] for r in out} == {3, 7}
         assert all(r["neighbor_id"] != r["q_id"] for r in out)
 
+    @pytest.mark.parametrize(
+        "verb, score",
+        [
+            ("ann_ivf_topk", "sim_e6"),
+            ("ann_ivf_quantized", "score"),
+            ("ann_pq_quantized", "dist"),
+        ],
+    )
+    def test_ann_verbs_without_query_ids(self, spark, verb, score):
+        """No vector has vec_id < N_QUERIES: there is nothing to search
+        for, so each verb returns zero rows in its own schema, like
+        cosine_topk and ann_lsh (these crashed on an empty query
+        matrix: a failed task or a driver IndexError)."""
+        from tomixpanel_spark.operators import similarity
+
+        ids = [1001 + 3 * i for i in range(40)]
+        out = getattr(similarity, verb)(self._emb_df(spark, ids))
+        assert out.columns == ["q_id", "neighbor_id", "rank", score]
+        assert out.collect() == []
+
 
 class TestKmvSketch:
     def test_estimate_close_to_exact(self, spark):

@@ -1423,6 +1423,68 @@ def test_tokenizer_spec_lives_in_functions_text():
     assert not offenders, f"tokenizer spec outside functions/text.py: {offenders}"
 
 
+def test_similarity_scoring_idioms_live_in_three_kernels():
+    """The similarity family scores through one kernel per idiom:
+    ``_score_blocks`` (the cell cap and the sim_e6 rounding),
+    ``_local_topk`` (the per-query sort) and ``_lloyd`` (training). No
+    other code in similarity.py or pipelines.py reads the cap, rounds
+    sims, lexsorts a top-k or truncates a centroid mean by hand."""
+    import ast
+    from pathlib import Path
+
+    ops = Path(__file__).resolve().parents[1] / "tomixpanel_spark" / "operators"
+    kernels = {"_score_blocks", "_local_topk", "_lloyd"}
+    needles = (
+        "SCORE_CELLS_CAP.cap()",
+        "* 1_000_000).astype",
+        "np.lexsort(",
+        "_trunc_div(",
+    )
+    offenders = []
+    for name in ("similarity.py", "pipelines.py"):
+        src = (ops / name).read_text()
+        lines = src.splitlines()
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.FunctionDef) and node.name in kernels:
+                for i in range(node.lineno - 1, node.end_lineno):
+                    lines[i] = ""
+        rest = "\n".join(lines)
+        offenders += [f"{name}: {n}" for n in needles if n in rest]
+    assert not offenders, f"scoring idiom outside its kernel: {offenders}"
+
+
+def test_score_cells_cap_chunking_keeps_rows(spark, monkeypatch):
+    """Every pair and top-k kernel scores in ``_score_blocks`` row
+    chunks of TOMIX_SCORE_CELLS_CAP // |right side| rows. A cap of 7
+    cuts every task into several chunks whose edges do not line up with
+    the blocks; no row may appear, vanish or change."""
+    import numpy as np
+
+    from tests.conftest import SF_SMALL
+    from tomixpanel_spark.operators.pipelines import semdedup_clusters
+    from tomixpanel_spark.operators.similarity import _score_blocks
+
+    def rows():
+        out = {
+            name: sorted(map(tuple, REG[name].fn(spark, SF_SMALL).collect()))
+            for name in ("embedding_neardup", "embedding_decontam", "cosine_topk")
+        }
+        with monkeypatch.context() as m:
+            m.setenv("TOMIX_EMB_BCAST_VECS", "0")
+            decontam = REG["embedding_decontam"].fn(spark, SF_SMALL)
+            out["embedding_decontam/cogroup"] = sorted(map(tuple, decontam.collect()))
+        pairs = semdedup_clusters(spark, SF_SMALL)[1]
+        out["semdedup_pairs"] = sorted(map(tuple, pairs.collect()))
+        return out
+
+    default = rows()
+    assert all(default.values()), "a kernel produced no rows on the fixture"
+    monkeypatch.setenv("TOMIX_SCORE_CELLS_CAP", "7")
+    # the cap is in force: 3 right-side rows -> 2-row chunks
+    assert [lo for lo, _ in _score_blocks()(np.ones((5, 4)), np.ones((3, 4)))] == [0, 2, 4]
+    assert rows() == default
+
+
 def test_bigram_lm_paths_agree(spark, monkeypatch):
     """Driver-fold, broadcast-model, and shuffle-join scoring plans are
     ONE operator: identical rows, and each gate actually flips the

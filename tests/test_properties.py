@@ -458,6 +458,53 @@ class TestJoinOperatorsVsBruteForce:
         assert got == want
 
 
+class TestLocalTopk:
+    @given(st.data())
+    @settings(max_examples=300, deadline=None)
+    def test_matches_brute_force_sort(self, data):
+        """``similarity._local_topk`` against a per-query Python sort:
+        integer scores with many ties, random masks, repeated query
+        columns (ann_ivf's probe rows), k above and below the candidate
+        count, and empty row or query sets."""
+        import numpy as np
+
+        from tomixpanel_spark.operators.similarity import _local_topk
+
+        n_rows = data.draw(st.integers(0, 12))
+        n_base = data.draw(st.integers(1, 4))
+        cols = data.draw(st.lists(st.integers(0, n_base - 1), max_size=6))
+        k = data.draw(st.integers(1, 14))
+        base = data.draw(
+            st.lists(
+                st.integers(-3, 3), min_size=n_rows * n_base, max_size=n_rows * n_base
+            )
+        )
+        scores = np.array(base, dtype=np.int64).reshape(n_rows, n_base)[:, cols]
+        n_q = len(cols)
+        flags = data.draw(
+            st.lists(st.booleans(), min_size=n_rows * n_q, max_size=n_rows * n_q)
+        )
+        mask = np.array(flags, dtype=bool).reshape(n_rows, n_q)
+        n_ids = np.array(
+            data.draw(
+                st.lists(
+                    st.integers(-50, 50), min_size=n_rows, max_size=n_rows, unique=True
+                )
+            ),
+            dtype=np.int64,
+        )
+
+        want = []
+        for q in range(n_q):
+            cand = sorted(
+                (r for r in range(n_rows) if mask[r, q]),
+                key=lambda r: (-scores[r, q], n_ids[r]),
+            )
+            want += [(r, q) for r in cand[:k]]
+        ri, qi = _local_topk(scores, mask, n_ids, k)
+        assert [(int(r), int(q)) for r, q in zip(ri, qi)] == want
+
+
 class TestTokenizeSpec:
     def test_tokens_match_oracle_split_on_messy_whitespace(self, spark):
         """tokens() and the oracles' translate+string_split pipeline

@@ -291,27 +291,6 @@ FROM gates
 # ---------------------------------------------------------------------------
 
 
-def _lloyd_centroids(sm, k: int, iters: int):
-    """Lloyd's k-means on a quantized int64 sample matrix — the
-    similarity.ann_ivf_quantized training loop (similarity.py:874-882):
-    first-k init in vec_id order, argmin assignment with first-min tie
-    rule, truncating integer mean update. The DuckDB oracle re-derives
-    the identical centroids independently (unrolled CTEs), so any drift
-    from the primary fails the external hash check."""
-    from tomixpanel_spark.operators.similarity import _trunc_div
-
-    k_eff = min(k, len(sm))
-    cent = sm[:k_eff].copy()
-    for _ in range(iters):
-        d = ((sm[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-        assign = d.argmin(axis=1)
-        for ci in range(k_eff):
-            members = sm[assign == ci]
-            if len(members):
-                cent[ci] = _trunc_div(members.sum(axis=0), len(members))
-    return cent
-
-
 def semdedup_clusters(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -333,10 +312,13 @@ def semdedup_clusters(
         IVFQ_CELLS,
         IVFQ_ITER,
         NEARDUP_E6,
-        SCORE_CELLS_CAP,
         _finite_vecs,
+        _int_mean,
+        _lloyd,
         _mat,
         _quant,
+        _score_blocks,
+        _sq_dists,
     )
 
     emb = ensure_parallel(table(spark, sf_dir, "embeddings"), "vec_id")
@@ -352,15 +334,14 @@ def semdedup_clusters(
     if not len(sample_pdf):
         raise ValueError("semdedup_prune: empty training sample")
     sm = _quant(np.array(list(sample_pdf["embedding"]), dtype="float64"))
-    cent = _lloyd_centroids(sm, IVFQ_CELLS, IVFQ_ITER)
+    cent = _lloyd(sm, IVFQ_CELLS, IVFQ_ITER, _int_mean)
 
     def assign(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             if not len(pdf):
                 continue
             m = _quant(np.array(list(pdf["embedding"]), dtype="float64"))
-            d = ((m[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-            cell = d.argmin(axis=1)  # first min == lowest cell on ties
+            cell = _sq_dists(m, cent).argmin(axis=1)
             cdot = (m * cent[cell]).sum(axis=1)
             yield pd.DataFrame(
                 {
@@ -382,7 +363,7 @@ def semdedup_clusters(
         schema="vec_id long, cell int, cdot long, embedding array<float>",
     )
 
-    cells_cap = SCORE_CELLS_CAP.cap()
+    score = _score_blocks()
     empty = pd.DataFrame(
         {"vec_a": [], "vec_b": [], "sim_e6": [], "cdot_a": [], "cdot_b": []}
     )
@@ -398,29 +379,22 @@ def semdedup_clusters(
         # outlier policy downstream then never re-reads the assignment
         # table for it (guide §8 — the signal is already in this task)
         cds = pdf["cdot"].to_numpy(dtype="int64")
-        rows_cap = max(1, cells_cap // len(pdf))
         frames = []
-        for c0 in range(0, len(pdf), rows_cap):
-            sub = np.rint((m[c0 : c0 + rows_cap] @ m.T) * 1_000_000).astype(
-                "int64"
-            )
-            hit = (sub >= NEARDUP_E6) & (
-                ids[c0 : c0 + rows_cap, None] < ids[None, :]
-            )
-            ai, bj = np.nonzero(hit)
-            if len(ai):
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "vec_a": ids[c0 : c0 + rows_cap][ai],
-                            "vec_b": ids[bj],
-                            "sim_e6": sub[ai, bj],
-                            "cdot_a": cds[c0 : c0 + rows_cap][ai],
-                            "cdot_b": cds[bj],
-                        }
-                    )
+        for lo, e6 in score(m, m):
+            upper = ids[lo : lo + len(e6), None] < ids[None, :]
+            ai, bj = np.nonzero((e6 >= NEARDUP_E6) & upper)
+            frames.append(
+                pd.DataFrame(
+                    {
+                        "vec_a": ids[lo + ai],
+                        "vec_b": ids[bj],
+                        "sim_e6": e6[ai, bj],
+                        "cdot_a": cds[lo + ai],
+                        "cdot_b": cds[bj],
+                    }
                 )
-        return pd.concat(frames, ignore_index=True) if frames else empty
+            )
+        return pd.concat(frames, ignore_index=True)
 
     pairs = (
         assigned.select("cell", "vec_id", "cdot", "embedding")
@@ -447,11 +421,11 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the only pairing key — the plan-lock asserts the pair stage
     exchanges on cell, never all-pairs. Training is integer-exact on a
     deterministic O(sample) driver sample (the ann_ivf_q discipline, and
-    the same Lloyd spec — similarity.py:874), assignment + centroid-dot
+    the same trainer — similarity._lloyd), assignment + centroid-dot
     is ONE Arrow pass over the corpus, pairing is chunked BLAS under
-    TOMIX_SCORE_CELLS_CAP per task, components reuse the size-adaptive
-    CC engine, and the keep-best argmin is one map-side-partial
-    aggregate. Everything after the pair stage carries ids only."""
+    TOMIX_SCORE_CELLS_CAP per task (similarity._score_blocks),
+    components reuse the size-adaptive CC engine, and the keep-best
+    argmin is one map-side-partial aggregate. Everything after the pair stage carries ids only."""
     from tomixpanel_spark.operators.identity import keep_per_cluster
 
     _, pairs = semdedup_clusters(spark, sf_dir)

@@ -100,6 +100,78 @@ def _mat(pdf: pd.DataFrame, col: str = "embedding"):
     return m / norms
 
 
+# -- the three scoring kernels every similarity verb shares -------------------
+# Each verb scores its partition locally, keeps local top-k rows or
+# threshold hits, and a global window or union merges them.
+
+
+def _score_blocks():
+    """The one chunked cosine kernel. Reads ``SCORE_CELLS_CAP`` when the
+    plan is built (the driver's environment: executors never see a
+    later ``TOMIX_*`` change) and returns ``score(a, b)``, a generator
+    over unit-row matrices yielding ``(lo, e6)``: ``e6`` is the
+    ``sim_e6`` block of ``a[lo : lo + rows]`` against all of ``b``, with
+    rows = cap // len(b), so a task holds one bounded score block
+    however large either side is."""
+    import numpy as np
+
+    cells_cap = SCORE_CELLS_CAP.cap()
+
+    def score(a, b):
+        rows = max(1, cells_cap // max(1, len(b)))
+        for lo in range(0, len(a), rows):
+            yield lo, np.rint((a[lo : lo + rows] @ b.T) * 1_000_000).astype("int64")
+
+    return score
+
+
+def _local_topk(scores, mask, n_ids, k: int):
+    """The one local top-k: for each query column of ``scores`` (rows x
+    Q), the at most ``k`` rows where ``mask`` holds, highest score first
+    and lowest ``n_ids`` on ties. Returns ``(row, query)`` index arrays
+    grouped by query column in that order. Lowest-first rankings pass
+    negated scores."""
+    import numpy as np
+
+    ri, qi = np.nonzero(mask)
+    order = np.lexsort((n_ids[ri], -scores[ri, qi], qi))
+    ri, qi = ri[order], qi[order]
+    keep = np.arange(len(qi)) - np.searchsorted(qi, qi) < k
+    return ri[keep], qi[keep]
+
+
+def _sq_dists(x, cent):
+    """(rows, cells) squared-L2 distances to the centroids — the one
+    nearest-centroid kernel: ``argmin(axis=1)`` assigns each row to the
+    lowest cell among equals (the oracle's ORDER BY dist, cell)."""
+    return ((x[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
+
+
+def _int_mean(members):
+    """Column mean of an int64 block TRUNCATED toward zero — DuckDB's
+    ``//`` on the sum (numpy's // floors, which differs on negative sums)."""
+    import numpy as np
+
+    s = members.sum(axis=0)
+    return np.sign(s) * (np.abs(s) // len(members))
+
+
+def _lloyd(sample, k: int, iters: int, mean):
+    """The one Lloyd trainer: the first ``k`` sample rows (vec_id order)
+    seed the centroids, each round assigns every row to its nearest
+    centroid (``_sq_dists``, first min on ties) and moves each non-empty
+    cell to ``mean(members)`` — ``_int_mean`` for the integer-exact
+    verbs, the float mean for ``ann_ivf``."""
+    cent = sample[:k].copy()
+    for _ in range(iters):
+        assign = _sq_dists(sample, cent).argmin(axis=1)
+        for ci in range(len(cent)):
+            members = sample[assign == ci]
+            if len(members):
+                cent[ci] = mean(members)
+    return cent
+
+
 def _collect_queries(emb: DataFrame, with_label: bool = False):
     """Small side -> (ids, unit matrix[, labels]) for the UDF closure.
     Sorted by vec_id so the closure is deterministic under any scan order."""
@@ -147,8 +219,11 @@ def _scored_pairs(
     q_labels=None, exclude_self: bool = True,
 ) -> DataFrame:
     """mapInPandas stage: raw candidate batches x query matrix -> sim_e6
-    rows. Candidates normalize in-batch (numpy); only local top-k /
-    above-threshold rows survive to the shuffle.
+    rows. Candidates normalize in-batch (numpy) and score in
+    ``_score_blocks`` chunks, which bound the (rows x Q) block even when
+    the broadcast query side is at its 100k-vector gate ceiling; only
+    each chunk's local top-k (``_local_topk``) or above-threshold rows
+    survive to the shuffle.
 
     ``exclude_self`` masks candidates whose id equals the query id — the
     self-search semantics every top-k/neardup caller wants. Callers whose
@@ -157,83 +232,55 @@ def _scored_pairs(
     silently suppress a real cross-set pair."""
     import numpy as np
 
-    cells_cap = SCORE_CELLS_CAP.cap()
+    score = _score_blocks()
+    q_ids = np.asarray(q_ids, dtype="int64")
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         if not len(q_ids):
             return  # no queries -> no rows (empty-corpus/empty-suite path)
-        # candidate rows per matmul chunk: bounds the (rows x Q) score
-        # matrix to the cell budget even when the broadcast query side is
-        # at its 100k-vector gate ceiling (a 10k-row Arrow batch x 100k
-        # queries is 8 GB of int64 un-chunked)
-        rows_cap = max(1, cells_cap // len(q_ids))
         for pdf in it:
-            for lo in range(0, len(pdf), rows_cap):
-                sub = pdf.iloc[lo : lo + rows_cap]
-                if not len(sub):
-                    continue
-                c = _mat(sub)  # (B, d), unit rows
-                sims = c @ q_mat.T  # (B, Q) one BLAS call per chunk
-                e6 = np.rint(sims * 1_000_000).astype("int64")
-                n_ids = sub["neighbor_id"].to_numpy()
-                if local_k is None and q_labels is None and threshold_e6 is not None:
-                    # vectorized threshold path (Q may be huge — a python
-                    # per-query loop would dominate): one nonzero over the
-                    # chunk matrix, self-pairs dropped on the hits only
-                    ci, qi = np.nonzero(e6 >= threshold_e6)
-                    if exclude_self and len(ci):
-                        keep = n_ids[ci] != np.asarray(q_ids)[qi]
-                        ci, qi = ci[keep], qi[keep]
-                    yield pd.DataFrame(
-                        {
-                            "q_id": np.asarray(q_ids, dtype="int64")[qi],
-                            "neighbor_id": n_ids[ci].astype("int64"),
-                            "sim_e6": e6[ci, qi],
-                        }
-                    )
-                    continue
-                out = []
-                for qi in range(len(q_ids)):
-                    col = e6[:, qi]
-                    mask = (
-                        n_ids != q_ids[qi]
-                        if exclude_self
-                        else np.ones(len(n_ids), dtype=bool)
-                    )
-                    if q_labels is not None:
-                        mask &= sub["label"].to_numpy() == q_labels[qi]
-                    if threshold_e6 is not None:
-                        mask &= col >= threshold_e6
-                    idx = np.nonzero(mask)[0]
-                    if local_k is not None and len(idx) > local_k:
-                        # local top-k per chunk: only k rows survive to the
-                        # shuffle (the window re-ranks globally)
-                        order = np.lexsort((n_ids[idx], -col[idx]))
-                        idx = idx[order[:local_k]]
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "q_id": np.full(len(idx), q_ids[qi], dtype="int64"),
-                                "neighbor_id": n_ids[idx],
-                                "sim_e6": col[idx],
-                            }
-                        )
-                    )
-                yield pd.concat(out) if out else pd.DataFrame(
-                    {"q_id": [], "neighbor_id": [], "sim_e6": []}
+            if not len(pdf):
+                continue
+            n_ids = pdf["neighbor_id"].to_numpy(dtype="int64")
+            labels = None if q_labels is None else pdf["label"].to_numpy()
+            for lo, e6 in score(_mat(pdf), q_mat):
+                ids = n_ids[lo : lo + len(e6)]
+                mask = (
+                    np.ones(e6.shape, dtype=bool)
+                    if threshold_e6 is None
+                    else e6 >= threshold_e6
+                )
+                if exclude_self:
+                    mask &= ids[:, None] != q_ids[None, :]
+                if labels is not None:
+                    mask &= labels[lo : lo + len(e6), None] == q_labels[None, :]
+                ri, qi = (
+                    np.nonzero(mask)
+                    if local_k is None
+                    else _local_topk(e6, mask, ids, local_k)
+                )
+                yield pd.DataFrame(
+                    {"q_id": q_ids[qi], "neighbor_id": ids[ri], "sim_e6": e6[ri, qi]}
                 )
 
     ship_package(cand.sparkSession)
     return cand.mapInPandas(batches, schema="q_id long, neighbor_id long, sim_e6 long")
 
 
-def _topk_window(scored: DataFrame, k: int) -> DataFrame:
-    w = Window.partitionBy("q_id").orderBy(F.col("sim_e6").desc(), F.col("neighbor_id"))
+def _topk_window(scored: DataFrame, k: int, col: str = "sim_e6") -> DataFrame:
+    w = Window.partitionBy("q_id").orderBy(F.col(col).desc(), F.col("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("q_id", "neighbor_id", "rank", "sim_e6")
+        .select("q_id", "neighbor_id", "rank", col)
     )
+
+
+def _no_queries(spark: SparkSession, k: int, col: str = "sim_e6") -> DataFrame:
+    """Zero rows in a top-k verb's own schema: the corpus holds no vector
+    with vec_id < N_QUERIES, so there is nothing to search for."""
+    scored = spark.createDataFrame([], f"q_id long, neighbor_id long, {col} long")
+    return _topk_window(scored, k, col)
 
 
 def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -330,36 +377,31 @@ def embedding_neardup_pairs(
     )
 
     empty = pd.DataFrame({"vec_a": [], "vec_b": [], "sim_e6": []})
-
-    cells_cap = SCORE_CELLS_CAP.cap()
+    score = _score_blocks()
 
     def block_pairs(key, lg: pd.DataFrame, rg: pd.DataFrame) -> pd.DataFrame:
-        pi, pj = int(key[0]), int(key[1])
         if not len(lg) or not len(rg):
             return empty
-        a = _mat(lg)
-        b = _mat(rg)
         a_ids = lg["vec_id"].to_numpy(dtype="int64")
         b_ids = rg["vec_id"].to_numpy(dtype="int64")
-        rows_cap = max(1, cells_cap // len(rg))
         frames = []
-        for c0 in range(0, len(lg), rows_cap):
-            ids = a_ids[c0 : c0 + rows_cap]
-            e6 = np.rint((a[c0 : c0 + rows_cap] @ b.T) * 1_000_000).astype(
-                "int64"
-            )
+        for lo, e6 in score(_mat(lg), _mat(rg)):
+            ids = a_ids[lo : lo + len(e6)]
             hit = e6 >= threshold_e6
-            if pi == pj:
+            if key[0] == key[1]:
                 # same block appears on both sides: keep the upper triangle
                 hit &= ids[:, None] < b_ids[None, :]
             ai, bj = np.nonzero(hit)
-            if len(ai):
-                lo = np.minimum(ids[ai], b_ids[bj])
-                hi = np.maximum(ids[ai], b_ids[bj])
-                frames.append(
-                    pd.DataFrame({"vec_a": lo, "vec_b": hi, "sim_e6": e6[ai, bj]})
+            frames.append(
+                pd.DataFrame(
+                    {
+                        "vec_a": np.minimum(ids[ai], b_ids[bj]),
+                        "vec_b": np.maximum(ids[ai], b_ids[bj]),
+                        "sim_e6": e6[ai, bj],
+                    }
                 )
-        return pd.concat(frames, ignore_index=True) if frames else empty
+            )
+        return pd.concat(frames, ignore_index=True)
 
     ship_package(spark)
     # fresh_attrs: both sides derive from v — without it, column pruning
@@ -416,34 +458,26 @@ def _cross_blocked_pairs(
     left = blocked(left_df, "pi", "pj")
     right = blocked(right_df, "pj", "pi")
     empty = pd.DataFrame({"train_id": [], "eval_id": [], "sim_e6": []})
-
-    cells_cap = SCORE_CELLS_CAP.cap()
+    score = _score_blocks()
 
     def block_pairs(key, lg: pd.DataFrame, rg: pd.DataFrame) -> pd.DataFrame:
         if not len(lg) or not len(rg):
             return empty
-        a = _mat(lg)
-        b = _mat(rg)
         a_ids = lg["vec_id"].to_numpy(dtype="int64")
         b_ids = rg["vec_id"].to_numpy(dtype="int64")
-        rows_cap = max(1, cells_cap // len(rg))
         frames = []
-        for c0 in range(0, len(lg), rows_cap):
-            e6 = np.rint((a[c0 : c0 + rows_cap] @ b.T) * 1_000_000).astype(
-                "int64"
-            )
+        for lo, e6 in score(_mat(lg), _mat(rg)):
             ai, bj = np.nonzero(e6 >= threshold_e6)
-            if len(ai):
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "train_id": a_ids[c0 : c0 + rows_cap][ai],
-                            "eval_id": b_ids[bj],
-                            "sim_e6": e6[ai, bj],
-                        }
-                    )
+            frames.append(
+                pd.DataFrame(
+                    {
+                        "train_id": a_ids[lo + ai],
+                        "eval_id": b_ids[bj],
+                        "sim_e6": e6[ai, bj],
+                    }
                 )
-        return pd.concat(frames, ignore_index=True) if frames else empty
+            )
+        return pd.concat(frames, ignore_index=True)
 
     ship_package(left_df.sparkSession)
     # fresh_attrs: callers may split ONE table into the two sides, which
@@ -577,59 +611,29 @@ def ann_ivf_topk(emb: DataFrame, k: int = TOP_K, nprobe: int = 2) -> DataFrame:
         )
     if not len(sample_pdf):
         raise ValueError("ann_ivf: empty corpus — nothing to train centroids on")
-    sample = _mat(sample_pdf)
-    K_eff = min(K, len(sample))  # never index past the sample
-    centroids = sample[:K_eff].copy()
-    for _ in range(N_ITER):  # Lloyd's algorithm on the sample
-        d = ((sample[:, None, :] - centroids[None, :, :]) ** 2).sum(axis=2)
-        assign = d.argmin(axis=1)
-        for ci in range(K_eff):  # NOT `k` — that's the top-k parameter
-            members = sample[assign == ci]
-            if len(members):
-                centroids[ci] = members.mean(axis=0)
+    centroids = _lloyd(_mat(sample_pdf), K, N_ITER, lambda m: m.mean(axis=0))
 
-    # queries: nearest NPROBE cells each (driver-side, Q x K distances)
     q_ids, q_mat = _collect_queries(emb)
-    q_ids_l, q_mats, q_cells = [], [], []
-    for qi in range(len(q_ids)):
-        d = ((centroids - q_mat[qi]) ** 2).sum(axis=1)
-        for cell in np.argsort(d)[:NPROBE]:
-            q_ids_l.append(int(q_ids[qi]))
-            q_mats.append(q_mat[qi])
-            q_cells.append(int(cell))
-    q_ids_a = np.array(q_ids_l, dtype="int64")
-    q_mat_a = np.array(q_mats, dtype="float64")
-    q_cells_a = np.array(q_cells, dtype="int64")
+    if not len(q_ids):
+        return _no_queries(spark, k)
+    # each query probes its NPROBE nearest cells (driver-side, Q x K)
+    probe = np.argsort(_sq_dists(q_mat, centroids), axis=1)[:, :NPROBE]
+    score = _score_blocks()
 
     def assign_and_score(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             if not len(pdf):
                 continue
             c = _mat(pdf)
-            d = ((c[:, None, :] - centroids[None, :, :]) ** 2).sum(axis=2)
-            cell = d.argmin(axis=1)
-            e6 = np.rint((c @ q_mat_a.T) * 1_000_000).astype("int64")
-            n_ids = pdf["neighbor_id"].to_numpy()
-            out = []
-            for qi in range(len(q_ids_a)):
-                col = e6[:, qi]
-                mask = (cell == q_cells_a[qi]) & (n_ids != q_ids_a[qi])
-                idx = np.nonzero(mask)[0]
-                if len(idx) > k:
-                    order = np.lexsort((n_ids[idx], -col[idx]))
-                    idx = idx[order[:k]]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "q_id": np.full(len(idx), q_ids_a[qi], dtype="int64"),
-                            "neighbor_id": n_ids[idx],
-                            "sim_e6": col[idx],
-                        }
-                    )
+            cell = _sq_dists(c, centroids).argmin(axis=1)
+            n_ids = pdf["neighbor_id"].to_numpy(dtype="int64")
+            for lo, e6 in score(c, q_mat):
+                ids = n_ids[lo : lo + len(e6)]
+                probed = (cell[lo : lo + len(e6), None, None] == probe[None]).any(axis=2)
+                ri, qi = _local_topk(e6, probed & (ids[:, None] != q_ids), ids, k)
+                yield pd.DataFrame(
+                    {"q_id": q_ids[qi], "neighbor_id": ids[ri], "sim_e6": e6[ri, qi]}
                 )
-            yield pd.concat(out) if out else pd.DataFrame(
-                {"q_id": [], "neighbor_id": [], "sim_e6": []}
-            )
 
     ship_package(spark)
     cand = emb.select(F.col("vec_id").alias("neighbor_id"), "embedding")
@@ -725,11 +729,7 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _finite_vecs(ensure_parallel(table(spark, sf_dir, "embeddings"), "vec_id"))
     q_ids, q_mat = _collect_queries(emb)
     if not len(q_ids):
-        # empty corpus / no query rows: empty result, correct schema
-        return _topk_window(
-            spark.createDataFrame([], "q_id long, neighbor_id long, sim_e6 long"),
-            TOP_K,
-        )
+        return _no_queries(spark, TOP_K)
     # Query signatures DRIVER-SIDE from the already-collected query matrix
     # (bucket bits are sign(dot) — norm-invariant, so the unit rows give
     # the same bits as raw vectors): no extra Spark job.
@@ -737,6 +737,7 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_bits = (q_mat @ planes_t >= 0).reshape(len(q_ids), LSH_TABLES, LSH_BITS)
     q_pows = np.array([1 << p for p in range(LSH_BITS)], dtype="int64")
     q_buckets = (q_bits * q_pows).sum(axis=2)  # (Q, L)
+    score = _score_blocks()
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -747,29 +748,14 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             buckets = (bits * q_pows).sum(axis=2)  # (B, L), sign parity
             # per _lsh_signatures' margin note
             match = (buckets[:, None, :] == q_buckets[None, :, :]).any(axis=2)
-            norms = np.sqrt((m * m).sum(axis=1, keepdims=True))
-            norms[norms == 0.0] = 1.0
-            sims = (m / norms) @ q_mat.T  # (B, Q) one BLAS call
-            e6 = np.rint(sims * 1_000_000).astype("int64")
-            ids = pdf["vec_id"].to_numpy()
-            out = []
-            for qi in range(len(q_ids)):
-                idx = np.nonzero(match[:, qi] & (ids != q_ids[qi]))[0]
-                if len(idx) > TOP_K:  # local top-k: <=k rows reach the shuffle
-                    order = np.lexsort((ids[idx], -e6[idx, qi]))
-                    idx = idx[order[:TOP_K]]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "q_id": np.full(len(idx), q_ids[qi], dtype="int64"),
-                            "neighbor_id": ids[idx],
-                            "sim_e6": e6[idx, qi],
-                        }
-                    )
+            n_ids = pdf["vec_id"].to_numpy(dtype="int64")
+            for lo, e6 in score(_mat(pdf), q_mat):
+                ids = n_ids[lo : lo + len(e6)]
+                hit = match[lo : lo + len(e6)] & (ids[:, None] != q_ids)
+                ri, qi = _local_topk(e6, hit, ids, TOP_K)
+                yield pd.DataFrame(
+                    {"q_id": q_ids[qi], "neighbor_id": ids[ri], "sim_e6": e6[ri, qi]}
                 )
-            yield pd.concat(out) if out else pd.DataFrame(
-                {"q_id": [], "neighbor_id": [], "sim_e6": []}
-            )
 
     ship_package(spark)
     scored = emb.mapInPandas(batches, schema="q_id long, neighbor_id long, sim_e6 long")
@@ -851,14 +837,6 @@ def _quant(m) -> "np.ndarray":
     return np.floor(m.astype("float64") * float(IVFQ_SCALE)).astype("int64")
 
 
-def _trunc_div(sv, cnt):
-    """Integer division TRUNCATING toward zero — DuckDB's `//` semantics
-    (numpy's // floors, which differs on negative sums)."""
-    import numpy as np
-
-    return np.sign(sv) * (np.abs(sv) // cnt)
-
-
 def ann_ivf_quantized(
     emb: DataFrame, k: int = TOP_K, nprobe: int = IVFQ_NPROBE
 ) -> DataFrame:
@@ -888,51 +866,28 @@ def ann_ivf_quantized(
     sample_pdf, q_pdf = _sample_and_queries_pdf(emb, step)
     if not len(sample_pdf):
         raise ValueError("ann_ivf_quantized: empty training sample")
+    if not len(q_pdf):
+        return _no_queries(spark, k, "score")
     sm = _quant(np.array(list(sample_pdf["embedding"]), dtype="float64"))
-    k_eff = min(IVFQ_CELLS, len(sm))
-    cent = sm[:k_eff].copy()
-    for _ in range(IVFQ_ITER):
-        d = ((sm[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-        assign = d.argmin(axis=1)  # first min == lowest cell on ties
-        for ci in range(k_eff):
-            members = sm[assign == ci]
-            if len(members):
-                cent[ci] = _trunc_div(members.sum(axis=0), len(members))
+    cent = _lloyd(sm, IVFQ_CELLS, IVFQ_ITER, _int_mean)
 
     q_ids = q_pdf["vec_id"].to_numpy(dtype="int64")
     qm = _quant(np.array(list(q_pdf["embedding"]), dtype="float64"))
-    qd = ((qm[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)  # (Q, K)
     # stable sort: equal distances resolve to the lowest cell index
-    probe = np.argsort(qd, axis=1, kind="stable")[:, : min(nprobe, k_eff)]
+    probe = np.argsort(_sq_dists(qm, cent), axis=1, kind="stable")[:, :nprobe]
 
     def assign_and_score(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             if not len(pdf):
                 continue
             m = _quant(np.array(list(pdf["embedding"]), dtype="float64"))
-            d = ((m[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-            cell = d.argmin(axis=1)
+            cell = _sq_dists(m, cent).argmin(axis=1)
             scores = m @ qm.T  # exact int64 inner products (B, Q)
-            n_ids = pdf["neighbor_id"].to_numpy()
-            out = []
-            for qi in range(len(q_ids)):
-                mask = np.isin(cell, probe[qi]) & (n_ids != q_ids[qi])
-                idx = np.nonzero(mask)[0]
-                col = scores[:, qi]
-                if len(idx) > k:
-                    order = np.lexsort((n_ids[idx], -col[idx]))
-                    idx = idx[order[:k]]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "q_id": np.full(len(idx), q_ids[qi], dtype="int64"),
-                            "neighbor_id": n_ids[idx],
-                            "score": col[idx],
-                        }
-                    )
-                )
-            yield pd.concat(out) if out else pd.DataFrame(
-                {"q_id": [], "neighbor_id": [], "score": []}
+            n_ids = pdf["neighbor_id"].to_numpy(dtype="int64")
+            probed = (cell[:, None, None] == probe[None]).any(axis=2)
+            ri, qi = _local_topk(scores, probed & (n_ids[:, None] != q_ids), n_ids, k)
+            yield pd.DataFrame(
+                {"q_id": q_ids[qi], "neighbor_id": n_ids[ri], "score": scores[ri, qi]}
             )
 
     ship_package(spark)
@@ -940,14 +895,7 @@ def ann_ivf_quantized(
     scored = cand.mapInPandas(
         assign_and_score, schema="q_id long, neighbor_id long, score long"
     )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "neighbor_id", "rank", "score")
-    )
+    return _topk_window(scored, k, "score")
 
 
 def ann_ivf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -961,7 +909,7 @@ def ann_ivf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ivfq_sql() -> str:
     """Generate the oracle: the 4-round Lloyd loop unrolled as chained
     CTEs over a long-format (id, dim, val) quantized view. DuckDB's `//`
-    truncates toward zero — ``_trunc_div`` mirrors that exactly."""
+    truncates toward zero — ``_int_mean`` mirrors that exactly."""
     sq = (
         "SELECT vec_id, "
         "unnest(generate_series(1, len(embedding))) AS dim, embedding "
@@ -1080,37 +1028,20 @@ def ann_pq_quantized(emb: DataFrame, k: int = TOP_K) -> DataFrame:
     sample_pdf, q_pdf = _sample_and_queries_pdf(emb, step)
     if not len(sample_pdf):
         raise ValueError("ann_pq_quantized: empty training sample")
+    if not len(q_pdf):
+        return _no_queries(spark, k, "dist")
     sm = _quant(np.array(list(sample_pdf["embedding"]), dtype="float64"))
     d_full = sm.shape[1]
     if d_full % PQ_SUBS:
         raise ValueError(f"embedding dim {d_full} not divisible by {PQ_SUBS} subspaces")
     sub_d = d_full // PQ_SUBS
-
-    def train(sub: int):
-        smm = sm[:, sub * sub_d : (sub + 1) * sub_d]
-        k_eff = min(PQ_CELLS, len(smm))
-        cent = smm[:k_eff].copy()
-        for _ in range(PQ_ITER):
-            d = ((smm[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-            assign = d.argmin(axis=1)  # first min == lowest cell on ties
-            for ci in range(k_eff):
-                members = smm[assign == ci]
-                if len(members):
-                    cent[ci] = _trunc_div(members.sum(axis=0), len(members))
-        return cent
-
-    books = [train(m) for m in range(PQ_SUBS)]
+    subs = [slice(m * sub_d, (m + 1) * sub_d) for m in range(PQ_SUBS)]
+    books = [_lloyd(sm[:, s], PQ_CELLS, PQ_ITER, _int_mean) for s in subs]
 
     q_ids = q_pdf["vec_id"].to_numpy(dtype="int64")
     qm = _quant(np.array(list(q_pdf["embedding"]), dtype="float64"))
     # ADC lookup tables: luts[m] is (Q, K*) exact subspace distances
-    luts = [
-        (
-            (qm[:, m * sub_d : (m + 1) * sub_d][:, None, :] - books[m][None, :, :])
-            ** 2
-        ).sum(axis=2)
-        for m in range(PQ_SUBS)
-    ]
+    luts = [_sq_dists(qm[:, s], book) for s, book in zip(subs, books)]
 
     rerank = PQ_RERANK
 
@@ -1119,36 +1050,21 @@ def ann_pq_quantized(emb: DataFrame, k: int = TOP_K) -> DataFrame:
             if not len(pdf):
                 continue
             mm = _quant(np.array(list(pdf["embedding"]), dtype="float64"))
-            n_ids = pdf["neighbor_id"].to_numpy()
-            # per-subspace encode: (B,) code per vector
+            n_ids = pdf["neighbor_id"].to_numpy(dtype="int64")
+            # per-subspace encode (one code per vector) + LUT sum: (B, Q)
             adc = np.zeros((len(mm), len(q_ids)), dtype=np.int64)
-            for m in range(PQ_SUBS):
-                smm = mm[:, m * sub_d : (m + 1) * sub_d]
-                d = ((smm[:, None, :] - books[m][None, :, :]) ** 2).sum(axis=2)
-                codes = d.argmin(axis=1)  # (B,)
-                adc += luts[m][:, codes].T  # (B, Q)
-            out = []
-            for qi in range(len(q_ids)):
-                col = adc[:, qi]
-                mask = n_ids != q_ids[qi]
-                idx = np.nonzero(mask)[0]
-                if len(idx) > rerank:
-                    order = np.lexsort((n_ids[idx], col[idx]))
-                    idx = idx[order[:rerank]]
-                # exact refine distances only for the local shortlist
-                dist = ((mm[idx] - qm[qi]) ** 2).sum(axis=1)
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "q_id": np.full(len(idx), q_ids[qi], dtype="int64"),
-                            "neighbor_id": n_ids[idx],
-                            "adc": col[idx],
-                            "dist": dist,
-                        }
-                    )
-                )
-            yield pd.concat(out) if out else pd.DataFrame(
-                {"q_id": [], "neighbor_id": [], "adc": [], "dist": []}
+            for s, book, lut in zip(subs, books, luts):
+                adc += lut[:, _sq_dists(mm[:, s], book).argmin(axis=1)].T
+            # lowest ADC first: the shortlist ranks the negated distance
+            ri, qi = _local_topk(-adc, n_ids[:, None] != q_ids, n_ids, rerank)
+            yield pd.DataFrame(
+                {
+                    "q_id": q_ids[qi],
+                    "neighbor_id": n_ids[ri],
+                    "adc": adc[ri, qi],
+                    # exact refine distances only for the local shortlist
+                    "dist": ((mm[ri] - qm[qi]) ** 2).sum(axis=1),
+                }
             )
 
     ship_package(spark)
