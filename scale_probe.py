@@ -94,7 +94,7 @@ PROBE_EMB_NAMES = [
 
 # Multimodal family (round-12 verdict #8 — the last extension family
 # with no above-gate scale evidence). The media queries synthesize
-# their PNG/JPEG payloads FROM the documents table, so the same 10x
+# their PNG payloads FROM the documents table, so the same 10x
 # replicated corpus drives a 10x media corpus (50k real PNG payloads
 # encoded, decoded, dHashed, banded); perceptual dedup stays bucketed
 # (banded Hamming, never all-pairs) and the DuckDB oracles recompute

@@ -720,34 +720,6 @@ def test_dsir_weights_zero_target_corpus(spark, tmp_path):
     assert rows[1]["n_bigrams"] == 2 and rows[2]["n_bigrams"] == 1
 
 
-def test_jpeg_prog_alloc_floor_is_tunable(monkeypatch):
-    """The progressive allocation floor dial: a VALID blank 2048x2048
-    progressive grayscale (one DC scan, 65536 size-0 units — a real
-    ~16.7 KB flat-scan payload needing 33.5 MB of coefficient buffers)
-    raises at the default 16 MB floor and FULLY DECODES when the
-    deployment raises the floor to 64 MB — the documented
-    legitimate-flat-scan escape hatch and its false-positive zone."""
-    import pytest as _pt
-
-    from tests.test_properties import TestJpegCodec as T
-    from tomixpanel_spark.operators.multimodal import decode_jpeg_gray
-
-    payload = (
-        b"\xff\xd8" + T._dqt_flat16() + T._sof2_gray(2048, 2048)
-        + T._dht_annexk()
-        + T._sos_prog([(1, 0x00)], 0, 0, 0, 0)
-        + T._entropy("00" * (256 * 256))  # DC size-0 for every data unit
-        + b"\xff\xd9"
-    )
-    assert len(payload) < 20_000  # still far under 33.5 MB / 1024
-    with _pt.raises(ValueError, match="allocation bound"):
-        decode_jpeg_gray(payload)
-    monkeypatch.setenv("TOMIX_JPEG_PROG_ALLOC_FLOOR_MB", "64")
-    px = decode_jpeg_gray(payload)
-    assert px.shape == (2048, 2048)
-    assert (px == px[0, 0]).all()  # flat image
-
-
 def test_dsir_scoring_pass_has_no_doc_level_shuffle(spark):
     """dsir_weights' scale contract: the per-document scoring pass is a
     narrow fold against one broadcast ratio map — no exchange keyed on
@@ -1426,30 +1398,45 @@ def test_tokenizer_spec_lives_in_functions_text():
 def test_similarity_scoring_idioms_live_in_three_kernels():
     """The similarity family scores through one kernel per idiom:
     ``_score_blocks`` (the cell cap and the sim_e6 rounding),
-    ``_local_topk`` (the per-query sort) and ``_lloyd`` (training). No
-    other code in similarity.py or pipelines.py reads the cap, rounds
-    sims, lexsorts a top-k or truncates a centroid mean by hand."""
+    ``_local_topk`` (the per-query sort), ``_lloyd`` (training) and
+    ``_lsh_buckets`` (the LSH sign bits). No other code in similarity.py
+    or pipelines.py reads the cap, rounds sims, lexsorts a top-k,
+    truncates a centroid mean or packs bucket bits by hand, and only
+    ``_lsh_buckets`` and the DuckDB oracle's ``_sql_bucket`` read the
+    LSH planes."""
     import ast
     from pathlib import Path
 
     ops = Path(__file__).resolve().parents[1] / "tomixpanel_spark" / "operators"
-    kernels = {"_score_blocks", "_local_topk", "_lloyd"}
+    kernels = {"_score_blocks", "_local_topk", "_lloyd", "_lsh_buckets"}
+    plane_readers = {"_lsh_buckets", "_sql_bucket"}
     needles = (
         "SCORE_CELLS_CAP.cap()",
         "* 1_000_000).astype",
         "np.lexsort(",
         "_trunc_div(",
+        ">= 0).reshape(",
     )
     offenders = []
     for name in ("similarity.py", "pipelines.py"):
         src = (ops / name).read_text()
+        tree = ast.parse(src)
         lines = src.splitlines()
-        for node in ast.walk(ast.parse(src)):
+        allowed = set()
+        for node in ast.walk(tree):
             if isinstance(node, ast.FunctionDef) and node.name in kernels:
                 for i in range(node.lineno - 1, node.end_lineno):
                     lines[i] = ""
+            if isinstance(node, ast.FunctionDef) and node.name in plane_readers:
+                allowed |= {id(n) for n in ast.walk(node)}
         rest = "\n".join(lines)
         offenders += [f"{name}: {n}" for n in needles if n in rest]
+        offenders += [
+            f"{name}:{n.lineno}: _PLANES read"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Name) and n.id == "_PLANES"
+            and isinstance(n.ctx, ast.Load) and id(n) not in allowed
+        ]
     assert not offenders, f"scoring idiom outside its kernel: {offenders}"
 
 

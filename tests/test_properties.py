@@ -7,10 +7,7 @@ from __future__ import annotations
 
 import pytest
 
-from base64 import b64decode as _b64decode
-
 import json
-import os
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -982,991 +979,6 @@ class TestPngGoldenVector:
         assert (meta["width"], meta["height"], meta["bit_depth"]) == (11, 11, 8)
 
 
-class TestJpegCodec:
-    """Baseline grayscale JPEG codec (multimodal.encode_jpeg_gray /
-    decode_jpeg_gray): spec-derived golden vectors assembled directly
-    from ITU-T T.81 (Annex K tables, canonical C.2 code assignment) with
-    pixels computed by the DIRECT 2-D IDCT formula — an independent path
-    through the standard, so the decoder is checked against the spec,
-    not only against its own encoder (the PNG golden-vector rule)."""
-
-    # Both streams: flat DQT (all 16s), 8x8 SOF0 single component, the
-    # Annex-K luminance DC/AC Huffman tables, one entropy block.
-    # A: DC category 3 code '100' + bits '110' (diff 6) + EOB '1010',
-    #    padded with 1s => bytes 9A BF. Dequantized DC 96 -> IDCT is the
-    #    constant 96/8 = 12, +128 => every pixel 140.
-    # B: DC category 0 ('00'), AC run 0/size 2 ('01') + bits '00'
-    #    (EXTEND => -3), EOB '1010', padded => 12 BF. Coefficient -48 at
-    #    (v=0,u=1); direct IDCT per T.81 A.3.3 gives identical rows
-    #    [120,121,123,126,130,133,135,136].
-    GOLDEN_A = _b64decode(
-        "/9j/2wBDABAQEBAQEBAQEBAQEBAQEBAQEBAQEBAQEBAQEBAQEBAQEBAQEBAQEBAQ"
-        "EBAQEBAQEBAQEBAQEBAQEBAQEBAQEBD/wAALCAAIAAgBAREA/8QA0gAAAQUBAQEB"
-        "AQEAAAAAAAAAAAECAwQFBgcICQoLEAACAQMDAgQDBQUEBAAAAX0BAgMABBEFEiEx"
-        "QQYTUWEHInEUMoGRoQgjQrHBFVLR8CQzYnKCCQoWFxgZGiUmJygpKjQ1Njc4OTpD"
-        "REVGR0hJSlNUVVZXWFlaY2RlZmdoaWpzdHV2d3h5eoOEhYaHiImKkpOUlZaXmJma"
-        "oqOkpaanqKmqsrO0tba3uLm6wsPExcbHyMnK0tPU1dbX2Nna4eLj5OXm5+jp6vHy"
-        "8/T19vf4+fr/2gAIAQEAAD8Amr//2Q=="
-    )
-    GOLDEN_B = _b64decode(
-        "/9j/2wBDABAQEBAQEBAQEBAQEBAQEBAQEBAQEBAQEBAQEBAQEBAQEBAQEBAQEBAQ"
-        "EBAQEBAQEBAQEBAQEBAQEBAQEBAQEBD/wAALCAAIAAgBAREA/8QA0gAAAQUBAQEB"
-        "AQEAAAAAAAAAAAECAwQFBgcICQoLEAACAQMDAgQDBQUEBAAAAX0BAgMABBEFEiEx"
-        "QQYTUWEHInEUMoGRoQgjQrHBFVLR8CQzYnKCCQoWFxgZGiUmJygpKjQ1Njc4OTpD"
-        "REVGR0hJSlNUVVZXWFlaY2RlZmdoaWpzdHV2d3h5eoOEhYaHiImKkpOUlZaXmJma"
-        "oqOkpaanqKmqsrO0tba3uLm6wsPExcbHyMnK0tPU1dbX2Nna4eLj5OXm5+jp6vHy"
-        "8/T19vf4+fr/2gAIAQEAAD8AEr//2Q=="
-    )
-
-    def test_spec_golden_dc_only_block(self):
-        import numpy as np
-
-        from tomixpanel_spark.operators.multimodal import decode_jpeg_gray
-
-        got = decode_jpeg_gray(self.GOLDEN_A)
-        assert got.shape == (8, 8)
-        assert (got == 140).all(), got
-
-    def test_spec_golden_single_ac_coefficient(self):
-        import numpy as np
-
-        from tomixpanel_spark.operators.multimodal import decode_jpeg_gray
-
-        got = decode_jpeg_gray(self.GOLDEN_B)
-        want_row = [120, 121, 123, 126, 130, 133, 135, 136]
-        assert got.shape == (8, 8)
-        assert (got == np.array(want_row, dtype=np.uint8)).all(), got
-
-    def test_constant_images_roundtrip_exactly_at_any_quality(self):
-        import numpy as np
-
-        from tomixpanel_spark.operators.multimodal import (
-            decode_jpeg_gray,
-            encode_jpeg_gray,
-        )
-
-        for q in (10, 50, 90, 100):
-            for v in (0, 128, 255):
-                img = np.full((16, 24), v, dtype=np.uint8)
-                assert (decode_jpeg_gray(encode_jpeg_gray(img, q)) == img).all()
-
-    def test_smooth_gradient_high_quality_near_lossless(self):
-        import numpy as np
-
-        from tomixpanel_spark.operators.multimodal import (
-            decode_jpeg_gray,
-            encode_jpeg_gray,
-        )
-
-        img = np.add.outer(np.arange(24) * 3, np.arange(40) * 2).astype(np.uint8)
-        out = decode_jpeg_gray(encode_jpeg_gray(img, 95))
-        assert out.shape == img.shape
-        assert np.abs(out.astype(int) - img.astype(int)).max() <= 1
-
-    def test_noise_roundtrip_bounded_and_nonmultiple_dims(self):
-        """17x23 forces edge-replication padding + crop; q90 noise error
-        stays bounded (JPEG is lossy — the bound documents how lossy)."""
-        import numpy as np
-
-        from tomixpanel_spark.operators.multimodal import (
-            _decode_jpeg_header,
-            decode_jpeg_gray,
-            encode_jpeg_gray,
-        )
-
-        rng = np.random.default_rng(7)
-        img = rng.integers(0, 256, (17, 23), dtype=np.uint8)
-        payload = encode_jpeg_gray(img, 90)
-        out = decode_jpeg_gray(payload)
-        assert out.shape == (17, 23)
-        err = np.abs(out.astype(int) - img.astype(int))
-        assert err.max() <= 32 and err.mean() <= 6
-        meta = _decode_jpeg_header(payload)
-        assert (meta["width"], meta["height"]) == (23, 17)
-
-    def test_entropy_byte_stuffing_roundtrips(self):
-        """Images chosen to produce 0xFF entropy bytes exercise the
-        stuff/unstuff path: any mismatch desyncs the whole scan."""
-        import numpy as np
-
-        from tomixpanel_spark.operators.multimodal import (
-            decode_jpeg_gray,
-            encode_jpeg_gray,
-        )
-
-        rng = np.random.default_rng(11)
-        for seed in range(20):
-            img = rng.integers(0, 256, (8, 16), dtype=np.uint8)
-            payload = encode_jpeg_gray(img, 85)
-            out = decode_jpeg_gray(payload)  # desync would raise/garble
-            assert out.shape == img.shape
-
-    # ---- spec-assembly helpers for the COLOR golden vectors (test-local,
-    # independent of the module's encoder — the bitstreams below are
-    # hand-derived from T.81 Annex K / F.1) ----------------------------------
-
-    @staticmethod
-    def _seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + (len(body) + 2).to_bytes(2, "big") + body
-
-    @classmethod
-    def _dqt_flat16(cls) -> bytes:
-        return cls._seg(0xDB, bytes([0x00]) + bytes([16] * 64))
-
-    @classmethod
-    def _dht_annexk(cls) -> bytes:
-        from tomixpanel_spark.operators.multimodal import (
-            _JPEG_AC_BITS,
-            _JPEG_AC_VALS,
-            _JPEG_DC_BITS,
-            _JPEG_DC_VALS,
-        )
-
-        return cls._seg(
-            0xC4,
-            bytes([0x00] + _JPEG_DC_BITS + _JPEG_DC_VALS)
-            + bytes([0x10] + _JPEG_AC_BITS + _JPEG_AC_VALS),
-        )
-
-    @classmethod
-    def _sof0_ycbcr(cls, h: int, w: int, y_hv: int) -> bytes:
-        body = bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big")
-        body += bytes([3, 1, y_hv, 0, 2, 0x11, 0, 3, 0x11, 0])
-        return cls._seg(0xC0, body)
-
-    @classmethod
-    def _sos_3comp(cls) -> bytes:
-        return cls._seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0]))
-
-    @staticmethod
-    def _entropy(bits: str) -> bytes:
-        bits = bits + "1" * (-len(bits) % 8)
-        raw = bytes(int(bits[i : i + 8], 2) for i in range(0, len(bits), 8))
-        return raw.replace(b"\xff", b"\xff\x00")  # byte stuffing
-
-    def test_color_444_luma_golden(self):
-        """Hand-assembled 4:4:4 YCbCr stream: Y block DC diff +6 (code
-        '100'+'110', dequant 96 -> constant 140), Cb/Cr DC 0 + EOB. The
-        decoder must return the LUMA plane only — chroma advances the
-        bitstream but contributes no pixels."""
-        from tomixpanel_spark.operators.multimodal import decode_jpeg_gray
-
-        bits = "100" "110" "1010" + "00" "1010" + "00" "1010"
-        payload = (
-            b"\xff\xd8" + self._dqt_flat16() + self._sof0_ycbcr(8, 8, 0x11)
-            + self._dht_annexk() + self._sos_3comp()
-            + self._entropy(bits) + b"\xff\xd9"
-        )
-        got = decode_jpeg_gray(payload)
-        assert got.shape == (8, 8)
-        assert (got == 140).all(), got
-
-    def test_color_420_luma_golden_and_dc_prediction(self):
-        """Hand-assembled 4:2:0 stream (Y 2x2, Cb/Cr 1x1 — one 16x16
-        MCU): four Y blocks with DC diffs +6,+2,-2,-6 pin the
-        PER-COMPONENT DC prediction chain across the luma blocks of one
-        MCU; quadrant constants 140/144/140/128 follow from cumulative
-        DC 6,8,6,0 x flat-16 quant."""
-        import numpy as np
-
-        from tomixpanel_spark.operators.multimodal import decode_jpeg_gray
-
-        bits = (
-            "100" "110" "1010"      # Y TL: diff +6 -> dc 6 -> 140
-            "011" "10" "1010"       # Y TR: diff +2 -> dc 8 -> 144
-            "011" "01" "1010"       # Y BL: diff -2 -> dc 6 -> 140
-            "100" "001" "1010"      # Y BR: diff -6 -> dc 0 -> 128
-            "00" "1010"             # Cb: dc 0, EOB
-            "00" "1010"             # Cr: dc 0, EOB
-        )
-        payload = (
-            b"\xff\xd8" + self._dqt_flat16() + self._sof0_ycbcr(16, 16, 0x22)
-            + self._dht_annexk() + self._sos_3comp()
-            + self._entropy(bits) + b"\xff\xd9"
-        )
-        got = decode_jpeg_gray(payload)
-        assert got.shape == (16, 16)
-        expected = np.zeros((16, 16), dtype=np.uint8)
-        expected[:8, :8] = 140
-        expected[:8, 8:] = 144
-        expected[8:, :8] = 140
-        expected[8:, 8:] = 128
-        assert (got == expected).all(), got
-
-    def test_color_422_luma_golden(self):
-        """4:2:2 (Y 2x1, Cb/Cr 1x1 — one 16-wide MCU): exercises the
-        horizontal-only sampling loop; halves 140 / 144."""
-        from tomixpanel_spark.operators.multimodal import decode_jpeg_gray
-
-        bits = (
-            "100" "110" "1010"   # Y left: dc 6 -> 140
-            "011" "10" "1010"    # Y right: dc 8 -> 144
-            "00" "1010" "00" "1010"
-        )
-        payload = (
-            b"\xff\xd8" + self._dqt_flat16() + self._sof0_ycbcr(8, 16, 0x21)
-            + self._dht_annexk() + self._sos_3comp()
-            + self._entropy(bits) + b"\xff\xd9"
-        )
-        got = decode_jpeg_gray(payload)
-        assert got.shape == (8, 16)
-        assert (got[:, :8] == 140).all() and (got[:, 8:] == 144).all()
-
-    def test_color_chroma_ac_keeps_bitstream_sync(self):
-        """Chroma blocks carrying real AC coefficients must be entropy-
-        decoded (skipped-IDCT) without desyncing the luma that follows:
-        two 4:4:4 MCUs where MCU1's Cb codes an AC coefficient and
-        MCU2's Y must still decode to its spec value."""
-        from tomixpanel_spark.operators.multimodal import decode_jpeg_gray
-
-        bits = (
-            # MCU 1 (left 8x8): Y dc 6 -> 140
-            "100" "110" "1010"
-            + "00" "01" "00" "1010"   # Cb: dc 0, AC run0/size2 raw00 (-3), EOB
-            + "00" "1010"             # Cr: dc 0
-            # MCU 2 (right 8x8): Y diff +2 -> dc 8 -> 144
-            + "011" "10" "1010"
-            + "00" "1010" + "00" "1010"
-        )
-        payload = (
-            b"\xff\xd8" + self._dqt_flat16() + self._sof0_ycbcr(8, 16, 0x11)
-            + self._dht_annexk() + self._sos_3comp()
-            + self._entropy(bits) + b"\xff\xd9"
-        )
-        got = decode_jpeg_gray(payload)
-        assert got.shape == (8, 16)
-        assert (got[:, :8] == 140).all() and (got[:, 8:] == 144).all()
-
-    def test_color_420_odd_dims_crop(self):
-        """4:2:0 with 12x12 SOF dims: the MCU still codes 16x16 of luma;
-        the decoder must crop to the declared image size."""
-        from tomixpanel_spark.operators.multimodal import decode_jpeg_gray
-
-        bits = (
-            "100" "110" "1010" "011" "10" "1010"
-            "011" "01" "1010" "100" "001" "1010"
-            "00" "1010" "00" "1010"
-        )
-        payload = (
-            b"\xff\xd8" + self._dqt_flat16() + self._sof0_ycbcr(12, 12, 0x22)
-            + self._dht_annexk() + self._sos_3comp()
-            + self._entropy(bits) + b"\xff\xd9"
-        )
-        got = decode_jpeg_gray(payload)
-        assert got.shape == (12, 12)
-        assert (got[:8, :8] == 140).all()
-        assert (got[:8, 8:] == 144).all()
-        assert (got[8:, :8] == 140).all()
-        assert (got[8:, 8:] == 128).all()
-
-    def test_color_dhash_through_perceptual_pipeline(self):
-        """A color 4:4:4 payload flows through decode_image_gray +
-        dhash_bits exactly like its grayscale twin: both decode to the
-        same luma, so the dHashes are EQUAL."""
-        import numpy as np
-
-        from tomixpanel_spark.operators.multimodal import (
-            decode_image_gray,
-            dhash_bits,
-            encode_jpeg_gray,
-        )
-
-        bits = "100" "110" "1010" + "00" "1010" + "00" "1010"
-        color = (
-            b"\xff\xd8" + self._dqt_flat16() + self._sof0_ycbcr(8, 8, 0x11)
-            + self._dht_annexk() + self._sos_3comp()
-            + self._entropy(bits) + b"\xff\xd9"
-        )
-        gray = encode_jpeg_gray(np.full((8, 8), 140, dtype=np.uint8), 100)
-        luma_c = decode_image_gray(color)
-        luma_g = decode_image_gray(gray)
-        assert (luma_c == luma_g).all()
-        assert dhash_bits(luma_c) == dhash_bits(luma_g)
-
-    # ---- progressive (SOF2) golden vectors ---------------------------------
-
-    @classmethod
-    def _sof2_gray(cls, h: int, w: int) -> bytes:
-        body = bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big")
-        body += bytes([1, 1, 0x11, 0])
-        return cls._seg(0xC2, body)
-
-    @classmethod
-    def _sof2_ycbcr(cls, h: int, w: int, y_hv: int) -> bytes:
-        body = bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big")
-        body += bytes([3, 1, y_hv, 0, 2, 0x11, 0, 3, 0x11, 0])
-        return cls._seg(0xC2, body)
-
-    @classmethod
-    def _sos_prog(cls, comp_specs, ss, se, ah, al) -> bytes:
-        body = bytes([len(comp_specs)])
-        for cs, tdta in comp_specs:
-            body += bytes([cs, tdta])
-        body += bytes([ss, se, (ah << 4) | al])
-        return cls._seg(0xDA, body)
-
-    @staticmethod
-    def _direct_idct(coefmat):
-        """T.81 A.3.3 direct IDCT — the spec's own formula, independent
-        of the decoder's matrix implementation."""
-        import numpy as np
-
-        out = np.zeros((8, 8))
-        for yy in range(8):
-            for xx in range(8):
-                s = 0.0
-                for v in range(8):
-                    for u in range(8):
-                        cu = 1 / np.sqrt(2) if u == 0 else 1.0
-                        cv = 1 / np.sqrt(2) if v == 0 else 1.0
-                        s += (
-                            cu * cv * coefmat[v, u]
-                            * np.cos((2 * xx + 1) * u * np.pi / 16)
-                            * np.cos((2 * yy + 1) * v * np.pi / 16)
-                        )
-                out[yy, xx] = s / 4 + 128
-        return np.clip(np.rint(out), 0, 255).astype("uint8")
-
-    def test_progressive_dc_first_refine_then_ac(self):
-        """Grayscale SOF2, three scans: DC-first at Al=1 (diff +3 ->
-        DC 6), DC-refinement appending bit 1 (DC 7), AC-first all-EOB.
-        Successive approximation must assemble DC=7 -> dequant 112 ->
-        constant 142."""
-        from tomixpanel_spark.operators.multimodal import decode_jpeg_gray
-
-        payload = (
-            b"\xff\xd8" + self._dqt_flat16() + self._sof2_gray(8, 8)
-            + self._dht_annexk()
-            + self._sos_prog([(1, 0x00)], 0, 0, 0, 1)
-            + self._entropy("011" "11")           # DC cat2 +3, shifted <<1
-            + self._sos_prog([(1, 0x00)], 0, 0, 1, 0)
-            + self._entropy("1")                   # refinement bit -> |=1
-            + self._sos_prog([(1, 0x00)], 1, 63, 0, 0)
-            + self._entropy("1010")                # AC: EOB
-            + b"\xff\xd9"
-        )
-        got = decode_jpeg_gray(payload)
-        assert got.shape == (8, 8)
-        assert (got == 142).all(), got
-
-    def test_progressive_ac_first_and_refinement(self):
-        """AC successive approximation: first pass codes +1 at k=1 under
-        Al=1 (coefficient 2), the refinement pass's EOB-run correction
-        bit promotes it to 3 (G.1.2.3). Expected pixels from the spec's
-        direct IDCT with coefficient 48 at (v=0, u=1)."""
-        import numpy as np
-
-        from tomixpanel_spark.operators.multimodal import decode_jpeg_gray
-
-        payload = (
-            b"\xff\xd8" + self._dqt_flat16() + self._sof2_gray(8, 8)
-            + self._dht_annexk()
-            + self._sos_prog([(1, 0x00)], 0, 0, 0, 0)
-            + self._entropy("00")                  # DC 0
-            + self._sos_prog([(1, 0x00)], 1, 63, 0, 1)
-            + self._entropy("00" "1" "1010")       # AC 0/1 +1 (<<1 = 2), EOB
-            + self._sos_prog([(1, 0x00)], 1, 63, 1, 0)
-            + self._entropy("1010" "1")            # EOB run 1 + correction bit
-            + b"\xff\xd9"
-        )
-        got = decode_jpeg_gray(payload)
-        coef = np.zeros((8, 8))
-        coef[0, 1] = 3 * 16  # refined coefficient x flat quant
-        assert (got == self._direct_idct(coef)).all(), got
-
-    def test_progressive_spectral_bands(self):
-        """Band-split AC scans (Ss..Se partitions): k=1 coded in band
-        1..5, k=6 in band 6..63; the assembled spectrum must match the
-        direct IDCT of both coefficients together."""
-        import numpy as np
-
-        from tomixpanel_spark.operators.multimodal import (
-            _ZIGZAG,
-            decode_jpeg_gray,
-        )
-
-        payload = (
-            b"\xff\xd8" + self._dqt_flat16() + self._sof2_gray(8, 8)
-            + self._dht_annexk()
-            + self._sos_prog([(1, 0x00)], 0, 0, 0, 0)
-            + self._entropy("00")                  # DC 0
-            + self._sos_prog([(1, 0x00)], 1, 5, 0, 0)
-            + self._entropy("00" "1" "1010")       # k=1: +1, EOB(band)
-            + self._sos_prog([(1, 0x00)], 6, 63, 0, 0)
-            + self._entropy("00" "1" "1010")       # k=6: +1, EOB(band)
-            + b"\xff\xd9"
-        )
-        got = decode_jpeg_gray(payload)
-        coef = np.zeros(64)
-        coef[1] = 16
-        coef[6] = 16
-        mat = np.zeros((8, 8))
-        mat.flat[_ZIGZAG] = coef  # dezigzag: position k lands at _ZIGZAG[k]
-        assert (got == self._direct_idct(mat)).all(), got
-
-    def test_progressive_color_interleaved_dc(self):
-        """3-component progressive: interleaved DC-first scan (Y diff +6,
-        chroma 0) + three per-component all-EOB AC scans. Luma must
-        decode to constant 140; chroma scans only advance the walk."""
-        from tomixpanel_spark.operators.multimodal import decode_jpeg_gray
-
-        payload = (
-            b"\xff\xd8" + self._dqt_flat16() + self._sof2_ycbcr(8, 8, 0x11)
-            + self._dht_annexk()
-            + self._sos_prog([(1, 0x00), (2, 0x00), (3, 0x00)], 0, 0, 0, 0)
-            + self._entropy("100" "110" + "00" + "00")
-            + self._sos_prog([(1, 0x00)], 1, 63, 0, 0)
-            + self._entropy("1010")
-            + self._sos_prog([(2, 0x00)], 1, 63, 0, 0)
-            + self._entropy("1010")
-            + self._sos_prog([(3, 0x00)], 1, 63, 0, 0)
-            + self._entropy("1010")
-            + b"\xff\xd9"
-        )
-        got = decode_jpeg_gray(payload)
-        assert got.shape == (8, 8)
-        assert (got == 140).all(), got
-
-    def test_progressive_eob_run_spans_blocks(self):
-        """A 16x8 (two-block) image where one AC-first EOB run covers
-        BOTH blocks: EOBn symbols (RS=0x10 here) don't exist in the
-        Annex-K baseline table, so the scan ships its own DHT — also
-        pinning that tables may be REDEFINED between scans."""
-        from tomixpanel_spark.operators.multimodal import decode_jpeg_gray
-
-        # custom AC table (class 1, id 0): single symbol 0x10 = EOB1,
-        # canonical code '0' (BITS=[1,0,...])
-        eob1_dht = self._seg(
-            0xC4, bytes([0x10, 1] + [0] * 15 + [0x10])
-        )
-        payload = (
-            b"\xff\xd8" + self._dqt_flat16() + self._sof2_gray(8, 16)
-            + self._dht_annexk()
-            + self._sos_prog([(1, 0x00)], 0, 0, 0, 0)
-            + self._entropy("100" "110" + "011" "10")  # DC 6 then +2 -> 8
-            + eob1_dht
-            + self._sos_prog([(1, 0x00)], 1, 63, 0, 0)
-            # code '0' = EOB1 -> run 2^1 + appended bit 0 = 2 blocks
-            + self._entropy("0" "0")
-            + b"\xff\xd9"
-        )
-        got = decode_jpeg_gray(payload)
-        assert got.shape == (8, 16)
-        assert (got[:, :8] == 140).all() and (got[:, 8:] == 144).all()
-
-    def test_progressive_restart_markers_and_dri_redefinition(self):
-        """Progressive DC scan under DRI=1: an RST0 between the two
-        blocks must byte-realign and reset the DC predictor (block 2
-        codes +8 ABSOLUTE, not a +2 delta). A second DRI=0 segment then
-        disables restarts for the AC scan — DRI is redefinable between
-        scans."""
-        from tomixpanel_spark.operators.multimodal import decode_jpeg_gray
-
-        # block 1: cat3 '100'+'110' (+6), pad '11' -> 0x9B; RST0;
-        # block 2 (pred reset): cat4 '101'+'1000' (+8), pad '1' -> 0xB1
-        ent_dc = bytes([0b10011011]) + b"\xff\xd0" + bytes([0b10110001])
-        payload = (
-            b"\xff\xd8" + self._dqt_flat16() + self._sof2_gray(8, 16)
-            + self._dht_annexk()
-            + self._seg(0xDD, (1).to_bytes(2, "big"))
-            + self._sos_prog([(1, 0x00)], 0, 0, 0, 0) + ent_dc
-            + self._seg(0xDD, (0).to_bytes(2, "big"))
-            + self._sos_prog([(1, 0x00)], 1, 63, 0, 0)
-            + self._entropy("1010" "1010")  # EOB, EOB — no restart now
-            + b"\xff\xd9"
-        )
-        got = decode_jpeg_gray(payload)
-        assert got.shape == (8, 16)
-        assert (got[:, :8] == 140).all() and (got[:, 8:] == 144).all()
-
-    def test_progressive_luma_plane_respects_pixel_cap(self, monkeypatch):
-        """Review regression: a small SOF2 payload declaring dims past
-        TOMIX_IMG_MAX_PIXELS must raise BEFORE allocating — the old
-        coefficient-only bound (4x max_px) let a 1-component stream's
-        luma plane exceed the cap the baseline path enforces."""
-        import pytest
-
-        from tomixpanel_spark.operators.multimodal import decode_jpeg_gray
-
-        monkeypatch.setenv("TOMIX_IMG_MAX_PIXELS", "65536")
-        payload = (
-            b"\xff\xd8" + self._dqt_flat16() + self._sof2_gray(512, 512)
-            + self._dht_annexk()
-            + self._sos_prog([(1, 0x00)], 0, 0, 0, 0)
-            + self._entropy("00")
-            + b"\xff\xd9"
-        )
-        with pytest.raises(ValueError, match="TOMIX_IMG_MAX_PIXELS"):
-            decode_jpeg_gray(payload)
-
-    def test_rejects_progressive_and_cmyk(self):
-        import numpy as np
-        import pytest
-
-        from tomixpanel_spark.operators.multimodal import (
-            decode_jpeg_gray,
-            encode_jpeg_gray,
-        )
-
-        img = np.full((8, 8), 100, dtype=np.uint8)
-        payload = bytearray(encode_jpeg_gray(img, 90))
-        sof = payload.find(b"\xff\xc0")
-        lossless = bytes(payload[:sof + 1]) + b"\xc3" + bytes(payload[sof + 2:])
-        with pytest.raises(ValueError, match="baseline"):
-            decode_jpeg_gray(lossless)
-        # a baseline stream relabeled SOF2 carries a full-band SOS, which
-        # a progressive DC scan must reject (Se must be 0)
-        relabeled = bytes(payload[:sof + 1]) + b"\xc2" + bytes(payload[sof + 2:])
-        with pytest.raises(ValueError, match="Se=0"):
-            decode_jpeg_gray(relabeled)
-        # a correctly-sized 4-component (CMYK-style) SOF must raise the
-        # honest-contract error, not a truncation artifact
-        body = bytes([8]) + (8).to_bytes(2, "big") + (8).to_bytes(2, "big")
-        body += bytes([4]) + bytes(
-            b for i in range(4) for b in (i + 1, 0x11, 0)
-        )
-        cmyk = (
-            b"\xff\xd8" + self._dqt_flat16()
-            + self._seg(0xC0, body) + self._dht_annexk()
-        )
-        with pytest.raises(ValueError, match="CMYK|3-component|1-component"):
-            decode_jpeg_gray(cmyk)
-
-    def test_restart_interval_roundtrip(self):
-        """DRI/RSTn streams (T.81 E.2.4): the restart-interval encoding
-        of an image must decode to EXACTLY the pixels of the plain
-        encoding — byte realignment, DC-prediction reset, and RST cycle
-        all exercised (>8 intervals so the marker index wraps)."""
-        import numpy as np
-
-        from tomixpanel_spark.operators.multimodal import (
-            decode_jpeg_gray,
-            encode_jpeg_gray,
-        )
-
-        rng = np.random.default_rng(17)
-        for ri in (1, 2, 3, 5):
-            img = rng.integers(0, 256, (24, 40), dtype=np.uint8)  # 15 MCUs
-            plain = decode_jpeg_gray(encode_jpeg_gray(img, 85))
-            rst = decode_jpeg_gray(
-                encode_jpeg_gray(img, 85, restart_interval=ri)
-            )
-            assert (plain == rst).all()
-
-    def test_restart_markers_out_of_sequence_raise(self):
-        import numpy as np
-        import pytest
-
-        from tomixpanel_spark.operators.multimodal import (
-            decode_jpeg_gray,
-            encode_jpeg_gray,
-        )
-
-        img = np.random.default_rng(19).integers(
-            0, 256, (8, 32), dtype=np.uint8
-        )
-        payload = bytearray(encode_jpeg_gray(img, 85, restart_interval=1))
-        i = payload.find(b"\xff\xd0")  # first RST0 -> RST5 (wrong cycle)
-        assert i > 0
-        payload[i + 1] = 0xD5
-        with pytest.raises(ValueError, match="out of sequence"):
-            decode_jpeg_gray(bytes(payload))
-
-    def test_fill_bytes_before_markers_accepted(self):
-        """T.81 B.1.1.2: any number of 0xFF fill bytes may pad before a
-        marker; standard decoders accept them, so must ours."""
-        import numpy as np
-
-        from tomixpanel_spark.operators.multimodal import (
-            decode_jpeg_gray,
-            encode_jpeg_gray,
-        )
-
-        img = np.random.default_rng(23).integers(
-            0, 256, (16, 16), dtype=np.uint8
-        )
-        payload = encode_jpeg_gray(img, 90)
-        want = decode_jpeg_gray(payload)
-        padded = payload[:2] + b"\xff\xff\xff" + payload[2:]
-        assert (decode_jpeg_gray(padded) == want).all()
-
-    def test_oversized_sof_dims_raise_not_oom(self):
-        """SOF dimensions are untrusted: a small payload claiming a
-        huge frame must raise ValueError BEFORE allocating the output
-        (the worker-OOM guard), via both the entropy-floor bound and
-        the TOMIX_IMG_MAX_PIXELS cap."""
-        import struct
-
-        import numpy as np
-        import pytest
-
-        from tomixpanel_spark.operators.multimodal import (
-            decode_jpeg_gray,
-            encode_jpeg_gray,
-        )
-
-        img = np.full((8, 8), 77, dtype=np.uint8)
-        payload = bytearray(encode_jpeg_gray(img, 90))
-        sof = payload.find(b"\xff\xc0")
-        payload[sof + 5 : sof + 9] = struct.pack(">HH", 0xFFF8, 0xFFF8)
-        with pytest.raises(ValueError, match="entropy data could code"):
-            decode_jpeg_gray(bytes(payload))
-        # cap path: dims the entropy floor would allow, pixels > cap
-        big = np.zeros((1024, 1024), dtype=np.uint8)
-        cap_payload = encode_jpeg_gray(big, 90)
-        old = os.environ.get("TOMIX_IMG_MAX_PIXELS")
-        os.environ["TOMIX_IMG_MAX_PIXELS"] = str(512 * 512)
-        try:
-            with pytest.raises(ValueError, match="TOMIX_IMG_MAX_PIXELS"):
-                decode_jpeg_gray(cap_payload)
-        finally:
-            if old is None:
-                del os.environ["TOMIX_IMG_MAX_PIXELS"]
-            else:
-                os.environ["TOMIX_IMG_MAX_PIXELS"] = old
-
-    def test_dhash_stable_across_png_and_jpeg(self):
-        """The SAME pixels encoded as PNG (lossless) and JPEG (q98)
-        must yield dHashes within the banded-Hamming match radius —
-        the property that makes mixed-format near-dup detection work."""
-        import numpy as np
-
-        from tomixpanel_spark.operators.multimodal import (
-            MEDIA_HAM_MAX,
-            decode_jpeg_gray,
-            decode_png_gray,
-            dhash_bits,
-            encode_jpeg_gray,
-            encode_png_gray,
-        )
-
-        rng = np.random.default_rng(3)
-        for _ in range(30):
-            px = rng.integers(0, 256, (8, 8), dtype=np.uint8)
-            h_png = dhash_bits(decode_png_gray(encode_png_gray(px)))
-            h_jpg = dhash_bits(decode_jpeg_gray(encode_jpeg_gray(px, 98)))
-            ham = bin(h_png ^ h_jpg).count("1")
-            assert ham <= MEDIA_HAM_MAX, ham
-
-    def test_mixed_format_neardup_end_to_end(self, spark):
-        """A payload table mixing PNG and JPEG encodings of the same
-        underlying images, through the REAL pipeline (signature-
-        dispatched pixel decode -> dHash -> banded_hamming_pairs): every
-        (png twin, jpeg twin) pair must be recovered."""
-        import numpy as np
-
-        from tomixpanel_spark.operators.dedup import banded_hamming_pairs
-        from tomixpanel_spark.operators.multimodal import (
-            DHASH_BITS,
-            MEDIA_BANDS,
-            MEDIA_HAM_MAX,
-            encode_jpeg_gray,
-            encode_png_gray,
-            perceptual_hash,
-        )
-
-        rng = np.random.default_rng(5)
-        rows = []
-        n = 12
-        for i in range(n):
-            px = rng.integers(0, 256, (8, 8), dtype=np.uint8)
-            rows.append((i, "image/png", bytearray(encode_png_gray(px))))
-            rows.append((100 + i, "image/jpeg",
-                         bytearray(encode_jpeg_gray(px, 98))))
-        media = spark.createDataFrame(
-            rows, "item_id long, media_type string, payload binary"
-        )
-        hashes = perceptual_hash(media)
-        pairs = {
-            (r["doc_a"], r["doc_b"])
-            for r in banded_hamming_pairs(
-                hashes, "dhash", MEDIA_BANDS, 8, MEDIA_HAM_MAX
-            ).collect()
-        }
-        for i in range(n):
-            assert (i, 100 + i) in pairs, f"twin pair for image {i} missing"
-
-    def test_noninterleaved_baseline_three_scans(self):
-        """Non-interleaved baseline (T.81 A.2.2, round-11 advice's rare
-        case): a 4:4:4 YCbCr file coded as THREE single-component scans
-        must decode its luma identically to the interleaved twin. The
-        chroma scans are self-contained and skipped wholesale."""
-        from tomixpanel_spark.operators.multimodal import decode_jpeg_gray
-
-        def sos1(cid):
-            return self._seg(0xDA, bytes([1, cid, 0x00, 0, 63, 0]))
-
-        payload = (
-            b"\xff\xd8" + self._dqt_flat16() + self._sof0_ycbcr(8, 8, 0x11)
-            + self._dht_annexk()
-            + sos1(1) + self._entropy("100" "110" "1010")  # Y: dc 6 -> 140
-            + sos1(2) + self._entropy("00" "1010")          # Cb
-            + sos1(3) + self._entropy("00" "1010")          # Cr
-            + b"\xff\xd9"
-        )
-        got = decode_jpeg_gray(payload)
-        assert got.shape == (8, 8)
-        assert (got == 140).all(), got
-
-    def test_noninterleaved_dc_prediction_across_blocks(self):
-        """Two luma blocks in one non-interleaved scan: block raster
-        order with DC prediction (+6 then +2 -> 140 / 144), chroma scans
-        carrying arbitrary self-contained entropy the decoder never
-        reads."""
-        from tomixpanel_spark.operators.multimodal import decode_jpeg_gray
-
-        def sos1(cid):
-            return self._seg(0xDA, bytes([1, cid, 0x00, 0, 63, 0]))
-
-        payload = (
-            b"\xff\xd8" + self._dqt_flat16() + self._sof0_ycbcr(8, 16, 0x11)
-            + self._dht_annexk()
-            + sos1(1) + self._entropy("100" "110" "1010" + "011" "10" "1010")
-            + sos1(2) + b"\x5a\x5a"  # garbage chroma entropy: never decoded
-            + sos1(3) + b"\x5a\x5a"
-            + b"\xff\xd9"
-        )
-        got = decode_jpeg_gray(payload)
-        assert got.shape == (8, 16)
-        assert (got[:, :8] == 140).all() and (got[:, 8:] == 144).all()
-
-    def test_partial_interleave_scan_subset_raises(self):
-        """A scan covering 2 of 3 SOF components (partial interleave) is
-        the remaining unsupported layout — honest ValueError, not a
-        silent misdecode."""
-        import pytest
-
-        from tomixpanel_spark.operators.multimodal import decode_jpeg_gray
-
-        payload = (
-            b"\xff\xd8" + self._dqt_flat16() + self._sof0_ycbcr(8, 8, 0x11)
-            + self._dht_annexk()
-            + self._seg(0xDA, bytes([2, 1, 0x00, 2, 0x00, 0, 63, 0]))
-            + self._entropy("100" "110" "1010" "00" "1010")
-            + b"\xff\xd9"
-        )
-        with pytest.raises(ValueError, match="partial-interleave"):
-            decode_jpeg_gray(payload)
-
-    def test_progressive_dqt_snapshot_at_first_scan(self):
-        """libjpeg latches each component's quant table at its FIRST
-        coefficient-bearing scan: a DQT redefinition AFTER luma's first
-        scan must NOT change luma dequantization (last-definition-wins
-        decoded 152 here; the snapshot semantics give 140)."""
-        from tomixpanel_spark.operators.multimodal import decode_jpeg_gray
-
-        dqt_flat32 = self._seg(0xDB, bytes([0x00]) + bytes([32] * 64))
-        payload = (
-            b"\xff\xd8" + self._dqt_flat16() + self._sof2_gray(8, 8)
-            + self._dht_annexk()
-            + self._sos_prog([(1, 0x00)], 0, 0, 0, 0)
-            + self._entropy("100" "110")           # DC 6 (x16 -> 140)
-            + dqt_flat32                            # redefined AFTER scan 1
-            + self._sos_prog([(1, 0x00)], 1, 63, 0, 0)
-            + self._entropy("1010")                 # AC: EOB
-            + b"\xff\xd9"
-        )
-        got = decode_jpeg_gray(payload)
-        assert got.shape == (8, 8)
-        assert (got == 140).all(), got
-
-    def test_progressive_alloc_bound_is_payload_proportional(self):
-        """DoS amplification bound: a few-hundred-byte progressive
-        payload whose SOF geometry passes the pixel/byte caps but claims
-        >max(16 MB, 1024 x payload) of coefficient buffers must raise
-        BEFORE np.zeros (EOB runs make block-count-vs-entropy floors
-        inapplicable in progressive mode, so the allocation is bounded
-        against the payload size instead). Round-12 verdict #7 tightened
-        the floor 64 MB -> 16 MB and re-denominated the geometry bound
-        in bytes: both the 8192x8192 (537 MB of buffers) and a
-        2048x2048 (34 MB — under the OLD floor, over the new one)
-        crafted payload must raise."""
-        import pytest
-
-        from tomixpanel_spark.operators.multimodal import decode_jpeg_gray
-
-        for dim in (8192, 2048):
-            payload = (
-                b"\xff\xd8" + self._dqt_flat16() + self._sof2_gray(dim, dim)
-                + self._dht_annexk()
-                + self._sos_prog([(1, 0x00)], 0, 0, 0, 0)
-                + self._entropy("00")
-                + b"\xff\xd9"
-            )
-            assert len(payload) < 1024  # the amplification premise
-            with pytest.raises(ValueError, match="allocation bound"):
-                decode_jpeg_gray(payload)
-
-    def test_progressive_color_payload_through_spark_pipeline(self, spark):
-        """A hand-assembled PROGRESSIVE interleaved-color payload runs
-        through the real Spark perceptual_hash stage (mapInPandas,
-        executor-side decode) and hashes identically to its baseline
-        grayscale twin — the three format classes (baseline gray,
-        baseline color, progressive color) are ONE pipeline."""
-        import numpy as np
-
-        from tomixpanel_spark.operators.multimodal import (
-            encode_jpeg_gray,
-            perceptual_hash,
-        )
-
-        T = TestJpegCodec
-        progressive_color = (
-            b"\xff\xd8" + T._dqt_flat16() + T._sof2_ycbcr(8, 8, 0x11)
-            + T._dht_annexk()
-            + T._sos_prog([(1, 0x00), (2, 0x00), (3, 0x00)], 0, 0, 0, 0)
-            + T._entropy("100" "110" + "00" + "00")
-            + T._sos_prog([(1, 0x00)], 1, 63, 0, 0) + T._entropy("1010")
-            + T._sos_prog([(2, 0x00)], 1, 63, 0, 0) + T._entropy("1010")
-            + T._sos_prog([(3, 0x00)], 1, 63, 0, 0) + T._entropy("1010")
-            + b"\xff\xd9"
-        )
-        gray_twin = encode_jpeg_gray(np.full((8, 8), 140, dtype=np.uint8), 100)
-        baseline_color = (
-            b"\xff\xd8" + T._dqt_flat16() + T._sof0_ycbcr(8, 8, 0x11)
-            + T._dht_annexk() + T._sos_3comp()
-            + T._entropy("100" "110" "1010" + "00" "1010" + "00" "1010")
-            + b"\xff\xd9"
-        )
-        media = spark.createDataFrame(
-            [
-                (1, bytearray(gray_twin)),
-                (2, bytearray(baseline_color)),
-                (3, bytearray(progressive_color)),
-            ],
-            "item_id long, payload binary",
-        )
-        got = {r["doc_id"]: r["dhash"] for r in perceptual_hash(media).collect()}
-        assert got[1] == got[2] == got[3], got
-
-
-class TestExifOrientation:
-    """EXIF orientation (APP1 tag 0x0112) parse + normalization
-    (round-11 verdict #5): a rotated re-save of the same image must
-    dHash into the same Hamming bucket."""
-
-    @staticmethod
-    def _exif_app1(orientation: int, endian: str = "<") -> bytes:
-        import struct
-
-        tiff = (b"II" if endian == "<" else b"MM")
-        tiff += struct.pack(endian + "H", 42) + struct.pack(endian + "I", 8)
-        tiff += struct.pack(endian + "H", 1)  # one IFD0 entry
-        tiff += (
-            struct.pack(endian + "HHI", 0x0112, 3, 1)
-            + struct.pack(endian + "H", orientation)
-            + b"\x00\x00"
-        )
-        tiff += struct.pack(endian + "I", 0)  # no next IFD
-        body = b"Exif\x00\x00" + tiff
-        return bytes([0xFF, 0xE1]) + (len(body) + 2).to_bytes(2, "big") + body
-
-    @staticmethod
-    def _display_img():
-        import numpy as np
-
-        # strong distinct steps (multiples of 32, horizontally adjacent
-        # values never equal) so dHash gradient signs survive JPEG loss
-        r, c = np.mgrid[0:8, 0:8]
-        return (((r * 37 + c * 11) % 8) * 32).astype(np.uint8)
-
-    def test_orientation_parse_both_endians_and_absence(self):
-        import numpy as np
-
-        from tomixpanel_spark.operators.multimodal import (
-            _jpeg_exif_orientation,
-            encode_jpeg_gray,
-        )
-
-        base = encode_jpeg_gray(self._display_img(), 100)
-        assert _jpeg_exif_orientation(base) == 1
-        for endian in ("<", ">"):
-            for ori in (3, 6, 8):
-                tagged = base[:2] + self._exif_app1(ori, endian) + base[2:]
-                assert _jpeg_exif_orientation(tagged) == ori, (endian, ori)
-        # malformed EXIF degrades to 1, never raises
-        broken = base[:2] + self._exif_app1(6)[:12] + base[2:]
-        assert _jpeg_exif_orientation(base[:2] + b"\xff\xe1\x00\x04xx" + base[2:]) == 1
-        assert _jpeg_exif_orientation(b"\xff\xd8") == 1
-
-    def test_exif_transpose_roundtrips_all_orientations(self):
-        """For every orientation, storing transform(display) and
-        normalizing must recover display exactly (pure-numpy check of
-        the transform table, no JPEG loss)."""
-        import numpy as np
-
-        from tomixpanel_spark.operators.multimodal import exif_transpose
-
-        display = self._display_img().astype(np.int64)
-        stored_of = {
-            1: display,
-            2: np.fliplr(display),
-            3: display[::-1, ::-1],
-            4: np.flipud(display),
-            5: display.T,
-            6: np.rot90(display, 1),   # inverse of rotate-90-CW
-            7: display[::-1, ::-1].T,
-            8: np.rot90(display, -1),  # inverse of rotate-90-CCW
-        }
-        for ori, stored in stored_of.items():
-            got = exif_transpose(stored, ori)
-            assert (np.asarray(got) == display).all(), ori
-
-    def test_decode_image_gray_normalizes_orientation6(self):
-        import numpy as np
-
-        from tomixpanel_spark.operators.multimodal import (
-            decode_image_gray,
-            dhash_bits,
-            encode_jpeg_gray,
-        )
-
-        display = self._display_img()
-        plain = encode_jpeg_gray(display, 100)
-        stored = np.ascontiguousarray(np.rot90(display, 1))
-        rotated = encode_jpeg_gray(stored, 100)
-        exif6 = rotated[:2] + self._exif_app1(6) + rotated[2:]
-        # without the tag, the rotated payload hashes differently…
-        assert dhash_bits(decode_image_gray(rotated)) != dhash_bits(
-            decode_image_gray(plain)
-        )
-        # …with it, normalization makes the twins hash-identical
-        assert dhash_bits(decode_image_gray(exif6)) == dhash_bits(
-            decode_image_gray(plain)
-        )
-
-    def test_orientation6_twin_lands_in_same_hamming_bucket(self, spark):
-        """End to end through the REAL pipeline stages: perceptual_hash
-        (executor-side decode + EXIF normalize) then banded_hamming_pairs
-        must pair the orientation-6 re-save with its upright twin."""
-        import numpy as np
-
-        from tomixpanel_spark.operators.dedup import banded_hamming_pairs
-        from tomixpanel_spark.operators.multimodal import (
-            MEDIA_BANDS,
-            MEDIA_HAM_MAX,
-            encode_jpeg_gray,
-            perceptual_hash,
-        )
-
-        display = self._display_img()
-        plain = encode_jpeg_gray(display, 100)
-        stored = np.ascontiguousarray(np.rot90(display, 1))
-        rotated = encode_jpeg_gray(stored, 100)
-        exif6 = rotated[:2] + self._exif_app1(6) + rotated[2:]
-        media = spark.createDataFrame(
-            [(0, bytearray(plain)), (1, bytearray(exif6))],
-            "item_id long, payload binary",
-        )
-        sig = perceptual_hash(media)
-        pairs = banded_hamming_pairs(
-            sig, "dhash", MEDIA_BANDS, 8, MEDIA_HAM_MAX
-        ).collect()
-        assert [(r["doc_a"], r["doc_b"], r["hamming"]) for r in pairs] == [
-            (0, 1, 0)
-        ]
-
-
 class TestImageDecoderExceptionHygiene:
     """Corrupt/truncated payloads must raise ValueError — never leak
     IndexError / struct.error / zlib.error to a mapInPandas batch over
@@ -1993,40 +1005,6 @@ class TestImageDecoderExceptionHygiene:
             except ValueError:
                 pass  # the contract
 
-    def test_jpeg_fuzz_only_valueerror(self):
-        import numpy as np
-
-        from tomixpanel_spark.operators.multimodal import (
-            decode_jpeg_gray,
-            encode_jpeg_gray,
-        )
-
-        img = np.arange(64, dtype=np.uint8).reshape(8, 8)
-        self._fuzz(encode_jpeg_gray(img, 90), decode_jpeg_gray, b"\xff\xd8")
-
-    def test_progressive_jpeg_fuzz_only_valueerror(self):
-        """Bit-flip/truncation/garbage fuzz over a valid PROGRESSIVE
-        stream: the multi-scan path must uphold the same
-        only-ValueError exception contract as baseline."""
-        from tomixpanel_spark.operators.multimodal import decode_jpeg_gray
-
-        valid = (
-            b"\xff\xd8" + TestJpegCodec._dqt_flat16()
-            + TestJpegCodec._sof2_gray(8, 16)
-            + TestJpegCodec._dht_annexk()
-            + TestJpegCodec._sos_prog([(1, 0x00)], 0, 0, 0, 1)
-            + TestJpegCodec._entropy("011" "11" + "011" "10")
-            + TestJpegCodec._sos_prog([(1, 0x00)], 0, 0, 1, 0)
-            + TestJpegCodec._entropy("1" "0")
-            + TestJpegCodec._sos_prog([(1, 0x00)], 1, 63, 0, 1)
-            + TestJpegCodec._entropy("00" "1" "1010" + "1010")
-            + TestJpegCodec._sos_prog([(1, 0x00)], 1, 63, 1, 0)
-            + TestJpegCodec._entropy("1010" "1" + "1010")
-            + b"\xff\xd9"
-        )
-        decode_jpeg_gray(valid)  # the seed stream itself must decode
-        self._fuzz(valid, decode_jpeg_gray, b"\xff\xd8")
-
     def test_png_fuzz_only_valueerror(self):
         import numpy as np
 
@@ -2037,3 +1015,125 @@ class TestImageDecoderExceptionHygiene:
 
         img = np.arange(64, dtype=np.uint8).reshape(8, 8)
         self._fuzz(encode_png_gray(img), decode_png_gray, b"\x89PNG\r\n\x1a\n")
+
+
+def _png_gray(width, height, idat):
+    """An 8-bit grayscale PNG with the given IHDR size and raw IDAT body."""
+    import struct
+
+    from tomixpanel_spark.operators.multimodal import _png_chunk
+
+    return (
+        b"\x89PNG\r\n\x1a\n"
+        + _png_chunk(b"IHDR", struct.pack(">IIBBBBB", width, height, 8, 0, 0, 0, 0))
+        + _png_chunk(b"IDAT", idat)
+        + _png_chunk(b"IEND", b"")
+    )
+
+
+class TestPngDecodeBounds:
+    """IHDR dimensions and the IDAT stream are untrusted input: the
+    decoder must neither inflate past the declared image nor start on an
+    image above ``TOMIX_IMG_MAX_PIXELS``."""
+
+    def test_zlib_bomb_raises_without_inflating(self):
+        """A ~62 KB PNG declaring 1x1 whose IDAT inflates to 64 MB raises
+        ValueError with a small allocation peak: the inflate stops one
+        byte past the 2 bytes the IHDR allows."""
+        import tracemalloc
+        import zlib
+
+        from tomixpanel_spark.operators.multimodal import decode_png_gray
+
+        deflate = zlib.compressobj(9)
+        zero_mb = bytes(1 << 20)
+        bomb = b"".join(deflate.compress(zero_mb) for _ in range(64)) + deflate.flush()
+        payload = _png_gray(1, 1, bomb)
+        assert len(payload) < 100_000
+        tracemalloc.start()
+        try:
+            with pytest.raises(ValueError, match="wrong length"):
+                decode_png_gray(payload)
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert peak < 8 << 20, peak
+
+    def test_stream_without_checksum_still_raises(self):
+        """Bounding the inflate must not accept a stream that stops
+        right after the pixel data: without its adler32 trailer the
+        stream is truncated, as ``zlib.decompress`` also says."""
+        import zlib
+
+        from tomixpanel_spark.operators.multimodal import decode_png_gray
+
+        raw = b"\x00" + bytes(range(8))
+        assert decode_png_gray(_png_gray(8, 1, zlib.compress(raw))).tolist() == [
+            list(range(8))
+        ]
+        with pytest.raises(ValueError, match="truncated"):
+            decode_png_gray(_png_gray(8, 1, zlib.compress(raw)[:-4]))
+
+    def test_pixel_cap_boundary(self, monkeypatch):
+        """At TOMIX_IMG_MAX_PIXELS pixels the image decodes; one pixel
+        more raises from the IHDR, before the IDAT is inflated: an IDAT
+        that is not zlib at all still gets the cap's message."""
+        import numpy as np
+
+        from tomixpanel_spark.operators.multimodal import decode_png_gray, encode_png_gray
+
+        monkeypatch.setenv("TOMIX_IMG_MAX_PIXELS", "64")
+        img = np.arange(64, dtype=np.uint8).reshape(8, 8)
+        assert (decode_png_gray(encode_png_gray(img)) == img).all()
+        over = np.zeros((5, 13), dtype=np.uint8)  # 65 pixels
+        with pytest.raises(ValueError, match="TOMIX_IMG_MAX_PIXELS=64"):
+            decode_png_gray(encode_png_gray(over))
+        not_zlib = _png_gray(13, 5, b"not a zlib stream")
+        with pytest.raises(ValueError, match="TOMIX_IMG_MAX_PIXELS=64"):
+            decode_png_gray(not_zlib)
+        monkeypatch.delenv("TOMIX_IMG_MAX_PIXELS")
+        with pytest.raises(ValueError, match="truncated or corrupt"):
+            decode_png_gray(not_zlib)
+
+
+class TestImagePixelDecodeIsPngOnly:
+    """JPEG is header-only: ``decode_payload`` still reads its size, and
+    the pixel entry points reject it with a message that says so."""
+
+    # SOI, SOF0 (8-bit, 480x640, 1 component), SOS, EOI
+    JPEG = (
+        b"\xff\xd8"
+        + b"\xff\xc0\x00\x0b\x08\x01\xe0\x02\x80\x01\x01\x11\x00"
+        + b"\xff\xda\x00\x08\x01\x01\x00\x00\x3f\x00"
+        + b"\xff\xd9"
+    )
+
+    def test_decode_image_gray_rejects_jpeg(self):
+        from tomixpanel_spark.operators.multimodal import (
+            decode_image_gray,
+            decode_payload,
+            sniff_format,
+        )
+
+        assert sniff_format(self.JPEG) == "image/jpeg"
+        meta = decode_payload(self.JPEG, "image/jpeg")
+        assert (meta["width"], meta["height"], meta["bit_depth"]) == (640, 480, 8)
+        with pytest.raises(ValueError, match="PNG only: JPEG pixel decode is not supported"):
+            decode_image_gray(self.JPEG)
+        with pytest.raises(ValueError, match="PNG only"):
+            decode_image_gray(b"GIF89a")
+
+    def test_perceptual_hash_fails_on_a_jpeg_row(self, spark):
+        import numpy as np
+
+        from tomixpanel_spark.operators.multimodal import encode_png_gray, perceptual_hash
+
+        png = encode_png_gray(np.arange(64, dtype=np.uint8).reshape(8, 8))
+        ok = spark.createDataFrame([(0, bytearray(png))], "item_id long, payload binary")
+        assert [r["doc_id"] for r in perceptual_hash(ok).collect()] == [0]
+        mixed = spark.createDataFrame(
+            [(0, bytearray(png)), (1, bytearray(self.JPEG))],
+            "item_id long, payload binary",
+        )
+        with pytest.raises(Exception, match="JPEG pixel decode is not supported"):
+            perceptual_hash(mixed).collect()

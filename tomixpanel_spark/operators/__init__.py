@@ -48,67 +48,64 @@ from tomixpanel_spark.sources import csv as csv_source
 # has local DuckDB parity in tests/test_oracle_parity.py every round.
 _CANARIES = ("amp_transform", "ga_transform")
 _LAST_EXTERNAL = {
-    # -- never externally checked (new r14: the pipeline verbs) -------
-    "corpus_clean": 14,
-    "dedup_cascade": 14,
-    "dsir_select": 14,
-    "media_dedup_keep_list": 14,
-    "semdedup_prune": 14,
     # -- last green r11 ---------------------------------------------
     "event_sequences": 11,
     "funnel": 11,
     "hist_quantiles": 11,
     "hypertable_rollup": 11,
-    "identity_components": 14,
     "kmv_distinct": 11,
     "range_join_active_windows": 11,
     "retention": 11,
     "rolling_active_users": 11,
-    "segment_dedup": 14,
     "sessionize": 11,
     "set_ops": 11,
-    "time_shift": 14,
-    "token_count": 14,
-    "tpch_q6": 14,
-    "union_all": 14,
-    "when_chain": 14,
-    "window_running": 14,
-    "word_freq": 14,
     # -- last green r12 ---------------------------------------------
-    "amp_profiles": 12,
-    "ann_ivf_q": 14,
-    "ann_lsh": 14,
-    "ann_pq_q": 14,
-    "asof_latest_order": 14,
-    "asof_next_order": 14,
-    "attribution_last_touch": 14,
-    "balanced_shards": 12,
-    "bm25_topk": 14,
-    "chunk_by_bpe": 14,
     "coalesce_id": 12,
     "count_agg": 12,
     "csv_scan": 12,
     "dedup_by_key": 12,
-    "doc_fingerprint": 14,
-    "dsir_weights": 14,
-    "engage_reshape": 12,
-    "explode_hits": 14,
     "filter_nonempty": 12,
-    "ga_profiles": 12,
-    "incremental_dedup": 14,
     "insert_id_md5": 12,
+    "map_merge": 12,
+    "merge_pairs": 12,
+    "part_revenue": 12,
+    "pivot_status": 12,
+    "topk_per_group": 12,
+    "tpch_q1": 12,
+    "tpch_q3": 12,
+    # -- last green r13 ---------------------------------------------
+    "cagg_store_read": 13,
+    "dedup_index_probe": 13,
+    "project_drop": 13,
+    "project_rename": 13,
+    "pushdown_filter": 13,
+    "rollup_orders": 13,
+    "salted_join_stats": 13,
+    "schema_gate": 13,
+    "semi_join": 13,
+    "session_bounds": 13,
+    "streaming_cagg_parity": 13,
+    "supplier_balance": 13,
+    "time_normalize": 13,
+    "tpch_q5": 13,
+    "value_quantiles": 13,
+    # -- last green r14 ---------------------------------------------
+    "asof_latest_order": 14,
+    "asof_next_order": 14,
+    "attribution_last_touch": 14,
+    "identity_components": 14,
+    "incremental_dedup": 14,
     "label_centroids": 14,
     "lang_id": 14,
-    "map_merge": 12,
     "media_audio_features": 14,
+    "media_dedup_keep_list": 14,
     "media_image_resize": 14,
     "media_meta": 14,
     "media_neardup": 14,
     "media_video_frames": 14,
-    "merge_pairs": 12,
     "mixture_stats": 14,
-    "part_revenue": 12,
-    "pivot_status": 12,
+    "segment_dedup": 14,
+    "semdedup_prune": 14,
     "simhash": 14,
     "simhash_pairs": 14,
     "streaming_dedup_parity": 14,
@@ -119,60 +116,64 @@ _LAST_EXTERNAL = {
     "substring_dedup_clean": 14,
     "substring_dup_spans": 14,
     "tfidf_keywords": 14,
-    "topk_per_group": 12,
-    "tpch_q1": 12,
-    "tpch_q3": 12,
-    # -- last green r13 ---------------------------------------------
-    "amp_transform": 14,
-    "bigram_lm_score": 14,
-    "bpe_encode": 14,
-    "bpe_merges": 14,
-    "bpe_token_count": 14,
-    "cagg_store_read": 13,
-    "chunk_documents": 13,
-    "cms_heavy_hitters": 13,
-    "containment_pairs": 13,
-    "cosine_topk": 13,
-    "cosine_topk_partitioned": 13,
-    "custom_dims": 13,
-    "decontam_overlap": 13,
-    "dedup_exact": 13,
-    "dedup_index_probe": 13,
-    "dedup_keep_list": 13,
-    "embedding_decontam": 13,
-    "embedding_keep_list": 13,
-    "embedding_neardup": 13,
-    "ga_transform": 14,
-    "gopher_quality": 13,
-    "gopher_repetition": 13,
-    "lsh_keep_list": 13,
-    "minhash_lsh_pairs": 13,
-    "minhash_signature": 13,
-    "mixture_rebalance": 13,
-    "multimodal_meta": 13,
-    "neardup_components": 13,
-    "neardup_keep_best": 13,
-    "ngram_jaccard_pairs": 13,
-    "pii_redact": 13,
-    "project_drop": 13,
-    "project_rename": 13,
-    "pushdown_filter": 13,
-    "quality_score": 13,
-    "reverse_events": 13,
-    "rollup_orders": 13,
-    "salted_join_stats": 13,
-    "schema_gate": 13,
-    "seeded_shuffle": 13,
-    "semi_join": 13,
-    "session_bounds": 13,
-    "stratified_sample": 13,
-    "streaming_cagg_parity": 13,
-    "substring_dup_stats": 13,
-    "supplier_balance": 13,
-    "time_normalize": 13,
-    "tpch_q5": 13,
-    "value_quantiles": 13,
-    "weighted_sample": 13,
+    "time_shift": 14,
+    "token_count": 14,
+    "tpch_q6": 14,
+    "union_all": 14,
+    "when_chain": 14,
+    "window_running": 14,
+    "word_freq": 14,
+    # -- last green r15 ---------------------------------------------
+    "amp_profiles": 15,
+    "amp_transform": 15,
+    "ann_ivf_q": 15,
+    "ann_lsh": 15,
+    "ann_pq_q": 15,
+    "balanced_shards": 15,
+    "bigram_lm_score": 15,
+    "bm25_topk": 15,
+    "bpe_encode": 15,
+    "bpe_merges": 15,
+    "bpe_token_count": 15,
+    "chunk_by_bpe": 15,
+    "chunk_documents": 15,
+    "cms_heavy_hitters": 15,
+    "containment_pairs": 15,
+    "corpus_clean": 15,
+    "cosine_topk": 15,
+    "cosine_topk_partitioned": 15,
+    "custom_dims": 15,
+    "decontam_overlap": 15,
+    "dedup_cascade": 15,
+    "dedup_exact": 15,
+    "dedup_keep_list": 15,
+    "doc_fingerprint": 15,
+    "dsir_select": 15,
+    "dsir_weights": 15,
+    "embedding_decontam": 15,
+    "embedding_keep_list": 15,
+    "embedding_neardup": 15,
+    "engage_reshape": 15,
+    "explode_hits": 15,
+    "ga_profiles": 15,
+    "ga_transform": 15,
+    "gopher_quality": 15,
+    "gopher_repetition": 15,
+    "lsh_keep_list": 15,
+    "minhash_lsh_pairs": 15,
+    "minhash_signature": 15,
+    "mixture_rebalance": 15,
+    "multimodal_meta": 15,
+    "neardup_components": 15,
+    "neardup_keep_best": 15,
+    "ngram_jaccard_pairs": 15,
+    "pii_redact": 15,
+    "quality_score": 15,
+    "reverse_events": 15,
+    "seeded_shuffle": 15,
+    "stratified_sample": 15,
+    "substring_dup_stats": 15,
+    "weighted_sample": 15,
 }
 
 WINDOW_SIZE = 50  # the driver samples this many leading registry entries
@@ -187,53 +188,53 @@ WINDOW_SIZE = 50  # the driver samples this many leading registry entries
 # tools/update_rotation.py. Hash values are REPLACED below by the
 # generator; the mechanism (not the values) is what tests lock.
 _CHECKED_SRC: dict[str, str] = {
-    "amp_profiles": "e7075c15031d",
-    "amp_transform": "e7075c15031d",
-    "ann_ivf_q": "6507792931fc",
-    "ann_lsh": "6507792931fc",
-    "ann_pq_q": "6507792931fc",
+    "amp_profiles": "eefe3988cf1e",
+    "amp_transform": "eefe3988cf1e",
+    "ann_ivf_q": "3820fe718ad7",
+    "ann_lsh": "3820fe718ad7",
+    "ann_pq_q": "3820fe718ad7",
     "asof_latest_order": "3fb2d2184a4f",
     "asof_next_order": "3fb2d2184a4f",
     "attribution_last_touch": "3fb2d2184a4f",
-    "balanced_shards": "e9d61ab0a9b7",
-    "bigram_lm_score": "bd1562f6514d",
-    "bm25_topk": "bd1562f6514d",
-    "bpe_encode": "3fd0004a4b0a",
-    "bpe_merges": "3fd0004a4b0a",
-    "bpe_token_count": "3fd0004a4b0a",
+    "balanced_shards": "1dfcf5fd1480",
+    "bigram_lm_score": "37676b49f905",
+    "bm25_topk": "37676b49f905",
+    "bpe_encode": "6c628a99747d",
+    "bpe_merges": "6c628a99747d",
+    "bpe_token_count": "6c628a99747d",
     "cagg_store_read": "9ebda52b47bb",
-    "chunk_by_bpe": "3fd0004a4b0a",
-    "chunk_documents": "1ce78a3f528f",
-    "cms_heavy_hitters": "1ce78a3f528f",
+    "chunk_by_bpe": "6c628a99747d",
+    "chunk_documents": "37676b49f905",
+    "cms_heavy_hitters": "37676b49f905",
     "coalesce_id": "0a0b7ccf4b82",
-    "containment_pairs": "f2cf6e506905",
-    "corpus_clean": "85f8c76dd63b",
-    "cosine_topk": "dc311355ef98",
-    "cosine_topk_partitioned": "dc311355ef98",
+    "containment_pairs": "18f57f48c8f0",
+    "corpus_clean": "3d9de7ca031e",
+    "cosine_topk": "3820fe718ad7",
+    "cosine_topk_partitioned": "3820fe718ad7",
     "count_agg": "0a0b7ccf4b82",
     "csv_scan": "5454fed85e95",
-    "custom_dims": "e7075c15031d",
-    "decontam_overlap": "f2cf6e506905",
+    "custom_dims": "eefe3988cf1e",
+    "decontam_overlap": "18f57f48c8f0",
     "dedup_by_key": "0a0b7ccf4b82",
-    "dedup_cascade": "85f8c76dd63b",
-    "dedup_exact": "f2cf6e506905",
+    "dedup_cascade": "3d9de7ca031e",
+    "dedup_exact": "18f57f48c8f0",
     "dedup_index_probe": "9ebda52b47bb",
-    "dedup_keep_list": "f2cf6e506905",
-    "doc_fingerprint": "bd1562f6514d",
-    "dsir_select": "85f8c76dd63b",
-    "dsir_weights": "bd1562f6514d",
-    "embedding_decontam": "dc311355ef98",
-    "embedding_keep_list": "dc311355ef98",
-    "embedding_neardup": "dc311355ef98",
-    "engage_reshape": "e7075c15031d",
+    "dedup_keep_list": "18f57f48c8f0",
+    "doc_fingerprint": "37676b49f905",
+    "dsir_select": "3d9de7ca031e",
+    "dsir_weights": "37676b49f905",
+    "embedding_decontam": "3820fe718ad7",
+    "embedding_keep_list": "3820fe718ad7",
+    "embedding_neardup": "3820fe718ad7",
+    "engage_reshape": "eefe3988cf1e",
     "event_sequences": "696164988a02",
-    "explode_hits": "bd1562f6514d",
+    "explode_hits": "37676b49f905",
     "filter_nonempty": "0a0b7ccf4b82",
     "funnel": "696164988a02",
-    "ga_profiles": "e7075c15031d",
-    "ga_transform": "e7075c15031d",
-    "gopher_quality": "1ce78a3f528f",
-    "gopher_repetition": "1ce78a3f528f",
+    "ga_profiles": "eefe3988cf1e",
+    "ga_transform": "eefe3988cf1e",
+    "gopher_quality": "37676b49f905",
+    "gopher_repetition": "37676b49f905",
     "hist_quantiles": "696164988a02",
     "hypertable_rollup": "696164988a02",
     "identity_components": "c45687149fce",
@@ -242,7 +243,7 @@ _CHECKED_SRC: dict[str, str] = {
     "kmv_distinct": "696164988a02",
     "label_centroids": "6507792931fc",
     "lang_id": "bd1562f6514d",
-    "lsh_keep_list": "f2cf6e506905",
+    "lsh_keep_list": "18f57f48c8f0",
     "map_merge": "0a0b7ccf4b82",
     "media_audio_features": "47e026a445e1",
     "media_dedup_keep_list": "85f8c76dd63b",
@@ -251,29 +252,29 @@ _CHECKED_SRC: dict[str, str] = {
     "media_neardup": "47e026a445e1",
     "media_video_frames": "47e026a445e1",
     "merge_pairs": "0a0b7ccf4b82",
-    "minhash_lsh_pairs": "f2cf6e506905",
-    "minhash_signature": "f2cf6e506905",
-    "mixture_rebalance": "1ce78a3f528f",
+    "minhash_lsh_pairs": "18f57f48c8f0",
+    "minhash_signature": "18f57f48c8f0",
+    "mixture_rebalance": "37676b49f905",
     "mixture_stats": "bd1562f6514d",
-    "multimodal_meta": "847ec580bd09",
-    "neardup_components": "f2cf6e506905",
-    "neardup_keep_best": "f2cf6e506905",
-    "ngram_jaccard_pairs": "f2cf6e506905",
+    "multimodal_meta": "510e81aabb76",
+    "neardup_components": "18f57f48c8f0",
+    "neardup_keep_best": "18f57f48c8f0",
+    "ngram_jaccard_pairs": "18f57f48c8f0",
     "part_revenue": "957c7dea2a55",
-    "pii_redact": "1ce78a3f528f",
+    "pii_redact": "37676b49f905",
     "pivot_status": "957c7dea2a55",
     "project_drop": "957c7dea2a55",
     "project_rename": "957c7dea2a55",
     "pushdown_filter": "957c7dea2a55",
-    "quality_score": "1ce78a3f528f",
+    "quality_score": "37676b49f905",
     "range_join_active_windows": "dc8cbe128428",
     "retention": "696164988a02",
-    "reverse_events": "e7075c15031d",
+    "reverse_events": "eefe3988cf1e",
     "rolling_active_users": "696164988a02",
     "rollup_orders": "957c7dea2a55",
     "salted_join_stats": "957c7dea2a55",
     "schema_gate": "0a0b7ccf4b82",
-    "seeded_shuffle": "e9d61ab0a9b7",
+    "seeded_shuffle": "1dfcf5fd1480",
     "segment_dedup": "bd1562f6514d",
     "semdedup_prune": "85f8c76dd63b",
     "semi_join": "957c7dea2a55",
@@ -282,7 +283,7 @@ _CHECKED_SRC: dict[str, str] = {
     "set_ops": "696164988a02",
     "simhash": "3c15ce770114",
     "simhash_pairs": "3c15ce770114",
-    "stratified_sample": "1ce78a3f528f",
+    "stratified_sample": "37676b49f905",
     "streaming_cagg_parity": "9ebda52b47bb",
     "streaming_dedup_parity": "9ebda52b47bb",
     "streaming_incremental_parity": "9ebda52b47bb",
@@ -291,7 +292,7 @@ _CHECKED_SRC: dict[str, str] = {
     "streaming_windowed_parity": "9ebda52b47bb",
     "substring_dedup_clean": "3c15ce770114",
     "substring_dup_spans": "3c15ce770114",
-    "substring_dup_stats": "f2cf6e506905",
+    "substring_dup_stats": "18f57f48c8f0",
     "supplier_balance": "957c7dea2a55",
     "tfidf_keywords": "bd1562f6514d",
     "time_normalize": "0a0b7ccf4b82",
@@ -304,7 +305,7 @@ _CHECKED_SRC: dict[str, str] = {
     "tpch_q6": "957c7dea2a55",
     "union_all": "957c7dea2a55",
     "value_quantiles": "696164988a02",
-    "weighted_sample": "1ce78a3f528f",
+    "weighted_sample": "37676b49f905",
     "when_chain": "0a0b7ccf4b82",
     "window_running": "957c7dea2a55",
     "word_freq": "bd1562f6514d",

@@ -670,9 +670,11 @@ def _lsh_planes() -> list[list[float]]:
 _PLANES = _lsh_planes()
 
 
-def _lsh_signatures(df: DataFrame) -> DataFrame:
-    """(vec_id, embedding) -> L rows (vec_id, t, bucket): one Arrow batch
-    matmul against all L*P planes, sign bits packed per table.
+def _lsh_buckets(m):
+    """(B, dim) vectors -> (B, L) int64 bucket ids: bit p of table t's
+    bucket is the sign of the vector's dot with plane t*P + p. The one
+    numpy copy of the bucket math; the DuckDB oracle spells it in
+    ``_sql_bucket``.
 
     Sign parity with the oracle: numpy's summation order differs from
     DuckDB's sequential list_dot_product by ~1 ulp, which could only flip
@@ -684,14 +686,21 @@ def _lsh_signatures(df: DataFrame) -> DataFrame:
 
     planes_t = np.array(_PLANES, dtype="float64").T  # (dim, L*P)
     pows = np.array([1 << p for p in range(LSH_BITS)], dtype="int64")
+    bits = (m @ planes_t >= 0).reshape(len(m), LSH_TABLES, LSH_BITS)
+    return (bits * pows).sum(axis=2)
+
+
+def _lsh_signatures(df: DataFrame) -> DataFrame:
+    """(vec_id, embedding) -> L rows (vec_id, t, bucket): one Arrow batch
+    matmul against all L*P planes (``_lsh_buckets``), one row per table."""
+    import numpy as np
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             if not len(pdf):
                 continue
             m = np.array(list(pdf["embedding"]), dtype="float64")  # raw, unnormalized
-            bits = (m @ planes_t >= 0).reshape(len(m), LSH_TABLES, LSH_BITS)
-            buckets = (bits * pows).sum(axis=2).astype("int32")  # (B, L)
+            buckets = _lsh_buckets(m).astype("int32")  # (B, L)
             ids = pdf["vec_id"].to_numpy()
             yield pd.DataFrame(
                 {
@@ -733,10 +742,7 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Query signatures DRIVER-SIDE from the already-collected query matrix
     # (bucket bits are sign(dot) — norm-invariant, so the unit rows give
     # the same bits as raw vectors): no extra Spark job.
-    planes_t = np.array(_PLANES, dtype="float64").T
-    q_bits = (q_mat @ planes_t >= 0).reshape(len(q_ids), LSH_TABLES, LSH_BITS)
-    q_pows = np.array([1 << p for p in range(LSH_BITS)], dtype="int64")
-    q_buckets = (q_bits * q_pows).sum(axis=2)  # (Q, L)
+    q_buckets = _lsh_buckets(q_mat)  # (Q, L)
     score = _score_blocks()
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -744,9 +750,7 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             if not len(pdf):
                 continue
             m = np.array(list(pdf["embedding"]), dtype="float64")  # raw
-            bits = (m @ planes_t >= 0).reshape(len(m), LSH_TABLES, LSH_BITS)
-            buckets = (bits * q_pows).sum(axis=2)  # (B, L), sign parity
-            # per _lsh_signatures' margin note
+            buckets = _lsh_buckets(m)  # (B, L)
             match = (buckets[:, None, :] == q_buckets[None, :, :]).any(axis=2)
             n_ids = pdf["vec_id"].to_numpy(dtype="int64")
             for lo, e6 in score(_mat(pdf), q_mat):
