@@ -227,7 +227,9 @@ def test_semdedup_oracle_parity_with_nonfinite_vectors(spark, tmp_path):
     sample-step count uses the FINITE count while a naive COUNT(*)
     oracle would diverge (and floor(NaN) would error) — review r14.
     Both engines must agree on the keep-list, with the non-finite
-    vectors keeping themselves."""
+    vectors keeping themselves. The quantized ANN verbs train on the
+    same finite sample, so their oracles must agree on this corpus too,
+    with the non-finite vectors in no result row."""
     import math
 
     import duckdb
@@ -260,6 +262,12 @@ def test_semdedup_oracle_parity_with_nonfinite_vectors(spark, tmp_path):
     assert 900 in got and 901 in got  # non-candidates keep themselves
     assert len(got) < 42  # and real pruning happened
     assert not any(isinstance(v, float) and math.isnan(v) for v in got)
+
+    for name in ("ann_ivf_q", "ann_pq_q"):
+        got = sorted(map(tuple, REG[name].fn(spark, str(tmp_path)).collect()))
+        want = sorted(con.execute(REG[name].oracle).fetchall())
+        assert got == want, name
+        assert got and not {900, 901} & {v for r in got for v in r[:2]}, name
 
 
 def test_dedup_cascade_stage_attribution(spark):

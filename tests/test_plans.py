@@ -1398,17 +1398,27 @@ def test_tokenizer_spec_lives_in_functions_text():
 def test_similarity_scoring_idioms_live_in_three_kernels():
     """The similarity family scores through one kernel per idiom:
     ``_score_blocks`` (the cell cap and the sim_e6 rounding),
-    ``_local_topk`` (the per-query sort), ``_lloyd`` (training) and
-    ``_lsh_buckets`` (the LSH sign bits). No other code in similarity.py
-    or pipelines.py reads the cap, rounds sims, lexsorts a top-k,
-    truncates a centroid mean or packs bucket bits by hand, and only
+    ``_local_topk`` (the per-query sort), ``_lloyd`` (training),
+    ``_lsh_buckets`` (the LSH sign bits), ``_train_sample`` (the
+    ``pmod(vec_id, step)`` training collect), ``_blocked_pairs`` (the
+    all-pairs cogroup) and ``_threshold_hits`` (the threshold-hit
+    ``np.nonzero``). No other code in similarity.py or pipelines.py
+    reads the cap, rounds sims, lexsorts a top-k, truncates a centroid
+    mean, packs bucket bits, samples by vec_id, cogroups or picks
+    threshold hits by hand; only ``_scored_pairs``' closure tier keeps
+    its own hit mask (self and label exclusion), and only
     ``_lsh_buckets`` and the DuckDB oracle's ``_sql_bucket`` read the
     LSH planes."""
     import ast
+    import re
     from pathlib import Path
 
     ops = Path(__file__).resolve().parents[1] / "tomixpanel_spark" / "operators"
-    kernels = {"_score_blocks", "_local_topk", "_lloyd", "_lsh_buckets"}
+    kernels = {
+        "_score_blocks", "_local_topk", "_lloyd", "_lsh_buckets",
+        "_train_sample", "_blocked_pairs", "_threshold_hits",
+    }
+    own_mask = {"_scored_pairs"}  # may hold an np.nonzero, nothing else
     plane_readers = {"_lsh_buckets", "_sql_bucket"}
     needles = (
         "SCORE_CELLS_CAP.cap()",
@@ -1416,21 +1426,32 @@ def test_similarity_scoring_idioms_live_in_three_kernels():
         "np.lexsort(",
         "_trunc_div(",
         ">= 0).reshape(",
+        ".cogroup(",
     )
+    sample = re.compile(r"pmod\(.*[\"']vec_id[\"'].*step")  # code, not prose
     offenders = []
     for name in ("similarity.py", "pipelines.py"):
         src = (ops / name).read_text()
         tree = ast.parse(src)
         lines = src.splitlines()
         allowed = set()
+        mask_lines = set()
         for node in ast.walk(tree):
             if isinstance(node, ast.FunctionDef) and node.name in kernels:
                 for i in range(node.lineno - 1, node.end_lineno):
                     lines[i] = ""
+            if isinstance(node, ast.FunctionDef) and node.name in own_mask:
+                mask_lines |= set(range(node.lineno - 1, node.end_lineno))
             if isinstance(node, ast.FunctionDef) and node.name in plane_readers:
                 allowed |= {id(n) for n in ast.walk(node)}
         rest = "\n".join(lines)
         offenders += [f"{name}: {n}" for n in needles if n in rest]
+        offenders += [
+            f"{name}:{i + 1}: {line.strip()}"
+            for i, line in enumerate(lines)
+            if sample.search(line)
+            or ("np.nonzero(" in line and i not in mask_lines)
+        ]
         offenders += [
             f"{name}:{n.lineno}: _PLANES read"
             for n in ast.walk(tree)
@@ -1438,6 +1459,33 @@ def test_similarity_scoring_idioms_live_in_three_kernels():
             and isinstance(n.ctx, ast.Load) and id(n) not in allowed
         ]
     assert not offenders, f"scoring idiom outside its kernel: {offenders}"
+
+
+def test_kmeans_trainers_start_the_same_driver_jobs(spark):
+    """Every k-means verb trains through ``_train_sample``: one count and
+    one collect bring back the training sample and the queries, so the
+    learned-float IVF, both quantized verbs and SemDeDup start the same
+    number of Spark jobs while building their plans (counted through a
+    job group, over the same ensure_parallel input the registered verbs
+    read)."""
+    from tests.conftest import SF_SMALL
+    from tests.test_gates import _in_job_group
+    from tomixpanel_spark.operators.base import ensure_parallel, table
+    from tomixpanel_spark.operators.pipelines import semdedup_clusters
+    from tomixpanel_spark.operators.similarity import ann_ivf_topk
+
+    def emb():
+        return ensure_parallel(table(spark, SF_SMALL, "embeddings"), "vec_id")
+
+    builders = {
+        "ann_ivf_topk": lambda: ann_ivf_topk(emb()),
+        "ann_ivf_q": lambda: REG["ann_ivf_q"].fn(spark, SF_SMALL),
+        "ann_pq_q": lambda: REG["ann_pq_q"].fn(spark, SF_SMALL),
+        "semdedup_clusters": lambda: semdedup_clusters(spark, SF_SMALL),
+    }
+    jobs = {name: _in_job_group(spark, build)[1] for name, build in builders.items()}
+    assert min(jobs.values()) >= 1, jobs
+    assert len(set(jobs.values())) == 1, jobs
 
 
 def test_score_cells_cap_chunking_keeps_rows(spark, monkeypatch):

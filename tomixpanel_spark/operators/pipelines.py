@@ -18,13 +18,14 @@ actually executes end to end.
 This module deliberately lives OUTSIDE the modules it composes: it
 declares them as ROTATION_DEPS (an upstream edit re-queues these rows
 for external verification) and reuses their public surface by import.
-The two places where a building block is inline in an upstream query
-function (the Gopher gate folds, the Lloyd training loop) are
-re-expressed here against the same declared spec; the Gopher copy is
-pinned to the primary definitions by
+``corpus_clean`` re-expresses the Gopher gates over the primaries' own
+SQL folds (``textops._sql_top_ngram``); the copy is pinned to the
+primary definitions by
 tests/test_pipelines.py::test_corpus_clean_matches_composed_gates and
-both copies are independently DuckDB-oracle-checked, so divergence
-fails two ways.
+both are independently DuckDB-oracle-checked.
+``semdedup_clusters`` trains through similarity's ``_train_sample`` and
+``_lloyd`` and pairs through ``_threshold_hits``, the kernels the ANN
+verbs use, so no k-means or pairing code is copied here.
 """
 
 from __future__ import annotations
@@ -317,20 +318,14 @@ def semdedup_clusters(
         _lloyd,
         _mat,
         _quant,
-        _score_blocks,
         _sq_dists,
+        _threshold_hits,
+        _train_sample,
     )
 
     emb = ensure_parallel(table(spark, sf_dir, "embeddings"), "vec_id")
     fin = _finite_vecs(emb)
-    n = fin.count()
-    step = max(2, n // 1024)
-    sample_pdf = (
-        fin.filter(F.pmod(F.col("vec_id"), F.lit(step)) == 0)
-        .select("vec_id", "embedding")
-        .toPandas()
-        .sort_values("vec_id")
-    )
+    sample_pdf, _ = _train_sample(fin)
     if not len(sample_pdf):
         raise ValueError("semdedup_prune: empty training sample")
     sm = _quant(np.array(list(sample_pdf["embedding"]), dtype="float64"))
@@ -363,38 +358,27 @@ def semdedup_clusters(
         schema="vec_id long, cell int, cdot long, embedding array<float>",
     )
 
-    score = _score_blocks()
-    empty = pd.DataFrame(
-        {"vec_a": [], "vec_b": [], "sim_e6": [], "cdot_a": [], "cdot_b": []}
-    )
+    hits = _threshold_hits(NEARDUP_E6)
 
     def cell_pairs(key, pdf):
-        import numpy as np
-
-        if len(pdf) < 2:
-            return empty
+        # a one-member cell scores against itself and its upper
+        # triangle is empty: no pairs, no special case
         m = _mat(pdf)
         ids = pdf["vec_id"].to_numpy(dtype="int64")
         # each side's centroid-dot rides the pair edge: the keep-the-
         # outlier policy downstream then never re-reads the assignment
         # table for it (guide §8 — the signal is already in this task)
         cds = pdf["cdot"].to_numpy(dtype="int64")
-        frames = []
-        for lo, e6 in score(m, m):
-            upper = ids[lo : lo + len(e6), None] < ids[None, :]
-            ai, bj = np.nonzero((e6 >= NEARDUP_E6) & upper)
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "vec_a": ids[lo + ai],
-                        "vec_b": ids[bj],
-                        "sim_e6": e6[ai, bj],
-                        "cdot_a": cds[lo + ai],
-                        "cdot_b": cds[bj],
-                    }
-                )
-            )
-        return pd.concat(frames, ignore_index=True)
+        ai, bj, e6 = hits(m, m, (ids, ids))
+        return pd.DataFrame(
+            {
+                "vec_a": ids[ai],
+                "vec_b": ids[bj],
+                "sim_e6": e6,
+                "cdot_a": cds[ai],
+                "cdot_b": cds[bj],
+            }
+        )
 
     pairs = (
         assigned.select("cell", "vec_id", "cdot", "embedding")
@@ -452,6 +436,7 @@ def _semdedup_sql() -> str:
         IVFQ_ITER,
         IVFQ_SCALE,
         NEARDUP_E6,
+        _SQL_FINITE_CTE,
         _SQL_SIM,
     )
 
@@ -473,10 +458,7 @@ def _semdedup_sql() -> str:
     # at sf0.01 with `cdot` alone 44.5 s, vs the Spark leg's 2-9 s.
     # MATERIALIZED is an evaluation-strategy fence only (same rows).
     parts = [
-        f"""WITH RECURSIVE fe AS (
-  SELECT * FROM embeddings
-  WHERE embedding IS NOT NULL
-    AND len(list_filter(embedding, x -> isnan(x) OR isinf(x))) = 0),
+        f"""WITH RECURSIVE {_SQL_FINITE_CTE},
 p AS (SELECT greatest(2, COUNT(*) // 1024) AS step FROM fe),
 bl0 AS ({sq}),
 bl AS MATERIALIZED (

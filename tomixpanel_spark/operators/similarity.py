@@ -80,6 +80,16 @@ def _finite_vecs(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     return df.filter(e.isNotNull() & ~non_finite)
 
 
+# ``_finite_vecs`` in DuckDB: the oracles of the k-means verbs read
+# ``fe`` wherever the Spark side reads finite vectors (sample-step count,
+# training, queries, candidates), or a NULL vector shifts the step and a
+# NaN one fails the BIGINT quantization cast.
+_SQL_FINITE_CTE = """fe AS (
+  SELECT * FROM embeddings
+  WHERE embedding IS NOT NULL
+    AND len(list_filter(embedding, x -> isnan(x) OR isinf(x))) = 0)"""
+
+
 def _mat(pdf: pd.DataFrame, col: str = "embedding"):
     """embedding column of an Arrow batch -> L2-normalized float64 matrix."""
     import numpy as np
@@ -123,6 +133,30 @@ def _score_blocks():
             yield lo, np.rint((a[lo : lo + rows] @ b.T) * 1_000_000).astype("int64")
 
     return score
+
+
+def _threshold_hits(threshold_e6: int):
+    """The one threshold-hit loop, built on ``_score_blocks`` when the
+    plan is built. Returns ``hits(a, b, upper=None)`` over unit-row
+    matrices: ``(ai, bj, sim_e6)`` arrays for every row pair scoring at
+    least ``threshold_e6``, in chunk order. ``upper=(a_ids, b_ids)``
+    keeps only pairs with ``a_ids[ai] < b_ids[bj]``, the strict upper
+    triangle of a side scored against itself."""
+    import numpy as np
+
+    score = _score_blocks()
+
+    def hits(a, b, upper=None):
+        parts = [(np.zeros(0, "int64"),) * 3]
+        for lo, e6 in score(a, b):
+            hit = e6 >= threshold_e6
+            if upper is not None:
+                hit &= upper[0][lo : lo + len(e6), None] < upper[1][None, :]
+            ai, bj = np.nonzero(hit)
+            parts.append((lo + ai, bj, e6[ai, bj]))
+        return tuple(np.concatenate(p) for p in zip(*parts))
+
+    return hits
 
 
 def _local_topk(scores, mask, n_ids, k: int):
@@ -192,13 +226,20 @@ def _collect_queries(emb: DataFrame, with_label: bool = False):
     return ids, mat
 
 
-def _sample_and_queries_pdf(emb: DataFrame, step: int):
-    """ONE collect serves both the training sample (vec_id % step == 0)
-    and the query set (vec_id < N_QUERIES): they were two separate
-    serial driver actions over the same table (the CC-probe discipline —
-    fewer jobs, identical rows to the two filters this replaces; the
-    union filter is deterministic on vec_id so the split-back is exact,
-    and pmod == 0 agrees with pandas % == 0 for any sign of vec_id)."""
+def _train_sample(emb: DataFrame):
+    """The one training prelude of the k-means verbs: ``(sample, queries)``
+    pandas frames of ``(vec_id, embedding)``, both sorted by vec_id, from
+    ONE count and ONE collect over ``emb`` (already ``_finite_vecs``).
+
+    The count sizes ``step = max(2, n // 1024)``, ~1-2k training vectors
+    at any corpus size, so driver memory is O(sample) (the IVF contract:
+    the training set fits one node, the corpus need not). The collect
+    takes the union of the training sample ``pmod(vec_id, step) == 0``
+    and the query set ``vec_id < N_QUERIES``; the split back is exact
+    because both filters are deterministic on vec_id, and pandas
+    ``% step`` agrees with pmod for any sign of vec_id. The oracles
+    unroll the same sample in SQL."""
+    step = max(2, emb.count() // 1024)
     both = (
         emb.filter(
             (F.pmod(F.col("vec_id"), F.lit(step)) == 0)
@@ -327,6 +368,87 @@ WHERE rank <= 3
 """
 
 
+def _blocked_pairs(
+    left: DataFrame,
+    right: DataFrame | None,
+    threshold_e6: int,
+    names: tuple[str, str],
+    n_blocks: int = NEARDUP_BLOCKS,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """The one blocked all-pairs kernel: every (left, right) pair with
+    sim_e6 >= ``threshold_e6`` as rows ``(names[0], names[1], sim_e6)``,
+    fully distributed (no driver collect).
+
+    Each side hash-splits into ``n_blocks`` blocks on the id and every
+    row is replicated across its partner blocks, so each pair meets in
+    exactly one block-pair group; the groups cogroup into tasks that
+    score through ``_threshold_hits``. Each row shuffles ~n_blocks times
+    and task memory is O(block_rows * d + SCORE_CELLS_CAP): the rows of
+    two blocks plus ONE bounded score chunk (the naive per-task score
+    matrix is O((N/B)^2) cells, 14 GB/task at the round-11 probe's
+    100k-vector corpus). At 100 TB pick n_blocks so one block's ROWS fit
+    an executor.
+
+    ``right=None`` joins ``left`` with itself: only block pairs
+    ``pi <= pj`` form, so no pair is scored twice, the diagonal keeps
+    its strict upper triangle, and pairs come out as ``(min, max)`` ids.
+    Two distinct sides keep every pair, id collisions included (train
+    and held-out ids are independent spaces)."""
+    import numpy as np
+
+    self_join = right is None
+    B = n_blocks
+    all_blocks = F.array(*[F.lit(i) for i in range(B)])
+
+    def blocked(df, own, other):
+        # block ids must be the SAME type on both cogroup sides: pmod is
+        # LONG while exploded literals are INT — mismatched key types
+        # silently misalign cogroup groups, so pin both to INT. pmod (not
+        # %): Spark's % follows the dividend's sign, so a negative id
+        # would land in a blk < 0 that never matches the exploded 0..B-1
+        # partner blocks and every pair involving that row would vanish.
+        out = df.select(
+            F.col(id_col).alias("vec_id"),
+            F.col(vec_col).alias("embedding"),
+            F.pmod(F.col(id_col), F.lit(B)).cast("int").alias(own),
+        ).withColumn(other, F.explode(all_blocks))
+        if self_join:
+            out = out.filter(F.col("pi") <= F.col("pj"))
+        return out.select("pi", "pj", "vec_id", "embedding")
+
+    a_col, b_col = names
+    empty = pd.DataFrame({a_col: [], b_col: [], "sim_e6": []})
+    hits = _threshold_hits(threshold_e6)
+
+    def block_pairs(key, lg: pd.DataFrame, rg: pd.DataFrame) -> pd.DataFrame:
+        if not len(lg) or not len(rg):
+            return empty
+        a_ids = lg["vec_id"].to_numpy(dtype="int64")
+        b_ids = rg["vec_id"].to_numpy(dtype="int64")
+        # a self-join's diagonal block sits on both sides: upper triangle
+        diag = self_join and key[0] == key[1]
+        ai, bj, e6 = hits(_mat(lg), _mat(rg), (a_ids, b_ids) if diag else None)
+        a, b = a_ids[ai], b_ids[bj]
+        if self_join:
+            a, b = np.minimum(a, b), np.maximum(a, b)
+        return pd.DataFrame({a_col: a, b_col: b, "sim_e6": e6})
+
+    ship_package(left.sparkSession)
+    # fresh_attrs: both sides may derive from ONE table (a self-join
+    # always does), which shares attribute ids across the cogroup;
+    # without it column pruning under a no-output consumer (count)
+    # strips the right child to key-only frames (base.fresh_attrs)
+    lhs = blocked(left, "pi", "pj")
+    rhs = fresh_attrs(blocked(left if self_join else right, "pj", "pi"))
+    return (
+        lhs.groupBy("pi", "pj")
+        .cogroup(rhs.groupBy("pi", "pj"))
+        .applyInPandas(block_pairs, schema=f"{a_col} long, {b_col} long, sim_e6 long")
+    )
+
+
 def embedding_neardup_pairs(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -335,82 +457,15 @@ def embedding_neardup_pairs(
     n_blocks: int = NEARDUP_BLOCKS,
 ) -> DataFrame:
     """Public API: exact all-pairs cosine near-dup over ANY embeddings
-    DataFrame, fully distributed (blocked all-pairs — no driver collect).
-
-    The corpus hash-splits into ``n_blocks`` blocks on the id; every
-    unordered block pair (i <= j) cogroups into one task that scores the
-    pair with chunked matmuls. Each row shuffles ~n_blocks times and task
-    memory is O(|corpus|/n_blocks * d + SCORE_CELLS_CAP): the input rows
-    per block plus ONE bounded score chunk — the naive single matmul's
-    (N/B)^2 score matrix is the term that actually blows up at scale
-    (14 GB/task at the round-11 probe's 100k-vector corpus), so the left
-    side scores in row chunks of cap // |right| and only hits accumulate.
-    At 100 TB pick n_blocks so one block's ROWS fit an executor. (The
-    reference has no similarity surface; this is the training-data
-    extension named in SURVEY.md §2.6.)
+    DataFrame, fully distributed: the finite vectors joined with
+    themselves through the blocked kernel ``_blocked_pairs``, emitting
+    ``(vec_a, vec_b, sim_e6)`` with ``vec_a < vec_b``. (The reference
+    has no similarity surface; this is the training-data extension named
+    in SURVEY.md §2.6.)
     """
-    import numpy as np
-
-    spark = df.sparkSession
-    B = n_blocks
-    # block ids must be the SAME type on both cogroup sides: pmod is
-    # LONG while exploded literals are INT — mismatched key types silently
-    # misalign cogroup groups, so pin both to INT. pmod (not %): Spark's
-    # % follows the dividend's sign, so a negative id would land in a
-    # blk < 0 that never matches the exploded 0..B-1 partner blocks and
-    # every pair involving that row would silently vanish.
-    v = _finite_vecs(df, vec_col).select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("embedding"),
-        F.pmod(F.col(id_col), F.lit(B)).cast("int").alias("blk"),
-    )
-    all_blocks = F.array(*[F.lit(i) for i in range(B)])
-    left = (
-        v.withColumn("pj", F.explode(all_blocks))
-        .filter(F.col("pj") >= F.col("blk"))
-        .select(F.col("blk").alias("pi"), "pj", "vec_id", "embedding")
-    )
-    right = (
-        v.withColumn("pi", F.explode(all_blocks))
-        .filter(F.col("pi") <= F.col("blk"))
-        .select("pi", F.col("blk").alias("pj"), "vec_id", "embedding")
-    )
-
-    empty = pd.DataFrame({"vec_a": [], "vec_b": [], "sim_e6": []})
-    score = _score_blocks()
-
-    def block_pairs(key, lg: pd.DataFrame, rg: pd.DataFrame) -> pd.DataFrame:
-        if not len(lg) or not len(rg):
-            return empty
-        a_ids = lg["vec_id"].to_numpy(dtype="int64")
-        b_ids = rg["vec_id"].to_numpy(dtype="int64")
-        frames = []
-        for lo, e6 in score(_mat(lg), _mat(rg)):
-            ids = a_ids[lo : lo + len(e6)]
-            hit = e6 >= threshold_e6
-            if key[0] == key[1]:
-                # same block appears on both sides: keep the upper triangle
-                hit &= ids[:, None] < b_ids[None, :]
-            ai, bj = np.nonzero(hit)
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "vec_a": np.minimum(ids[ai], b_ids[bj]),
-                        "vec_b": np.maximum(ids[ai], b_ids[bj]),
-                        "sim_e6": e6[ai, bj],
-                    }
-                )
-            )
-        return pd.concat(frames, ignore_index=True)
-
-    ship_package(spark)
-    # fresh_attrs: both sides derive from v — without it, column pruning
-    # under a no-output consumer (count) strips the deduplicated right
-    # child to key-only frames (see operators/base.fresh_attrs)
-    return (
-        left.groupBy("pi", "pj")
-        .cogroup(fresh_attrs(right).groupBy("pi", "pj"))
-        .applyInPandas(block_pairs, schema="vec_a long, vec_b long, sim_e6 long")
+    return _blocked_pairs(
+        _finite_vecs(df, vec_col), None, threshold_e6, ("vec_a", "vec_b"),
+        n_blocks, id_col, vec_col,
     )
 
 
@@ -422,71 +477,6 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ~25 MB closure at 64 float32 dims
 EMB_BCAST_VECS = Gate("TOMIX_EMB_BCAST_VECS", 100_000)
-
-
-def _cross_blocked_pairs(
-    left_df: DataFrame,
-    right_df: DataFrame,
-    threshold_e6: int,
-    n_blocks: int = NEARDUP_BLOCKS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Blocked cogroup over TWO DISTINCT sides: every (left, right) pair
-    lands in exactly one of n_blocks^2 tasks (left row replicated across
-    partner right-blocks and vice versa), scored with CHUNKED matmuls.
-    Task memory is O((|L|+|R|)/n_blocks * d + SCORE_CELLS_CAP) — the
-    two-sided twin of ``embedding_neardup_pairs``' triangle blocking,
-    with the same bounded-score-chunk rule (the naive per-task score
-    matrix is O(|L||R|/B^2) cells and was the real memory term)."""
-    import numpy as np
-
-    B = n_blocks
-    all_blocks = F.array(*[F.lit(i) for i in range(B)])
-
-    def blocked(df, own, other):
-        return (
-            df.select(
-                F.col(id_col).alias("vec_id"),
-                F.col(vec_col).alias("embedding"),
-                F.pmod(F.col(id_col), F.lit(B)).cast("int").alias(own),
-            )
-            .withColumn(other, F.explode(all_blocks))
-            .select("pi", "pj", "vec_id", "embedding")
-        )
-
-    left = blocked(left_df, "pi", "pj")
-    right = blocked(right_df, "pj", "pi")
-    empty = pd.DataFrame({"train_id": [], "eval_id": [], "sim_e6": []})
-    score = _score_blocks()
-
-    def block_pairs(key, lg: pd.DataFrame, rg: pd.DataFrame) -> pd.DataFrame:
-        if not len(lg) or not len(rg):
-            return empty
-        a_ids = lg["vec_id"].to_numpy(dtype="int64")
-        b_ids = rg["vec_id"].to_numpy(dtype="int64")
-        frames = []
-        for lo, e6 in score(_mat(lg), _mat(rg)):
-            ai, bj = np.nonzero(e6 >= threshold_e6)
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "train_id": a_ids[lo + ai],
-                        "eval_id": b_ids[bj],
-                        "sim_e6": e6[ai, bj],
-                    }
-                )
-            )
-        return pd.concat(frames, ignore_index=True)
-
-    ship_package(left_df.sparkSession)
-    # fresh_attrs: callers may split ONE table into the two sides, which
-    # shares attribute ids across the cogroup (base.fresh_attrs)
-    return (
-        left.groupBy("pi", "pj")
-        .cogroup(fresh_attrs(right).groupBy("pi", "pj"))
-        .applyInPandas(block_pairs, schema="train_id long, eval_id long, sim_e6 long")
-    )
 
 
 def embedding_decontam_pairs(
@@ -507,7 +497,7 @@ def embedding_decontam_pairs(
     ONE Arrow-batched mapInPandas (a BLAS matmul per batch, only
     above-threshold rows surviving); no join, no shuffle. Above the gate
     the plan flips to the two-sided blocked cogroup
-    (``_cross_blocked_pairs``) — same answers, bounded task memory —
+    (``_blocked_pairs``) — same answers, bounded task memory —
     instead of trusting the caller not to collect an oversized suite.
     """
     # null-vector rows contribute nothing on either engine (NULL sim
@@ -521,8 +511,9 @@ def embedding_decontam_pairs(
     # blocked cogroup runs unchanged.
     pdf = EMB_BCAST_VECS.collect_or_none(held_out.select(id_col, vec_col))
     if pdf is None:
-        return _cross_blocked_pairs(
-            train, held_out, threshold_e6, id_col=id_col, vec_col=vec_col
+        return _blocked_pairs(
+            train, held_out, threshold_e6, ("train_id", "eval_id"),
+            id_col=id_col, vec_col=vec_col,
         )
     pdf = pdf.sort_values(id_col)
     ids = pdf[id_col].to_numpy(dtype="int64")
@@ -571,15 +562,12 @@ def ann_ivf_topk(emb: DataFrame, k: int = TOP_K, nprobe: int = 2) -> DataFrame:
     """IVF ANN with learned coarse centroids over any ``(vec_id,
     embedding)`` DataFrame.
 
-    Centroid training runs driver-side (numpy Lloyd iterations) on a
-    SPARK-SAMPLED training set: the corpus is sampled with a deterministic
-    ``pmod(vec_id, step)`` filter sized to ~1-2k vectors and only that
-    sample is collected — driver memory is O(sample) regardless of corpus
-    size (the IVF contract: the training set fits one node, the corpus
-    need not). Sparse/non-dense id spaces can under-fill that filter, so
-    the sample falls back to a bounded ``limit`` and K clamps to the
-    sample size. Cell assignment is FUSED into the scoring stage: one
-    mapInPandas pass assigns each batch's vectors to cells (matmul vs
+    Centroid training runs driver-side (numpy Lloyd iterations) on the
+    ``_train_sample`` of the corpus, which also brings back the queries.
+    Sparse/non-dense id spaces can under-fill its ``pmod(vec_id, step)``
+    filter, so the sample falls back to a bounded ``limit`` and K clamps
+    to the sample size. Cell assignment is FUSED into the scoring stage:
+    one mapInPandas pass assigns each batch's vectors to cells (matmul vs
     broadcast centroids) and scores them against the queries probing that
     cell — no corpus collect, no assignment join. Each query probes its
     ``nprobe`` nearest cells (default 2); ``nprobe >= K`` probes every
@@ -593,14 +581,7 @@ def ann_ivf_topk(emb: DataFrame, k: int = TOP_K, nprobe: int = 2) -> DataFrame:
     K, N_ITER, NPROBE = 16, 8, nprobe
     spark = emb.sparkSession
     emb = _finite_vecs(emb)  # null/NaN/Inf vecs score nothing
-    n = emb.count()
-    step = max(2, n // 1024)  # ~1-2k training vectors at any corpus size
-    sample_pdf = (
-        emb.filter(F.pmod(F.col("vec_id"), F.lit(step)) == 0)
-        .select("vec_id", "embedding")
-        .toPandas()
-        .sort_values("vec_id")
-    )
+    sample_pdf, q_pdf = _train_sample(emb)
     if len(sample_pdf) < K:
         # the % step filter assumes a dense id space; sparse/non-dense ids
         # can under-sample (even to zero rows). Fall back to a bounded
@@ -613,9 +594,10 @@ def ann_ivf_topk(emb: DataFrame, k: int = TOP_K, nprobe: int = 2) -> DataFrame:
         raise ValueError("ann_ivf: empty corpus — nothing to train centroids on")
     centroids = _lloyd(_mat(sample_pdf), K, N_ITER, lambda m: m.mean(axis=0))
 
-    q_ids, q_mat = _collect_queries(emb)
-    if not len(q_ids):
+    if not len(q_pdf):
         return _no_queries(spark, k)
+    q_ids = q_pdf["vec_id"].to_numpy(dtype="int64")
+    q_mat = _mat(q_pdf)
     # each query probes its NPROBE nearest cells (driver-side, Q x K)
     probe = np.argsort(_sq_dists(q_mat, centroids), axis=1)[:, :NPROBE]
     score = _score_blocks()
@@ -855,9 +837,9 @@ def ann_ivf_quantized(
     100 TB deployment actually ships (int8/int16 codes, exact integer
     distance kernels).
 
-    Scale shape mirrors ``ann_ivf_topk``: training runs driver-side on a
-    deterministic ``vec_id % step`` sample (O(sample) driver memory),
-    then ONE mapInPandas pass fuses per-batch quantize + cell-assign +
+    Scale shape mirrors ``ann_ivf_topk``: training runs driver-side on
+    the deterministic ``_train_sample`` (O(sample) driver memory), then
+    ONE mapInPandas pass fuses per-batch quantize + cell-assign +
     integer matmul scoring + local top-k; only <=k rows per query per
     batch reach the final top-k exchange. Ties break to the lowest cell
     (np.argmin / stable argsort == the oracle's ORDER BY dist, cell)."""
@@ -865,9 +847,7 @@ def ann_ivf_quantized(
 
     spark = emb.sparkSession
     emb = _finite_vecs(emb)  # null/NaN/Inf vecs score nothing
-    n = emb.count()
-    step = max(2, n // 1024)
-    sample_pdf, q_pdf = _sample_and_queries_pdf(emb, step)
+    sample_pdf, q_pdf = _train_sample(emb)
     if not len(sample_pdf):
         raise ValueError("ann_ivf_quantized: empty training sample")
     if not len(q_pdf):
@@ -912,15 +892,17 @@ def ann_ivf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ivfq_sql() -> str:
     """Generate the oracle: the 4-round Lloyd loop unrolled as chained
-    CTEs over a long-format (id, dim, val) quantized view. DuckDB's `//`
-    truncates toward zero — ``_int_mean`` mirrors that exactly."""
+    CTEs over a long-format (id, dim, val) quantized view of the finite
+    vectors (``_SQL_FINITE_CTE``). DuckDB's `//` truncates toward zero
+    — ``_int_mean`` mirrors that exactly."""
     sq = (
         "SELECT vec_id, "
         "unnest(generate_series(1, len(embedding))) AS dim, embedding "
-        "FROM embeddings"
+        "FROM fe"
     )
     parts = [
-        f"""WITH p AS (SELECT greatest(2, COUNT(*) // 1024) AS step FROM embeddings),
+        f"""WITH {_SQL_FINITE_CTE},
+p AS (SELECT greatest(2, COUNT(*) // 1024) AS step FROM fe),
 bl0 AS ({sq}),
 bl AS MATERIALIZED (
   SELECT vec_id, dim,
@@ -1008,8 +990,8 @@ def ann_pq_quantized(emb: DataFrame, k: int = TOP_K) -> DataFrame:
 
     Two stages, the FAISS IVFPQ+refine production shape:
     (1) ADC SHORTLIST — codebooks train driver-side on the
-    deterministic ``vec_id % step`` sample (O(sample * D) driver
-    memory, the same gate as ``ann_ivf_quantized``); the corpus pass is
+    deterministic ``_train_sample`` (O(sample * D) driver memory, the
+    same sample as ``ann_ivf_quantized``); the corpus pass is
     ONE mapInPandas stage fusing quantize + per-subspace encode +
     LUT-sum scoring + exact re-rank distances for the batch's local ADC
     top-``rerank`` — so only <=rerank rows per query per batch reach
@@ -1027,9 +1009,7 @@ def ann_pq_quantized(emb: DataFrame, k: int = TOP_K) -> DataFrame:
 
     spark = emb.sparkSession
     emb = _finite_vecs(emb)  # null/NaN/Inf vecs score nothing
-    n = emb.count()
-    step = max(2, n // 1024)
-    sample_pdf, q_pdf = _sample_and_queries_pdf(emb, step)
+    sample_pdf, q_pdf = _train_sample(emb)
     if not len(sample_pdf):
         raise ValueError("ann_pq_quantized: empty training sample")
     if not len(q_pdf):
@@ -1100,17 +1080,18 @@ def ann_pq_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pq_sql() -> str:
     """Oracle: the per-subspace Lloyd loop unrolled as chained CTEs over
-    a long-format (vec_id, sub, dim, val) quantized view — the ivfq
-    oracle's structure with ``sub`` added to every grouping key, so one
-    CTE chain trains BOTH codebooks at once. ADC re-derives as
-    assign-join-LUT and sums the subspace distances."""
+    a long-format (vec_id, sub, dim, val) quantized view of the finite
+    vectors — the ivfq oracle's structure with ``sub`` added to every
+    grouping key, so one CTE chain trains BOTH codebooks at once. ADC
+    re-derives as assign-join-LUT and sums the subspace distances."""
     sub_case = "CAST((dim - 1) // sub_d AS BIGINT)"
     parts = [
-        f"""WITH p AS (SELECT greatest(2, COUNT(*) // 1024) AS step FROM embeddings),
+        f"""WITH {_SQL_FINITE_CTE},
+p AS (SELECT greatest(2, COUNT(*) // 1024) AS step FROM fe),
 bl0 AS (
   SELECT vec_id, unnest(generate_series(1, len(embedding))) AS dim,
          len(embedding) // {PQ_SUBS} AS sub_d, embedding
-  FROM embeddings),
+  FROM fe),
 bl AS MATERIALIZED (
   SELECT vec_id, {sub_case} AS sub, dim,
          CAST(floor(CAST(embedding[dim] AS DOUBLE) * {IVFQ_SCALE}) AS BIGINT) AS val
