@@ -1461,24 +1461,63 @@ def test_similarity_scoring_idioms_live_in_three_kernels():
     assert not offenders, f"scoring idiom outside its kernel: {offenders}"
 
 
+def test_python_stages_and_local_frames_have_one_door():
+    """Every Python stage body runs through ``session.python_stage``
+    (the package ship and the once-per-task archive prune) and every
+    driver-local frame through ``base.local_rows_df`` (one Arrow table,
+    a LocalTableScan, no Python task). No other code under
+    tomixpanel_spark/ calls ``mapInPandas``, ``applyInPandas``,
+    ``applyInPandasWithState``, ``ship_package``, ``createDataFrame`` or
+    ``parallelize``, and nothing calls the Arrow or UDF forms the door
+    does not cover (``mapInArrow``, ``applyInArrow``, ``pandas_udf``)."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "tomixpanel_spark"
+    stage = ("session.py", "python_stage")
+    local = ("operators/base.py", "local_rows_df")
+    doors = {
+        "mapInPandas": stage,
+        "applyInPandas": stage,
+        "applyInPandasWithState": stage,
+        "ship_package": stage,
+        "mapInArrow": None,
+        "applyInArrow": None,
+        "pandas_udf": None,
+        "createDataFrame": local,
+        "parallelize": local,
+    }
+    offenders = []
+    for src in sorted(pkg.rglob("*.py")):
+        rel = src.relative_to(pkg).as_posix()
+        for top in ast.parse(src.read_text()).body:
+            owner = (rel, getattr(top, "name", None))
+            for n in ast.walk(top):
+                if not isinstance(n, ast.Call):
+                    continue
+                name = getattr(n.func, "attr", getattr(n.func, "id", None))
+                if name in doors and doors[name] != owner:
+                    offenders.append(f"{rel}:{n.lineno}: {name}")
+    assert not offenders, f"Python task or local frame outside its door: {offenders}"
+
+
 def test_kmeans_trainers_start_the_same_driver_jobs(spark):
     """Every k-means verb trains through ``_train_sample``: one count and
     one collect bring back the training sample and the queries, so the
     learned-float IVF, both quantized verbs and SemDeDup start the same
     number of Spark jobs while building their plans (counted through a
-    job group, over the same ensure_parallel input the registered verbs
-    read)."""
+    job group, over the same source the registered verbs read). The
+    sample reads the source below ``ensure_parallel``'s repartition: over
+    it the count alone ran 3 jobs and the trainers 6 each (sf0.01,
+    local[4]); below it they run 4."""
     from tests.conftest import SF_SMALL
     from tests.test_gates import _in_job_group
-    from tomixpanel_spark.operators.base import ensure_parallel, table
+    from tomixpanel_spark.operators.base import table
     from tomixpanel_spark.operators.pipelines import semdedup_clusters
     from tomixpanel_spark.operators.similarity import ann_ivf_topk
 
-    def emb():
-        return ensure_parallel(table(spark, SF_SMALL, "embeddings"), "vec_id")
-
     builders = {
-        "ann_ivf_topk": lambda: ann_ivf_topk(emb()),
+        "ann_ivf_topk": lambda: ann_ivf_topk(table(spark, SF_SMALL, "embeddings")),
         "ann_ivf_q": lambda: REG["ann_ivf_q"].fn(spark, SF_SMALL),
         "ann_pq_q": lambda: REG["ann_pq_q"].fn(spark, SF_SMALL),
         "semdedup_clusters": lambda: semdedup_clusters(spark, SF_SMALL),
@@ -1486,6 +1525,7 @@ def test_kmeans_trainers_start_the_same_driver_jobs(spark):
     jobs = {name: _in_job_group(spark, build)[1] for name, build in builders.items()}
     assert min(jobs.values()) >= 1, jobs
     assert len(set(jobs.values())) == 1, jobs
+    assert max(jobs.values()) <= 4, jobs
 
 
 def test_score_cells_cap_chunking_keeps_rows(spark, monkeypatch):

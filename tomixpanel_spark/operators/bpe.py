@@ -67,7 +67,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tomixpanel_spark.functions.text import SQL_WORDS, driver_tokens
-from tomixpanel_spark.operators.base import Gate, QuerySpec, stage_checkpoint, table
+from tomixpanel_spark.operators.base import (
+    Gate,
+    QuerySpec,
+    local_rows_df,
+    stage_checkpoint,
+    table,
+)
 from tomixpanel_spark.operators.textops import (
     TFIDF_BCAST_VOCAB,
     _under_fold_cap,
@@ -160,8 +166,8 @@ def _merge_step(words: DataFrame, pairs: list[tuple[str, str]]) -> DataFrame:
     if not pairs:
         return words
     spark = words.sparkSession
-    pair_df = spark.createDataFrame(
-        [(dict((l, r) for l, r in pairs),)], schema="__pairs map<string,string>"
+    pair_df = local_rows_df(
+        spark, [(dict((l, r) for l, r in pairs),)], schema="__pairs map<string,string>"
     )
     init = F.struct(
         F.array().cast("array<string>").alias("out"),
@@ -315,7 +321,8 @@ def _train_distributed(
             rows, vocab = _sennrich_loop(wc, n_merges)
             final = None
             if need_final:
-                final = spark.createDataFrame(
+                final = local_rows_df(
+                    spark,
                     [(w, int(wc[w]), syms) for w, syms in vocab.items()],
                     schema="word string, freq long, syms array<string>",
                 )
@@ -343,9 +350,9 @@ def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     if _under_fold_cap(spark, sf_dir, docs):
         flat, _doc = driver_tokens(docs_pdf(docs)["text"])
         rows, _vocab, _k = _fold_train(flat, N_MERGES)
-        return spark.createDataFrame(rows, schema=_OUT_SCHEMA)
+        return local_rows_df(spark, rows, schema=_OUT_SCHEMA)
     rows, _final = _train_distributed(spark, docs, N_MERGES, need_final=False)
-    return spark.createDataFrame(rows, schema=_OUT_SCHEMA)
+    return local_rows_df(spark, rows, schema=_OUT_SCHEMA)
 
 
 def _distributed_vocab(
@@ -394,7 +401,7 @@ def bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_words=np.bincount(doc, minlength=n),
             n_bpe_tokens=np.bincount(doc, weights=k, minlength=n).astype(np.int64),
         )
-        return spark.createDataFrame(out, schema=schema)
+        return local_rows_df(spark, out, schema=schema)
     wl = _distributed_vocab(spark, sf_dir, docs).select(
         "word", F.size("syms").cast("bigint").alias("k")
     )
@@ -458,7 +465,8 @@ def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         flat, _doc = driver_tokens(docs_pdf(docs)["text"])
         _rows, vocab, _k = _fold_train(flat, N_MERGES)
         wl = F.broadcast(
-            spark.createDataFrame(
+            local_rows_df(
+                spark,
                 [(w, syms) for w, syms in vocab.items()],
                 schema="word string, syms array<string>",
             )
@@ -549,7 +557,7 @@ def chunk_by_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
             for ci, (text, nw, nb) in enumerate(_pack_words(ws, CHUNK_BPE_BUDGET)):
                 out.append((doc_id, ci, text, nw, nb))
             start = end
-        return spark.createDataFrame(out, schema=out_schema)
+        return local_rows_df(spark, out, schema=out_schema)
     wl = _distributed_vocab(spark, sf_dir, docs).select(
         "word", F.size("syms").cast("bigint").alias("k")
     )

@@ -41,6 +41,7 @@ from tomixpanel_spark.operators.base import (
     QuerySpec,
     derived,
     ensure_parallel,
+    local_rows_df,
     stage_checkpoint,
     table,
 )
@@ -811,8 +812,8 @@ def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     if _under_fold_cap(spark, sf_dir, docs):
         # size-adaptive driver fold (the tfidf/bm25 gate): one Arrow
         # pass + numpy votes, zero exchanges
-        return spark.createDataFrame(
-            _simhash_fold_sigs(docs), schema="doc_id long, simhash long"
+        return local_rows_df(
+            spark, _simhash_fold_sigs(docs), schema="doc_id long, simhash long"
         )
     toks = tokenize_tf(docs)
     h = F.conv(F.substring(F.md5("token"), 1, 8), 16, 10).cast("long")
@@ -917,8 +918,8 @@ def simhash_pairs(spark: SparkSession, sf_dir: str, band_cap: int | None = None)
         pdf = _banded_pairs_fold(
             _simhash_fold_sigs(docs), SIMHASH_BANDS, 8, SIMHASH_HAM_MAX
         )
-        return spark.createDataFrame(
-            pdf, schema="doc_a long, doc_b long, hamming long"
+        return local_rows_df(
+            spark, pdf, schema="doc_a long, doc_b long, hamming long"
         )
     sig = simhash(spark, sf_dir)
     return banded_hamming_pairs(
@@ -966,8 +967,8 @@ def banded_hamming_pairs(
         )
         if probe is not None:
             pdf = _banded_pairs_fold(probe, n_bands, band_bits, ham_max)
-            return sig.sparkSession.createDataFrame(
-                pdf, schema="doc_a long, doc_b long, hamming long"
+            return local_rows_df(
+                sig.sparkSession, pdf, schema="doc_a long, doc_b long, hamming long"
             )
     # The cluster table (one row per DISTINCT signature) is the compact
     # dedup artifact everything else reads: materialize it once — four
@@ -1492,7 +1493,8 @@ def substring_dup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         # size-adaptive driver fold (the tfidf/bm25/simhash gate): the
         # distributed plan below is ~5 stages of scheduler floor at small
         # window counts; paths-agree test pins identity
-        return spark.createDataFrame(
+        return local_rows_df(
+            spark,
             _substring_fold(docs),
             schema="doc_id long, n_windows long, n_dup_windows long, dup_frac_e6 long",
         )
@@ -1627,7 +1629,8 @@ def substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape distributed."""
     docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
     if _under_fold_cap(spark, sf_dir, docs):
-        return spark.createDataFrame(
+        return local_rows_df(
+            spark,
             _substring_spans_fold(docs),
             schema="doc_id long, span_start long, span_end long, span_tokens long",
         )
@@ -1768,7 +1771,8 @@ def substring_dedup_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     Size-adaptive via the family's driver-fold gate."""
     docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
     if _under_fold_cap(spark, sf_dir, docs):
-        return spark.createDataFrame(
+        return local_rows_df(
+            spark,
             _substring_clean_fold(docs),
             schema="doc_id long, kept_tokens long, removed_tokens long, cleaned_fp string",
         )

@@ -61,8 +61,8 @@ def _local_components(pdf) -> list[tuple]:
             parent[x], x = root, parent[x]
         return root
 
-    # .tolist() => native Python scalars: createDataFrame rejects the
-    # numpy int64 values a pandas int column would otherwise yield
+    # .tolist() => native Python scalars: the union-find walks plain
+    # ints, not the numpy int64 values a pandas int column would yield
     for s, d in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
         parent.setdefault(s, s)
         parent.setdefault(d, d)
@@ -255,11 +255,8 @@ def _cc_impl(
             [StructField("node", id_type), StructField("component", id_type)]
         )
         spark = edges.sparkSession
-        # single-slice RDD-backed frame (base.local_rows_df):
-        # createDataFrame(rows) would split this gate-bounded list into
-        # defaultParallelism slices — 32 near-empty tasks per downstream
-        # action on local[32], scaling WITH core count (round-14 advice;
-        # the r14 scaling block showed the fold consumers inverting).
+        # the gate-bounded labels reach the JVM as one Arrow batch
+        # (base.local_rows_df): a LocalTableScan, no Python task
         return local_rows_df(spark, rows, schema), rows, probe
 
     # big-graph path: materialize the checkpoint ONCE (same cost the old

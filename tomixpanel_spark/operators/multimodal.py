@@ -38,6 +38,7 @@ from pyspark.sql.types import (
 )
 
 from tomixpanel_spark.operators.base import QuerySpec, table
+from tomixpanel_spark.session import python_stage
 
 # Canonical multimodal record: payload + typed metadata (media_type mirrors
 # a MIME type; meta keys are per-modality, e.g. width/height/sample_rate).
@@ -257,10 +258,6 @@ def extract_metadata(
     """
     import hashlib
 
-    from tomixpanel_spark.session import ship_package
-
-    ship_package(df.sparkSession)
-
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             payloads = pdf[payload_col]
@@ -277,7 +274,7 @@ def extract_metadata(
                 }
             )
 
-    return df.mapInPandas(batches, schema=META_SCHEMA)
+    return python_stage(df, batches, META_SCHEMA)
 
 
 def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -350,10 +347,6 @@ def transform_media(
 
     Partition-parallel, no shuffle; batch shape is rows-in -> rows-out.
     """
-    from tomixpanel_spark.session import ship_package
-
-    ship_package(df.sparkSession)
-
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             out = []
@@ -386,7 +379,7 @@ def transform_media(
                 ],
             )
 
-    return df.mapInPandas(batches, schema=FEATURE_SCHEMA)
+    return python_stage(df, batches, FEATURE_SCHEMA)
 
 # -- real PNG codec (stdlib zlib + struct: PNG pixel data is pure zlib) ------
 
@@ -577,10 +570,6 @@ def perceptual_hash(media: DataFrame, id_col: str = "item_id", payload_col: str 
     ``decode_image_gray`` (pure zlib), emitting (doc_id, dhash). A JPEG
     or other non-PNG row fails the stage with that function's
     ValueError."""
-    from tomixpanel_spark.session import ship_package
-
-    ship_package(media.sparkSession)
-
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             ids = []
@@ -592,7 +581,7 @@ def perceptual_hash(media: DataFrame, id_col: str = "item_id", payload_col: str 
                 hashes.append(dhash_bits(decode_image_gray(bytes(payload))))
             yield pd.DataFrame({"doc_id": ids, "dhash": hashes})
 
-    return media.mapInPandas(batches, schema="doc_id long, dhash long")
+    return python_stage(media, batches, "doc_id long, dhash long")
 
 
 def _thumb_pixel(i_expr, doc_id):
@@ -618,9 +607,6 @@ def synth_media(docs: DataFrame) -> DataFrame:
     narrow mapInPandas pass. This is the harness stand-in for a real
     media column — the OPERATORS downstream (decode, dHash, banded
     pairing) are the product."""
-    from tomixpanel_spark.session import ship_package
-
-    ship_package(docs.sparkSession)
     doc_id = F.col("doc_id")
     pixels = F.transform(
         F.sequence(F.lit(0), F.lit(DHASH_ROWS * DHASH_COLS - 1)),
@@ -646,7 +632,7 @@ def synth_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return with_px.mapInPandas(encode, schema=MULTIMODAL_SCHEMA)
+    return python_stage(with_px, encode, MULTIMODAL_SCHEMA)
 
 
 def media_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -715,9 +701,6 @@ def media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature/chunk/IHDR layout between encoder and decoder breaks it."""
     import numpy as np
 
-    from tomixpanel_spark.session import ship_package
-
-    ship_package(spark)
     docs = ensure_parallel_docs(spark, sf_dir)
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -739,9 +722,10 @@ def media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
                 out["bit_depth"].append(meta["bit_depth"])
             yield pd.DataFrame(out)
 
-    return docs.select("doc_id").mapInPandas(
+    return python_stage(
+        docs.select("doc_id"),
         batches,
-        schema="doc_id long, width long, height long, bit_depth long",
+        "doc_id long, width long, height long, bit_depth long",
     )
 
 
@@ -828,9 +812,6 @@ def media_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     endianness or offset error in the codec flips the sums."""
     import numpy as np
 
-    from tomixpanel_spark.session import ship_package
-
-    ship_package(spark)
     docs = ensure_parallel_docs(spark, sf_dir)
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -857,9 +838,10 @@ def media_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.DataFrame(out)
 
-    return docs.select("doc_id").mapInPandas(
+    return python_stage(
+        docs.select("doc_id"),
         batches,
-        schema=(
+        (
             "doc_id long, n_samples long, abs_sum long, peak long, "
             "zero_crossings long"
         ),
@@ -916,9 +898,6 @@ def media_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     this extends the engine for multimodal training-data pipelines."""
     import numpy as np
 
-    from tomixpanel_spark.session import ship_package
-
-    ship_package(spark)
     docs = ensure_parallel_docs(spark, sf_dir)
     d = RESIZE_DIM
 
@@ -946,9 +925,10 @@ def media_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
             # with partition size, not batch size)
             yield pd.DataFrame(out)
 
-    return docs.select("doc_id").mapInPandas(
+    return python_stage(
+        docs.select("doc_id"),
         batches,
-        schema="doc_id long, src_w long, src_h long, px_weighted long, px_sum long",
+        "doc_id long, src_w long, src_h long, px_weighted long, px_sum long",
     )
 
 
@@ -1017,9 +997,6 @@ def synth_video(docs: DataFrame) -> DataFrame:
     so the oracle re-derives sampled-frame features arithmetically."""
     import numpy as np
 
-    from tomixpanel_spark.session import ship_package
-
-    ship_package(docs.sparkSession)
     dim = VIDEO_FRAME_DIM
 
     def encode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1044,7 +1021,7 @@ def synth_video(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(encode, schema=MULTIMODAL_SCHEMA)
+    return python_stage(docs.select("doc_id"), encode, MULTIMODAL_SCHEMA)
 
 
 def media_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1057,9 +1034,6 @@ def media_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     feeding a vision encoder."""
     import numpy as np
 
-    from tomixpanel_spark.session import ship_package
-
-    ship_package(spark)
     docs = ensure_parallel_docs(spark, sf_dir)
     video = synth_video(docs)
 
@@ -1080,8 +1054,10 @@ def media_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
                     out["px_sum"].append(int(px.sum()))
             yield pd.DataFrame(out)
 
-    return video.mapInPandas(
-        sample, schema="doc_id long, frame_idx long, n_frames long, px_sum long"
+    return python_stage(
+        video,
+        sample,
+        "doc_id long, frame_idx long, n_frames long, px_sum long",
     )
 
 

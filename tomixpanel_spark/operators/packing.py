@@ -39,8 +39,14 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from tomixpanel_spark.operators.base import QuerySpec, stage_checkpoint, table
+from tomixpanel_spark.operators.base import (
+    QuerySpec,
+    local_rows_df,
+    stage_checkpoint,
+    table,
+)
 from tomixpanel_spark.functions.text import SQL_WORDS, tokens
+from tomixpanel_spark.session import python_stage
 
 N_SHARDS = 8
 # tokens per size class: narrow buckets bound the within-bucket size
@@ -148,11 +154,8 @@ def pack_sequences(
         )
         yield out[["doc_id", "n_tokens", "bin_id", "bin_fill"]]
 
-    from tomixpanel_spark.session import ship_package
-
-    ship_package(sized.sparkSession)
-    return part.mapInPandas(
-        pack, schema="doc_id long, n_tokens long, bin_id long, bin_fill long"
+    return python_stage(
+        part, pack, "doc_id long, n_tokens long, bin_id long, bin_fill long"
     )
 
 
@@ -203,10 +206,7 @@ def lpt_shards(
             heapq.heappush(heap, (load + int(sz), s))
         yield pdf.assign(shard=out)[["doc_id", "n_tokens", "shard"]]
 
-    from tomixpanel_spark.session import ship_package
-
-    ship_package(sized.sparkSession)
-    return df.mapInPandas(assign, schema="doc_id long, n_tokens long, shard long")
+    return python_stage(df, assign, "doc_id long, n_tokens long, shard long")
 
 
 # -- deterministic training-order shuffle ------------------------------------
@@ -274,7 +274,7 @@ def seeded_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
             shard = ((_HEX.index(h[0]) * 16) + _HEX.index(h[1])) % N_SHARDS
             n_pos[shard] = n_pos.get(shard, 0) + 1
             out.append((d, shard, n_pos[shard]))
-        return spark.createDataFrame(out, "doc_id long, shard long, pos long")
+        return local_rows_df(spark, out, "doc_id long, shard long, pos long")
     local = stage_checkpoint(_seeded_ranked(docs))
     # bucket counts as max(rn) over the ranked stream — the shuffle
     # carries <=256 partial rows per input partition, never the corpus

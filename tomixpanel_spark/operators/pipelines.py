@@ -56,7 +56,7 @@ from tomixpanel_spark.operators.textops import (
     GOPHER_TOP4_MAX_E6,
     dsir_weights,
 )
-from tomixpanel_spark.session import ship_package
+from tomixpanel_spark.session import python_stage
 
 
 # ---------------------------------------------------------------------------
@@ -323,8 +323,7 @@ def semdedup_clusters(
         _train_sample,
     )
 
-    emb = ensure_parallel(table(spark, sf_dir, "embeddings"), "vec_id")
-    fin = _finite_vecs(emb)
+    fin = _finite_vecs(table(spark, sf_dir, "embeddings"))
     sample_pdf, _ = _train_sample(fin)
     if not len(sample_pdf):
         raise ValueError("semdedup_prune: empty training sample")
@@ -347,15 +346,15 @@ def semdedup_clusters(
                 }
             )
 
-    ship_package(spark)
     # NOT checkpointed since the centroid-dots started riding the pair
     # edges: pair generation is the assignment's ONLY remaining consumer
     # in the query plan, so a materialization point would cost a
     # block-store write/read for nothing (the keep-policy signal comes
     # off the collected/checkpointed edge set downstream).
-    assigned = fin.mapInPandas(
+    assigned = python_stage(
+        ensure_parallel(fin, "vec_id"),
         assign,
-        schema="vec_id long, cell int, cdot long, embedding array<float>",
+        "vec_id long, cell int, cdot long, embedding array<float>",
     )
 
     hits = _threshold_hits(NEARDUP_E6)
@@ -380,15 +379,10 @@ def semdedup_clusters(
             }
         )
 
-    pairs = (
-        assigned.select("cell", "vec_id", "cdot", "embedding")
-        .groupBy("cell")
-        .applyInPandas(
-            cell_pairs,
-            schema=(
-                "vec_a long, vec_b long, sim_e6 long, cdot_a long, cdot_b long"
-            ),
-        )
+    pairs = python_stage(
+        assigned.select("cell", "vec_id", "cdot", "embedding").groupBy("cell"),
+        cell_pairs,
+        "vec_a long, vec_b long, sim_e6 long, cdot_a long, cdot_b long",
     )
     return assigned, pairs
 

@@ -46,9 +46,10 @@ from tomixpanel_spark.operators.base import (
     QuerySpec,
     ensure_parallel,
     fresh_attrs,
+    local_rows_df,
     table,
 )
-from tomixpanel_spark.session import ship_package
+from tomixpanel_spark.session import python_stage
 
 N_QUERIES = 10
 TOP_K = 5
@@ -230,6 +231,10 @@ def _train_sample(emb: DataFrame):
     """The one training prelude of the k-means verbs: ``(sample, queries)``
     pandas frames of ``(vec_id, embedding)``, both sorted by vec_id, from
     ONE count and ONE collect over ``emb`` (already ``_finite_vecs``).
+    ``emb`` is the source as read: the trainers spread their scoring
+    pass with ``ensure_parallel`` only after this, because over a
+    repartition the count alone ran 3 jobs, one a hash shuffle of every
+    embedding, and the collect shuffled them again.
 
     The count sizes ``step = max(2, n // 1024)``, ~1-2k training vectors
     at any corpus size, so driver memory is O(sample) (the IVF contract:
@@ -304,8 +309,7 @@ def _scored_pairs(
                     {"q_id": q_ids[qi], "neighbor_id": ids[ri], "sim_e6": e6[ri, qi]}
                 )
 
-    ship_package(cand.sparkSession)
-    return cand.mapInPandas(batches, schema="q_id long, neighbor_id long, sim_e6 long")
+    return python_stage(cand, batches, "q_id long, neighbor_id long, sim_e6 long")
 
 
 def _topk_window(scored: DataFrame, k: int, col: str = "sim_e6") -> DataFrame:
@@ -320,7 +324,7 @@ def _topk_window(scored: DataFrame, k: int, col: str = "sim_e6") -> DataFrame:
 def _no_queries(spark: SparkSession, k: int, col: str = "sim_e6") -> DataFrame:
     """Zero rows in a top-k verb's own schema: the corpus holds no vector
     with vec_id < N_QUERIES, so there is nothing to search for."""
-    scored = spark.createDataFrame([], f"q_id long, neighbor_id long, {col} long")
+    scored = local_rows_df(spark, [], f"q_id long, neighbor_id long, {col} long")
     return _topk_window(scored, k, col)
 
 
@@ -435,17 +439,16 @@ def _blocked_pairs(
             a, b = np.minimum(a, b), np.maximum(a, b)
         return pd.DataFrame({a_col: a, b_col: b, "sim_e6": e6})
 
-    ship_package(left.sparkSession)
     # fresh_attrs: both sides may derive from ONE table (a self-join
     # always does), which shares attribute ids across the cogroup;
     # without it column pruning under a no-output consumer (count)
     # strips the right child to key-only frames (base.fresh_attrs)
     lhs = blocked(left, "pi", "pj")
     rhs = fresh_attrs(blocked(left if self_join else right, "pj", "pi"))
-    return (
-        lhs.groupBy("pi", "pj")
-        .cogroup(rhs.groupBy("pi", "pj"))
-        .applyInPandas(block_pairs, schema=f"{a_col} long, {b_col} long, sim_e6 long")
+    return python_stage(
+        lhs.groupBy("pi", "pj").cogroup(rhs.groupBy("pi", "pj")),
+        block_pairs,
+        f"{a_col} long, {b_col} long, sim_e6 long",
     )
 
 
@@ -617,9 +620,10 @@ def ann_ivf_topk(emb: DataFrame, k: int = TOP_K, nprobe: int = 2) -> DataFrame:
                     {"q_id": q_ids[qi], "neighbor_id": ids[ri], "sim_e6": e6[ri, qi]}
                 )
 
-    ship_package(spark)
-    cand = emb.select(F.col("vec_id").alias("neighbor_id"), "embedding")
-    scored = cand.mapInPandas(assign_and_score, schema="q_id long, neighbor_id long, sim_e6 long")
+    cand = ensure_parallel(emb, "vec_id").select(
+        F.col("vec_id").alias("neighbor_id"), "embedding"
+    )
+    scored = python_stage(cand, assign_and_score, "q_id long, neighbor_id long, sim_e6 long")
     return _topk_window(scored, k)
 
 
@@ -692,8 +696,7 @@ def _lsh_signatures(df: DataFrame) -> DataFrame:
                 }
             )
 
-    ship_package(df.sparkSession)
-    return df.mapInPandas(batches, schema="vec_id long, t int, bucket int")
+    return python_stage(df, batches, "vec_id long, t int, bucket int")
 
 
 def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -743,8 +746,7 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
                     {"q_id": q_ids[qi], "neighbor_id": ids[ri], "sim_e6": e6[ri, qi]}
                 )
 
-    ship_package(spark)
-    scored = emb.mapInPandas(batches, schema="q_id long, neighbor_id long, sim_e6 long")
+    scored = python_stage(emb, batches, "q_id long, neighbor_id long, sim_e6 long")
     return _topk_window(scored, TOP_K)
 
 
@@ -874,10 +876,11 @@ def ann_ivf_quantized(
                 {"q_id": q_ids[qi], "neighbor_id": n_ids[ri], "score": scores[ri, qi]}
             )
 
-    ship_package(spark)
-    cand = emb.select(F.col("vec_id").alias("neighbor_id"), "embedding")
-    scored = cand.mapInPandas(
-        assign_and_score, schema="q_id long, neighbor_id long, score long"
+    cand = ensure_parallel(emb, "vec_id").select(
+        F.col("vec_id").alias("neighbor_id"), "embedding"
+    )
+    scored = python_stage(
+        cand, assign_and_score, "q_id long, neighbor_id long, score long"
     )
     return _topk_window(scored, k, "score")
 
@@ -885,9 +888,7 @@ def ann_ivf_quantized(
 def ann_ivf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry entry: quantized IVF over the embeddings table —
     integer-exact, so fully DuckDB-oracle-checked (including training)."""
-    return ann_ivf_quantized(
-        ensure_parallel(table(spark, sf_dir, "embeddings"), "vec_id")
-    )
+    return ann_ivf_quantized(table(spark, sf_dir, "embeddings"))
 
 
 def _ivfq_sql() -> str:
@@ -1051,10 +1052,11 @@ def ann_pq_quantized(emb: DataFrame, k: int = TOP_K) -> DataFrame:
                 }
             )
 
-    ship_package(spark)
-    cand = emb.select(F.col("vec_id").alias("neighbor_id"), "embedding")
-    scored = cand.mapInPandas(
-        encode_and_score, schema="q_id long, neighbor_id long, adc long, dist long"
+    cand = ensure_parallel(emb, "vec_id").select(
+        F.col("vec_id").alias("neighbor_id"), "embedding"
+    )
+    scored = python_stage(
+        cand, encode_and_score, "q_id long, neighbor_id long, adc long, dist long"
     )
     w_adc = Window.partitionBy("q_id").orderBy(F.col("adc").asc(), F.col("neighbor_id"))
     shortlist = (
@@ -1073,9 +1075,7 @@ def ann_pq_quantized(emb: DataFrame, k: int = TOP_K) -> DataFrame:
 def ann_pq_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry entry: product-quantized ANN over the embeddings table —
     integer-exact, fully oracle-checked including per-subspace training."""
-    return ann_pq_quantized(
-        ensure_parallel(table(spark, sf_dir, "embeddings"), "vec_id")
-    )
+    return ann_pq_quantized(table(spark, sf_dir, "embeddings"))
 
 
 def _pq_sql() -> str:

@@ -29,7 +29,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tomixpanel_spark.operators.base import Lru, QuerySpec, table
+from tomixpanel_spark.operators.base import Lru, QuerySpec, local_rows_df, table
 
 # TWO data micro-batches per parity stream (+ availableNow's one no-data
 # finalization trigger): the minimum that still proves CROSS-BATCH
@@ -583,7 +583,8 @@ def streaming_sketch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             (_py_bucket(r, t) for t in vocab), dtype=np.int64, count=len(vocab)
         )
         est = np.minimum(est, cms.cells[r][buckets])
-    return spark.createDataFrame(
+    return local_rows_df(
+        spark,
         pd.DataFrame({"token": vocab, "est_n": est}),
         schema="token string, est_n long",
     )
@@ -721,7 +722,8 @@ def dedup_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         # floors dominate at interactive batch sizes; paths-agree test
         # pins identity
         out = DedupIndex(store).probe_driver(docs_pdf(probe))
-        return spark.createDataFrame(
+        return local_rows_df(
+            spark,
             out[["doc_id", "seen_before", "first_doc_id"]],
             schema="doc_id long, seen_before boolean, first_doc_id long",
         )

@@ -557,12 +557,8 @@ def dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
                 r_arr[r["bucket"]] = (
                     (r["pc"] * 1_000_000_000 // np_) * 1_000_000 // denom
                 )
-    # single-slice: createDataFrame would split even this ONE row into
-    # defaultParallelism near-empty slices — a 32-task broadcast build
-    # per run on local[32] (base.local_rows_df)
-    rdf = F.broadcast(
-        local_rows_df(spark, [(r_arr,)], "ra array<bigint>")
-    )
+    # one Arrow row (base.local_rows_df): a LocalTableScan build side
+    rdf = F.broadcast(local_rows_df(spark, [(r_arr,)], "ra array<bigint>"))
     scored = base.crossJoin(rdf).select(
         "doc_id",
         F.size("bks").cast("bigint").alias("n_bigrams"),
@@ -992,9 +988,7 @@ def tokenize_tf(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     the driver implementation of the one tokenizer spec; pinned against
     ``tokens()`` and ``SQL_WORDS`` by
     tests/test_properties.py::TestTokenizeSpec)."""
-    from tomixpanel_spark.session import ship_package
-
-    ship_package(docs.sparkSession)
+    from tomixpanel_spark.session import python_stage
 
     def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
@@ -1004,9 +998,11 @@ def tokenize_tf(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
             yield tbl.to_pandas()
 
     def build() -> DataFrame:
-        return docs.select(
-            F.col(id_col).alias(id_col), F.col(text_col).alias(text_col)
-        ).mapInPandas(batches, schema="doc_id long, token string, tf long, dl long")
+        return python_stage(
+            docs.select(F.col(id_col).alias(id_col), F.col(text_col).alias(text_col)),
+            batches,
+            "doc_id long, token string, tf long, dl long",
+        )
 
     from tomixpanel_spark.operators.base import derived
 
@@ -1133,8 +1129,8 @@ def _tfidf_driver_fold(docs: DataFrame, n_docs: int) -> DataFrame:
     spark = docs.sparkSession
     tf_pdf = tokenize_tf_pdf(docs)
     if not len(tf_pdf):
-        return spark.createDataFrame(
-            [], "doc_id long, token string, score_e6 long, rk long"
+        return local_rows_df(
+            spark, [], "doc_id long, token string, score_e6 long, rk long"
         )
     dfreq = tf_pdf["token"].map(tf_pdf["token"].value_counts())
     tf_pdf["score_e6"] = (
@@ -1145,8 +1141,8 @@ def _tfidf_driver_fold(docs: DataFrame, n_docs: int) -> DataFrame:
     )
     ranked["rk"] = ranked.groupby("doc_id").cumcount() + 1
     top = ranked[ranked["rk"] <= 3][["doc_id", "token", "score_e6", "rk"]]
-    return spark.createDataFrame(
-        top, schema="doc_id long, token string, score_e6 long, rk long"
+    return local_rows_df(
+        spark, top, schema="doc_id long, token string, score_e6 long, rk long"
     )
 
 
@@ -1403,8 +1399,8 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         # gate): tokenize driver-side, build the DEPTHxWIDTH cells with
         # one scatter-add per row, estimate = min over rows — identical
         # md5 bucket spec, so over-counts still match the oracle exactly
-        return spark.createDataFrame(
-            _cms_fold(docs), schema="token string, est_n long"
+        return local_rows_df(
+            spark, _cms_fold(docs), schema="token string, est_n long"
         )
     # per-token totals fold from the SPARSE tf table (fused Arrow
     # tokenize, round 8) — sum(tf) == count over the occurrence explode,
@@ -1474,7 +1470,7 @@ def _bm25_driver_fold(docs: DataFrame, n_docs: int) -> DataFrame:
     tf_pdf = tokenize_tf_pdf(docs)
     schema = "q_id long, doc_id long, rank long, score_e6 long"
     if not len(tf_pdf):
-        return spark.createDataFrame([], schema)
+        return local_rows_df(spark, [], schema)
     a_total = int(tf_pdf["tf"].sum())
     avg_e2 = (a_total * 100) // int(n_docs)
     tfv = tf_pdf["tf"].astype("int64")
@@ -1500,7 +1496,7 @@ def _bm25_driver_fold(docs: DataFrame, n_docs: int) -> DataFrame:
     )
     ranked["rank"] = ranked.groupby("q_id").cumcount() + 1
     top = ranked[ranked["rank"] <= BM25_TOPK][["q_id", "doc_id", "rank", "score_e6"]]
-    return spark.createDataFrame(top, schema=schema)
+    return local_rows_df(spark, top, schema=schema)
 
 
 def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1649,7 +1645,7 @@ def _lm_driver_fold(spark: SparkSession, docs: DataFrame) -> DataFrame:
     )
     schema = "doc_id long, n_bigrams long, lm_score_e6 long"
     if not len(pdf):
-        return spark.createDataFrame(empty, schema=schema)
+        return local_rows_df(spark, empty, schema=schema)
     flat, parent = driver_tokens(pdf["text"])
     n_docs = len(pdf)
     nb = np.zeros(n_docs, dtype=np.int64)
@@ -1676,7 +1672,7 @@ def _lm_driver_fold(spark: SparkSession, docs: DataFrame) -> DataFrame:
             "lm_score_e6": sc,
         }
     )
-    return spark.createDataFrame(out, schema=schema)
+    return local_rows_df(spark, out, schema=schema)
 
 
 def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:

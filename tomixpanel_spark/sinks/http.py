@@ -180,7 +180,7 @@ class HttpSink:
         Sensible target: ``cfg.max_records`` (each task sends ~one full
         batch) or a small multiple of it for fewer, longer request
         streams."""
-        from tomixpanel_spark.session import ensure_semantics
+        from tomixpanel_spark.session import ensure_semantics, python_stage
 
         if not callable(getattr(self.to_record, "to_json", None)):
             raise TypeError(
@@ -257,7 +257,7 @@ class HttpSink:
                 )
             yield pd.DataFrame(out, columns=RECEIPT_COLUMNS)
 
-        return df.mapInPandas(run, schema=RECEIPT_SCHEMA)
+        return python_stage(df, run, RECEIPT_SCHEMA)
 
 
 def summarize_receipts(receipts: DataFrame) -> dict:

@@ -55,9 +55,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
-from tomixpanel_spark.operators.base import Gate, Lru
+from tomixpanel_spark.operators.base import Gate, Lru, local_rows_df
 from tomixpanel_spark.streaming.genstore import (
     cas_check,
     mint_store_id,
@@ -472,7 +471,7 @@ class ContinuousAggregate:
             return hit
         df = self._read_day_partitions(spark, man, sorted(man["days"]))
         if df is None:
-            return spark.createDataFrame([], StructType.fromDDL(self._READ_SCHEMA))
+            return local_rows_df(spark, [], self._READ_SCHEMA)
         out = df.select(
             "bucket", "key", F.col("n").cast("bigint").alias("n"), "sum_dec"
         )

@@ -54,9 +54,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
-from tomixpanel_spark.operators.base import Gate, Lru
+from tomixpanel_spark.operators.base import Gate, Lru, local_rows_df
 from tomixpanel_spark.streaming.genstore import (
     atomic_json_swap,
     cas_check,
@@ -454,7 +453,7 @@ class DedupIndex:
         man = self._load_manifest()
         df = self._read_buckets(spark, man, sorted(man["buckets"], key=int))
         if df is None:
-            return spark.createDataFrame([], StructType.fromDDL(self.SCHEMA))
+            return local_rows_df(spark, [], self.SCHEMA)
         return df.select("h", "first_doc_id", "first_batch")
 
     def drop_seen(self, df: DataFrame) -> DataFrame:

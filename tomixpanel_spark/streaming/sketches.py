@@ -74,9 +74,7 @@ class StreamingCountMin:
         cells in-process (pyarrow tokenize + md5 buckets over the
         batch's DISTINCT tokens), the driver adds arrays — one stage,
         one collect, identical cells."""
-        from tomixpanel_spark.session import ship_package
-
-        ship_package(batch_df.sparkSession)
+        from tomixpanel_spark.session import python_stage
 
         def partials(it):
             import numpy as np
@@ -104,8 +102,8 @@ class StreamingCountMin:
                     {"row": rr, "bucket": bb, "c": cells[rr, bb]}
                 )
 
-        part = batch_df.select("text").mapInPandas(
-            partials, schema="row int, bucket long, c long"
+        part = python_stage(
+            batch_df.select("text"), partials, "row int, bucket long, c long"
         )
         for r in part.collect():
             self.cells[r["row"], r["bucket"]] += r["c"]

@@ -112,9 +112,7 @@ def sessionize_with_state(
     it with an availableNow file stream. The batch answer to the same
     question is operators.analytics.sessionize.
     """
-    from tomixpanel_spark.session import ship_package
-
-    ship_package(events.sparkSession)
+    from tomixpanel_spark.session import python_stage
 
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -192,9 +190,10 @@ def sessionize_with_state(
             }
         )
 
-    return events.groupBy("user_id").applyInPandasWithState(
+    return python_stage(
+        events.groupBy("user_id"),
         update,
-        outputStructType=OUTPUT_SCHEMA,
+        OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="append",
         timeoutConf=timeout,
