@@ -1461,6 +1461,53 @@ def test_similarity_scoring_idioms_live_in_three_kernels():
     assert not offenders, f"scoring idiom outside its kernel: {offenders}"
 
 
+def test_dedup_pair_expansion_lives_in_one_kernel():
+    """The dedup family expands every postings list (shingles, LSH bands,
+    SimHash's exact-signature clusters) through one SQL kernel:
+    ``_pairs_expr`` (each (x, y) with x before y) inside
+    ``_postings_pairs`` (group, sort, cap). No other code in dedup.py,
+    pipelines.py or multimodal.py flattens a nested transform, slices a
+    postings list or walks a ``sequence(i + 1, ...)`` index range.
+    Whitespace is ignored, so a needle split over lines still counts."""
+    import ast
+    import re
+    from pathlib import Path
+
+    ops = Path(__file__).resolve().parents[1] / "tomixpanel_spark" / "operators"
+    kernels = {"_pairs_expr", "_postings_pairs"}
+    needles = ("flatten(transform(", "F.flatten(", "slice(ds", "sequence(i+1")
+    offenders = []
+    for name in ("dedup.py", "pipelines.py", "multimodal.py"):
+        src = (ops / name).read_text()
+        lines = src.splitlines()
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.FunctionDef) and node.name in kernels:
+                for i in range(node.lineno - 1, node.end_lineno):
+                    lines[i] = ""
+        rest = re.sub(r"\s+", "", "\n".join(lines))
+        offenders += [
+            f"{name}: {n} x{rest.count(n)}" for n in needles if n in rest
+        ]
+    assert not offenders, f"pair expansion outside its kernel: {offenders}"
+
+
+def test_package_has_no_bare_assert():
+    """Contracts are enforced in code: ``python -O`` strips ``assert``,
+    so the package raises real exceptions instead (an AST walk over
+    every module under tomixpanel_spark/)."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "tomixpanel_spark"
+    offenders = [
+        f"{path.relative_to(pkg)}:{node.lineno}"
+        for path in sorted(pkg.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Assert)
+    ]
+    assert not offenders, f"bare assert in the package: {offenders}"
+
+
 def test_python_stages_and_local_frames_have_one_door():
     """Every Python stage body runs through ``session.python_stage``
     (the package ship and the once-per-task archive prune) and every

@@ -2,10 +2,13 @@
 BOUNDED on a degenerate boilerplate corpus (thousands of near-identical
 docs) — the shape that turns uncapped pair generation quadratic. 20k docs
 with a 5k-doc boilerplate cluster: uncapped, that cluster alone is
-~12.5M candidate pairs; the caps must keep both paths small and fast."""
+~12.5M candidate pairs; the caps must keep both paths small and fast.
+The caps' own boundary (at and one below the largest postings list) is
+checked on the SF_SMALL fixture."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 N_BOILER = 5_000
@@ -89,6 +92,85 @@ class TestDegenerateCorpusBounds:
             assert kept == n_total - dropped_mutants
         finally:
             out["pairs"].unpersist()
+
+
+CAP_CALLERS = ("near_dup_pairs", "containment_pairs", "lsh_pairs_from_signatures")
+
+
+def _capped_pairs(spark, caller, cap):
+    """{pair: score} of one cap caller at SF_SMALL (LSH pairs carry no
+    score): the Jaccard and containment verbs cap shingle postings
+    (``df_cap``), LSH caps band postings (``band_cap``)."""
+    from tests.conftest import SF_SMALL
+    from tomixpanel_spark.operators import dedup as dd
+    from tomixpanel_spark.operators.base import table
+
+    if caller == "near_dup_pairs":
+        rows = dd.near_dup_pairs(table(spark, SF_SMALL, "documents"), df_cap=cap)
+    elif caller == "containment_pairs":
+        rows = dd.containment_pairs(spark, SF_SMALL, df_cap=cap)
+    else:
+        sig = dd.minhash_signature(spark, SF_SMALL)
+        rows = dd.lsh_pairs_from_signatures(sig, band_cap=cap)
+    return {(r[0], r[1]): (r[2] if len(r) > 2 else None) for r in rows.collect()}
+
+
+def _largest_postings_list(spark, caller):
+    """Members of the largest postings list the caller's cap acts on,
+    counted independently of the kernel: docs per shingle, or docs per
+    band (a band is one run of consecutive minhashes)."""
+    from tests.conftest import SF_SMALL
+    from tomixpanel_spark.operators import dedup as dd
+    from tomixpanel_spark.operators.base import table
+
+    if caller == "lsh_pairs_from_signatures":
+        sig = dd.minhash_signature(spark, SF_SMALL)
+        per = dd.N_MINHASH // dd.N_BANDS
+        groups = [
+            sig.groupBy(*[f"mh{b * per + k}" for k in range(per)])
+            for b in range(dd.N_BANDS)
+        ]
+    else:
+        sa = dd.shingle_arrays_for(table(spark, SF_SMALL, "documents"))
+        groups = [sa.select(F.explode("sh_arr").alias("sh")).groupBy("sh")]
+    return max(g.count().agg(F.max("count")).first()[0] for g in groups)
+
+
+class TestCapBoundaries:
+    """Each cap drops postings lists LONGER than the cap from candidate
+    generation only. A cap equal to the largest list drops nothing; one
+    below drops that list, so the Jaccard and LSH rows are a subset of
+    the uncapped rows, and containment, which scores over the capped
+    lists without re-verifying, keeps a subset of the pairs with scores
+    that can only fall."""
+
+    @pytest.mark.parametrize("caller", CAP_CALLERS)
+    def test_cap_at_and_below_the_largest_list(self, spark, caller):
+        largest = _largest_postings_list(spark, caller)
+        assert largest > 2, "fixture has no postings list a cap can drop"
+        uncapped = _capped_pairs(spark, caller, None)
+        assert uncapped
+        assert _capped_pairs(spark, caller, largest) == uncapped
+        for cap in (largest - 1, 2):
+            below = _capped_pairs(spark, caller, cap)
+            if caller == "containment_pairs":
+                assert below.keys() <= uncapped.keys()
+                assert all(below[k] <= uncapped[k] for k in below)
+            else:
+                assert below.items() <= uncapped.items()
+
+    @pytest.mark.parametrize("caller", CAP_CALLERS)
+    def test_non_numeric_cap_raises_before_sql(self, spark, caller, monkeypatch):
+        """The cap is formatted into SQL text through ``int()``: a cap
+        that is not a number raises before the kernel builds any text."""
+        from tomixpanel_spark.operators import dedup as dd
+
+        def built(*args, **kwargs):
+            raise AssertionError("SQL text built for a non-numeric cap")
+
+        monkeypatch.setattr(dd, "_pairs_expr", built)
+        with pytest.raises(ValueError, match="invalid literal for int"):
+            _capped_pairs(spark, caller, "1; DROP TABLE documents")
 
 
 class TestBenchHeadline:

@@ -4,16 +4,20 @@ exact, n-gram Jaccard, MinHash+LSH, SimHash.
 Scale design:
   * exact dedup = hash-groupBy on a fingerprint — one shuffle keyed by the
     md5, uniform by construction (no skew).
-  * n-gram Jaccard = shingle-explode + self-join on shingle + pair count.
-    At 100 TB the candidate generation must NOT be the quadratic cross
-    join — the shingle join only pairs docs that actually share a shingle.
-    Hot shingles (stopword trigrams) are the skew risk; AQE skew-join
-    handles moderate cases and a document-frequency cap (drop shingles in
-    > df_cap docs) bounds the worst case, mirroring what production
-    near-dup pipelines do.
-  * MinHash+LSH replaces even that with band-bucket joins: candidate pairs
+  * n-gram Jaccard = shingle-explode + per-shingle postings list +
+    intra-list pair expansion + pair count (no self-join). At 100 TB the
+    candidate generation must NOT be the quadratic cross join — a
+    postings list only pairs docs that actually share a shingle. Hot
+    shingles (stopword trigrams) are the skew risk; a document-frequency
+    cap (drop shingles in > df_cap docs) bounds the worst case, mirroring
+    what production near-dup pipelines do.
+  * MinHash+LSH replaces even that with band postings: candidate pairs
     are only docs agreeing on a full band — the standard sub-quadratic
     near-dup path.
+  * Every postings list of the family (shingles, LSH bands, SimHash
+    exact-signature clusters) expands through ONE kernel:
+    ``_postings_pairs`` groups and caps the lists, ``_pairs_expr`` emits
+    each (x, y) pair with x before y. Verification stays separate.
   * SimHash gives a 32-bit per-doc signature; hamming-adjacent bucketing
     is a cheap pre-filter.
 
@@ -169,6 +173,90 @@ def near_dup_pairs(
     return _jaccard_pairs_from_shingles(sa, threshold, df_cap, carry_ntoks)
 
 
+def _pairs_expr(ds: str, carry=(), ratio: float | None = None) -> str:
+    """THE intra-list pair expansion of the dedup family, as SQL text:
+    every (x, y) with x before y in the sorted array column ``ds``,
+    inlined into (doc_a, doc_b, ...) rows. Members are bare ids, or
+    structs with ``doc_id`` plus the ``carry`` fields, where each
+    ``(field, stem)`` comes out as ``<stem>_a``/``<stem>_b``. Cost is
+    size(ds)^2 / 2 per list, which is why callers cap the list.
+
+    ``ratio`` adds the Jaccard length-ratio prefilter on the carried set
+    size ``n``, INSIDE the array transform, before any struct exists:
+    ``common <= min(n_a, n_b)`` implies ``jaccard <= min/max``, so a pair
+    with ``min/max < ratio`` can never reach the final filter — EXACT, no
+    lost pairs. Measured at sf0.1 it kills ~80% of the 1.27M candidate
+    structs before the per-pair count shuffle. The bound uses the same
+    least/greatest division the final jaccard evaluates to at
+    ``common == min`` so float rounding agrees."""
+    x, y = ("x.doc_id", "y.doc_id") if carry else ("x", "y")
+    fields = [f"'doc_a', {x}, 'doc_b', {y}"] + [
+        f"'{stem}_a', x.{field}, '{stem}_b', y.{field}" for field, stem in carry
+    ]
+    rest = f"slice({ds}, i + 2, size({ds}))"
+    if ratio is not None:
+        rest = (
+            f"filter({rest}, y -> CAST(least(x.n, y.n) AS DOUBLE) / "
+            f"CAST(greatest(x.n, y.n) AS DOUBLE) >= {ratio!r}D)"
+        )
+    return (
+        f"inline(flatten(transform({ds}, (x, i) -> transform({rest}, "
+        f"y -> named_struct({', '.join(fields)})))))"
+    )
+
+
+def _postings_pairs(
+    src: str, key: str, member: str, carry=(), ratio: float | None = None,
+    cap: int | None = None,
+) -> str:
+    """SQL text of the one postings-list candidate generator: collect
+    ``member`` (an id, or a struct led by ``doc_id`` so the sort orders
+    by id) per ``key`` over ``src`` into one sorted list, keep lists of
+    2+ members, and expand each with ``_pairs_expr``. ``cap`` (the
+    ``df_cap``/``band_cap`` hot-key guard) also drops lists longer than
+    the cap; it goes through ``int()``, so a non-numeric cap raises
+    before any SQL text exists."""
+    having = "size(ds) > 1"
+    if cap is not None:
+        having += f" AND size(ds) <= {int(cap)}"
+    return f"""
+  SELECT {_pairs_expr("ds", carry, ratio)} FROM (
+    SELECT {key}, array_sort(collect_list({member})) AS ds
+    FROM {src} GROUP BY {key} HAVING {having})"""
+
+
+def _shingle_pairs_sql(
+    tail: str, ratio: float | None = None, carry_ntoks: bool = False,
+    cap: int | None = None,
+) -> str:
+    """Spark-side SQL of the shingle-postings chain shared by the Jaccard
+    and containment verbs (the {sa} placeholder is bound by spark.sql
+    templating): ``rows_`` is one row per (doc, shingle) with the doc's
+    set size ``n``, ``pairs`` is ``_postings_pairs`` over shingles, and
+    ``common`` counts shared shingles per pair; ``tail`` reads ``pairs``
+    or ``common``. ONE spark.sql over the shingle frame: a chain of
+    DataFrame ops pays an eager analyzer pass per op over an ever-deeper
+    tree (~0.3 s of construction per build), the single SQL
+    parse+analyze ~0.15 s.
+
+    With ``carry_ntoks`` the per-doc token count rides the postings
+    structs and comes back out as nt_a/nt_b — grouping on them changes
+    nothing (they are functional on the doc ids) and the widened struct
+    costs 8 bytes per posting row where it saves keep-best consumers a
+    full corpus re-scan for the same numbers."""
+    nt, nt_out = (", n_toks", ", nt_a, nt_b") if carry_ntoks else ("", "")
+    carry = (("n", "n"), ("n_toks", "nt")) if carry_ntoks else (("n", "n"),)
+    pairs = _postings_pairs("rows_", "sh", f"struct(doc_id, n{nt})", carry, ratio, cap)
+    return f"""
+WITH rows_ AS (
+  SELECT doc_id{nt}, size(sh_arr) AS n, explode(sh_arr) AS sh FROM {{sa}}),
+pairs AS ({pairs}),
+common AS (
+  SELECT doc_a, doc_b, n_a, n_b{nt_out}, count(1) AS common
+  FROM pairs GROUP BY doc_a, doc_b, n_a, n_b{nt_out})
+{tail}"""
+
+
 def _jaccard_pairs_from_shingles(
     sa: DataFrame,
     threshold: float,
@@ -186,80 +274,37 @@ def _jaccard_pairs_from_shingles(
     shared shingles are hot ones (the standard, documented LSH-style
     recall trade), never misscore a generated candidate.
     """
+    spark = sa.sparkSession
     if df_cap is not None:
         if carry_ntoks:
             raise ValueError("carry_ntoks is incompatible with df_cap")
-        rows = sa.select(
-            "doc_id", F.size("sh_arr").alias("n"), F.explode("sh_arr").alias("sh")
+        sql = _shingle_pairs_sql(
+            "SELECT DISTINCT doc_a, doc_b FROM pairs", threshold, cap=df_cap
         )
-        grouped = (
-            rows.groupBy("sh")
-            .agg(F.array_sort(F.collect_list(F.struct("doc_id", "n"))).alias("ds"))
-            .filter(F.size("ds") > 1)
-        )
-        grouped = grouped.filter(F.size("ds") <= df_cap)
-        cand = (
-            _pairs_from_postings(grouped, threshold)
-            .select("doc_a", "doc_b")
-            .distinct()
-        )
-        return verify_pairs_exact(cand, sa, threshold)
-    # Uncapped path: ONE spark.sql over the shingle frame. The chain of 8
-    # DataFrame ops it replaces paid an eager analyzer pass per op over
-    # an ever-deeper tree (~0.3 s of construction per build, 3x per bench
-    # row across the near-dup family); the single SQL parse+analyze is
-    # ~0.15 s and the optimized plan is operator-identical modulo
-    # `inline` fusing the pair-struct expansion into its Generate (one
-    # fewer Project; the {sa} placeholder binds through a per-call uuid
-    # temp view the formatter drops before returning). Same expression
-    # trees, same two exchanges, same results — oracle-checked.
-    return sa.sparkSession.sql(_jaccard_pairs_sql(threshold, carry_ntoks), sa=sa)
-
-
-@lru_cache(maxsize=8)
-def _jaccard_pairs_sql(threshold: float, carry_ntoks: bool = False) -> str:
-    """Spark-side SQL of the uncapped postings->pairs->jaccard chain (the
-    {sa} placeholder is bound by spark.sql templating). Expressions mirror
-    the Column-API construction verbatim; the length-ratio prefilter and
-    the final jaccard use the same least/greatest double division.
-
-    With ``carry_ntoks`` the per-doc token count rides the postings
-    structs and comes back out as nt_a/nt_b — grouping on them changes
-    nothing (they are functional on the doc ids) and the widened struct
-    costs 8 bytes per posting row where it saves keep-best consumers a
-    full corpus re-scan for the same numbers."""
-    nt_sel, nt_struct, nt_pair, nt_out = "", "", "", ""
-    if carry_ntoks:
-        nt_sel = ", n_toks"
-        nt_struct = ", n_toks"
-        nt_pair = ", 'nt_a', x.n_toks, 'nt_b', y.n_toks"
-        nt_out = ", nt_a, nt_b"
-    return f"""
-WITH rows_ AS (
-  SELECT doc_id{nt_sel}, size(sh_arr) AS n, explode(sh_arr) AS sh FROM {{sa}}),
-grouped AS (
-  SELECT sh, array_sort(collect_list(struct(doc_id, n{nt_struct}))) AS ds
-  FROM rows_ GROUP BY sh HAVING size(ds) > 1),
-pairs AS (
-  SELECT inline(flatten(transform(ds, (x, i) ->
-    transform(filter(slice(ds, i + 2, size(ds)), y ->
-        CAST(least(x.n, y.n) AS DOUBLE) / CAST(greatest(x.n, y.n) AS DOUBLE)
-          >= {threshold!r}D),
-      y -> named_struct('doc_a', x.doc_id, 'doc_b', y.doc_id,
-                        'n_a', x.n, 'n_b', y.n{nt_pair})))))
-  FROM grouped),
-common AS (
-  SELECT doc_a, doc_b, n_a, n_b{nt_out}, count(1) AS common
-  FROM pairs GROUP BY doc_a, doc_b, n_a, n_b{nt_out})
-SELECT doc_a, doc_b, jaccard{nt_out} FROM (
-  SELECT doc_a, doc_b{nt_out},
+        return verify_pairs_exact(spark.sql(sql, sa=sa), sa, threshold)
+    nt = ", nt_a, nt_b" if carry_ntoks else ""
+    tail = f"""SELECT doc_a, doc_b, jaccard{nt} FROM (
+  SELECT doc_a, doc_b{nt},
          CAST(common AS DOUBLE) / CAST(n_a + n_b - common AS DOUBLE) AS jaccard
   FROM common)
-WHERE jaccard >= {threshold!r}D
-"""
+WHERE jaccard >= {threshold!r}D"""
+    return spark.sql(_shingle_pairs_sql(tail, threshold, carry_ntoks), sa=sa)
 
 
 CONTAINMENT_E6 = 900_000  # inner's shingles >= 90% covered by outer
+
+# Both directions from ONE pass over the aggregate: a union of two
+# projections re-executes the post-shuffle final aggregate per branch
+# (exchange reuse only shares the shuffle files), while inlining a
+# 2-element array stays inside the same codegen stage.
+_CONTAINMENT_TAIL = f"""SELECT inner_doc, outer_doc, containment_e6 FROM (
+  SELECT inline(array(
+    named_struct('inner_doc', doc_a, 'outer_doc', doc_b,
+                 'containment_e6', common * 1000000L div n_a),
+    named_struct('inner_doc', doc_b, 'outer_doc', doc_a,
+                 'containment_e6', common * 1000000L div n_b)))
+  FROM common)
+WHERE containment_e6 >= {CONTAINMENT_E6}"""
 
 
 def containment_pairs(
@@ -271,11 +316,12 @@ def containment_pairs(
     misses (a small doc embedded in a much larger one scores low Jaccard
     no matter how completely it is contained).
 
-    Same postings-list candidate machinery as the Jaccard path, with two
-    deliberate differences: (1) NO length-ratio prefilter — that bound
-    is a Jaccard fact (common <= min implies jaccard <= min/max) and
-    containment has no such bound, the prefilter would drop exactly the
-    small-inside-large pairs this operator exists to find; (2) each
+    Same postings-list candidate machinery as the Jaccard path
+    (``_shingle_pairs_sql``), with two deliberate differences: (1) NO
+    length-ratio prefilter — that bound is a Jaccard fact (common <= min
+    implies jaccard <= min/max) and containment has no such bound, the
+    prefilter would drop exactly the small-inside-large pairs this
+    operator exists to find; (2) each
     unordered candidate emits BOTH directions, scored common*1e6 div
     n_inner in pure integers so both engines keep identical pairs.
     Scale: cost is the same Σ df² postings expansion; ``df_cap`` bounds
@@ -287,73 +333,7 @@ def containment_pairs(
     shingles; production callers wanting exact scores verify survivors
     against full shingle arrays like ``verify_pairs_exact`` does."""
     sa = _shingle_arrays(spark, sf_dir)
-    if df_cap is not None:
-        rows = sa.select(
-            "doc_id", F.size("sh_arr").alias("n"), F.explode("sh_arr").alias("sh")
-        )
-        grouped = (
-            rows.groupBy("sh")
-            .agg(F.array_sort(F.collect_list(F.struct("doc_id", "n"))).alias("ds"))
-            .filter(F.size("ds") > 1)
-        ).filter(F.size("ds") <= df_cap)
-        common = (
-            _pairs_from_postings(grouped, None)
-            .groupBy("doc_a", "doc_b", "n_a", "n_b")
-            .agg(F.count(F.lit(1)).alias("common"))
-        )
-        # both directions from ONE pass over the aggregate: a union of two
-        # projections re-executes the post-shuffle final aggregate per
-        # branch (exchange reuse only shares the shuffle files), while a
-        # 2-element array explode stays inside the same codegen stage
-        both = common.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("doc_a").alias("inner_doc"),
-                        F.col("doc_b").alias("outer_doc"),
-                        F.expr("common * 1000000L div n_a").alias("containment_e6"),
-                    ),
-                    F.struct(
-                        F.col("doc_b").alias("inner_doc"),
-                        F.col("doc_a").alias("outer_doc"),
-                        F.expr("common * 1000000L div n_b").alias("containment_e6"),
-                    ),
-                )
-            ).alias("d")
-        )
-        return both.select("d.*").filter(F.col("containment_e6") >= CONTAINMENT_E6)
-    # uncapped (registered) path: ONE spark.sql — the same eager-analyzer
-    # fold as _jaccard_pairs_from_shingles, same expressions, same plan
-    # operators (inline fuses the two-direction struct expansion exactly
-    # like the explode(array(...)) + select("d.*") pair it replaces)
-    return spark.sql(_CONTAINMENT_PAIRS_SQL, sa=sa)
-
-
-_CONTAINMENT_PAIRS_SQL = f"""
-WITH rows_ AS (
-  SELECT doc_id, size(sh_arr) AS n, explode(sh_arr) AS sh FROM {{sa}}),
-grouped AS (
-  SELECT sh, array_sort(collect_list(struct(doc_id, n))) AS ds
-  FROM rows_ GROUP BY sh HAVING size(ds) > 1),
-pairs AS (
-  SELECT inline(flatten(transform(ds, (x, i) ->
-    transform(slice(ds, i + 2, size(ds)),
-      y -> named_struct('doc_a', x.doc_id, 'doc_b', y.doc_id,
-                        'n_a', x.n, 'n_b', y.n)))))
-  FROM grouped),
-common AS (
-  SELECT doc_a, doc_b, n_a, n_b, count(1) AS common
-  FROM pairs GROUP BY doc_a, doc_b, n_a, n_b),
-both AS (
-  SELECT inline(array(
-    named_struct('inner_doc', doc_a, 'outer_doc', doc_b,
-                 'containment_e6', common * 1000000L div n_a),
-    named_struct('inner_doc', doc_b, 'outer_doc', doc_a,
-                 'containment_e6', common * 1000000L div n_b)))
-  FROM common)
-SELECT inner_doc, outer_doc, containment_e6 FROM both
-WHERE containment_e6 >= {CONTAINMENT_E6}
-"""
+    return spark.sql(_shingle_pairs_sql(_CONTAINMENT_TAIL, cap=df_cap), sa=sa)
 
 
 _CONTAINMENT_SQL = f"""
@@ -404,45 +384,6 @@ def verify_pairs_exact(cand: DataFrame, sa: DataFrame, threshold: float) -> Data
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
-
-
-def _pairs_from_postings(grouped: DataFrame, threshold: float | None = None) -> DataFrame:
-    """Intra-postings-list pair expansion: (doc_a, doc_b, n_a, n_b) rows.
-
-    With ``threshold`` set, pairs whose shingle-set sizes are too different
-    are dropped INSIDE the array transform, before any struct exists:
-    ``common <= min(n_a, n_b)`` implies ``jaccard <= min/max``, so
-    ``min/max < threshold`` can never reach the final filter — the standard
-    length-ratio prefilter, EXACT (no lost pairs). Measured at sf0.1 it
-    kills ~80% of the 1.27M candidate structs before the per-pair count
-    shuffle. The bound uses the same least/greatest division the final
-    jaccard evaluates to at ``common == min`` so float rounding agrees.
-    """
-
-    return grouped.select(_pair_col(threshold).alias("p")).select("p.*")
-
-
-@lru_cache(maxsize=4)
-def _pair_col(threshold: float | None) -> F.Column:
-    # single F.expr parse (the gopher-fold treatment): the nested
-    # transform/filter lambdas cost ~0.8 s of py4j plan construction per
-    # build via the Column API; the SQL string is the identical tree,
-    # and the parsed constant tree memoizes per threshold
-    rest = "slice(ds, i + 2, size(ds))"
-    if threshold is not None:
-        rest = (
-            f"filter({rest}, y -> "
-            "CAST(least(x.n, y.n) AS DOUBLE) / "
-            "CAST(greatest(x.n, y.n) AS DOUBLE) >= "
-            f"{threshold!r}D)"
-        )
-    pair_expr = (
-        "explode(flatten(transform(ds, (x, i) -> "
-        f"transform({rest}, y -> named_struct("
-        "'doc_a', x.doc_id, 'doc_b', y.doc_id, "
-        "'n_a', x.n, 'n_b', y.n)))))"
-    )
-    return F.expr(pair_expr)
 
 
 def _shingle_arrays(
@@ -499,7 +440,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Candidate generation is ONE pass over shingle rows: group by shingle,
     collect the (doc_id, set_size) postings list, and emit intra-list pairs
-    with a nested array transform — cost is sum over shingles of df^2
+    with the ``_postings_pairs`` kernel — cost is sum over shingles of df^2
     (sub-quadratic on real corpora), with no self-join and a single
     evaluation of the shingle arrays. Doc set-sizes ride along in the
     postings structs, so no extra join to attach them. At 100 TB add a
@@ -566,8 +507,8 @@ def lsh_pairs_from_signatures(sig: DataFrame, band_cap: int | None = None) -> Da
     SELF-JOINING on (band_idx, band) — two scans of the signature set plus
     a join shuffle, and quadratic row blowup inside a hot band — group by
     (band_idx, band), collect the sorted doc postings list once, and
-    expand intra-list pairs with a nested array transform, exactly like
-    ``_pairs_from_postings``. One aggregate shuffle over band keys plus
+    expand intra-list pairs through the family's one postings kernel,
+    ``_postings_pairs``. One aggregate shuffle over band keys plus
     the final pair-dedup; the per-band cost is explicit (``size(ds)^2``)
     and therefore CAPPABLE.
 
@@ -589,26 +530,9 @@ def lsh_pairs_from_signatures(sig: DataFrame, band_cap: int | None = None) -> Da
     bands = sig.select(
         "doc_id", F.stack(F.lit(N_BANDS), *stack_args).alias("band_idx", "band")
     )
-    grouped = (
-        bands.groupBy("band_idx", "band")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ds"))
-        .filter(F.size("ds") > 1)
-    )
-    if band_cap is not None:
-        grouped = grouped.filter(F.size("ds") <= band_cap)
-
-    def partners(x, i):
-        rest = F.slice("ds", i + 2, F.size("ds"))
-        return F.transform(
-            rest, lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b"))
-        )
-
-    return (
-        grouped.select(
-            F.explode(F.flatten(F.transform("ds", partners))).alias("p")
-        )
-        .select("p.*")
-        .distinct()
+    pairs = _postings_pairs("{bands}", "band_idx, band", "doc_id", cap=band_cap)
+    return sig.sparkSession.sql(
+        f"SELECT DISTINCT doc_a, doc_b FROM ({pairs})", bands=bands
     )
 
 
@@ -702,7 +626,7 @@ def _banded_pairs_fold(
     identical exact-collapse -> band-bucket -> verify -> cluster-expand
     semantics as ``banded_hamming_pairs``, fully vectorized: cluster
     blocks come from one sort, bucket pair enumeration uses
-    triu_indices + byte-table popcount, and the cluster cross-product
+    triu_indices + the SWAR ``_popcount64``, and the cluster cross-product
     expands with repeat/cumsum index arithmetic — no Python loop ever
     touches an output-sized collection (the earlier tuple-building
     expansion cost ~0.3 s for 83k pairs; this is ~10 ms). Returns a
@@ -980,19 +904,10 @@ def banded_hamming_pairs(
         .agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
     )
     clusters = stage_checkpoint(clusters, eager=True)
-    # hamming-0: every pair inside one identical-signature cluster
-    intra = (
-        clusters.filter(F.size("ids") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(sequence(0, size(ids) - 2), i -> "
-                    "transform(sequence(i + 1, size(ids) - 1), j -> "
-                    "struct(ids[i] AS doc_a, ids[j] AS doc_b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.doc_a", "p.doc_b", F.lit(0).cast("bigint").alias("hamming"))
+    # hamming-0: every pair inside one identical-signature cluster (the
+    # sorted ids list is a postings list; same kernel as shingles/bands)
+    intra = clusters.filter(F.size("ids") >= 2).selectExpr(
+        _pairs_expr("ids"), "0L AS hamming"
     )
     mask = (1 << band_bits) - 1
     rb = F.explode(
