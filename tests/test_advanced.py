@@ -574,7 +574,18 @@ class TestRangeJoin:
         assert joins and all("NestedLoop" not in j for j in joins)
 
 
+@pytest.fixture
+def distributed_tier(monkeypatch):
+    """The text family's driver folds off: ``TOMIX_TFIDF_DRIVER_FOLD_DOCS``
+    at 0 sends the shingle and SimHash verbs to their Spark plans."""
+    monkeypatch.setenv("TOMIX_TFIDF_DRIVER_FOLD_DOCS", "0")
+
+
 class TestDedupPipeline:
+    # the one candidate pass of each tier: the driver shingle fold under
+    # the gate (the SF_SMALL corpus is), the Spark SQL chain above it
+    candidate_pass = "_shingle_fold"
+
     def test_one_candidate_pass_serves_both_outputs(self, spark, monkeypatch):
         """dedup_pipeline must generate+verify pairs ONCE (persisted) and
         agree with the self-contained registered queries."""
@@ -583,13 +594,13 @@ class TestDedupPipeline:
         from tomixpanel_spark.operators.base import table
 
         calls = {"n": 0}
-        real = dd._jaccard_pairs_from_shingles
+        real = getattr(dd, self.candidate_pass)
 
         def counting(*a, **kw):
             calls["n"] += 1
             return real(*a, **kw)
 
-        monkeypatch.setattr(dd, "_jaccard_pairs_from_shingles", counting)
+        monkeypatch.setattr(dd, self.candidate_pass, counting)
         docs = table(spark, SF_SMALL, "documents")
         out = dd.dedup_pipeline(docs)
         try:
@@ -653,6 +664,11 @@ class TestDedupPipeline:
             dd.dedup_pipeline(
                 table(spark, SF_SMALL, "documents"), candidate_source="nope"
             )
+
+
+@pytest.mark.usefixtures("distributed_tier")
+class TestDedupPipelineDistributed(TestDedupPipeline):
+    candidate_pass = "_jaccard_pairs_from_shingles"
 
 
 class TestSimilarityEdgeIds:
@@ -987,6 +1003,11 @@ class TestSimhashPairs:
             capped.filter(F.col("hamming") == 0).count()
             == uncapped.filter(F.col("hamming") == 0).count()
         )
+
+
+@pytest.mark.usefixtures("distributed_tier")
+class TestSimhashPairsDistributed(TestSimhashPairs):
+    """The SimHash checks on the distributed signature and band plans."""
 
 
 class TestSegmentDedup:

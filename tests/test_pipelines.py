@@ -275,7 +275,19 @@ def test_dedup_cascade_stage_attribution(spark):
     drop exactly the non-keepers of dedup_exact; the near-dup stage runs
     only over exact survivors, never drops two directly-paired survivors
     both ways, and keeps the most-token member (ties lowest id) of each
-    pair."""
+    pair. At the default gate the survivor pairs come from the driver
+    shingle fold."""
+    _check_dedup_cascade_stages(spark)
+
+
+def test_dedup_cascade_stage_attribution_distributed(spark, monkeypatch):
+    """The same stage semantics with the survivor pairs from the Spark
+    SQL chain (the fold gate at 0)."""
+    monkeypatch.setenv("TOMIX_TFIDF_DRIVER_FOLD_DOCS", "0")
+    _check_dedup_cascade_stages(spark)
+
+
+def _check_dedup_cascade_stages(spark):
     from tomixpanel_spark.functions.text import fingerprint, tokens
     from tomixpanel_spark.operators.base import table
     from tomixpanel_spark.operators.dedup import near_dup_pairs

@@ -333,7 +333,18 @@ def test_carry_ntoks_rides_the_pair_edges(spark):
     """near_dup_pairs(carry_ntoks=True) must (1) keep the pair set and
     jaccard scores bit-identical to the plain kernel and (2) stamp each
     side with exactly size(tokens(text)) of that doc — the signal the
-    keep-best fold consumes instead of re-scanning the corpus."""
+    keep-best fold consumes instead of re-scanning the corpus. At the
+    default gate this is the driver fold's carry."""
+    _check_carry_ntoks(spark)
+
+
+def test_carry_ntoks_rides_the_pair_edges_distributed(spark, monkeypatch):
+    """The same carry on the Spark SQL chain (the fold gate at 0)."""
+    monkeypatch.setenv("TOMIX_TFIDF_DRIVER_FOLD_DOCS", "0")
+    _check_carry_ntoks(spark)
+
+
+def _check_carry_ntoks(spark):
     from pyspark.sql import functions as F
 
     from tomixpanel_spark.functions.text import tokens as tok
@@ -355,6 +366,91 @@ def test_carry_ntoks_rides_the_pair_edges(spark):
     }
     for r in carried:
         assert r["nt_a"] == ntok[r["doc_a"]] and r["nt_b"] == ntok[r["doc_b"]]
+
+
+@pytest.mark.parametrize("verb", ("near_dup_pairs", "containment_pairs"))
+def test_shingle_fold_gate_boundary(spark, monkeypatch, verb):
+    """The shingle family's fold gate at cap-1 (Spark SQL chain), cap
+    and cap+1 (driver fold) of ``TOMIX_TFIDF_DRIVER_FOLD_DOCS``: the
+    same rows on every side, uncapped and with ``df_cap``."""
+    from tomixpanel_spark.operators import dedup as dd
+    from tomixpanel_spark.operators.base import table
+
+    docs = table(spark, SF_ORACLE, "documents")
+    n = docs.count()
+
+    def rows(cap, df_cap):
+        monkeypatch.setenv("TOMIX_TFIDF_DRIVER_FOLD_DOCS", str(cap))
+        if verb == "near_dup_pairs":
+            out = dd.near_dup_pairs(docs, df_cap=df_cap)
+        else:
+            out = dd.containment_pairs(spark, SF_ORACLE, df_cap=df_cap)
+        tier = _last_decision("TOMIX_TFIDF_DRIVER_FOLD_DOCS").tier
+        return tier, sorted(map(tuple, out.collect()))
+
+    for df_cap in (None, 5):
+        (t0, below), (t1, at), (t2, above) = (
+            rows(cap, df_cap) for cap in (n - 1, n, n + 1)
+        )
+        assert (t0, t1, t2) == ("distributed", "driver", "driver")
+        assert below and below == at == above, (verb, df_cap)
+
+
+def test_capped_jaccard_rescored_over_full_sets(spark, monkeypatch):
+    """``df_cap`` only drops candidates: docs 1 and 2 share three rare
+    shingles and six hot ones (df 8 > cap 5), and on both tiers score
+    their exact Jaccard over the full sets, 9/10, not 3/16 over the
+    capped lists. A repeated id sends the corpus to the chain, whose
+    verify join fans out over both rows of the id (a row paired with
+    itself scores 1.0): the default gate gives those rows too."""
+    from tomixpanel_spark.operators.dedup import near_dup_pairs
+
+    base = "alpha beta gamma delta epsilon zeta eta theta"
+    rows = [(1, base + " iota kappa lambda"), (2, base + " iota kappa lambda mu")]
+    rows += [(i, base) for i in range(10, 16)]
+    hot = spark.createDataFrame(rows, "doc_id long, text string")
+    rows = [(1, base + " iota"), (1, base + " iota kappa"), (2, base + " iota kappa lambda")]
+    repeated = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {}
+    for tier in ("0", "25000"):  # the chain, then the default gate
+        monkeypatch.setenv("TOMIX_TFIDF_DRIVER_FOLD_DOCS", tier)
+        pairs = [tuple(r) for r in near_dup_pairs(hot, df_cap=5).collect()]
+        assert pairs == [(1, 2, 0.9)], tier
+        got[tier] = sorted(map(tuple, near_dup_pairs(repeated, df_cap=5).collect()))
+    assert (1, 1, 1.0) in got["0"]
+    assert got["25000"] == got["0"]
+
+
+def test_shingle_fold_pair_budget_keeps_the_chain(spark, monkeypatch):
+    """The fold expands at most ``FOLD_PAIR_BUDGET`` pairs; past it the
+    Spark chain answers, with the same rows. Eight docs share the six
+    base shingles and docs 1 and 2 three more: uncapped, the postings
+    hold 6 x 28 + 3 = 171 pairs; under ``df_cap=5`` the capped lists
+    hold 3 and the recount looks up doc 1's six hot shingles."""
+    from tomixpanel_spark.operators import dedup as dd
+
+    base = "alpha beta gamma delta epsilon zeta eta theta"
+    rows = [(1, base + " iota kappa lambda"), (2, base + " iota kappa lambda mu")]
+    rows += [(i, base) for i in range(10, 16)]
+    hot = spark.createDataFrame(rows, "doc_id long, text string")
+    copies = [(x, y, 1.0) for x in range(10, 16) for y in range(x + 1, 16)]
+    want = {None: [(1, 2, 0.9), *copies], 5: [(1, 2, 0.9)]}
+    calls = []
+    real = dd._jaccard_pairs_from_shingles
+
+    def chain(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(dd, "_jaccard_pairs_from_shingles", chain)
+    for df_cap, budget, chain_runs in (
+        (None, 170, True), (None, 171, False), (5, 5, True), (5, 6, False)
+    ):
+        monkeypatch.setattr(dd, "FOLD_PAIR_BUDGET", budget)
+        calls.clear()
+        got = sorted(map(tuple, dd.near_dup_pairs(hot, df_cap=df_cap).collect()))
+        assert bool(calls) is chain_runs, (df_cap, budget)
+        assert got == want[df_cap], (df_cap, budget)
 
 
 def test_carry_ntoks_rejects_df_cap(spark):
@@ -1465,17 +1561,22 @@ def test_dedup_pair_expansion_lives_in_one_kernel():
     """The dedup family expands every postings list (shingles, LSH bands,
     SimHash's exact-signature clusters) through one SQL kernel:
     ``_pairs_expr`` (each (x, y) with x before y) inside
-    ``_postings_pairs`` (group, sort, cap). No other code in dedup.py,
+    ``_postings_pairs`` (group, sort, cap), and its driver folds through
+    one numpy kernel, ``_block_pairs``. No other code in dedup.py,
     pipelines.py or multimodal.py flattens a nested transform, slices a
-    postings list or walks a ``sequence(i + 1, ...)`` index range.
+    postings list, walks a ``sequence(i + 1, ...)`` index range, calls
+    ``np.triu_indices`` or expands rows with ``np.repeat``.
     Whitespace is ignored, so a needle split over lines still counts."""
     import ast
     import re
     from pathlib import Path
 
     ops = Path(__file__).resolve().parents[1] / "tomixpanel_spark" / "operators"
-    kernels = {"_pairs_expr", "_postings_pairs"}
-    needles = ("flatten(transform(", "F.flatten(", "slice(ds", "sequence(i+1")
+    kernels = {"_pairs_expr", "_postings_pairs", "_block_pairs"}
+    needles = (
+        "flatten(transform(", "F.flatten(", "slice(ds", "sequence(i+1",
+        "np.triu_indices(", "np.repeat(",
+    )
     offenders = []
     for name in ("dedup.py", "pipelines.py", "multimodal.py"):
         src = (ops / name).read_text()

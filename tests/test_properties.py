@@ -302,6 +302,82 @@ class TestRewriteEquivalence:
         assert bad == 0
 
 
+# corpora for the shingle fold: a small vocabulary so documents overlap,
+# separators the tokenizer folds (space, tab, LF) and Unicode spaces it
+# keeps inside a token (NBSP, em space, ideographic space)
+_WORDS = st.sampled_from(["a", "b", "c", "the", "cat", "sat", "é", "日本", "x\u00a0y"])
+_SEPS = st.sampled_from([" ", " ", "  ", "\t", "\n", "\u00a0", "\u2003", "\u3000"])
+_TEXTS = st.one_of(
+    st.none(),
+    st.just(""),
+    st.lists(_WORDS, min_size=1, max_size=2).map(" ".join),
+    st.lists(st.tuples(_WORDS, _SEPS), min_size=3, max_size=14).map(
+        lambda ws: "".join(w + sep for w, sep in ws)
+    ),
+)
+
+
+@pytest.mark.slow
+class TestShingleFoldEqualsChain:
+    """The driver shingle fold must compute the Spark SQL chain's rows on
+    any corpus: null, empty and 1-2-token texts, exact duplicate texts,
+    Unicode whitespace, unsorted and negative ids, and every ``df_cap``
+    shape (2, 5, None). A repeated id sends the corpus to the chain on
+    both sides."""
+
+    @given(
+        st.lists(_TEXTS, max_size=18),
+        st.lists(st.integers(0, 17), max_size=6),
+        st.sampled_from([2, 5, None]),
+        st.sampled_from([0.3, 0.8]),
+        st.booleans(),
+        st.randoms(use_true_random=False),
+    )
+    @settings(max_examples=20, deadline=None)
+    def test_fold_equals_chain(self, spark, texts, dups, df_cap, threshold, repeat_id, rnd):
+        import os
+        import shutil
+        import tempfile
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from tomixpanel_spark.operators import dedup as dd
+        from tomixpanel_spark.operators.base import table
+
+        texts = texts + [texts[i] for i in dups if i < len(texts)]
+        ids = rnd.sample(range(-40, 200), len(texts))
+        if repeat_id and len(ids) > 1:
+            ids[-1] = ids[0]
+        sf = tempfile.mkdtemp(prefix="tomix_fold_prop_")
+        pq.write_table(
+            pa.table({"doc_id": pa.array(ids, pa.int64()), "text": pa.array(texts, pa.string())}),
+            os.path.join(sf, "documents.parquet"),
+        )
+        docs = table(spark, sf, "documents")
+
+        def rows():
+            out = {
+                "jaccard": dd.near_dup_pairs(docs, threshold=threshold, df_cap=df_cap),
+                "containment": dd.containment_pairs(spark, sf, df_cap=df_cap),
+            }
+            if df_cap is None:
+                out["carry"] = dd.near_dup_pairs(docs, threshold=threshold, carry_ntoks=True)
+            return {k: sorted(map(tuple, v.collect())) for k, v in out.items()}
+
+        old = os.environ.pop("TOMIX_TFIDF_DRIVER_FOLD_DOCS", None)
+        try:
+            fold = rows()
+            os.environ["TOMIX_TFIDF_DRIVER_FOLD_DOCS"] = "0"
+            chain = rows()
+        finally:
+            os.environ.pop("TOMIX_TFIDF_DRIVER_FOLD_DOCS", None)
+            if old is not None:
+                os.environ["TOMIX_TFIDF_DRIVER_FOLD_DOCS"] = old
+            shutil.rmtree(sf, ignore_errors=True)
+        assert fold == chain
+
+
 @pytest.mark.slow
 class TestJoinOperatorsVsBruteForce:
     """asof_join and range_join re-express semantics engines ship natively;
@@ -736,6 +812,64 @@ class TestPngCodec:
         )
         out = decode_png_gray(payload)
         assert (out == px.astype(np.uint8)).all()
+
+    @staticmethod
+    def _png(raw: bytes, w: int, h: int) -> bytes:
+        import struct
+        import zlib
+
+        from tomixpanel_spark.operators.multimodal import _png_chunk
+
+        return (
+            b"\x89PNG\r\n\x1a\n"
+            + _png_chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0))
+            + _png_chunk(b"IDAT", zlib.compress(raw))
+            + _png_chunk(b"IEND", b"")
+        )
+
+    def test_sub_rows_decode_as_one_running_sum(self):
+        """Sub on every row of a 1000x1000 image decodes bit-identically
+        to its filter-0 twin in under 0.1 s (best of three): the row is a
+        running sum, not a per-pixel loop, which took about 0.6 s."""
+        import time
+
+        import numpy as np
+
+        from tomixpanel_spark.operators.multimodal import (
+            decode_png_gray,
+            encode_png_gray,
+        )
+
+        h = w = 1000
+        px = np.random.default_rng(7).integers(0, 256, size=(h, w), dtype=np.int64)
+        sub = (px - np.pad(px, ((0, 0), (1, 0)))[:, :-1]) & 0xFF
+        raw = b"".join(b"\x01" + sub[r].astype(np.uint8).tobytes() for r in range(h))
+        payload = self._png(raw, w, h)
+        twin = decode_png_gray(encode_png_gray(px.astype(np.uint8)))
+        best = float("inf")
+        for _ in range(3):
+            t = time.perf_counter()
+            out = decode_png_gray(payload)
+            best = min(best, time.perf_counter() - t)
+        assert out.dtype == twin.dtype and (out == twin).all()
+        assert (twin == px).all()
+        assert best < 0.1, f"Sub decode took {best:.3f} s"
+
+    def test_paeth_over_the_scan_budget_raises(self):
+        """Average and Paeth unfilter pixel by pixel, so an image with
+        more such pixels than ``PNG_SCAN_BUDGET`` raises ValueError
+        before any row is unfiltered; one row less still decodes."""
+        from tomixpanel_spark.operators.multimodal import (
+            PNG_SCAN_BUDGET,
+            decode_png_gray,
+        )
+
+        w = 1000
+        h = PNG_SCAN_BUDGET // w + 1
+        with pytest.raises(ValueError, match="budget"):
+            decode_png_gray(self._png((b"\x04" + bytes(w)) * h, w, h))
+        out = decode_png_gray(self._png((b"\x03" + bytes(w)) * (h - 1), w, h - 1))
+        assert out.shape == (h - 1, w) and not out.any()
 
     def test_dhash_matches_oracle_bit_layout(self):
         """dhash_bits' bit order must equal the SQL's CASE-term layout:

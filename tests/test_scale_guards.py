@@ -100,7 +100,8 @@ CAP_CALLERS = ("near_dup_pairs", "containment_pairs", "lsh_pairs_from_signatures
 def _capped_pairs(spark, caller, cap):
     """{pair: score} of one cap caller at SF_SMALL (LSH pairs carry no
     score): the Jaccard and containment verbs cap shingle postings
-    (``df_cap``), LSH caps band postings (``band_cap``)."""
+    (``df_cap``), LSH caps band postings and SimHash distinct-signature
+    band buckets (``band_cap``)."""
     from tests.conftest import SF_SMALL
     from tomixpanel_spark.operators import dedup as dd
     from tomixpanel_spark.operators.base import table
@@ -109,6 +110,8 @@ def _capped_pairs(spark, caller, cap):
         rows = dd.near_dup_pairs(table(spark, SF_SMALL, "documents"), df_cap=cap)
     elif caller == "containment_pairs":
         rows = dd.containment_pairs(spark, SF_SMALL, df_cap=cap)
+    elif caller == "simhash_pairs":
+        rows = dd.simhash_pairs(spark, SF_SMALL, band_cap=cap)
     else:
         sig = dd.minhash_signature(spark, SF_SMALL)
         rows = dd.lsh_pairs_from_signatures(sig, band_cap=cap)
@@ -159,10 +162,11 @@ class TestCapBoundaries:
             else:
                 assert below.items() <= uncapped.items()
 
-    @pytest.mark.parametrize("caller", CAP_CALLERS)
+    @pytest.mark.parametrize("caller", (*CAP_CALLERS, "simhash_pairs"))
     def test_non_numeric_cap_raises_before_sql(self, spark, caller, monkeypatch):
         """The cap is formatted into SQL text through ``int()``: a cap
-        that is not a number raises before the kernel builds any text."""
+        that is not a number raises before the kernel builds any text
+        (for SimHash, before its eager cluster checkpoint job)."""
         from tomixpanel_spark.operators import dedup as dd
 
         def built(*args, **kwargs):
@@ -171,6 +175,17 @@ class TestCapBoundaries:
         monkeypatch.setattr(dd, "_pairs_expr", built)
         with pytest.raises(ValueError, match="invalid literal for int"):
             _capped_pairs(spark, caller, "1; DROP TABLE documents")
+
+
+class TestCapBoundariesDistributed(TestCapBoundaries):
+    """The same cap checks on the Spark SQL chain: the Jaccard and
+    containment verbs fold on the driver under
+    ``TOMIX_TFIDF_DRIVER_FOLD_DOCS``, so the inherited cases cover the
+    fold and these, with the gate at 0, the distributed tier."""
+
+    @pytest.fixture(autouse=True)
+    def _distributed(self, monkeypatch):
+        monkeypatch.setenv("TOMIX_TFIDF_DRIVER_FOLD_DOCS", "0")
 
 
 class TestBenchHeadline:

@@ -18,6 +18,12 @@ Scale design:
     exact-signature clusters) expands through ONE kernel:
     ``_postings_pairs`` groups and caps the lists, ``_pairs_expr`` emits
     each (x, y) pair with x before y. Verification stays separate.
+  * Small corpora fold on the driver under the text family's gate,
+    ``TOMIX_TFIDF_DRIVER_FOLD_DOCS``: the shingle verbs
+    (``near_dup_pairs``, ``containment_pairs`` and every query over
+    them) through ``_shingle_fold``, the banded-Hamming verbs through
+    ``_banded_pairs_fold``. Their numpy twin of ``_pairs_expr`` is
+    ``_block_pairs``; the rows come back as one ``LocalTableScan``.
   * SimHash gives a 32-bit per-doc signature; hamming-adjacent bucketing
     is a cheap pre-filter.
 
@@ -33,6 +39,7 @@ from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from tomixpanel_spark.functions.text import (
     SQL_WORDS,
@@ -168,9 +175,36 @@ def near_dup_pairs(
     projection where the tokens array already exists and carried through
     the postings structs. Keep-best consumers then rank winners from the
     pair set itself instead of re-scanning the corpus for token counts
-    (a full second pass at 100 TB; guide §8 — decide with small rows)."""
-    sa = shingle_arrays_for(df, id_col, text_col, with_ntoks=carry_ntoks)
-    return _jaccard_pairs_from_shingles(sa, threshold, df_cap, carry_ntoks)
+    (a full second pass at 100 TB; guide §8 — decide with small rows).
+
+    Size-adaptive under ``TOMIX_TFIDF_DRIVER_FOLD_DOCS``: one bounded
+    probe of (id, text) decides; under the cap the driver fold
+    ``_shingle_fold`` pairs the shingles in numpy and the rows come back
+    as one ``LocalTableScan``, above it the Spark SQL chain
+    (``_jaccard_pairs_from_shingles``) runs. Both tiers give the same
+    rows."""
+    if df_cap is not None:
+        df_cap = int(df_cap)
+        if carry_ntoks:
+            raise ValueError("carry_ntoks is incompatible with df_cap")
+    docs = _fold_docs(df, id_col, text_col)
+    fold = None if docs is None else _shingle_fold(docs, threshold, df_cap, verify=True)
+    if fold is None:
+        sa = shingle_arrays_for(df, id_col, text_col, with_ntoks=carry_ntoks)
+        return _jaccard_pairs_from_shingles(sa, threshold, df_cap, carry_ntoks)
+    import pandas as pd
+
+    ids, n, nt, a, b, common = fold
+    jaccard = common / (n[a] + n[b] - common)  # float64, as the SQL tail casts
+    keep = jaccard >= threshold
+    a, b = a[keep], b[keep]
+    cols = {"doc_a": ids[a], "doc_b": ids[b], "jaccard": jaccard[keep]}
+    id_type = df.schema[id_col].dataType
+    schema = StructType().add("doc_a", id_type).add("doc_b", id_type).add("jaccard", "double")
+    if carry_ntoks:
+        cols.update(nt_a=nt[a], nt_b=nt[b])
+        schema = schema.add("nt_a", "long").add("nt_b", "long")
+    return local_rows_df(df.sparkSession, pd.DataFrame(cols), schema)
 
 
 def _pairs_expr(ds: str, carry=(), ratio: float | None = None) -> str:
@@ -203,6 +237,35 @@ def _pairs_expr(ds: str, carry=(), ratio: float | None = None) -> str:
         f"inline(flatten(transform({ds}, (x, i) -> transform({rest}, "
         f"y -> named_struct({', '.join(fields)})))))"
     )
+
+
+def _block_pairs(starts, sizes, b_starts=None, b_sizes=None):
+    """THE numpy pair expansion of the dedup family's driver folds, the
+    twin of ``_pairs_expr``: blocks are runs [start, start + size) of
+    one sorted flat array. With one block list, every (i, j) with i < j
+    inside each block; with a second list ``b``, every (i, j) in block
+    k of the first times block k of ``b``. Returns int64 arrays (i, j,
+    k), block by block, i-major. Cost is the pair count, which is why
+    callers cap their blocks first."""
+    import numpy as np
+
+    starts = np.asarray(starts, dtype=np.int64)
+    sizes = np.asarray(sizes, dtype=np.int64)
+    if b_starts is None:
+        # member m of a block pairs with the block's tail after it: the
+        # members come out of the product of each block with itself as a
+        # one-row block, then each member is a one-row block against its tail
+        _, pos, blk = _block_pairs(starts, np.ones_like(sizes), starts, sizes)
+        tail = starts[blk] + sizes[blk] - pos - 1
+        i, j, m = _block_pairs(pos, np.ones_like(pos), pos + 1, tail)
+        return i, j, blk[m]
+    b_starts = np.asarray(b_starts, dtype=np.int64)
+    b_sizes = np.asarray(b_sizes, dtype=np.int64)
+    rep = sizes * b_sizes
+    k = np.repeat(np.arange(len(rep), dtype=np.int64), rep)
+    off = np.arange(len(k), dtype=np.int64) - (np.cumsum(rep) - rep)[k]
+    nb = b_sizes[k]
+    return starts[k] + off // nb, b_starts[k] + off % nb, k
 
 
 def _postings_pairs(
@@ -257,6 +320,105 @@ common AS (
 {tail}"""
 
 
+def _fold_docs(df: DataFrame, id_col: str = "doc_id", text_col: str = "text"):
+    """The shingle family's tier decision: ONE bounded
+    ``TFIDF_DRIVER_FOLD_DOCS`` probe of (doc_id, text), as
+    ``banded_hamming_pairs`` probes its signatures. The pandas frame when
+    the corpus is under the cap and its ids are non-null and unique, else
+    None (the Spark chain runs): the fold does not re-derive the chain's
+    handling of repeated ids (struct ties in the postings sort, the
+    verify join's fan-out). For such a corpus the gate's decision log
+    still reads "driver", the tier its size picked."""
+    pdf = TFIDF_DRIVER_FOLD_DOCS.collect_or_none(
+        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+    )
+    if pdf is None or pdf["doc_id"].isna().any() or not pdf["doc_id"].is_unique:
+        return None
+    return pdf
+
+
+# The fold holds every postings pair in numpy temporaries, about 75
+# bytes a pair at peak (96 MB traced for the 1.27M pairs of sf0.1's
+# 5,000 documents): past this many pairs, about 0.3 GB, the Spark chain
+# runs instead. The doc-count gate alone does not bound it: 5,000 copies
+# of one boilerplate text are 12.5M pairs per shared shingle.
+FOLD_PAIR_BUDGET = 1 << 22
+
+
+def _shingle_fold(docs, ratio: float | None = None, cap: int | None = None,
+                  verify: bool = False):
+    """The driver fold of the shingle-postings chain (``_shingle_pairs_sql``
+    in numpy), for corpora under ``TFIDF_DRIVER_FOLD_DOCS``: a pandas
+    (doc_id, text) frame -> ``(ids, n, nt, a, b, common)``. Docs are
+    positions in id order: ``ids`` per position, ``n`` its distinct
+    shingle count, ``nt`` its token count; (a, b, common) are the
+    ``common`` rows, a < b.
+
+    Shingles are ``driver_tokens`` 3-gram windows joined by
+    ``binary_join_element_wise``, kept only inside one document and
+    dictionary-encoded; the distinct (shingle, doc) keys sorted by
+    shingle are the postings lists, expanded by ``_block_pairs``.
+    ``ratio`` is the SQL chain's exact length-ratio prefilter (the same
+    float64 division). ``cap`` drops lists longer than the cap; with
+    ``verify`` the capped lists only propose pairs and ``common`` counts
+    the full shingle sets, the shared hot shingles added by a lookup
+    (``verify_pairs_exact``'s semantics, candidate generation and
+    verification kept apart), else it counts the capped lists
+    (containment's semantics). None when an expansion would pass
+    ``FOLD_PAIR_BUDGET``: the caller runs the chain."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    ids = docs["doc_id"].to_numpy()
+    order = np.argsort(ids, kind="stable")
+    ids = ids[order]
+    flat, doc = driver_tokens(docs["text"].iloc[order])
+    n_docs = len(ids)
+    nt = np.bincount(doc, minlength=n_docs)
+    w = np.flatnonzero(doc[:-2] == doc[2:])  # windows inside one document
+    if not len(w):
+        none = np.array([], dtype=np.int64)
+        return ids, np.zeros(n_docs, dtype=np.int64), nt, none, none, none
+    sh = pc.dictionary_encode(
+        pc.binary_join_element_wise(
+            pc.take(flat, w), pc.take(flat, w + 1), pc.take(flat, w + 2), " "
+        )
+    )
+    n_sh = len(sh.dictionary)
+    key = np.unique(sh.indices.to_numpy().astype(np.int64) * n_docs + doc[w])
+    code, member = np.divmod(key, n_docs)
+    n = np.bincount(member, minlength=n_docs)
+    block_start = np.r_[True, code[1:] != code[:-1]]
+    starts = np.flatnonzero(block_start)
+    sizes = np.diff(np.r_[starts, len(code)])
+    live = sizes > 1
+    if cap is not None:
+        live &= sizes <= cap
+    if int((sizes[live] * (sizes[live] - 1) // 2).sum()) > FOLD_PAIR_BUDGET:
+        return None
+    i, j, _ = _block_pairs(starts[live], sizes[live])
+    a, b = member[i], member[j]
+    if ratio is not None:
+        keep = np.minimum(n[a], n[b]) / np.maximum(n[a], n[b]) >= ratio
+        a, b = a[keep], b[keep]
+    pair, common = np.unique(a * n_docs + b, return_counts=True)
+    a, b = np.divmod(pair, n_docs)
+    if verify and cap is not None:
+        # the capped lists counted each pair's shared rare shingles; add
+        # its shared hot ones, each of a's hot shingles looked up among
+        # the doc-major hot keys of b (a one-row block per candidate)
+        hot = (sizes > cap)[np.cumsum(block_start) - 1]
+        hn = np.bincount(member[hot], minlength=n_docs)
+        if int(hn[a].sum()) > FOLD_PAIR_BUDGET:
+            return None
+        dm = np.sort(member[hot] * n_sh + code[hot])
+        i, _, k = _block_pairs((np.cumsum(hn) - hn)[a], hn[a], a, np.ones_like(a))
+        probe = b[k] * n_sh + dm[i] % n_sh
+        hit = dm[np.minimum(np.searchsorted(dm, probe), len(dm) - 1)] == probe
+        common = common + np.bincount(k, weights=hit, minlength=len(a)).astype(np.int64)
+    return ids, n, nt, a, b, common
+
+
 def _jaccard_pairs_from_shingles(
     sa: DataFrame,
     threshold: float,
@@ -276,8 +438,6 @@ def _jaccard_pairs_from_shingles(
     """
     spark = sa.sparkSession
     if df_cap is not None:
-        if carry_ntoks:
-            raise ValueError("carry_ntoks is incompatible with df_cap")
         sql = _shingle_pairs_sql(
             "SELECT DISTINCT doc_a, doc_b FROM pairs", threshold, cap=df_cap
         )
@@ -331,9 +491,35 @@ def containment_pairs(
     is lost — but note containment scores are NOT re-verified downstream,
     so with a cap the reported containment_e6 can UNDER-count on capped
     shingles; production callers wanting exact scores verify survivors
-    against full shingle arrays like ``verify_pairs_exact`` does."""
-    sa = _shingle_arrays(spark, sf_dir)
-    return spark.sql(_shingle_pairs_sql(_CONTAINMENT_TAIL, cap=df_cap), sa=sa)
+    against full shingle arrays like ``verify_pairs_exact`` does.
+
+    Size-adaptive like ``near_dup_pairs``: under
+    ``TOMIX_TFIDF_DRIVER_FOLD_DOCS`` the driver fold ``_shingle_fold``
+    counts ``common`` over the same (capped) postings in numpy, and the
+    integer tail runs on its rows; above it the Spark SQL chain runs."""
+    if df_cap is not None:
+        df_cap = int(df_cap)
+    docs = table(spark, sf_dir, "documents")
+    pdf = _fold_docs(docs)
+    fold = None if pdf is None else _shingle_fold(pdf, cap=df_cap)
+    if fold is None:
+        sa = _shingle_arrays(spark, sf_dir, docs)
+        return spark.sql(_shingle_pairs_sql(_CONTAINMENT_TAIL, cap=df_cap), sa=sa)
+    import numpy as np
+    import pandas as pd
+
+    ids, n, _, a, b, common = fold
+    inner, outer = np.r_[a, b], np.r_[b, a]
+    e6 = np.r_[common, common] * 1_000_000 // n[inner]
+    keep = e6 >= CONTAINMENT_E6
+    id_type = docs.schema["doc_id"].dataType
+    schema = (
+        StructType().add("inner_doc", id_type).add("outer_doc", id_type)
+        .add("containment_e6", "long")
+    )
+    pairs = {"inner_doc": ids[inner[keep]], "outer_doc": ids[outer[keep]],
+             "containment_e6": e6[keep]}
+    return local_rows_df(spark, pd.DataFrame(pairs), schema)
 
 
 _CONTAINMENT_SQL = f"""
@@ -625,12 +811,14 @@ def _banded_pairs_fold(
     """Driver-fold banded-Hamming pairing over a signature frame — the
     identical exact-collapse -> band-bucket -> verify -> cluster-expand
     semantics as ``banded_hamming_pairs``, fully vectorized: cluster
-    blocks come from one sort, bucket pair enumeration uses
-    triu_indices + the SWAR ``_popcount64``, and the cluster cross-product
-    expands with repeat/cumsum index arithmetic — no Python loop ever
-    touches an output-sized collection (the earlier tuple-building
-    expansion cost ~0.3 s for 83k pairs; this is ~10 ms). Returns a
-    pandas frame (doc_a, doc_b, hamming)."""
+    blocks come from one sort, the band buckets of every band from a
+    second (band index namespaces the bucket key), and every expansion
+    (intra-cluster pairs, intra-bucket candidates, the cluster
+    cross-product) is one ``_block_pairs`` call, verified with the SWAR
+    ``_popcount64`` — no Python loop ever touches an output-sized
+    collection (the earlier tuple-building expansion cost ~0.3 s for
+    83k pairs; this is ~10 ms). Returns a pandas frame (doc_a, doc_b,
+    hamming)."""
     import numpy as np
     import pandas as pd
 
@@ -645,62 +833,42 @@ def _banded_pairs_fold(
     sigs_all = sp[sig_col].to_numpy(np.int64)
     ids_all = sp[id_col].to_numpy(np.int64)
     starts = np.flatnonzero(np.r_[True, sigs_all[1:] != sigs_all[:-1]])
-    ends = np.r_[starts[1:], len(sigs_all)]
+    sizes = np.diff(np.r_[starts, len(sigs_all)])
     sig_arr = sigs_all[starts]  # unique signatures
-    sizes = ends - starts
 
-    out_a, out_b, out_h = [], [], []
     # hamming-0: every pair inside one identical-signature cluster
-    for s0, e0 in zip(starts[sizes > 1], ends[sizes > 1]):
-        blk = ids_all[s0:e0]
-        ii, jj = np.triu_indices(len(blk), 1)
-        out_a.append(blk[ii])
-        out_b.append(blk[jj])
-        out_h.append(np.zeros(len(ii), dtype=np.int64))
+    i, j, _ = _block_pairs(starts[sizes > 1], sizes[sizes > 1])
+    out_a, out_b = [ids_all[i]], [ids_all[j]]
+    out_h = [np.zeros(len(i), dtype=np.int64)]
 
-    # banded candidates over UNIQUE signatures (indexes into sig_arr)
+    # banded candidates over UNIQUE signatures: bucket key (band, value),
+    # member index = flat position mod the unique-signature count
+    band = np.arange(n_bands, dtype=np.int64)[:, None]
     mask = (1 << band_bits) - 1
-    pa, pb = [], []
-    for b in range(n_bands):
-        vals = (sig_arr >> (b * band_bits)) & mask
-        order = np.argsort(vals, kind="stable").astype(np.int64)
-        sv = vals[order]
-        bs = np.flatnonzero(np.r_[True, sv[1:] != sv[:-1]])
-        be = np.r_[bs[1:], len(sv)]
-        wide = (be - bs) > 1
-        for s0, e0 in zip(bs[wide], be[wide]):
-            blk = order[s0:e0]
-            ii, jj = np.triu_indices(len(blk), 1)
-            pa.append(np.minimum(blk[ii], blk[jj]))
-            pb.append(np.maximum(blk[ii], blk[jj]))
-    if pa:
-        qa = np.concatenate(pa)
-        qb = np.concatenate(pb)
-        # verify FIRST, dedup the qualifying survivors: the Hamming filter cuts
-        # candidates ~40x, so the duplicate-collision unique sorts the
-        # small survivor set instead of every banded candidate
-        ham = _popcount64(sig_arr[qa] ^ sig_arr[qb])
-        keep = ham <= ham_max
-        qa, qb, ham = qa[keep], qb[keep], ham[keep]
-        key = qa * np.int64(len(sig_arr)) + qb
-        _, first = np.unique(key, return_index=True)
-        qa, qb, ham = qa[first], qb[first], ham[first]
-        # vectorized cluster cross-product: pair p contributes
-        # sizes[qa[p]] * sizes[qb[p]] rows, addressed by row//nb, row%nb
-        na, nb = sizes[qa], sizes[qb]
-        rep = na * nb
-        tot = int(rep.sum())
-        if tot:
-            pidx = np.repeat(np.arange(len(qa)), rep)
-            base = np.concatenate(([0], np.cumsum(rep)[:-1]))
-            off = np.arange(tot, dtype=np.int64) - base[pidx]
-            ia = ids_all[starts[qa][pidx] + off // nb[pidx]]
-            ib = ids_all[starts[qb][pidx] + off % nb[pidx]]
-            out_a.append(np.minimum(ia, ib))
-            out_b.append(np.maximum(ia, ib))
-            out_h.append(ham[pidx])
-    if not out_a:
-        return empty
+    keys = (((sig_arr[None, :] >> (band * band_bits)) & mask) + (band << band_bits)).ravel()
+    order = np.argsort(keys, kind="stable").astype(np.int64)
+    sk = keys[order]
+    bs = np.flatnonzero(np.r_[True, sk[1:] != sk[:-1]])
+    bsz = np.diff(np.r_[bs, len(sk)])
+    i, j, _ = _block_pairs(bs[bsz > 1], bsz[bsz > 1])
+    u = np.int64(len(sig_arr))
+    qa, qb = order[i] % u, order[j] % u
+    qa, qb = np.minimum(qa, qb), np.maximum(qa, qb)
+    # verify FIRST, dedup the qualifying survivors: the Hamming filter cuts
+    # candidates ~40x, so the duplicate-collision unique sorts the
+    # small survivor set instead of every banded candidate
+    ham = _popcount64(sig_arr[qa] ^ sig_arr[qb])
+    keep = ham <= ham_max
+    qa, qb, ham = qa[keep], qb[keep], ham[keep]
+    _, first = np.unique(qa * u + qb, return_index=True)
+    qa, qb, ham = qa[first], qb[first], ham[first]
+    # cluster cross-product: signature pair p expands to every
+    # (member of qa[p], member of qb[p]) doc pair
+    ia, ib, p = _block_pairs(starts[qa], sizes[qa], starts[qb], sizes[qb])
+    ia, ib = ids_all[ia], ids_all[ib]
+    out_a.append(np.minimum(ia, ib))
+    out_b.append(np.maximum(ia, ib))
+    out_h.append(ham[p])
     return pd.DataFrame(
         {
             "doc_a": np.concatenate(out_a),
@@ -828,7 +996,9 @@ def simhash_pairs(spark: SparkSession, sf_dir: str, band_cap: int | None = None)
     cross-product expands doc pairs, so each output pair materializes
     exactly once; intra-cluster (hamming-0) pairs expand directly.
     ``band_cap`` bounds distinct-signature postings, the residual
-    hot-bucket guard."""
+    hot-bucket guard, read through ``int()`` before any job runs."""
+    if band_cap is not None:
+        band_cap = int(band_cap)
     docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
     if band_cap is None and _under_fold_cap(spark, sf_dir, docs):
         # full driver fold under the tfidf gate: signatures AND the
@@ -884,7 +1054,10 @@ def banded_hamming_pairs(
     ``_banded_pairs_fold`` — the signature producer (decode/hash
     pipeline) still runs distributed; only the output-bounded signature
     rows transfer. The bounded probe proves overflow without shipping
-    the full table."""
+    the full table. ``band_cap`` goes through ``int()`` first, so a
+    non-numeric cap raises before the cluster checkpoint job."""
+    if band_cap is not None:
+        band_cap = int(band_cap)
     if band_cap is None:
         probe = TFIDF_DRIVER_FOLD_DOCS.collect_or_none(
             sig.select(F.col(id_col).alias("doc_id"), F.col(sig_col).alias("simhash"))
@@ -1329,9 +1502,9 @@ def _substring_dup_window_positions(flat, doc, n_docs):
     wpos = keep_idx - offsets[wdoc]  # 0-based start within the doc
     order = np.argsort(wh, kind="stable")
     ws, ds = wh[order], wdoc[order]
-    starts = np.flatnonzero(np.r_[True, ws[1:] != ws[:-1]])
-    ends = np.r_[starts[1:], len(ws)]
-    grp = np.repeat(np.arange(len(starts)), ends - starts)
+    first = np.r_[True, ws[1:] != ws[:-1]]
+    starts = np.flatnonzero(first)
+    grp = np.cumsum(first) - 1  # window -> its hash group
     dmin = np.minimum.reduceat(ds, starts)
     dmax = np.maximum.reduceat(ds, starts)
     dup_rows = order[(dmin != dmax)[grp]]

@@ -429,7 +429,9 @@ def decode_png_gray(payload: bytes):
     IHDR dimensions are untrusted input: above ``TOMIX_IMG_MAX_PIXELS``
     the payload raises before anything is inflated, and the inflate is
     bounded by those dimensions, so a small zlib bomb cannot allocate
-    more than the image it declares."""
+    more than the image it declares. Rows filtered Average or Paeth
+    unfilter pixel by pixel, so more than ``PNG_SCAN_BUDGET`` such
+    pixels raise before any row is unfiltered."""
     import struct
     import zlib
 
@@ -437,6 +439,14 @@ def decode_png_gray(payload: bytes):
         return _decode_png_gray_impl(payload)
     except (IndexError, struct.error, zlib.error) as exc:
         raise ValueError(f"truncated or corrupt PNG: {exc!r}") from exc
+
+
+# Average and Paeth rows unfilter in a per-pixel Python loop (about
+# 0.3 us a pixel on a 4-vCPU x86 host): an image may hold at most this
+# many such pixels, about 0.3 s of work, 64x below the default
+# TOMIX_IMG_MAX_PIXELS inflate cap. None, Sub and Up rows are vectorized
+# and not counted.
+PNG_SCAN_BUDGET = 1 << 20
 
 
 def _img_max_pixels() -> int:
@@ -491,34 +501,52 @@ def _decode_png_gray_impl(payload: bytes):
         raise ValueError("PNG scanline data has wrong length")
     if not inflate.eof:
         raise ValueError("truncated or corrupt PNG: zlib stream is incomplete")
+    ftypes = np.frombuffer(raw, dtype=np.uint8)[::stride]
+    if (ftypes > 4).any():
+        raise ValueError(f"unknown PNG filter type {ftypes[ftypes > 4][0]}")
+    scanned = int(np.isin(ftypes, (3, 4)).sum()) * width
+    if scanned > PNG_SCAN_BUDGET:
+        raise ValueError(
+            f"PNG has {scanned} Average/Paeth pixels, over the "
+            f"per-pixel unfilter budget of {PNG_SCAN_BUDGET}"
+        )
     out = np.zeros((height, width), dtype=np.int32)
     for r in range(height):
-        ftype = raw[r * stride]
+        ftype = int(ftypes[r])
         line = np.frombuffer(raw, dtype=np.uint8, count=width, offset=r * stride + 1).astype(np.int32)
         prior = out[r - 1] if r else np.zeros(width, dtype=np.int32)
         if ftype == 0:  # None
             cur = line
+        elif ftype == 1:  # Sub: each pixel adds its left neighbour, a running sum
+            cur = np.cumsum(line, dtype=np.int64) & 0xFF
         elif ftype == 2:  # Up
             cur = (line + prior) & 0xFF
-        elif ftype in (1, 3, 4):  # Sub / Average / Paeth need a left scan
-            cur = np.zeros(width, dtype=np.int32)
-            left = 0
-            for c in range(width):
-                if ftype == 1:
-                    pred = left
-                elif ftype == 3:
-                    pred = (left + int(prior[c])) // 2
-                else:  # Paeth predictor
-                    a_, b_, c_ = left, int(prior[c]), int(prior[c - 1]) if c else 0
-                    p = a_ + b_ - c_
-                    pa, pb, pc = abs(p - a_), abs(p - b_), abs(p - c_)
-                    pred = a_ if (pa <= pb and pa <= pc) else (b_ if pb <= pc else c_)
-                cur[c] = (int(line[c]) + pred) & 0xFF
-                left = int(cur[c])
-        else:
-            raise ValueError(f"unknown PNG filter type {ftype}")
+        else:  # Average / Paeth predict from the pixel just decoded
+            cur = _unfilter_left_scan(ftype, line.tolist(), prior.tolist())
         out[r] = cur
     return out.astype(np.uint8)
+
+
+def _unfilter_left_scan(ftype: int, line: list, prior: list) -> list:
+    """One Average (3) or Paeth (4) row, pixel by pixel: the predictor
+    reads the pixel decoded just before, so the row has no vector form.
+    ``PNG_SCAN_BUDGET`` bounds the pixels that reach this loop."""
+    cur = []
+    left = 0
+    if ftype == 3:
+        for x, up in zip(line, prior):
+            left = (x + (left + up) // 2) & 0xFF
+            cur.append(left)
+        return cur
+    up_left = 0
+    for x, up in zip(line, prior):
+        p = left + up - up_left
+        pa, pb, pc = abs(p - left), abs(p - up), abs(p - up_left)
+        pred = left if (pa <= pb and pa <= pc) else (up if pb <= pc else up_left)
+        left = (x + pred) & 0xFF
+        up_left = up
+        cur.append(left)
+    return cur
 
 
 # -- perceptual hashing + media near-dup -------------------------------------
