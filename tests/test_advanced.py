@@ -1185,10 +1185,12 @@ class TestBm25Edges:
     def test_fold_empty_corpus(self, spark):
         """The driver fold returns an empty typed frame on an empty
         corpus instead of crashing on the degenerate aggregate."""
+        import pandas as pd
+
         from tomixpanel_spark.operators.textops import _bm25_driver_fold
 
-        empty = spark.createDataFrame([], "doc_id long, text string")
-        out = _bm25_driver_fold(empty, 0)
+        empty = pd.DataFrame({"doc_id": pd.Series([], dtype="int64"), "text": []})
+        out = _bm25_driver_fold(spark, empty)
         assert out.count() == 0
         assert out.columns == ["q_id", "doc_id", "rank", "score_e6"]
 

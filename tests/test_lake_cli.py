@@ -162,47 +162,6 @@ class TestCsvCorruptGate:
         assert bad.count() == 1  # V3: queryable quarantine, not a skipped file
 
 
-class TestBucketedJoins:
-    def test_bucketed_identity_join_eliminates_exchange(self, spark, tmp_path):
-        """The lake module's claim, proven on the plan: two tables bucketed
-        on the same key join WITHOUT a shuffle exchange on either side —
-        the co-located identity-join strategy at 100 TB."""
-        from pyspark.sql import functions as F
-
-        from tomixpanel_spark.plans.audit import formatted_plan
-        from tomixpanel_spark.sinks.lake import bucketed_identity_table
-
-        profiles = spark.range(2000).select(
-            F.concat(F.lit("u"), F.col("id").cast("string")).alias("distinct_id"),
-            F.create_map(F.lit("plan"), F.lit("pro")).alias("set"),
-        )
-        merges = spark.range(2000).select(
-            F.concat(F.lit("u"), F.col("id").cast("string")).alias("distinct_id"),
-            F.concat(F.lit("d"), (F.col("id") % 50).cast("string")).alias("device"),
-        )
-        # the in-memory catalog forgets tables between sessions but the
-        # warehouse directories persist — clear both
-        import shutil
-
-        for tbl in ("t_profiles", "t_merges"):
-            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-            shutil.rmtree(f"/tmp/tomix_test_warehouse/{tbl}", ignore_errors=True)
-        bucketed_identity_table(profiles, "t_profiles", "distinct_id", buckets=8)
-        bucketed_identity_table(merges, "t_merges", "distinct_id", buckets=8)
-        # force the non-broadcast path so bucketing is what's being proven
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = spark.table("t_profiles").join(spark.table("t_merges"), "distinct_id")
-            plan = formatted_plan(joined)
-            assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-            # bucketed storage provides the partitioning: no shuffle exchange
-            assert "Exchange hashpartitioning" not in plan
-            assert joined.count() == 2000
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
 class TestConfigDispatch:
     """Config-driven paths added in r7: the mixpanel people migration
     (connectors/mixpanelETL.js:115-182) and the reverse-ETL destination

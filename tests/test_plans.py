@@ -402,7 +402,9 @@ def test_capped_jaccard_rescored_over_full_sets(spark, monkeypatch):
     their exact Jaccard over the full sets, 9/10, not 3/16 over the
     capped lists. A repeated id sends the corpus to the chain, whose
     verify join fans out over both rows of the id (a row paired with
-    itself scores 1.0): the default gate gives those rows too."""
+    itself scores 1.0): the default gate gives those rows too, and its
+    decision log names the tier that ran, once."""
+    from tomixpanel_spark.operators.base import DECISIONS
     from tomixpanel_spark.operators.dedup import near_dup_pairs
 
     base = "alpha beta gamma delta epsilon zeta eta theta"
@@ -416,7 +418,10 @@ def test_capped_jaccard_rescored_over_full_sets(spark, monkeypatch):
         monkeypatch.setenv("TOMIX_TFIDF_DRIVER_FOLD_DOCS", tier)
         pairs = [tuple(r) for r in near_dup_pairs(hot, df_cap=5).collect()]
         assert pairs == [(1, 2, 0.9)], tier
+        DECISIONS.clear()
         got[tier] = sorted(map(tuple, near_dup_pairs(repeated, df_cap=5).collect()))
+        tiers = [d.tier for d in DECISIONS if d.gate == "TOMIX_TFIDF_DRIVER_FOLD_DOCS"]
+        assert tiers == ["distributed"], tier
     assert (1, 1, 1.0) in got["0"]
     assert got["25000"] == got["0"]
 
@@ -1590,6 +1595,74 @@ def test_dedup_pair_expansion_lives_in_one_kernel():
             f"{name}: {n} x{rest.count(n)}" for n in needles if n in rest
         ]
     assert not offenders, f"pair expansion outside its kernel: {offenders}"
+
+
+def _text_fold_door_offenders(pkg):
+    """Every way around ``TFIDF_DRIVER_FOLD_DOCS``'s one door under
+    ``pkg`` (the tomixpanel_spark/ directory); see the test below."""
+    import ast
+    import re
+
+    gone = ("_under_fold_cap", "docs_pdf", "tokenize_tf_pdf(")
+    n_count = {"tfidf_keywords", "bm25_topk"}  # N above the cap
+    collectors = {"textops.py", "dedup.py", "bpe.py", "packing.py", "streaming_parity.py"}
+    docs_names = {"docs", "probe"}
+    docs_strings = {"documents", "text", "doc_id"}
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        src = path.read_text()
+        flat = re.sub(r"\s+", "", src)
+        offenders += [f"{rel}: {n}" for n in gone if n in flat]
+        tree = ast.parse(src)
+        n_nodes = {  # tfidf/bm25's memoized N count
+            id(node)
+            for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef) and fn.name in n_count
+            for node in ast.walk(fn)
+            if isinstance(node, ast.Attribute) and node.attr == "count"
+        }
+        offenders += [
+            f"{rel}:{node.lineno} TFIDF_DRIVER_FOLD_DOCS.{node.attr}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Attribute)
+            and getattr(node.value, "id", None) == "TFIDF_DRIVER_FOLD_DOCS"
+            and node.attr != "collect_or_none"
+            and id(node) not in n_nodes
+        ]
+        if path.name not in collectors:
+            continue
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("toPandas", "collect")
+                and not node.args
+            ):
+                continue
+            recv = list(ast.walk(node.func.value))
+            if any(getattr(n, "id", None) in docs_names for n in recv) or any(
+                isinstance(n, ast.Constant) and n.value in docs_strings for n in recv
+            ):
+                offenders.append(f"{rel}:{node.lineno} .{node.func.attr}() of documents")
+    return sorted(set(offenders))
+
+
+def test_text_fold_collects_through_one_door():
+    """Every ``TFIDF_DRIVER_FOLD_DOCS`` decision decides AND collects
+    through ``Gate.collect_or_none`` (``textops.fold_corpus`` keys it for
+    the documents table): nothing under tomixpanel_spark/ names the old
+    count-then-collect helpers (``_under_fold_cap``, ``docs_pdf``,
+    ``tokenize_tf_pdf``), calls the gate any other way (only tfidf and
+    bm25 keep a memoized ``count`` for N above the cap), or, in the text
+    fold modules, collects a documents frame (``.toPandas()`` or
+    ``.collect()`` over ``docs``/``probe`` or a documents column) outside
+    the door."""
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "tomixpanel_spark"
+    offenders = _text_fold_door_offenders(pkg)
+    assert not offenders, f"text driver fold outside its door: {offenders}"
 
 
 def test_package_has_no_bare_assert():

@@ -12,7 +12,7 @@ import json
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from tomixpanel_spark.sinks.batching import batch_payload, iter_batches, serialize_record
+from tomixpanel_spark.sinks.batching import batch_payload, pack_batches, serialize_record
 
 records = st.lists(
     st.dictionaries(
@@ -28,7 +28,7 @@ class TestBatchingProperties:
     @given(records, st.integers(1, 50), st.integers(64, 4096))
     @settings(max_examples=150, deadline=None)
     def test_caps_hold_and_nothing_lost_or_reordered(self, recs, max_records, max_bytes):
-        batches = list(iter_batches(iter(recs), max_records, max_bytes))
+        batches = list(pack_batches(map(serialize_record, recs), max_records, max_bytes))
         # completeness + order: concatenation reproduces the input stream
         flat = [b for batch in batches for b in batch]
         assert flat == [serialize_record(r) for r in recs]
@@ -61,7 +61,7 @@ class TestGreedyPackingOptimality:
         be merged without breaking a cap (else the sink wastes requests)."""
         recs = [{"p": "x" * n} for n in sizes]
         max_bytes = 600
-        batches = list(iter_batches(iter(recs), 1000, max_bytes))
+        batches = list(pack_batches(map(serialize_record, recs), 1000, max_bytes))
         for a, b in zip(batches, batches[1:]):
             merged = b"[" + b",".join(a + b) + b"]"
             assert len(merged) > max_bytes

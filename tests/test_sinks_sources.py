@@ -103,27 +103,28 @@ class StubServer:
 
 class TestBatching:
     def test_count_cap(self):
-        from tomixpanel_spark.sinks.batching import iter_batches
+        from tomixpanel_spark.sinks.batching import pack_batches, serialize_record
 
-        batches = list(iter_batches(({"i": i} for i in range(5000)), 2000, 10**9))
+        recs = ({"i": i} for i in range(5000))
+        batches = list(pack_batches(map(serialize_record, recs), 2000, 10**9))
         assert [len(b) for b in batches] == [2000, 2000, 1000]
 
     def test_byte_cap_greedy(self):
-        from tomixpanel_spark.sinks.batching import iter_batches, serialize_record
+        from tomixpanel_spark.sinks.batching import pack_batches, serialize_record
 
         recs = [{"i": i, "pad": "x" * 100} for i in range(100)]
         max_bytes = 1200
-        batches = list(iter_batches(iter(recs), 10**9, max_bytes))
+        batches = list(pack_batches(map(serialize_record, recs), 10**9, max_bytes))
         assert len(batches) > 1
         for b in batches:
             assert len(b"[" + b",".join(b) + b"]") <= max_bytes
         assert sum(len(b) for b in batches) == 100
 
     def test_oversize_record_ships_alone(self):
-        from tomixpanel_spark.sinks.batching import iter_batches
+        from tomixpanel_spark.sinks.batching import pack_batches, serialize_record
 
         recs = [{"i": 0}, {"big": "x" * 5000}, {"i": 2}]
-        batches = list(iter_batches(iter(recs), 2000, 1000))
+        batches = list(pack_batches(map(serialize_record, recs), 2000, 1000))
         assert [len(b) for b in batches] == [1, 1, 1]
 
 

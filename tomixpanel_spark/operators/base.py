@@ -119,8 +119,10 @@ CACHE_PARTS_MIN_BYTES = 400_000
 
 
 def clear_table_cache() -> None:
-    """Unpersist and drop every cached table/derived view."""
+    """Unpersist and drop every cached table/derived view, and drop the
+    driver frames collected from them."""
     _TABLE_CACHE.clear()
+    _FRAMES.clear()
 
 
 def clear_derived_cache() -> None:
@@ -348,8 +350,14 @@ DECISIONS: "deque[Decision]" = deque(maxlen=256)
 # The one memo for every gate's count job (corpus, vocabulary, bigram
 # model, eval set), keyed by (application, gate env, caller key): a
 # counted input is fixed for its sf_dir or plan, so a repeated call runs
-# no job.
+# no job. Keyed ``Gate.probe`` lengths share it under a "probe" tag.
 _COUNTS = Lru(256)
+
+# The driver-side buffer pool: pandas frames of table reads collected
+# by a keyed ``Gate.probe`` under ``TOMIX_CACHE_TABLES``, the same flag
+# as the table cache, since they hold raw input rows, never a query's
+# work product.
+_FRAMES = Lru(8)
 
 
 @dataclass
@@ -410,20 +418,42 @@ class Gate:
         out = tuple(F.broadcast(s) if under else s.hint("shuffle_hash") for s in sides)
         return out if len(out) > 1 else out[0]
 
-    def probe(self, df: DataFrame):
+    def probe(self, df: DataFrame, key: Optional[tuple] = None, admit=None):
         """``(frame, decision)``: ONE bounded job decides the tier and,
         under the cap, IS the collect — ``limit(cap+1)`` returns at most
         one row over the cap, so a short result proves all of ``df`` is
-        on the driver. ``frame`` is None on the distributed tier."""
+        on the driver. ``frame`` is None on the distributed tier.
+
+        ``key`` names what ``df`` holds, as in ``count`` (e.g.
+        ``(sf_dir, "docs")``), and memoizes: the probed length goes
+        into ``_COUNTS``, so a repeat call above the cap runs no job,
+        and under ``TOMIX_CACHE_TABLES`` an admitted frame goes into
+        ``_FRAMES``, so a repeat call under it runs none either. Key
+        only frames over table reads, never a derived frame; without a
+        key every call probes. ``admit(frame)`` False sends an
+        under-cap frame to the distributed tier too (an input its driver
+        fold does not take). Callers must not mutate the frame."""
         cap = self.cap()
-        pdf = df.limit(cap + 1).toPandas() if cap > 0 else None
-        ok = pdf is not None and len(pdf) <= cap
-        d = self.record(cap, None if pdf is None else len(pdf), ok)
+        app = df.sparkSession.sparkContext.applicationId
+        memo = None if key is None else (app, self.env, "probe", *key)
+        pool = memo is not None and bool(os.environ.get("TOMIX_CACHE_TABLES"))
+        pdf = n = None
+        if cap > 0:
+            pdf = _FRAMES.get(memo) if pool else None
+            n = len(pdf) if pdf is not None else _COUNTS.get(memo)
+            if pdf is None and (n is None or n <= cap):
+                pdf = df.limit(cap + 1).toPandas()
+                n = _COUNTS.put(memo, len(pdf)) if memo else len(pdf)
+        ok = pdf is not None and n <= cap and (admit is None or bool(admit(pdf)))
+        if ok and pool:
+            _FRAMES.put(memo, pdf)
+        d = self.record(cap, n, ok)
         return (pdf if ok else None), d
 
-    def collect_or_none(self, df: DataFrame):
-        """``df`` as a pandas frame when it has at most cap rows, else None."""
-        return self.probe(df)[0]
+    def collect_or_none(self, df: DataFrame, key: Optional[tuple] = None, admit=None):
+        """``df`` as a pandas frame when it has at most cap rows (and
+        ``admit`` takes it), else None: ``probe`` without the decision."""
+        return self.probe(df, key, admit)[0]
 
 
 @dataclass(frozen=True)

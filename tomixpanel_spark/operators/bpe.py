@@ -14,8 +14,8 @@ tokenizer-apply verb that feeds chunking/sharding).
 
 Scale shape — THREE adaptive tiers, gated by measured size:
 
-1. corpus under ``TOMIX_TFIDF_DRIVER_FOLD_DOCS``: collect the docs, the
-   whole loop on the driver (``_fold_train``);
+1. corpus under ``TOMIX_TFIDF_DRIVER_FOLD_DOCS``: the gate's door
+   collects the docs, the whole loop runs on the driver (``_fold_train``);
 2. corpus above, but the DISTINCT-WORD table after the one distributed
    word-count aggregate under ``TOMIX_BPE_LOCAL_WORDS``: collect
    (word, freq) — vocab-sized, corpus-sublinear by Heaps' law — and run
@@ -70,15 +70,11 @@ from tomixpanel_spark.functions.text import SQL_WORDS, driver_tokens
 from tomixpanel_spark.operators.base import (
     Gate,
     QuerySpec,
+    ensure_parallel,
     local_rows_df,
     stage_checkpoint,
-    table,
 )
-from tomixpanel_spark.operators.textops import (
-    TFIDF_BCAST_VOCAB,
-    _under_fold_cap,
-    docs_pdf,
-)
+from tomixpanel_spark.operators.textops import TFIDF_BCAST_VOCAB, fold_corpus
 
 N_MERGES = 6
 
@@ -344,13 +340,11 @@ def _train_distributed(
 
 
 def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tomixpanel_spark.operators.base import ensure_parallel
-
-    docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
-    if _under_fold_cap(spark, sf_dir, docs):
-        flat, _doc = driver_tokens(docs_pdf(docs)["text"])
-        rows, _vocab, _k = _fold_train(flat, N_MERGES)
+    docs, pdf = fold_corpus(spark, sf_dir)
+    if pdf is not None:
+        rows, _vocab, _k = _fold_train(driver_tokens(pdf["text"])[0], N_MERGES)
         return local_rows_df(spark, rows, schema=_OUT_SCHEMA)
+    docs = ensure_parallel(docs, "doc_id")
     rows, _final = _train_distributed(spark, docs, N_MERGES, need_final=False)
     return local_rows_df(spark, rows, schema=_OUT_SCHEMA)
 
@@ -386,14 +380,12 @@ def bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc aggregate. Docs with no tokens emit (0, 0) — accounting must
     cover every document."""
     from tomixpanel_spark.functions.text import tokens
-    from tomixpanel_spark.operators.base import ensure_parallel
 
-    docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
+    docs, pdf = fold_corpus(spark, sf_dir)
     schema = "doc_id long, n_words long, n_bpe_tokens long"
-    if _under_fold_cap(spark, sf_dir, docs):
+    if pdf is not None:
         import numpy as np
 
-        pdf = docs_pdf(docs)
         flat, doc = driver_tokens(pdf["text"])
         _rows, _vocab, k = _fold_train(flat, N_MERGES)
         n = len(pdf)
@@ -402,6 +394,7 @@ def bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_bpe_tokens=np.bincount(doc, weights=k, minlength=n).astype(np.int64),
         )
         return local_rows_df(spark, out, schema=schema)
+    docs = ensure_parallel(docs, "doc_id")
     wl = _distributed_vocab(spark, sf_dir, docs).select(
         "word", F.size("syms").cast("bigint").alias("k")
     )
@@ -453,17 +446,16 @@ def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import posexplode
 
     from tomixpanel_spark.functions.text import tokens
-    from tomixpanel_spark.operators.base import ensure_parallel
 
-    docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
-    if _under_fold_cap(spark, sf_dir, docs):
+    docs, pdf = fold_corpus(spark, sf_dir)
+    docs = ensure_parallel(docs, "doc_id")
+    if pdf is not None:
         # fold tier trains on the driver but EMITS distributed: the
         # output is corpus-sized (one row per piece — ~1M rows at
         # sf0.1), and createDataFrame over a driver-built piece list
         # measured 3+ s of row serialization alone. Only the VOCAB
         # (Heaps-sublinear) crosses the driver boundary.
-        flat, _doc = driver_tokens(docs_pdf(docs)["text"])
-        _rows, vocab, _k = _fold_train(flat, N_MERGES)
+        _rows, vocab, _k = _fold_train(driver_tokens(pdf["text"])[0], N_MERGES)
         wl = F.broadcast(
             local_rows_df(
                 spark,
@@ -535,17 +527,15 @@ def chunk_by_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import posexplode
 
     from tomixpanel_spark.functions.text import tokens
-    from tomixpanel_spark.operators.base import ensure_parallel
 
     out_schema = (
         "doc_id long, chunk_idx long, chunk_text string, "
         "chunk_words long, chunk_bpe long"
     )
-    docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
-    if _under_fold_cap(spark, sf_dir, docs):
+    docs, pdf = fold_corpus(spark, sf_dir)
+    if pdf is not None:
         import numpy as np
 
-        pdf = docs_pdf(docs)
         flat, doc = driver_tokens(pdf["text"])
         _rows, _vocab, k = _fold_train(flat, N_MERGES)
         words, ks = flat.to_pylist(), k.tolist()
@@ -558,6 +548,7 @@ def chunk_by_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
                 out.append((doc_id, ci, text, nw, nb))
             start = end
         return local_rows_df(spark, out, schema=out_schema)
+    docs = ensure_parallel(docs, "doc_id")
     wl = _distributed_vocab(spark, sf_dir, docs).select(
         "word", F.size("syms").cast("bigint").alias("k")
     )

@@ -24,6 +24,8 @@ Scale design:
     them) through ``_shingle_fold``, the banded-Hamming verbs through
     ``_banded_pairs_fold``. Their numpy twin of ``_pairs_expr`` is
     ``_block_pairs``; the rows come back as one ``LocalTableScan``.
+    Every fold takes the pandas frame the gate's door
+    (``Gate.collect_or_none``) returned and collects nothing itself.
   * SimHash gives a 32-bit per-doc signature; hamming-adjacent bucketing
     is a cheap pre-filter.
 
@@ -58,7 +60,8 @@ from tomixpanel_spark.operators.base import (
 )
 from tomixpanel_spark.operators.textops import (
     TFIDF_DRIVER_FOLD_DOCS,
-    _under_fold_cap,
+    driver_tf,
+    fold_corpus,
 )
 
 N_MINHASH = 8
@@ -178,16 +181,20 @@ def near_dup_pairs(
     (a full second pass at 100 TB; guide §8 — decide with small rows).
 
     Size-adaptive under ``TOMIX_TFIDF_DRIVER_FOLD_DOCS``: one bounded
-    probe of (id, text) decides; under the cap the driver fold
+    probe of (id, text) through the gate's door decides (unkeyed: ``df``
+    is any frame); under the cap, with unique ids, the driver fold
     ``_shingle_fold`` pairs the shingles in numpy and the rows come back
-    as one ``LocalTableScan``, above it the Spark SQL chain
+    as one ``LocalTableScan``, else the Spark SQL chain
     (``_jaccard_pairs_from_shingles``) runs. Both tiers give the same
     rows."""
     if df_cap is not None:
         df_cap = int(df_cap)
         if carry_ntoks:
             raise ValueError("carry_ntoks is incompatible with df_cap")
-    docs = _fold_docs(df, id_col, text_col)
+    docs = TFIDF_DRIVER_FOLD_DOCS.collect_or_none(
+        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")),
+        admit=_unique_ids,
+    )
     fold = None if docs is None else _shingle_fold(docs, threshold, df_cap, verify=True)
     if fold is None:
         sa = shingle_arrays_for(df, id_col, text_col, with_ntoks=carry_ntoks)
@@ -320,21 +327,13 @@ common AS (
 {tail}"""
 
 
-def _fold_docs(df: DataFrame, id_col: str = "doc_id", text_col: str = "text"):
-    """The shingle family's tier decision: ONE bounded
-    ``TFIDF_DRIVER_FOLD_DOCS`` probe of (doc_id, text), as
-    ``banded_hamming_pairs`` probes its signatures. The pandas frame when
-    the corpus is under the cap and its ids are non-null and unique, else
-    None (the Spark chain runs): the fold does not re-derive the chain's
-    handling of repeated ids (struct ties in the postings sort, the
-    verify join's fan-out). For such a corpus the gate's decision log
-    still reads "driver", the tier its size picked."""
-    pdf = TFIDF_DRIVER_FOLD_DOCS.collect_or_none(
-        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-    )
-    if pdf is None or pdf["doc_id"].isna().any() or not pdf["doc_id"].is_unique:
-        return None
-    return pdf
+def _unique_ids(pdf) -> bool:
+    """The shingle fold's admission at the gate's door: non-null, unique
+    doc ids. The fold does not re-derive the chain's handling of
+    repeated ids (struct ties in the postings sort, the verify join's
+    fan-out), so such a corpus takes the chain and the decision log
+    reads "distributed"."""
+    return not pdf["doc_id"].isna().any() and pdf["doc_id"].is_unique
 
 
 # The fold holds every postings pair in numpy temporaries, about 75
@@ -499,8 +498,7 @@ def containment_pairs(
     integer tail runs on its rows; above it the Spark SQL chain runs."""
     if df_cap is not None:
         df_cap = int(df_cap)
-    docs = table(spark, sf_dir, "documents")
-    pdf = _fold_docs(docs)
+    docs, pdf = fold_corpus(spark, sf_dir, admit=_unique_ids)
     fold = None if pdf is None else _shingle_fold(pdf, cap=df_cap)
     if fold is None:
         sa = _shingle_arrays(spark, sf_dir, docs)
@@ -753,9 +751,10 @@ _SIMHASH_LANE_BITS = 15  # lane counter width -> docs up to 2^15-1 tokens
 _SIMHASH_LANES = 4  # lanes per packed long (4*15=60 bits used)
 
 
-def _simhash_fold_sigs(docs: DataFrame) -> "pd.DataFrame":
-    """Driver-fold signature computation: the fused Arrow tf pass, then
-    vectorized numpy votes — exactly the lane aggregate's math
+def _simhash_fold_sigs(pdf) -> "pd.DataFrame":
+    """Driver-fold signature computation over the driver (doc_id, text)
+    frame: the in-process tf table (``driver_tf``), then vectorized
+    numpy votes — exactly the lane aggregate's math
     (bit_j set iff 2*ones_j > n, ones tf-weighted; the occurrence-stream
     oracle is equivalent because tf occurrences of one token vote
     identically). One np.add.at scatter replaces the doc_id exchange."""
@@ -764,9 +763,7 @@ def _simhash_fold_sigs(docs: DataFrame) -> "pd.DataFrame":
     import numpy as np
     import pandas as pd
 
-    from tomixpanel_spark.operators.textops import tokenize_tf_pdf
-
-    tf_pdf = tokenize_tf_pdf(docs)
+    tf_pdf = driver_tf(pdf)
     if not len(tf_pdf):
         return pd.DataFrame({"doc_id": [], "simhash": []})
     uniq = tf_pdf["token"].unique()
@@ -900,14 +897,14 @@ def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from tomixpanel_spark.operators.textops import tokenize_tf
 
-    docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
-    if _under_fold_cap(spark, sf_dir, docs):
-        # size-adaptive driver fold (the tfidf/bm25 gate): one Arrow
-        # pass + numpy votes, zero exchanges
+    docs, pdf = fold_corpus(spark, sf_dir)
+    if pdf is not None:
+        # size-adaptive driver fold (the tfidf/bm25 gate): the door's
+        # one bounded collect + numpy votes, zero exchanges
         return local_rows_df(
-            spark, _simhash_fold_sigs(docs), schema="doc_id long, simhash long"
+            spark, _simhash_fold_sigs(pdf), schema="doc_id long, simhash long"
         )
-    toks = tokenize_tf(docs)
+    toks = tokenize_tf(ensure_parallel(docs, "doc_id"))
     h = F.conv(F.substring(F.md5("token"), 1, 8), 16, 10).cast("long")
     toks = toks.withColumn("h", h)
 
@@ -999,8 +996,8 @@ def simhash_pairs(spark: SparkSession, sf_dir: str, band_cap: int | None = None)
     hot-bucket guard, read through ``int()`` before any job runs."""
     if band_cap is not None:
         band_cap = int(band_cap)
-    docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
-    if band_cap is None and _under_fold_cap(spark, sf_dir, docs):
+    pdf = fold_corpus(spark, sf_dir)[1] if band_cap is None else None
+    if pdf is not None:
         # full driver fold under the tfidf gate: signatures AND the
         # banded pairing run in numpy, pairs ship back as ONE Arrow
         # local relation. (An earlier fold lost to the JVM join because
@@ -1009,11 +1006,11 @@ def simhash_pairs(spark: SparkSession, sf_dir: str, band_cap: int | None = None)
         # sf0.1.) band_cap callers stay distributed — the cap is a
         # hot-bucket guard for the scale path and the fold does not
         # replicate its band-dropping semantics.
-        pdf = _banded_pairs_fold(
-            _simhash_fold_sigs(docs), SIMHASH_BANDS, 8, SIMHASH_HAM_MAX
+        pairs = _banded_pairs_fold(
+            _simhash_fold_sigs(pdf), SIMHASH_BANDS, 8, SIMHASH_HAM_MAX
         )
         return local_rows_df(
-            spark, pdf, schema="doc_a long, doc_b long, hamming long"
+            spark, pairs, schema="doc_a long, doc_b long, hamming long"
         )
     sig = simhash(spark, sf_dir)
     return banded_hamming_pairs(
@@ -1511,9 +1508,9 @@ def _substring_dup_window_positions(flat, doc, n_docs):
     return lens, wdoc[dup_rows], wpos[dup_rows]
 
 
-def _substring_fold(docs: DataFrame) -> "pd.DataFrame":
-    """Driver-fold exact-substring stats: one Arrow transfer of the raw
-    documents, then the whole window pipeline vectorized over the
+def _substring_fold(pdf) -> "pd.DataFrame":
+    """Driver-fold exact-substring stats over the driver (doc_id, text)
+    frame: the whole window pipeline vectorized over the
     CONCATENATED corpus token stream — dictionary-encoded token codes map to
     random 64-bit values, window keys are the same rotate-XOR combination
     the distributed plan computes, and windows crossing a document
@@ -1523,9 +1520,6 @@ def _substring_fold(docs: DataFrame) -> "pd.DataFrame":
     import numpy as np
     import pandas as pd
 
-    from tomixpanel_spark.operators.textops import docs_pdf
-
-    pdf = docs_pdf(docs)
     if not len(pdf):
         return pd.DataFrame(
             {
@@ -1576,16 +1570,17 @@ def substring_dup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     back in the same keyed space. Production suffix-array dedup replaces
     the window explode with an index build — the decision signal is the
     same."""
-    docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
-    if _under_fold_cap(spark, sf_dir, docs):
+    docs, pdf = fold_corpus(spark, sf_dir)
+    if pdf is not None:
         # size-adaptive driver fold (the tfidf/bm25/simhash gate): the
         # distributed plan below is ~5 stages of scheduler floor at small
         # window counts; paths-agree test pins identity
         return local_rows_df(
             spark,
-            _substring_fold(docs),
+            _substring_fold(pdf),
             schema="doc_id long, n_windows long, n_dup_windows long, dup_frac_e6 long",
         )
+    docs = ensure_parallel(docs, "doc_id")
     toks = docs.select("doc_id", tokens("text").alias("w")).select(
         "doc_id",
         F.size("w").alias("n"),
@@ -1658,7 +1653,7 @@ FROM totals t LEFT JOIN per_doc p ON t.doc_id = p.doc_id
 """
 
 
-def _substring_spans_fold(docs: DataFrame) -> "pd.DataFrame":
+def _substring_spans_fold(pdf) -> "pd.DataFrame":
     """Driver-fold span merge: duplicated window starts from the shared
     core, islands via the vectorized gaps-and-islands (sort by
     (doc, pos); new island when the start gap exceeds SUBSTR_WIN),
@@ -1666,9 +1661,6 @@ def _substring_spans_fold(docs: DataFrame) -> "pd.DataFrame":
     import numpy as np
     import pandas as pd
 
-    from tomixpanel_spark.operators.textops import docs_pdf
-
-    pdf = docs_pdf(docs)
     empty = pd.DataFrame(
         {
             c: np.array([], dtype=np.int64)
@@ -1715,13 +1707,14 @@ def substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, position), state bounded per doc. Size-adaptive: driver
     fold under the tfidf gate (vectorized lexsort + reduceat), same
     shape distributed."""
-    docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
-    if _under_fold_cap(spark, sf_dir, docs):
+    docs, pdf = fold_corpus(spark, sf_dir)
+    if pdf is not None:
         return local_rows_df(
             spark,
-            _substring_spans_fold(docs),
+            _substring_spans_fold(pdf),
             schema="doc_id long, span_start long, span_end long, span_tokens long",
         )
+    docs = ensure_parallel(docs, "doc_id")
     from pyspark.sql import Window
 
     toks = docs.select("doc_id", tokens("text").alias("w")).select(
@@ -1794,7 +1787,7 @@ GROUP BY doc_id, island
 """
 
 
-def _substring_clean_fold(docs: DataFrame) -> "pd.DataFrame":
+def _substring_clean_fold(pdf) -> "pd.DataFrame":
     """Driver-fold cleaned-corpus reconstruction over ONE tokenization:
     duplicated windows from the shared core mark their tokens in a
     coverage count over the flat stream (+1 at each window start, -1
@@ -1807,9 +1800,6 @@ def _substring_clean_fold(docs: DataFrame) -> "pd.DataFrame":
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from tomixpanel_spark.operators.textops import docs_pdf
-
-    pdf = docs_pdf(docs)
     if not len(pdf):
         return pd.DataFrame(
             {"doc_id": [], "kept_tokens": [], "removed_tokens": [], "cleaned_fp": []}
@@ -1857,13 +1847,14 @@ def substring_dedup_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc span masking runs as one higher-order filter over the token
     array — no token-level explode or shuffle on the cleaning side.
     Size-adaptive via the family's driver-fold gate."""
-    docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
-    if _under_fold_cap(spark, sf_dir, docs):
+    docs, pdf = fold_corpus(spark, sf_dir)
+    if pdf is not None:
         return local_rows_df(
             spark,
-            _substring_clean_fold(docs),
+            _substring_clean_fold(pdf),
             schema="doc_id long, kept_tokens long, removed_tokens long, cleaned_fp string",
         )
+    docs = ensure_parallel(docs, "doc_id")
     spans = substring_dup_spans(spark, sf_dir)
     sp = spans.groupBy("doc_id").agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("sp")

@@ -543,11 +543,7 @@ def streaming_sketch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     over-counts included bit-for-bit."""
     import numpy as np
 
-    from tomixpanel_spark.operators.textops import (
-        CMS_DEPTH,
-        CMS_WIDTH,
-        tokenize_tf_pdf,
-    )
+    from tomixpanel_spark.operators.textops import CMS_DEPTH, CMS_WIDTH, word_freq
     from tomixpanel_spark.streaming.sketches import StreamingCountMin, _py_bucket
 
     land = _staged_doc_landing(spark, sf_dir)
@@ -572,9 +568,10 @@ def streaming_sketch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "streaming_sketch_parity: availableNow stream did not "
                 "finish in 300s — refusing to read a partial sketch"
             )
-    # probe side: the full vocabulary (driver tokenize — probe-building is
-    # harness; the sketch under test answers the estimates)
-    vocab = tokenize_tf_pdf(table(spark, sf_dir, "documents"))["token"].unique()
+    # probe side: the full vocabulary (``word_freq``'s tokens —
+    # probe-building is harness; the sketch under test answers the
+    # estimates)
+    vocab = word_freq(spark, sf_dir).toPandas()["token"].to_numpy()
     import pandas as pd
 
     est = np.full(len(vocab), np.iinfo(np.int64).max, dtype=np.int64)
@@ -710,18 +707,19 @@ def dedup_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     long-keyed hash join; the oracle recomputes the decision from raw
     text, so the hash check proves index-serving correctness while the
     ratio compares probe vs recompute."""
-    from tomixpanel_spark.operators.textops import _under_fold_cap, docs_pdf
+    from tomixpanel_spark.operators.textops import TFIDF_DRIVER_FOLD_DOCS
     from tomixpanel_spark.streaming.dedup_index import DedupIndex
 
     store = _built_dedup_index(spark, sf_dir)
     docs = table(spark, sf_dir, "documents")
     probe = docs.filter(F.pmod("doc_id", F.lit(2)) == 1).select("doc_id", "text")
-    if _under_fold_cap(spark, sf_dir, docs):
+    pdf = TFIDF_DRIVER_FOLD_DOCS.collect_or_none(probe, (sf_dir, "odd_docs"))
+    if pdf is not None:
         # serving-latency path: driver probe (same hash spec, pyarrow
-        # bucket reads, one merge) — the distributed probe's three job
-        # floors dominate at interactive batch sizes; paths-agree test
-        # pins identity
-        out = DedupIndex(store).probe_driver(docs_pdf(probe))
+        # bucket reads, one merge) over the odd half the gate's door
+        # collected — the distributed probe's three job floors dominate
+        # at interactive batch sizes; paths-agree test pins identity
+        out = DedupIndex(store).probe_driver(pdf)
         return local_rows_df(
             spark,
             out[["doc_id", "seen_before", "first_doc_id"]],

@@ -32,7 +32,6 @@ from tomixpanel_spark.functions.text import (
 )
 from tomixpanel_spark.operators.base import (
     Gate,
-    Lru,
     QuerySpec,
     ensure_parallel,
     local_rows_df,
@@ -1041,46 +1040,13 @@ def _pa_tokenize_tf(ids, texts):
     )
 
 
-_DOCS_PDF_CACHE = Lru(8)
-
-
-def docs_pdf(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"):
-    """Raw (id, text) columns as a driver pandas frame — the driver-fold
-    analog of the engine buffer pool, so it caches under the SAME flag
-    as the table cache (``TOMIX_CACHE_TABLES``): it holds raw input
-    pages, never a query's work product. Gate-bounded by every caller
-    (``TFIDF_DRIVER_FOLD_DOCS``)."""
-    import os
-
-    def build():
-        return docs.select(
-            F.col(id_col).alias(id_col), F.col(text_col).alias(text_col)
-        ).toPandas()
-
-    if not os.environ.get("TOMIX_CACHE_TABLES"):
-        return build()
-    key = (
-        docs.sparkSession.sparkContext.applicationId,
-        docs.semanticHash(),
-        id_col,
-        text_col,
-    )
-    return _DOCS_PDF_CACHE.memo(key, build)
-
-
-def tokenize_tf_pdf(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"):
-    """Driver-side fused tokenize+count for GATE-BOUNDED corpora: one
-    Arrow transfer of the raw documents (buffer-pool cached, see
-    ``docs_pdf``), then the SAME pyarrow kernels as ``tokenize_tf``'s
-    batch body in-process — no Spark job, no executor round-trip. The
-    driver-fold consumers (tfidf / bm25 / simhash) previously ran the
-    mapInPandas pass and shipped the tf table back; collecting the raw
-    text instead removes a scheduler round per query (the raw documents
-    are SMALLER than their tf table at typical English token/byte
-    ratios). Callers gate on ``TFIDF_DRIVER_FOLD_DOCS`` before calling.
-    Returns pandas (doc_id, token, tf)."""
-    pdf = docs_pdf(docs, id_col, text_col)
-    return _pa_tokenize_tf(pdf[id_col], pdf[text_col]).to_pandas()
+def driver_tf(pdf) -> "pd.DataFrame":
+    """``tokenize_tf``'s rows for a driver (doc_id, text) frame: the same
+    pyarrow batch body, run in-process — no Spark job. The driver folds
+    collect the raw text instead of a tf table (one scheduler round
+    less, and raw documents are SMALLER than their tf table at typical
+    English token/byte ratios). Returns pandas (doc_id, token, tf, dl)."""
+    return _pa_tokenize_tf(pdf["doc_id"], pdf["text"]).to_pandas()
 
 
 # Vocabulary gate for the df broadcast (same pattern as decontam's
@@ -1091,29 +1057,35 @@ TFIDF_BCAST_VOCAB = Gate("TOMIX_TFIDF_BCAST_VOCAB", 2_000_000)
 
 # Size-adaptive execution gate (the identity.py CC pattern — driver
 # union-find under an edge cap, distributed label propagation above —
-# applied to corpus stats): corpora under this many documents resolve in
-# ONE narrow Arrow pass that emits the sparse per-doc tf table, folded to
-# df + scores + top-3 on the driver; larger corpora take the distributed
-# tf + gated broadcast-join plan. The gate bounds the driver collect: the
-# tf table is docs x distinct-tokens-per-doc rows (~25k docs with a
-# typical ~250-token distinct profile is ~6M small rows, a few hundred
-# MB of pandas — the same order as the CC edge cap).
+# applied to corpus stats): corpora under this many documents are
+# collected as raw (doc_id, text) rows and folded on the driver; larger
+# corpora take the distributed plans. Every site decides AND collects
+# through the gate's one door, ``Gate.collect_or_none`` (keyed
+# ``(sf_dir, "docs")`` by ``fold_corpus`` for the documents table), and
+# its fold takes the pandas frame. The cap bounds the folds' working
+# set: the tf table is docs x distinct-tokens-per-doc rows (~25k docs
+# with a typical ~250-token distinct profile is ~6M small rows, a few
+# hundred MB of pandas — the same order as the CC edge cap).
 TFIDF_DRIVER_FOLD_DOCS = Gate("TOMIX_TFIDF_DRIVER_FOLD_DOCS", 25_000)
 
 
-def _under_fold_cap(spark: SparkSession, sf_dir: str, docs: DataFrame) -> bool:
-    """The text family's driver-fold decision: the memoized corpus count
-    against ``TFIDF_DRIVER_FOLD_DOCS``."""
-    return TFIDF_DRIVER_FOLD_DOCS.admits(TFIDF_DRIVER_FOLD_DOCS.count((sf_dir,), docs))
+def fold_corpus(spark: SparkSession, sf_dir: str, admit=None):
+    """``(docs, pdf)``: the documents table, and its (doc_id, text) rows
+    as a driver frame when ``TFIDF_DRIVER_FOLD_DOCS`` admits them (else
+    None), from the gate's door under the key ``(sf_dir, "docs")``.
+    Callers spread ``docs`` (``ensure_parallel``) on the distributed
+    branch only."""
+    docs = table(spark, sf_dir, "documents")
+    pdf = TFIDF_DRIVER_FOLD_DOCS.collect_or_none(
+        docs.select("doc_id", "text"), (sf_dir, "docs"), admit
+    )
+    return docs, pdf
 
 
-def _tfidf_driver_fold(docs: DataFrame, n_docs: int) -> DataFrame:
-    """Small-corpus tf-idf: ONE narrow Arrow pass + a vectorized driver
-    fold — no shuffle, no broadcast-exchange job, no checkpoint, no
-    second scan. The pass is the same fused tokenize+count as the
-    distributed plan (``tokenize_tf``'s batch body), emitting the sparse
-    (doc_id, token, tf) table — the ONLY corpus-sized transfer; the
-    collect is gate-bounded (``TFIDF_DRIVER_FOLD_DOCS``). On the
+def _tfidf_driver_fold(spark: SparkSession, pdf) -> DataFrame:
+    """Small-corpus tf-idf over the driver (doc_id, text) frame: the
+    fused tokenize+count in-process (``driver_tf``) + a vectorized
+    fold — no shuffle, no broadcast-exchange job, no checkpoint. On the
     driver, df is one pandas value_counts over the unique-per-(doc,
     token) rows, scores are exact vectorized int64 arithmetic
     (tf * 1e6 * N // df — all positive, pandas ``//`` floors like
@@ -1121,13 +1093,13 @@ def _tfidf_driver_fold(docs: DataFrame, n_docs: int) -> DataFrame:
     cumcount. Ties break (score DESC, token ASC), matching the oracle's
     row_number ORDER BY. Why this wins at benchmark scale: every Spark
     exchange/broadcast/checkpoint this query used to pay was per-stage
-    overhead on ~100k tf rows; the fold leaves exactly one task wave and
-    one Arrow transfer, the same pipeline a single-node engine runs.
-    ``n_docs`` comes from the (memoized) gate count — docs with zero
-    tokens contribute no tf rows but still count toward N, exactly like
-    the oracle's ``COUNT(*) FROM documents``."""
-    spark = docs.sparkSession
-    tf_pdf = tokenize_tf_pdf(docs)
+    overhead on ~100k tf rows; the fold leaves one bounded collect of the
+    raw text, the same pipeline a single-node engine runs.
+    N is ``len(pdf)`` — docs with zero tokens contribute no tf rows but
+    still count toward N, exactly like the oracle's ``COUNT(*) FROM
+    documents``."""
+    n_docs = len(pdf)
+    tf_pdf = driver_tf(pdf)
     if not len(tf_pdf):
         return local_rows_df(
             spark, [], "doc_id long, token string, score_e6 long, rk long"
@@ -1179,8 +1151,8 @@ def tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     SIZE-ADAPTIVE execution (the identity.py CC principle):
 
     * corpus under ``TOMIX_TFIDF_DRIVER_FOLD_DOCS`` — the driver-fold
-      plan (``_tfidf_driver_fold``): ONE narrow single-stage Arrow pass
-      emitting the sparse tf table, folded to df/scores/top-3 on the
+      plan (``_tfidf_driver_fold``): the door's one bounded collect of
+      the raw documents, tokenized and folded to df/scores/top-3 on the
       driver, zero shuffles. At toy/benchmark scale Spark's per-stage
       floor dominates this query, and the fold removes every exchange,
       broadcast, and checkpoint from the plan.
@@ -1199,26 +1171,25 @@ def tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
       decontam's pattern) and a shuffle join above it. Why not the
       single-lineage ``COUNT(*) OVER (PARTITION BY token)`` form: that
       window funnels every tf row of a hot token ("the") into ONE
-      task's sort — a skew scale-killer at corpus size. N folds in as a
-      broadcast 1-row aggregate, not a driver count job. Top-k per doc
-      is a hash aggregate (collect scored structs, array_sort, slice 3,
-      posexplode) rather than a rank window: same exchange on doc_id,
-      but only each doc's own list sorts and only 3 rows per doc
-      survive.
+      task's sort — a skew scale-killer at corpus size. N is the gate's
+      memoized corpus count (one job on a cold call above the cap).
+      Top-k per doc is a hash aggregate (collect scored structs,
+      array_sort, slice 3, posexplode) rather than a rank window: same
+      exchange on doc_id, but only each doc's own list sorts and only 3
+      rows per doc survive.
 
     Both paths produce identical rows (asserted by
     tests/test_plans.py::test_tfidf_paths_agree)."""
-    docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
+    docs, pdf = fold_corpus(spark, sf_dir)
+    if pdf is not None:
+        return _tfidf_driver_fold(spark, pdf)
     n_docs = TFIDF_DRIVER_FOLD_DOCS.count((sf_dir,), docs)
-    if TFIDF_DRIVER_FOLD_DOCS.admits(n_docs):
-        return _tfidf_driver_fold(docs, n_docs)
-    tf = _tf_view(docs)
+    tf = _tf_view(ensure_parallel(docs, "doc_id"))
     df_counts = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-    # N rides as a LITERAL inside the df broadcast side: the size gate
-    # above already paid the memoized corpus count, so deriving N again
-    # (docs.agg + crossJoin — and before that, a separate broadcast(n)
-    # job measured at ~15% of this query's wall time at sf0.1) is free
-    # to skip entirely
+    # N rides as a LITERAL inside the df broadcast side: the memoized
+    # corpus count is a driver constant, so deriving N again (docs.agg +
+    # crossJoin — and before that, a separate broadcast(n) job measured
+    # at ~15% of this query's wall time at sf0.1) is free to skip
     build = df_counts.select(
         "token", "df", F.lit(n_docs).cast("bigint").alias("n_docs")
     )
@@ -1347,15 +1318,15 @@ def cms_sketch(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _cms_fold(docs: DataFrame) -> "pd.DataFrame":
-    """Driver-fold count-min heavy hitters: per-token totals from the
-    in-process tokenize, md5 buckets per sketch row (the same spec as
-    ``_cms_bucket``/the oracle), vectorized scatter-add cells, min-over-
-    rows estimate. Gate-bounded by the caller."""
+def _cms_fold(pdf) -> "pd.DataFrame":
+    """Driver-fold count-min heavy hitters over the driver (doc_id,
+    text) frame: per-token totals from the in-process tokenize, md5
+    buckets per sketch row (the same spec as ``_cms_bucket``/the
+    oracle), vectorized scatter-add cells, min-over-rows estimate."""
     import numpy as np
     import pandas as pd
 
-    tf = tokenize_tf_pdf(docs)
+    tf = driver_tf(pdf)
     if not len(tf):
         return pd.DataFrame({"token": [], "est_n": []})
     counts = tf.groupby("token", sort=False)["tf"].sum()
@@ -1393,15 +1364,14 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     production queries the sketch for candidate terms only. Estimates can
     only over-count (collisions add), and both engines hash identically,
     so over-counts match exactly too."""
-    docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
-    if _under_fold_cap(spark, sf_dir, docs):
+    docs, pdf = fold_corpus(spark, sf_dir)
+    if pdf is not None:
         # size-adaptive driver fold (the tfidf/bm25/simhash/substring
         # gate): tokenize driver-side, build the DEPTHxWIDTH cells with
         # one scatter-add per row, estimate = min over rows — identical
         # md5 bucket spec, so over-counts still match the oracle exactly
-        return local_rows_df(
-            spark, _cms_fold(docs), schema="token string, est_n long"
-        )
+        return local_rows_df(spark, _cms_fold(pdf), schema="token string, est_n long")
+    docs = ensure_parallel(docs, "doc_id")
     # per-token totals fold from the SPARSE tf table (fused Arrow
     # tokenize, round 8) — sum(tf) == count over the occurrence explode,
     # with ~10x fewer rows into the vocab aggregate
@@ -1456,9 +1426,10 @@ BM25_TOPK = 10
 # (safe past 1e11 docs; beyond that rescale idf's 1e6 factor down).
 
 
-def _bm25_driver_fold(docs: DataFrame, n_docs: int) -> DataFrame:
-    """Small-corpus BM25: ONE narrow Arrow pass + a vectorized driver
-    fold (the ``_tfidf_driver_fold`` principle — at benchmark scale the
+def _bm25_driver_fold(spark: SparkSession, pdf) -> DataFrame:
+    """Small-corpus BM25 over the driver (doc_id, text) frame (N is
+    ``len(pdf)``): the in-process tokenize + a vectorized fold (the
+    ``_tfidf_driver_fold`` principle — at benchmark scale the
     query's cost was Spark's per-stage floor, not the math). The key
     simplification: a term's contribution c = idf * tfpart depends only
     on CORPUS stats (tf, df, dl, avgdl), not on which query matched it,
@@ -1466,8 +1437,8 @@ def _bm25_driver_fold(docs: DataFrame, n_docs: int) -> DataFrame:
     matched rows. All arithmetic is the same exact int64 as the
     distributed plan; ties break (score DESC, doc_id ASC) to match the
     oracle's row_number."""
-    spark = docs.sparkSession
-    tf_pdf = tokenize_tf_pdf(docs)
+    n_docs = len(pdf)
+    tf_pdf = driver_tf(pdf)
     schema = "q_id long, doc_id long, rank long, score_e6 long"
     if not len(tf_pdf):
         return local_rows_df(spark, [], schema)
@@ -1506,9 +1477,9 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipelines), integer-exact end to end.
 
     SIZE-ADAPTIVE like ``tfidf_keywords``: under the same driver-fold
-    gate the whole query is one Arrow pass + a vectorized driver fold
-    (``_bm25_driver_fold``); both paths assert equal rows in
-    tests/test_plans.py::test_bm25_paths_agree.
+    gate the whole query is the door's one bounded collect + a
+    vectorized driver fold (``_bm25_driver_fold``); both paths assert
+    equal rows in tests/test_plans.py::test_bm25_paths_agree.
 
     Distributed scale shape: the fused Arrow tf table materializes once
     (``stage_checkpoint``) and feeds three consumers. Document length
@@ -1531,16 +1502,15 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchanges. Nothing corpus-sized crosses the wire unaggregated."""
     from pyspark.sql import Window
 
-    docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
+    docs, pdf = fold_corpus(spark, sf_dir)
+    if pdf is not None:
+        return _bm25_driver_fold(spark, pdf)
     n_docs = TFIDF_DRIVER_FOLD_DOCS.count((sf_dir,), docs)
-    if TFIDF_DRIVER_FOLD_DOCS.admits(n_docs):
-        return _bm25_driver_fold(docs, n_docs)
-    tf = _tf_view(docs)
+    tf = _tf_view(ensure_parallel(docs, "doc_id"))
     tfd = tf  # dl is fused into the tokenize pass (no window exchange)
     df_counts = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-    # n rides as a LITERAL — the gate probe above already paid the
-    # memoized corpus count, so the old docs.agg(count) + crossJoin was
-    # a whole redundant 1-row aggregate job inside the broadcast build
+    # n rides as a LITERAL from the memoized corpus count: no 1-row
+    # aggregate job inside the broadcast build
     totals = tf.agg(F.sum("tf").alias("a")).select(
         "a", F.lit(n_docs).cast("bigint").alias("n")
     )
@@ -1618,15 +1588,14 @@ SELECT q_id, doc_id, rank, score_e6 FROM (
 LM_BCAST_BIGRAMS = Gate("TOMIX_LM_BCAST_BIGRAMS", 2_000_000)
 
 
-def _lm_driver_fold(spark: SparkSession, docs: DataFrame) -> DataFrame:
-    """Small-corpus bigram-LM scoring: one Arrow transfer of the raw
-    documents (buffer-pool cached ``docs_pdf``) + an exact VECTORIZED
-    fold — no shuffle, no checkpoint, no broadcast-exchange job, no
-    gate-count job. Tokenization is ``driver_tokens``, the one driver
-    tokenizer, ORDER-PRESERVING (no group_by): the flat token stream +
-    doc indices give adjacency directly, tokens factorize via
-    ``dictionary_encode``, and model/context/score are
-    numpy int64 ops (``//`` floors like the engines'; bincount/add.at
+def _lm_driver_fold(spark: SparkSession, pdf) -> DataFrame:
+    """Small-corpus bigram-LM scoring over the driver (doc_id, text)
+    frame the door collected + an exact VECTORIZED fold — no shuffle,
+    no checkpoint, no broadcast-exchange job, no gate-count job.
+    Tokenization is ``driver_tokens``, the one driver tokenizer,
+    ORDER-PRESERVING (no group_by): the flat token stream + doc indices
+    give adjacency directly, tokens factorize via ``dictionary_encode``,
+    and model/context/score are numpy int64 ops (``//`` floors like the engines'; bincount/add.at
     keep the sums integer-exact). A dict-Counter formulation measured
     SLOWER than the distributed plan at 5k docs — the per-token Python
     loop was the cost, not Spark. Bit-identical to the distributed plan
@@ -1635,7 +1604,6 @@ def _lm_driver_fold(spark: SparkSession, docs: DataFrame) -> DataFrame:
     import pandas as pd
     import pyarrow.compute as pc
 
-    pdf = docs_pdf(docs)
     empty = pd.DataFrame(
         {
             "doc_id": pd.Series([], dtype="int64"),
@@ -1696,9 +1664,9 @@ def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     SIZE-ADAPTIVE (the tfidf fold precedent, same shared gate): corpora
     under ``TOMIX_TFIDF_DRIVER_FOLD_DOCS`` score via ``_lm_driver_fold``
-    (one Arrow transfer + exact Python fold — zero shuffles); above the
-    gate, the distributed plan below (50k-doc scale probe exercises it
-    naturally).
+    (the door's one bounded collect + an exact numpy fold — zero
+    shuffles); above the gate, the distributed plan below (50k-doc
+    scale probe exercises it naturally).
 
     Scale shape (distributed): occurrences NEVER shuffle raw. The model build is a
     map-side-partial ``groupBy(prev, cur).count()`` (shuffle carries one
@@ -1716,9 +1684,10 @@ def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     posture as tfidf above its vocab gate)."""
     from tomixpanel_spark.functions.text import adjacent_pairs
 
-    docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
-    if _under_fold_cap(spark, sf_dir, docs):
-        return _lm_driver_fold(spark, docs)
+    docs, pdf = fold_corpus(spark, sf_dir)
+    if pdf is not None:
+        return _lm_driver_fold(spark, pdf)
+    docs = ensure_parallel(docs, "doc_id")
     toks = docs.select("doc_id", tokens("text").alias("words"))
     pairs = adjacent_pairs(F.col("words"), "prev", "cur")
     big = toks.select("doc_id", F.explode(pairs).alias("p")).select(

@@ -76,15 +76,6 @@ def pack_batches(
         yield batch
 
 
-def iter_batches(
-    records: Iterable[dict],
-    max_records: int = EVENTS_PER_BATCH,
-    max_bytes: int = BYTES_PER_BATCH,
-) -> Iterator[list[bytes]]:
-    """``pack_batches`` over wire dicts."""
-    return pack_batches(map(serialize_record, records), max_records, max_bytes)
-
-
 def json_array(batch: list[bytes]) -> bytes:
     """The default request body: the batch's records as one JSON array."""
     return b"[" + b",".join(batch) + b"]"

@@ -1,13 +1,9 @@
 """Data-lake writers: the engine's replacement for the reference's staged
 JSON dirs (SURVEY.md §2.2 K9 local copies + the 100 TB layout story).
 
-Layout choices (ARCHITECTURE.md deployment notes):
-  * events partition by event DATE — the reference's ampReplicator
-    date-hour slices become physical partition pruning for every
-    downstream date-ranged query.
-  * profiles/merges bucket by distinct_id/id_a so identity-keyed joins and
-    merges co-locate without a shuffle (bucketed tables need
-    ``saveAsTable``; plain partitioned parquet otherwise).
+Layout (ARCHITECTURE.md deployment notes): events partition by event
+DATE — the reference's ampReplicator date-hour slices become physical
+partition pruning for every downstream date-ranged query.
 """
 
 from __future__ import annotations
@@ -25,18 +21,3 @@ def write_events_partitioned(events: DataFrame, path: str) -> None:
     transform/amplitudeToMixpanel.js:229-290)."""
     out = events.withColumn("event_date", F.to_date(F.timestamp_millis(F.col("time_ms"))))
     out.write.mode("overwrite").partitionBy("event_date").parquet(path)
-
-
-def bucketed_identity_table(
-    df: DataFrame, table_name: str, key: str, buckets: int = 64
-) -> None:
-    """Bucket an identity-keyed table (profiles by distinct_id, merge edges
-    by id_a) so repeated identity joins skip the exchange entirely —
-    bucketed storage is the co-located-join strategy at 100 TB."""
-    (
-        df.write.mode("overwrite")
-        .bucketBy(buckets, key)
-        .sortBy(key)
-        .format("parquet")
-        .saveAsTable(table_name)
-    )
